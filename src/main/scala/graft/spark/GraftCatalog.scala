@@ -294,9 +294,9 @@ private[spark] class GraftTable(cat: ParquetCatalog, root: String,
       classOf[ParquetFileFormat])
   }
 
-  /** The read version's deletion-vector sidecars — nonempty routes the
-    * scan through [[GraftDvScanBuilder]] (the stock file scan would
-    * resurrect vectored-out rows). */
+  /** The read version's deletion-vector sidecars — nonempty makes the
+    * scan vectored (the stock file scan would resurrect vectored-out
+    * rows). */
   private lazy val dvSidecars: Seq[String] =
     resolvedVersion.fold(Seq.empty[String])(v =>
       cat.dvSidecarsAbs(tableName, v))
@@ -336,68 +336,34 @@ private[spark] class GraftTable(cat: ParquetCatalog, root: String,
     caps
   }
 
-  /** Vectored tables take the positional scan; clean PARTITIONED
-    * tables report their layout for storage-partitioned joins when the
-    * user opted in via Spark's own SPJ switch (see [[GraftSpjScan]]);
-    * indexed tables prune files through the persisted min/max stats
-    * before split planning (see [[GraftSkipScan]] — the engine read
-    * path's skipping, now on the SQL door too); everything else is the
-    * stock parquet scan. One wrapper per scan: correctness (vectors)
-    * outranks join layout, which outranks file skipping. */
+  /** Every versioned read goes through ONE [[GraftScanBuilder]], whose
+    * capabilities are resolved here once: the version's deletion-vector
+    * sidecars, the key layout to report for storage-partitioned joins
+    * (only under Spark's own opt-in, `spark.sql.sources.v2.bucketing
+    * .enabled`; bucket layouts report `bucket(n, col)` after any
+    * identity prefix, so date pruning and shuffle-free key joins
+    * compose), the skipping index, and whether the layout is
+    * partitioned. The builder picks the scan: vectors outrank join
+    * layout, which outranks file skipping, which outranks the stock
+    * parquet scan. Unversioned tables read the stock scan. */
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
     val inner = delegate.newScanBuilder(options)
-    val layout = resolvedVersion.fold(Seq.empty[String])(v =>
-      cat.manifest(tableName, v).partitionBy)
-    lazy val statsP = cat.statsPath(tableName)
-    lazy val indexed = resolvedVersion.isDefined &&
-      graft.storage.SkippingIndex.existsAt(statsP)
-    lazy val spjOn = spark.conf
-      .get("spark.sql.sources.v2.bucketing.enabled", "false").toBoolean
-    // bucket layouts keep the synthetic id INNERMOST; any identity
-    // prefix (composite `partitionBy(date) + bucket(key)` — the
-    // canonical 100 TB fact shape) is reported alongside the bucket
-    // transform, so date pruning and shuffle-free key joins compose
-    lazy val bucketed = resolvedVersion
-      .filter(_ => layout.lastOption.contains(ParquetCatalog.BucketPartCol))
-      .flatMap(v => cat.bucketSpecAt(tableName, v))
-    val chosen: ScanBuilder =
-      if (dvSidecars.nonEmpty) new GraftDvScanBuilder(inner, dvSidecars, layout,
-        if (indexed) Some(statsP) else None, bucketed)
-      else if (bucketed.isDefined && spjOn)
-        // bucket-declared layout: report bucket(n, col) instead of the
-        // synthetic identity partitioning — plus identity transforms
-        // for any composite prefix — so equi-joins on the DATA column
-        // itself go Exchange-free
-        new GraftSpjScanBuilder(inner, layout.dropRight(1),
-          if (indexed) Some(statsP) else None, bucketed)
-      else if (layout.nonEmpty && spjOn)
-        new GraftSpjScanBuilder(inner, layout,
-          if (indexed) Some(statsP) else None)
-      else if (indexed || layout.nonEmpty)
-        // partitioned-but-unindexed tables still take the skip wrapper,
-        // solely for its runtime (dynamic-partition-pruning) filtering
-        new GraftSkipScanBuilder(inner, if (indexed) Some(statsP) else None)
-      else inner
-    // outermost: a bare (or exactly-partition-filtered) COUNT(*) /
-    // MIN / MAX answers from the manifest + footer/index metadata
-    // (minus vectored positions) without a data page
-    if (resolvedVersion.isDefined && spark.conf
-        .get("spark.graft.sql.metadataCount", "true").toBoolean) {
-      val v = resolvedVersion.get
-      def allFiles(): Seq[String] = cat.dataFilesAbs(tableName, v)
-      new GraftCountStarBuilder(chosen, delegate.schema,
-        () => cat.exactRowCount(tableName, v),
-        files => cat.exactRowCountFor(tableName, v, files),
-        (col, dt, files, wantMax) => {
-          val (mn, mx) =
-            cat.statsMinMax(tableName, v, col, dt, files.getOrElse(allFiles()))
-          if (wantMax) mx else mn
-        },
-        (col, files) =>
-          cat.statsNonNullCount(tableName, v, col, files.getOrElse(allFiles())),
-        minMaxEnabled = spark.conf
-          .get("spark.graft.sql.metadataMinMax", "true").toBoolean)
-    } else chosen
+    resolvedVersion.fold[ScanBuilder](inner) { v =>
+      val layout = cat.manifest(tableName, v).partitionBy
+      val spjOn = spark.conf
+        .get("spark.sql.sources.v2.bucketing.enabled", "false").toBoolean
+      val bucketed =
+        if (layout.lastOption.contains(ParquetCatalog.BucketPartCol))
+          cat.bucketSpecAt(tableName, v)
+        else None
+      val keyLayout = Option.when(spjOn && layout.nonEmpty)(bucketed.fold(
+        GraftKeyLayout(layout, None))(b =>
+        GraftKeyLayout(layout.dropRight(1), Some(b))))
+      val statsP = cat.statsPath(tableName)
+      new GraftScanBuilder(inner, GraftScanCaps(dvSidecars, keyLayout,
+        Some(statsP).filter(graft.storage.SkippingIndex.existsAt),
+        layout.nonEmpty), cat, tableName, v, delegate.schema)
+    }
   }
 
   /** `DELETE FROM <cat>.t WHERE ...` / `TRUNCATE TABLE <cat>.t` as ONE

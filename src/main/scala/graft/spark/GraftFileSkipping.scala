@@ -4,226 +4,12 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{And, Attribute, EqualTo,
   Expression, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual,
   Literal}
-import org.apache.spark.sql.connector.expressions.aggregate.Aggregation
-import org.apache.spark.sql.connector.read.{Batch, InputPartition,
-  PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownAggregates,
-  SupportsPushDownRequiredColumns, SupportsReportStatistics,
-  SupportsRuntimeV2Filtering}
 import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan
-import org.apache.spark.sql.graftbridge.CatalystFilterPushdownBridge
 import org.apache.spark.sql.types.StructType
 
-/** Shared pushdown-forwarding base for the catalog's scan-builder
-  * wrappers ([[GraftSpjScanBuilder]], [[GraftSkipScanBuilder]]): every
-  * pushdown surface the stock `ParquetScanBuilder` exposes — column
-  * pruning, catalyst filters (returning the INNER builder's own
-  * residual, so wrapped pushdown is byte-identical to unwrapped), and
-  * aggregates — delegates verbatim. Subclasses decide only what
-  * `build()` wraps. */
-abstract class GraftForwardingScanBuilder(inner: ScanBuilder)
-  extends ScanBuilder with SupportsPushDownRequiredColumns
-  with SupportsPushDownAggregates with CatalystFilterPushdownBridge {
-
-  /** Set when an aggregate was pushed: the scan then emits partial-agg
-    * rows, which no file-layout wrapper understands — stay stock. */
-  protected var aggPushed = false
-
-  override def pruneColumns(requiredSchema: StructType): Unit = inner match {
-    case p: SupportsPushDownRequiredColumns => p.pruneColumns(requiredSchema)
-    case _ => ()
-  }
-
-  override def pushFilters(filters: Seq[Expression]): Seq[Expression] =
-    CatalystFilterPushdownBridge.pushAll(inner, filters)
-
-  override def pushedFilters():
-      Array[org.apache.spark.sql.connector.expressions.filter.Predicate] =
-    CatalystFilterPushdownBridge.pushed(inner)
-
-  override def pushAggregation(aggregation: Aggregation): Boolean = inner match {
-    case a: SupportsPushDownAggregates =>
-      aggPushed = a.pushAggregation(aggregation); aggPushed
-    case _ => false
-  }
-
-  override def supportCompletePushDown(aggregation: Aggregation): Boolean =
-    inner match {
-      case a: SupportsPushDownAggregates => a.supportCompletePushDown(aggregation)
-      case _ => false
-    }
-}
-
-/** INDEX-PRUNED SQL-door scans: the engine read path prunes files
-  * through the persisted min/max skipping index
-  * ([[graft.storage.SkippingIndex]], the Delta/Iceberg stats-pruned
-  * scan) but the registered catalog's plain-SQL reads scanned every
-  * file the version lists — on a 100k-file table a point/range query
-  * paid 100k footer-opening tasks for an answer the driver-side stats
-  * already knew. This wrapper closes the gap: the pushed data filters'
-  * numeric range conjuncts are intersected with the index BEFORE split
-  * planning, and only candidate files become tasks.
-  *
-  * Safety is inherited from the index contract (it may only OVER-read):
-  * unindexed files and non-numeric/unknown columns are unconditional
-  * candidates, strict bounds are widened to inclusive, NULL rows
-  * cannot satisfy any extracted comparison so stats-excluded files
-  * cannot hide matches, and the full predicate still evaluates above
-  * the scan. Kept splits re-bin through Spark's own
-  * `FilePartition.getFilePartitions`, so task sizing matches the stock
-  * scan over the surviving files. */
-class GraftSkipScanBuilder(inner: ScanBuilder,
-    statsPath: Option[java.nio.file.Path])
-  extends GraftForwardingScanBuilder(inner) {
-
-  private var preds: Seq[(String, Double, Double, Set[String])] = Nil
-  private var points: Seq[(String, Seq[Any])] = Nil
-  private var strPreds: Seq[(String, Option[String], Option[String])] = Nil
-
-  override def pushFilters(filters: Seq[Expression]): Seq[Expression] = {
-    if (statsPath.isDefined) {
-      preds = GraftFileSkipping.rangeConjuncts(filters)
-      points = GraftFileSkipping.pointConjuncts(filters)
-      strPreds = GraftFileSkipping.stringRangeConjuncts(filters)
-    }
-    super.pushFilters(filters)
-  }
-
-  /** Wrap whenever a persisted index exists (planned conjuncts prune
-    * immediately; otherwise the index still serves runtime dynamic
-    * FILE pruning) or the layout is partitioned (runtime dynamic
-    * PARTITION pruning) — the stock DSv2 `ParquetScan` implements no
-    * runtime filtering at all. */
-  override def build(): Scan = inner.build() match {
-    case p: ParquetScan if !aggPushed &&
-        (statsPath.isDefined || p.readPartitionSchema.nonEmpty) =>
-      new GraftSkipScan(p, statsPath, preds, points, strPreds)
-    case other => other
-  }
-}
-
-class GraftSkipScan(inner: ParquetScan, statsPath: Option[java.nio.file.Path],
-    preds: Seq[(String, Double, Double, Set[String])], points: Seq[(String, Seq[Any])] = Nil,
-    strPreds: Seq[(String, Option[String], Option[String])] = Nil)
-  extends Scan with Batch with SupportsReportStatistics
-  with SupportsRuntimeV2Filtering {
-
-  override def readSchema(): StructType = inner.readSchema()
-  override def toBatch: Batch = this
-  override def columnarSupportMode(): Scan.ColumnarSupportMode =
-    inner.columnarSupportMode()
-  override def supportedCustomMetrics():
-      Array[org.apache.spark.sql.connector.metric.CustomMetric] =
-    inner.supportedCustomMetrics()
-
-  /** The stock estimate, TIGHTENED by the index when the planned range
-    * conjuncts prune files: rows = Σ index rows and bytes = Σ split
-    * lengths over the SURVIVING candidate files only (no bloom pass —
-    * estimation must never launch a job). The stock parquet estimate
-    * is post-partition-pruning byte size, blind to stats pruning; the
-    * index-backed figure is what lets AQE/broadcast planning see that
-    * a filtered slice of a 100 TB clustered table is broadcast-small.
-    * Still an upper bound (pushed data filters prune further inside
-    * kept files) — the same estimate class as stock, strictly tighter.
-    * Unknown whenever any planned file lacks an index entry. */
-  // memoized: Spark re-requests estimates at each AQE re-optimization,
-  // and the planned conjuncts are fixed once pushdown completes
-  private lazy val tightened =
-    GraftFileSkipping.tightenedStatistics(inner, statsPath, preds, strPreds)
-  override def estimateStatistics():
-      org.apache.spark.sql.connector.read.Statistics = tightened
-
-  /** Dynamic partition pruning (see [[GraftFileSkipping.runtimeKeep]])
-    * PLUS dynamic FILE pruning: runtime IN-predicates over the
-    * partition columns drop whole splits by partition value, and over
-    * INDEXED data columns they drive the same min/max + bloom pass as
-    * planned-time conjuncts (Databricks' dynamic file pruning, on the
-    * persisted index) — a fact-dim join keyed on the fact's CLUSTERED
-    * key opens only the dim keys' file neighborhood, even though the
-    * key is no partition column. `filter` invalidates the cached
-    * candidate set so the re-plan sees the pruned list. */
-  override def filterAttributes(): Array[
-      org.apache.spark.sql.connector.expressions.NamedReference] = {
-    val indexed = statsPath.toSeq.flatMap(sp =>
-      graft.storage.SkippingIndex.columnsAtCached(sp))
-    (inner.readPartitionSchema.fieldNames ++ indexed.filter(c =>
-      inner.readDataSchema.fieldNames.exists(_.equalsIgnoreCase(c))))
-      .distinct
-      .map(org.apache.spark.sql.connector.expressions.Expressions.column)
-  }
-  override def filter(predicates: Array[
-      org.apache.spark.sql.connector.expressions.filter.Predicate]): Unit =
-    synchronized { runtimePreds = predicates; cached = None }
-
-  private var runtimePreds: Array[
-    org.apache.spark.sql.connector.expressions.filter.Predicate] = Array.empty
-  private var cached: Option[(Array[
-    org.apache.spark.sql.execution.datasources.PartitionedFile], Int, Int)] = None
-
-  /** Stock splits, runtime-partition-filtered, then index-filtered to
-    * candidates (see [[GraftFileSkipping.filterSplits]]). Cached until
-    * a runtime filter arrives. `total` stays the PRE-runtime-filter
-    * file count, so the explain pin keeps meaning "of the version's
-    * planned files". */
-  private def computed = synchronized {
-    cached.getOrElse {
-      val planned = inner.toBatch.planInputPartitions().flatMap {
-        case fp: FilePartition => fp.files
-        case other => throw new IllegalStateException(
-          s"GraftSkipScan expected file partitions, got $other")
-      }
-      val total = planned
-        .map(f => GraftFileSkipping.plainPath(f.filePath.toString))
-        .distinct.length
-      val keep = GraftFileSkipping.runtimeKeep(runtimePreds,
-        inner.readPartitionSchema)
-      val kept = planned.filter(keep)
-      // dynamic FILE pruning: runtime IN/= over indexed DATA columns
-      // translate to the same envelope + point conjuncts the planned
-      // filters use, and ride the identical index/bloom pass
-      val (rPreds, rPoints, rStrs) = GraftFileSkipping.runtimeIndexConjuncts(
-        runtimePreds, inner.readDataSchema)
-      val allPreds = preds ++ rPreds
-      val allPoints = points ++ rPoints
-      val allStrs = strPreds ++ rStrs
-      val r = statsPath match {
-        case Some(sp) if allPreds.nonEmpty || allPoints.nonEmpty ||
-            allStrs.nonEmpty =>
-          val (splits, k, _) =
-            GraftFileSkipping.filterSplits(sp, allPreds, allPoints, kept,
-              allStrs)
-          (splits, k, total)
-        case _ =>
-          (kept, kept.map(f =>
-            GraftFileSkipping.plainPath(f.filePath.toString)).distinct.length,
-            total)
-      }
-      cached = Some(r)
-      r
-    }
-  }
-
-  /** kept/total surfaces in EXPLAIN — the tests' and gate query's pin. */
-  override def description(): String = {
-    val (_, keptFiles, totalFiles) = computed
-    s"GraftSkipScan(kept=$keptFiles of $totalFiles files, " +
-      s"${inner.description()})"
-  }
-
-  override def planInputPartitions(): Array[InputPartition] = {
-    val (keptSplits, _, _) = computed
-    FilePartition.getFilePartitions(SparkSession.active, keptSplits.toSeq,
-      FilePartition.maxSplitBytes(SparkSession.active,
-        keptSplits.map(_.length).sum)).toArray[InputPartition]
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    inner.toBatch.createReaderFactory()
-}
-
-/** Catalyst-filter → index-predicate translation and the shared
-  * split-filtering pass behind [[GraftSkipScan]], [[GraftSpjScan]],
-  * and [[GraftDvScan]]. */
+/** Catalyst-filter → index-predicate translation and the
+  * split-filtering pass behind [[GraftScan]]. */
 object GraftFileSkipping {
 
   /** The stock estimate, TIGHTENED by the index when planned range /
@@ -236,10 +22,9 @@ object GraftFileSkipping {
     * broadcast-small. Still an upper bound (pushed data filters prune
     * further inside kept files) — the same estimate class as stock,
     * strictly tighter. Falls back to the inner estimate whenever any
-    * planned file lacks an index entry. Shared by all three scan
-    * wrappers (skip / SPJ / dv — r20; previously only GraftSkipScan
-    * tightened, so a filtered BUCKETED fact slice looked
-    * full-table-sized to the broadcast planner). */
+    * planned file lacks an index entry — in every [[GraftScan]] mode,
+    * so a filtered BUCKETED fact slice does not look full-table-sized
+    * to the broadcast planner. */
   def tightenedStatistics(inner: ParquetScan,
       statsPath: Option[java.nio.file.Path],
       preds: Seq[(String, Double, Double, Set[String])],

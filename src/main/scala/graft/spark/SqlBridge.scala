@@ -33,6 +33,12 @@ object SqlBridge {
       org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** Block until every posted listener event has been delivered
+    * (`SparkContext.listenerBus` is `private[spark]`) — query-execution
+    * listeners run on that bus, after the action returns. */
+  def drainListeners(spark: org.apache.spark.sql.SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }
 
 /** The parquet readers' generated row-index column name
@@ -50,10 +56,10 @@ object RowIndexBridge {
 
 /** Bridge trait exposing Spark's `private[sql]`
   * [[org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters]]
-  * to [[graft.spark.GraftDvScanBuilder]]: the deletion-vector scan
-  * wrapper must receive catalyst filters so it can forward the
-  * PARTITION-pruning subset (file-granular, position-safe) while
-  * withholding data filters from the parquet reader. */
+  * to [[graft.spark.GraftScanBuilder]]: it must receive catalyst
+  * filters to capture index conjuncts and, on vectored tables, to
+  * forward only the deterministic ones while reporting every filter as
+  * residual. */
 trait CatalystFilterPushdownBridge
   extends org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters
 
@@ -68,7 +74,7 @@ object CatalystFilterPushdownBridge {
     case _ => ()
   }
 
-  /** Full delegation (the SPJ wrapper): forward and return the inner
+  /** Full delegation: forward and return the inner
     * builder's own residual, so wrapped pushdown is byte-identical to
     * unwrapped. */
   def pushAll(b: org.apache.spark.sql.connector.read.ScanBuilder,

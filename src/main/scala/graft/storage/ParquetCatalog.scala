@@ -1608,8 +1608,8 @@ final class ParquetCatalog(spark: SparkSession, root: String,
   /** Sidecar total bytes below this broadcast the anti-join's build
     * side; bigger vector sets fall back to a shuffled anti-join rather
     * than risking the driver. Tunable (`spark.graft.dv.broadcastBytes`)
-    * for executors with more or less headroom — the SQL-door scan
-    * ([[graft.spark.GraftDvScan]]) has no shuffled form and REFUSES
+    * for executors with more or less headroom — the vectored SQL-door
+    * scan ([[graft.spark.GraftScan]]) has no shuffled form and REFUSES
     * above its cap instead, so the two doors diverge above 64 MB by
     * design (documented there). */
   private def dvBroadcastBytes: Long =
@@ -4756,7 +4756,7 @@ final class ParquetCatalog(spark: SparkSession, root: String,
 
   /** EXACT row count of version `v` without reading a single data
     * page — Delta/Iceberg's metadata-only `COUNT(*)` (the registered
-    * catalog's [[graft.spark.GraftCountStarBuilder]] answers plain
+    * catalog's [[graft.spark.GraftScanBuilder]] answers plain
     * `SELECT count(*)` from this): per-file footer row counts (served
     * from the skipping index when present, one distributed footer read
     * for whatever it misses) minus the version's deletion-vector

@@ -474,4 +474,25 @@ class DeletionVectorSpec extends SparkSpec {
     cat.vacuum("t", keep = 1, minAgeMs = 0L)
     assert(cat.read("c").count() === 26)
   }
+
+  test("the SQL door names a missing sidecar instead of calling it too large") {
+    // a sidecar lost after the query resolved (a concurrent vacuum, a
+    // lost object) must surface as the missing path — not as the
+    // "vectors too large, run OPTIMIZE" refusal
+    val (cat, root) = fresh()
+    val cname = s"gdvmiss${System.nanoTime() % 100000}"
+    spark.conf.set(s"spark.sql.catalog.$cname",
+      classOf[graft.spark.GraftCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$cname.root", root)
+    cat.overwriteVersioned("t", (1L to 100L).map(i => (i, i * 1.0)).toDF("id", "m"))
+    cat.deleteVectors("t", col("id") === 3L)
+    val sidecar = cat.dvSidecarsAbs("t", cat.currentVersion("t")).head
+    val q = spark.sql(s"SELECT id, m FROM $cname.t")
+    Files.delete(java.nio.file.Paths.get(sidecar))
+    val e = intercept[Exception](q.collect())
+    val messages = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).toSeq
+    assert(messages.exists(_.contains(sidecar)), messages.mkString(" | "))
+    assert(!messages.exists(_.contains("OPTIMIZE")), messages.mkString(" | "))
+  }
 }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.{DateType, DoubleType, LongType, StringType,
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Soundness rules of the catalyst-filter → index-predicate
-  * translation behind [[graft.spark.GraftSkipScan]]: only shapes a
+  * translation behind [[graft.spark.GraftScan]]: only shapes a
   * NULL row can never satisfy, strict bounds widened to inclusive,
   * raw-unit temporal literals carry the exact stats type they may
   * prune, everything unrecognized contributes NO pruning. */

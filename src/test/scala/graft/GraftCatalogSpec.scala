@@ -733,7 +733,10 @@ class GraftCatalogSpec extends SparkSpec {
           case s: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
             return scanRows(s.plan)
           case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-              if b.scan.isInstanceOf[graft.spark.GraftSpjScan] =>
+              if (b.scan match {
+                case g: graft.spark.GraftScan => g.keyed
+                case _ => false
+              }) =>
             b.metrics("numOutputRows").value
           case _ => 0L
         }
@@ -835,7 +838,7 @@ class GraftCatalogSpec extends SparkSpec {
     // index-driven runtime file pruning entirely — the SPJ builder
     // dropped statsPath without planned conjuncts and its runtime path
     // pruned only partitions/buckets. Now the runtime IN rides the
-    // same min/max + bloom pass as on GraftSkipScan.
+    // same min/max + bloom pass as on the unkeyed scan.
     val (cat, _, c) = freshCatalog("sdfp")
     val fact = (1L to 4000L)
       .map(i => (i, if (i <= 2000) "a" else "b", i * 1.0))
@@ -863,7 +866,10 @@ class GraftCatalogSpec extends SparkSpec {
           case s: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
             return scanRows(s.plan)
           case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-              if b.scan.isInstanceOf[graft.spark.GraftSpjScan] =>
+              if (b.scan match {
+                case g: graft.spark.GraftScan => g.keyed
+                case _ => false
+              }) =>
             b.metrics("numOutputRows").value
           case _ => 0L
         }
@@ -898,6 +904,38 @@ class GraftCatalogSpec extends SparkSpec {
         s"a co-partitioned join with one vectored side must not shuffle:\n$plan")
       assert(plan.contains("GraftDvScan"), s"vectors keep the positional scan:\n$plan")
     }
+  }
+
+  test("a keyed vectored scan runs its bloom pass once") {
+    // the reported key count and the executed splits come from ONE
+    // split computation: planning twice launched the distributed bloom
+    // job twice for a single point lookup
+    val (_, root, c) = freshCatalog("dvbl")
+    val bcat = new ParquetCatalog(spark, root, bloomFor = Seq("id"))
+    bcat.overwriteVersioned("t",
+      (1L to 8000L).map(i => (i, s"p${i % 2}", i * 1.0)).toDF("id", "p", "m")
+        .repartition(4), Seq("p"))
+    bcat.index("t", Seq("id"))
+    bcat.setTableProperty("t", "graft.deletionVectors", "true")
+    bcat.deleteVectors("t", col("id") === 7L)
+    val bloomJobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (js.stageInfos.exists(_.details.contains("bloomCandidatesAny")))
+          bloomJobs.incrementAndGet()
+    }
+    withSpj {
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        val q = spark.sql(s"SELECT id, p, m FROM $c.t WHERE id = 4321")
+        assert(q.collect().map(_.getLong(0)).toSeq === Seq(4321L))
+        val plan = q.queryExecution.executedPlan.toString
+        assert(plan.contains("GraftDvScan"), plan)
+        org.apache.spark.sql.graftbridge.SqlBridge.drainListeners(spark)
+      } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(bloomJobs.get() === 1, "one point lookup, one bloom pass")
   }
 
   test("compaction preserves bucket layouts (OPTIMIZE semantics, r19)") {
@@ -1256,13 +1294,6 @@ class GraftCatalogSpec extends SparkSpec {
     val (qg, pg) = planOf(s"SELECT p, count(*) FROM $c.t GROUP BY p")
     assert(!pg.contains("GraftCountStarScan"))
     assert(qg.count() === 2L)
-    // kill switch restores the stock path
-    spark.conf.set("spark.graft.sql.metadataCount", "false")
-    try {
-      val (qo, po) = planOf(s"SELECT count(*) FROM $c.t")
-      assert(!po.contains("GraftCountStarScan"), po)
-      assert(qo.as[Long].head() === 4499L)
-    } finally spark.conf.unset("spark.graft.sql.metadataCount")
   }
 
   test("metadata MIN/MAX/COUNT(col) fold the index; unsound shapes route to the scan") {
