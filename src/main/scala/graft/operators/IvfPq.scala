@@ -264,10 +264,10 @@ object IvfPq {
   }
 
   def load(spark: org.apache.spark.sql.SparkSession, dir: String): Model = {
-    val coarse = spark.read.parquet(s"$dir/coarse")
+    val coarse = graft.storage.FooterSchema.parquet(spark, s"$dir/coarse")
       .collect().map(r => r.getInt(0) -> r.getSeq[Float](1).toArray)
       .sortBy(_._1).map(_._2)
-    val rows = spark.read.parquet(s"$dir/codebooks")
+    val rows = graft.storage.FooterSchema.parquet(spark, s"$dir/codebooks")
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getSeq[Float](2).toArray))
     val m = rows.map(_._1).max + 1
     val k = rows.map(_._2).max + 1

@@ -1489,8 +1489,8 @@ object ExtensionQueries {
           cclusters0.write.mode("overwrite").parquet(s"$stateDir/clusters")
           Files.createFile(marker) // last: an interrupted build rebuilds
         }
-        val csigs = s.read.parquet(s"$stateDir/sigs")
-        val cclusters = s.read.parquet(s"$stateDir/clusters")
+        val csigs = graft.storage.FooterSchema.parquet(s, s"$stateDir/sigs")
+        val cclusters = graft.storage.FooterSchema.parquet(s, s"$stateDir/clusters")
         // stage 2 — the increment
         val labels = Dedup.incrementalDedup(csigs, cclusters, corpus, batch,
           "doc_id", "text")

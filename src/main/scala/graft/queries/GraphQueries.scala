@@ -60,7 +60,7 @@ object GraphQueries {
         tradeEdges(s, d).write.mode("overwrite").parquet(s"$dir/edges")
         Files.createFile(marker) // last: a torn build rebuilds
       }
-      s.read.parquet(s"$dir/edges")
+      graft.storage.FooterSchema.parquet(s, s"$dir/edges")
     } catch {
       case _: java.io.IOException => tradeEdges(s, d)
     }
@@ -310,7 +310,7 @@ object GraphQueries {
         derive.write.mode("overwrite").parquet(s"$dir/edges")
         Files.createFile(marker)
       }
-      s.read.parquet(s"$dir/edges")
+      graft.storage.FooterSchema.parquet(s, s"$dir/edges")
     } catch { case _: java.io.IOException => derive }
   }
 

@@ -1094,12 +1094,12 @@ object MergeQueries {
         q.awaitTermination()
       }
       drain()
-      val first = s.read.parquet(out).count()
+      val first = graft.storage.FooterSchema.parquet(s, out).count()
       drain() // caught-up restart from the same checkpoint
       // ONE read after the restart serves both the replay count and the
       // measured aggregate — the listing reflects post-restart state,
       // so a replay that DID write rows would still be counted
-      val outDf = s.read.parquet(out)
+      val outDf = graft.storage.FooterSchema.parquet(s, out)
       val second = outDf.count()
       outDf
         .groupBy("o_orderstatus")
@@ -1150,10 +1150,10 @@ object MergeQueries {
         q.awaitTermination()
       }
       drain()
-      val first = s.read.parquet(out).count()
+      val first = graft.storage.FooterSchema.parquet(s, out).count()
       drain() // caught-up restart
       // one post-restart read serves both replay count and aggregate (k28)
-      val outDf = s.read.parquet(out)
+      val outDf = graft.storage.FooterSchema.parquet(s, out)
       val second = outDf.count()
       outDf
         .groupBy("_commit_version", "_change_type")

@@ -39,7 +39,7 @@ object VectorQueries {
         .parquet(s"$dir/index")
       Files.createFile(marker) // last: a torn build rebuilds
     }
-    (IvfPq.load(s, dir), s.read.parquet(s"$dir/index"))
+    (IvfPq.load(s, dir), graft.storage.FooterSchema.parquet(s, s"$dir/index"))
   }
 
   /** v18's incrementally-MAINTAINED index: the corpus minus a held-out
@@ -69,7 +69,7 @@ object VectorQueries {
         .parquet(s"$dir/index")
       Files.createFile(marker) // last: a torn build rebuilds
     }
-    s.read.parquet(s"$dir/index")
+    graft.storage.FooterSchema.parquet(s, s"$dir/index")
   }
 
   /** The same md5-derived ±1 hyperplane weights as

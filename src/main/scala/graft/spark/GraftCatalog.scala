@@ -286,8 +286,9 @@ private[spark] class GraftTable(cat: ParquetCatalog, root: String,
       } else {
         require(version.isEmpty,
           s"$tableName is not versioned; AS OF is unavailable")
-        (Seq(java.nio.file.Paths.get(root, tableName).toString),
-          Map.empty[String, String], None)
+        val dir = java.nio.file.Paths.get(root, tableName).toString
+        (Seq(dir), Map.empty[String, String],
+          graft.storage.FooterSchema.resolve(spark, Seq(dir)))
       }
     ParquetTable(qualifiedName, spark,
       new CaseInsensitiveStringMap(opts.asJava), paths, declared,

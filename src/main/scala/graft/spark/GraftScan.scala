@@ -397,7 +397,8 @@ class GraftScan(inner: ParquetScan, sidecars: Seq[String],
           "apply on the SQL scan path. Run OPTIMIZE (compaction " +
           "materializes the deletes and sheds the vectors), then re-query.")
       val dv: Map[String, Array[Long]] =
-        spark.read.parquet(sidecars: _*).select("file", "pos").collect()
+        graft.storage.FooterSchema.parquet(spark, sidecars: _*)
+          .select("file", "pos").collect()
           .groupBy(r => GraftScan.baseName(r.getString(0)))
           .map { case (b, rows) => b -> rows.map(_.getLong(1)).distinct.sorted }
       new GraftDvReaderFactory(inner.toBatch.createReaderFactory(),

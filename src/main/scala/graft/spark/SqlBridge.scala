@@ -41,6 +41,66 @@ object SqlBridge {
     spark.sparkContext.listenerBus.waitUntilEmpty()
 }
 
+/** Bridge to the driver-side pieces of Spark's parquet schema inference
+  * (`sessionState` and the file-listing and streaming-sink helpers are
+  * `private[sql]`/`private[spark]`), for [[graft.storage.FooterSchema]]. */
+object ParquetSchemaBridge {
+  import org.apache.hadoop.conf.Configuration
+  import org.apache.hadoop.fs.{FileStatus, Path}
+  import org.apache.parquet.format.converter.ParquetMetadataConverter
+  import org.apache.parquet.hadoop.Footer
+  import org.apache.parquet.hadoop.util.HadoopInputFile
+  import org.apache.spark.sql.SparkSession
+  import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+  import org.apache.spark.sql.types.StructType
+
+  def hadoopConf(spark: SparkSession): Configuration =
+    spark.sessionState.newHadoopConf()
+
+  /** `spark.sql.parquet.mergeSchema`: inference then reads every footer. */
+  def mergeSchema(spark: SparkSession): Boolean =
+    spark.sessionState.conf.isParquetSchemaMergingEnabled
+
+  /** The names the file index drops while listing (`_`/`.` files and
+    * dirs, except `k=v` dirs and the `_metadata` summaries). */
+  def hiddenName(name: String): Boolean =
+    org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(name)
+
+  /** The files a streaming file sink's log commits under `path`, when
+    * `path` is such a sink's output: Spark reads those, not a listing. */
+  def sinkLogFiles(spark: SparkSession, path: String,
+      conf: Configuration): Option[Seq[FileStatus]] = {
+    import org.apache.spark.sql.execution.streaming.runtime.MetadataLogFileIndex
+    import org.apache.spark.sql.execution.streaming.sinks.FileStreamSink
+    if (!FileStreamSink.hasMetadata(Seq(path), conf, spark.sessionState.conf))
+      None
+    else Some(new MetadataLogFileIndex(spark, new Path(path), Map.empty, None)
+      .allFiles())
+  }
+
+  /** The schema of one parquet file, exactly as `ParquetFileFormat`'s
+    * inference derives it: the footer read without row groups, the
+    * converter built from the same confs (case sensitivity, field-id
+    * reads and the variant annotation at their defaults, as there), and
+    * Spark's own `readSchemaFromFooter`, which prefers the Spark schema
+    * a Spark writer stored in the footer. */
+  def footerSchema(spark: SparkSession, file: FileStatus,
+      conf: Configuration): StructType = {
+    val sql = spark.sessionState.conf
+    val converter = new ParquetToSparkSchemaConverter(
+      assumeBinaryIsString = sql.isParquetBinaryAsString,
+      assumeInt96IsTimestamp = sql.isParquetINT96AsTimestamp,
+      inferTimestampNTZ = sql.parquetInferTimestampNTZEnabled,
+      nanosAsLong = sql.legacyParquetNanosAsLong,
+      respectUnknownTypeAnnotation = sql.parquetReaderRespectUnknownTypeAnnotation)
+    val footer = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(file, conf),
+      ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, footer),
+      converter)
+  }
+}
+
 /** The parquet readers' generated row-index column name
   * (`private[sql]` in Spark): a `readDataSchema` field with this name
   * is FILLED by both the vectorized and the record reader with each

@@ -70,17 +70,27 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     codec: String = "zstd", bloomFor: Seq[String] = Nil,
     bloomNdv: Long = 100000L) {
 
-  /** Every catalog parquet read goes through this reader: column
-    * mapping rides parquet FIELD IDs, resolved by
+  /** Every catalog parquet read goes through here: column mapping
+    * rides parquet FIELD IDs, resolved by
     * [[graft.spark.GraftParquetFileFormat]] — the flag is scoped to
     * the catalog's own relations, never set on the session, so
     * non-graft reads keep their default by-name semantics. Inert for
-    * schemas without ids. Callers use `.load(paths)` (the format is
-    * pre-selected; `.parquet(paths)` would override it). */
-  private def catReader(schema: Option[StructType]):
-      org.apache.spark.sql.DataFrameReader =
-    schema.fold(spark.read)(spark.read.schema)
+    * schemas without ids. The schema is `schema` (a manifest's recorded
+    * one) when given, else the footer schema Spark's inference would
+    * find, resolved on the driver without a job ([[FooterSchema]]);
+    * `basePath` keeps hive partition columns on leaf-file reads. */
+  private def catLoad(schema: Option[StructType], paths: Seq[String],
+      basePath: Option[Path] = None): DataFrame = {
+    val reader = schema.orElse(FooterSchema.resolve(spark, paths))
+      .fold(spark.read)(spark.read.schema)
       .format(classOf[graft.spark.GraftParquetFileFormat].getName)
+    basePath.fold(reader)(b => reader.option("basePath", b.toString))
+      .load(paths: _*)
+  }
+
+  /** The `basePath` a versioned table's leaf-file reads need. */
+  private def partBase(name: String, m: TableManifest): Option[Path] =
+    if (m.partitionBy.isEmpty) None else Some(dataDir(name))
 
   private def tableDir(name: String): Path = {
     ParquetCatalog.requireValidName(name)
@@ -220,7 +230,7 @@ final class ParquetCatalog(spark: SparkSession, root: String,
 
   def read(name: String): DataFrame =
     if (isVersioned(name)) readVersion(name, currentVersion(name))
-    else catReader(None).load(tableDir(name).toString)
+    else catLoad(None, Seq(tableDir(name).toString))
 
   // ---- skipping-index lifecycle -------------------------------------
   //
@@ -307,12 +317,9 @@ final class ParquetCatalog(spark: SparkSession, root: String,
       val cand =
         if (SkippingIndex.existsAt(sp)) SkippingIndex.candidateFilesAt(sp, abs, preds)
         else abs
-      val reader = catReader(recordedSchema(m))
       val base =
         if (cand.isEmpty) readVersion(name, m.version).limit(0)
-        else if (m.partitionBy.isEmpty) dvFilter(name, m, reader.load(cand: _*))
-        else dvFilter(name, m,
-          reader.option("basePath", dataDir(name).toString).load(cand: _*))
+        else dvFilter(name, m, catLoad(recordedSchema(m), cand, partBase(name, m)))
       preds.foldLeft(base) { case (df, (c, lo, hi)) =>
         df.filter(col(c) >= lo && col(c) <= hi)
       }
@@ -575,11 +582,12 @@ final class ParquetCatalog(spark: SparkSession, root: String,
         val merged =
           Upsert.merge(slice, source, keys, smartCases, insertOnly)
             .persist() // materialize before dynamic overwrite drops inputs
-        merged.count()
         // partitions with surviving rows get rewritten by the dynamic
         // overwrite; touched partitions ABSENT from the merged frame
         // (every row moved out) must have their stale dirs removed —
-        // dynamic overwrite only touches partitions it writes
+        // dynamic overwrite only touches partitions it writes. This scan
+        // is also what materializes the cache: it is built for every
+        // column, whichever ones a query over it reads.
         val written = partitionsOf(merged, partitionBy)
         overwritePartitions(name, merged, partitionBy)
         dropPartitionDirs(name,
@@ -666,13 +674,10 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     if (!SkippingIndex.existsAt(sp)) return read(name)
     val cand = SkippingIndex.candidateFilesAt(sp, abs, Seq((key, lo, hi)),
       keepNullsOf = Some(key))
-    val reader = catReader(schema)
     val loaded =
       if (cand.isEmpty) read(name).limit(0)
-      else if (partitioned) {
-        val base = if (vm.isDefined) dataDir(name) else tableDir(name).toRealPath()
-        reader.option("basePath", base.toString).load(cand: _*)
-      } else reader.load(cand: _*)
+      else catLoad(schema, cand, Option.when(partitioned)(
+        if (vm.isDefined) dataDir(name) else tableDir(name).toRealPath()))
     // the SAME snapshot the candidates came from supplies the vectors —
     // a dv commit landing mid-call must not version-skew the read
     if (cand.nonEmpty) vm.fold(loaded)(m => dvFilter(name, m, loaded))
@@ -794,9 +799,7 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     if (cand.isEmpty) return full.limit(0)
     // the FULL frame's schema, so partition-value typing (and thus the
     // probe's hive path rendering) is identical to the unpruned read
-    val reader = catReader(Some(full.schema))
-    if (m.partitionBy.isEmpty) reader.load(cand: _*)
-    else reader.option("basePath", dataDir(name).toString).load(cand: _*)
+    catLoad(Some(full.schema), cand, partBase(name, m))
   }
 
   /** Diagnostic: the files [[updateWhere]]/[[deleteVersioned]]'s
@@ -991,11 +994,7 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     val cand = SkippingIndex.bloomCandidates(spark, files, column, value)
     val pred = col(column) === lit(value)
     if (cand.isEmpty) return read(name).filter(pred).limit(0)
-    val reader = catReader(schema)
-    val df =
-      if (partitioned)
-        reader.option("basePath", base.toRealPath().toString).load(cand: _*)
-      else reader.load(cand: _*)
+    val df = catLoad(schema, cand, Option.when(partitioned)(base.toRealPath()))
     // deletion vectors hold for point reads too (bloom pruning is a
     // file filter; the row filter still applies)
     vm.fold(df)(m => dvFilter(name, m, df)).filter(pred)
@@ -1362,13 +1361,7 @@ final class ParquetCatalog(spark: SparkSession, root: String,
         StructType.fromDDL(ddl))
     }
     val abs = m.files.map(f => versionsDir(name).resolve(f).toString)
-    val reader = catReader(recordedSchema(m))
-    val loaded =
-      if (m.partitionBy.isEmpty)
-        reader.load(abs: _*)
-      else
-        reader.option("basePath", dataDir(name).toString).load(abs: _*)
-    dvFilter(name, m, loaded)
+    dvFilter(name, m, catLoad(recordedSchema(m), abs, partBase(name, m)))
   }
 
   /** The commit wall-clock (epoch millis) a retained version's manifest
@@ -1630,7 +1623,7 @@ final class ParquetCatalog(spark: SparkSession, root: String,
       .map(r => versionsDir(name).resolve(r))
     val bytes = sidecars.map(p =>
       try Files.size(p) catch { case _: Exception => Long.MaxValue / 1024 }).sum
-    val dv0 = spark.read.parquet(sidecars.map(_.toString): _*)
+    val dv0 = FooterSchema.parquet(spark, sidecars.map(_.toString): _*)
       .select(baseNameOf(col("file")).as("__dv_file"), col("pos").as("__dv_pos"))
     val dv = if (bytes <= dvBroadcastBytes) broadcast(dv0) else dv0
     tagged.join(dv,
@@ -1689,7 +1682,7 @@ final class ParquetCatalog(spark: SparkSession, root: String,
       .values.toSeq.distinct.map(r => versionsDir(name).resolve(r).toString)
     val combined =
       if (priorSidecars.isEmpty) newRelPos
-      else spark.read.parquet(priorSidecars: _*)
+      else FooterSchema.parquet(spark, priorSidecars: _*)
         .where(col("file").isin(touchedRels: _*)).select("file", "pos")
         .unionByName(newRelPos)
     // ONE sidecar file per commit: deletes are row-scoped, so the
@@ -1740,10 +1733,8 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     // use, fed the RAW frame (the probe's inputFiles must be DATA files
     // only — the dv-filtered read would surface sidecars too), then
     // exclude already-deleted rows via the dv join keys
-    val reader = catReader(recordedSchema(m))
     def load(paths: Seq[String]): DataFrame =
-      if (m.partitionBy.isEmpty) reader.load(paths: _*)
-      else reader.option("basePath", dataDir(name).toString).load(paths: _*)
+      catLoad(recordedSchema(m), paths, partBase(name, m))
     val allAbs = m.files.map(f => versionsDir(name).resolve(f).toString)
     val cand = probeFrame(name, m, load(allAbs), condition).inputFiles.toSeq
     if (cand.isEmpty) return (m.version, 0L)
@@ -1820,10 +1811,8 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     requireUniqueBasenames(name, m, "updateWhere")
     val hit = coalesce(condition, lit(false))
     val next = m.version + 1
-    val reader = catReader(recordedSchema(m))
     def load(paths: Seq[String]): DataFrame =
-      if (m.partitionBy.isEmpty) reader.load(paths: _*)
-      else reader.option("basePath", dataDir(name).toString).load(paths: _*)
+      catLoad(recordedSchema(m), paths, partBase(name, m))
     val allAbs = m.files.map(f => versionsDir(name).resolve(f).toString)
     val cand = probeFrame(name, m, load(allAbs), condition).inputFiles.toSeq
     if (cand.isEmpty) return (m.version, 0L)
@@ -1919,10 +1908,8 @@ final class ParquetCatalog(spark: SparkSession, root: String,
       batchToken: Option[String]): Long = {
     requireUniqueBasenames(name, m, "the evolveSchema merge")
     val next = m.version + 1
-    val reader = catReader(recordedSchema(m))
     def load(paths: Seq[String]): DataFrame =
-      if (m.partitionBy.isEmpty) reader.load(paths: _*)
-      else reader.option("basePath", dataDir(name).toString).load(paths: _*)
+      catLoad(recordedSchema(m), paths, partBase(name, m))
     val allAbs = m.files.map(f => versionsDir(name).resolve(f).toString)
     val full = load(allAbs)
     val tCols = full.columns.toSeq
@@ -2050,7 +2037,7 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     val vd = versionsDir(name)
     val vectoredRels = entries.keys.toSeq.sorted
     val sidecars = entries.values.toSeq.distinct.map(r => vd.resolve(r).toString)
-    val delCounts: Map[String, Long] = spark.read.parquet(sidecars: _*)
+    val delCounts: Map[String, Long] = FooterSchema.parquet(spark, sidecars: _*)
       .where(col("file").isin(vectoredRels: _*))
       .groupBy("file").agg(count(lit(1)).as("n"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -2063,14 +2050,11 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     if (rewriteRels.isEmpty && sidecars.size <= 1) return (m.version, 0)
     val keepRels = vectoredRels.filterNot(rewriteRels.contains)
     // materialize the above-threshold files' LIVE rows as new files
-    val reader = catReader(recordedSchema(m))
     val rels =
       if (rewriteRels.isEmpty) Nil
       else {
         val abs = rewriteRels.map(r => vd.resolve(r).toString)
-        val raw =
-          if (m.partitionBy.isEmpty) reader.load(abs: _*)
-          else reader.option("basePath", dataDir(name).toString).load(abs: _*)
+        val raw = catLoad(recordedSchema(m), abs, partBase(name, m))
         stage(name, dvFilter(name, m, raw, Some(rewriteRels)), m.partitionBy, next)
       }
     // ONE coalesced sidecar carrying the kept files' (unchanged) sets:
@@ -3725,11 +3709,7 @@ final class ParquetCatalog(spark: SparkSession, root: String,
         new java.util.ArrayList[org.apache.spark.sql.Row](), s)
     }
     val abs = rels.map(f => versionsDir(name).resolve(f).toString)
-    val reader = catReader(schema)
-    val loaded =
-      if (m.partitionBy.isEmpty) reader.load(abs: _*)
-      else reader.option("basePath", dataDir(name).toString).load(abs: _*)
-    dvFilter(name, m, loaded, Some(rels))
+    dvFilter(name, m, catLoad(schema, abs, partBase(name, m)), Some(rels))
   }
 
   /** The schema a feed reads BOTH sides of a manifest diff under. The
@@ -4808,7 +4788,7 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     val deleted =
       if (entries.isEmpty) 0L
       else entries.toSeq.groupBy(_._2).map { case (sidecar, pairs) =>
-        spark.read.parquet(versionsDir(name).resolve(sidecar).toString)
+        FooterSchema.parquet(spark, versionsDir(name).resolve(sidecar).toString)
           .where(col("file").isin(pairs.map(_._1): _*))
           .select(lit(1))
       }.reduce(_.union(_)).count()

@@ -888,12 +888,12 @@ object SkippingIndex {
     val files = candidateFilesAll(tableDir, preds)
     val base =
       if (files.isEmpty)
-        spark.read.parquet(tableDir).limit(0)
+        FooterSchema.parquet(spark, tableDir).limit(0)
       else
         // basePath keeps hive-style partition columns in the schema
         // when reading leaf files of a partitioned layout — without it
         // the pruned read's schema diverges from the full-dir read
-        spark.read
+        FooterSchema.reader(spark, files)
           .option("basePath", Paths.get(tableDir).toRealPath().toString)
           .parquet(files: _*)
     preds.foldLeft(base) { case (df, (column, lo, hi)) =>

@@ -115,6 +115,37 @@ class CatalogSpec extends SparkSpec {
       === expected)
   }
 
+  test("a partition-scoped upsert runs no separate count to fill its cache") {
+    val root = Files.createTempDirectory("graft-psm-exec").toString
+    val cat = new ParquetCatalog(spark, root)
+    cat.overwrite("t",
+      Seq((1L, "2024-01-01", 1.0), (2L, "2024-01-02", 2.0))
+        .toDF("id", "partition_date", "m"),
+      Seq("partition_date"))
+    val delta = Seq((2L, "2024-01-02", 20.0), (3L, "2024-01-03", 3.0))
+      .toDF("id", "partition_date", "m")
+    val execs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(
+          e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case _: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+          execs.incrementAndGet(); ()
+        case _ => ()
+      }
+    }
+    org.apache.spark.sql.graftbridge.SqlBridge.drainListeners(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      cat.upsert("t", delta, Seq("id"), partitionBy = Seq("partition_date"))
+      org.apache.spark.sql.graftbridge.SqlBridge.drainListeners(spark)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    // the touched-partition probe, the merged frame's partition list
+    // (which also fills its cache), and the dynamic overwrite
+    assert(execs.get() === 3, s"${execs.get()} SQL executions")
+    assert(cat.read("t").orderBy("id").select("m").as[Double].collect().toSeq ===
+      Seq(1.0, 20.0, 3.0))
+  }
+
   test("partition-moving update empties the old slot and removes its dir") {
     val root = Files.createTempDirectory("graft-psm2").toString
     val cat = new ParquetCatalog(spark, root)
