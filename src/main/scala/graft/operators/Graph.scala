@@ -133,7 +133,9 @@ object Graph {
     * Floor-division dust is lost, never created, exactly as in the
     * unweighted form.
     *
-    * @param edges (src STRING, dst STRING, weight LONG > 0)
+    * @param edges (src STRING, dst STRING, weight LONG >= 0); a source
+    *              whose weights sum to 0 passes on no rank (its split is
+    *              NULL, as the decimal form's division by zero was)
     */
   def pageRankWeighted(
       edges: DataFrame,

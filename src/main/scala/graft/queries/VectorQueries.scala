@@ -547,7 +547,8 @@ object VectorQueries {
     // regression pin, not a statistical hope. Absolute recall is
     // geometry-limited on these near-uniform synthetic vectors (same
     // honest caveat as v11's JL projection). The 0.2 floor IS the
-    // measured per-geometry minimum (graft.RecallProbe, round 10):
+    // measured per-geometry minimum (round 10; RecallSpec pins v12's
+    // per-query bound and v14/v15's identity with v13):
     // per-query recalls across sf0.001/0.01/0.1 are v12
     // {0.3,0.3,0.2}-min per sf and v13/v14/v15 {0.2,0.2,0.2} — the
     // gate sits exactly on the observed floor, zero slack below it.

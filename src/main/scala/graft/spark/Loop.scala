@@ -1,6 +1,7 @@
 package graft.spark
 
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Shuffle/AQE pinning for iterative driver loops (Lloyd rounds, label
   * propagation, BPE merge rounds).
@@ -48,12 +49,10 @@ object Loop {
     * inside [[pinned]] and [[resolveWidth]]). */
   def widthFor(input: org.apache.spark.sql.DataFrame): Option[Int] = {
     val spark = input.sparkSession
-    val session =
-      try spark.conf.get("spark.sql.shuffle.partitions").toInt
-      catch { case _: Throwable => 200 }
+    val session = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val in =
       try input.rdd.getNumPartitions
-      catch { case _: Throwable => 4 }
+      catch { case NonFatal(_) => 4 }
     Some(math.max(4, math.min(session, in)))
   }
 

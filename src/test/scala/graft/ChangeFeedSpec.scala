@@ -63,6 +63,16 @@ class ChangeFeedSpec extends SparkSpec {
       === Array("insert"))
   }
 
+  test("a one-partition merge commit's feed reads only that partition's files") {
+    val cat = freshCatalog
+    seeded(cat)
+    // v3 merges into partition a only; partition b's files are carried
+    val read = cat.tableChanges("t", 2, 3, Seq("id")).inputFiles.toSeq
+    assert(read.nonEmpty)
+    assert(read.forall(_.contains("/p=a/")),
+      s"the merge commit's feed must not open partition b; read $read")
+  }
+
   test("net changesBetween reads only the files the manifests disagree on, and equals the full diff") {
     val cat = freshCatalog
     seeded(cat)

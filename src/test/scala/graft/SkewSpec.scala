@@ -74,6 +74,7 @@ class SkewSpec extends SparkSpec {
     assert(hotPairs.forall { case (a, _, h) => a == 0L && h == 0 })
     assert(pairs.exists { case (a, b, _) => a == 3000L && b == 3001L },
       "small identical cluster keeps exact all-pairs semantics")
+    assert(pairs.length < docs.count() * CAP, "O(n·cap) candidate envelope")
   }
 
   private val dim = 8
@@ -108,6 +109,7 @@ class SkewSpec extends SparkSpec {
       assert(mine.forall(_._4 === 1.0), s"hot member $i neighbors are near-identical")
       assert(mine.forall(_._2 < HOT), "neighbors come from the same hot cluster")
     }
+    assert(out.length <= (HOT + 2) * 3, "output bounded by n·k")
     // the small cluster: each member's best neighbor is its twin
     assert(byQuery(3000L).minBy(_._3)._2 === 3001L)
     assert(byQuery(3001L).minBy(_._3)._2 === 3000L)

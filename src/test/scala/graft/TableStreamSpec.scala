@@ -216,6 +216,35 @@ class TableStreamSpec extends SparkSpec {
     assert(batches.isEmpty)
   }
 
+  test("a backlog behind the checkpoint: one batch unbounded, window-sized batches under maxVersionsPerTrigger") {
+    val (cat, root) = fresh()
+    cat.overwriteVersioned("t", Seq((0L, 0.0)).toDF("id", "m"))
+    val checkpointed = cat.currentVersion("t")
+    // ten 3-row commits land behind a consumer checkpointed at v1
+    (1 to 10).foreach(i => cat.appendVersioned("t",
+      (1 to 3).map(k => ((10 * i + k).toLong, i.toDouble)).toDF("id", "m")))
+    def batchRows(label: String, maxVersions: Option[Long]): Seq[Long] = {
+      val rows = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+      cat.readStream("t", startingVersion = checkpointed,
+          maxVersionsPerTrigger = maxVersions).writeStream
+        .option("checkpointLocation", s"$root/ckpt-$label")
+        .trigger(Trigger.AvailableNow())
+        .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+          rows.add(b.count()); ()
+        }.start().awaitTermination()
+      import scala.jdk.CollectionConverters._
+      rows.asScala.toSeq
+    }
+    // unbounded, the catch-up is one backlog-sized batch: the hazard
+    // the rate limit bounds
+    assert(batchRows("unbounded", None) === Seq(30L))
+    // a 4-version window: ceil(10 / 4) = 3 batches of at most 4 commits
+    val bounded = batchRows("v4", Some(4L))
+    assert(bounded.size === 3, s"batches $bounded")
+    assert(bounded.forall(_ <= 4 * 3), s"a batch exceeds its window: $bounded")
+    assert(bounded.sum === 30L, "every row delivered exactly once")
+  }
+
   test("a crash mid-drain restarts at the failed batch: no loss, no duplicates") {
     val (cat, root) = fresh()
     cat.overwriteVersioned("t", Seq((1L, 10.0)).toDF("id", "m"))  // v1
