@@ -1,15 +1,31 @@
 package graft.spark
 
+import graft.storage.SkippingIndex
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{And, Attribute, EqualTo,
-  Expression, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual,
-  Literal}
+import org.apache.spark.sql.catalyst.expressions.{And, Attribute,
+  AttributeReference, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In,
+  LessThan, LessThanOrEqual, Literal}
+import org.apache.spark.sql.connector.expressions.{Literal => VLiteral,
+  NamedReference}
+import org.apache.spark.sql.connector.expressions.filter.Predicate
 import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan
 import org.apache.spark.sql.types.StructType
 
-/** Catalyst-filter → index-predicate translation and the
-  * split-filtering pass behind [[GraftScan]]. */
+/** Index conjuncts that prune files: numeric/raw-unit ranges (with the
+  * exact stats types each may prune beyond plain numerics), typed
+  * bloom points, and string ranges — what
+  * [[GraftFileSkipping.conjuncts]] extracts from one predicate. */
+final case class GraftConjuncts(
+    preds: Seq[(String, Double, Double, Set[String])] = Nil,
+    points: Seq[(String, Seq[Any])] = Nil,
+    strs: Seq[(String, Option[String], Option[String])] = Nil) {
+  def isEmpty: Boolean = preds.isEmpty && points.isEmpty && strs.isEmpty
+}
+
+/** The one Catalyst-predicate → index translation and candidate pass,
+  * shared by [[GraftScan]] (planned and runtime filters) and the
+  * catalog's UPDATE/DELETE probe. */
 object GraftFileSkipping {
 
   /** The stock estimate, TIGHTENED by the index when planned range /
@@ -26,13 +42,11 @@ object GraftFileSkipping {
     * so a filtered BUCKETED fact slice does not look full-table-sized
     * to the broadcast planner. */
   def tightenedStatistics(inner: ParquetScan,
-      statsPath: Option[java.nio.file.Path],
-      preds: Seq[(String, Double, Double, Set[String])],
-      strPreds: Seq[(String, Option[String], Option[String])]):
+      statsPath: Option[java.nio.file.Path], c: GraftConjuncts):
       org.apache.spark.sql.connector.read.Statistics = {
     val innerStats = inner.estimateStatistics()
     val tightened: Option[(Long, Long)] = statsPath.flatMap { sp =>
-      if (preds.isEmpty && strPreds.isEmpty) None
+      if (c.preds.isEmpty && c.strs.isEmpty) None
       else {
         val parts = inner.toBatch.planInputPartitions().toSeq
         if (!parts.forall(_.isInstanceOf[FilePartition])) None
@@ -45,15 +59,14 @@ object GraftFileSkipping {
             .view.mapValues(_.map(_.length).sum).toMap
           // per-file cached lookups off one resolved generation view —
           // never an O(index) map rebuild per estimate call
-          val view = graft.storage.SkippingIndex.viewAtCached(sp)
+          val view = SkippingIndex.viewAtCached(sp)
           val rows = byFile.keys.toSeq.sorted.flatMap(f =>
             view.rowCount(f).map(f -> _))
           if (rows.size != byFile.size) None
           else {
             val rowsMap = rows.toMap
-            val cand = graft.storage.SkippingIndex
-              .candidateFilesTyped(sp, byFile.keys.toSeq.sorted, preds,
-                strPreds = strPreds).toSet
+            val cand = SkippingIndex.candidateFilesTyped(sp,
+              byFile.keys.toSeq.sorted, c.preds, strPreds = c.strs).toSet
             val keptFiles = byFile.keys.filter(cand.contains).toSeq
             Some((keptFiles.map(rowsMap).sum, keptFiles.map(byFile).sum))
           }
@@ -70,40 +83,32 @@ object GraftFileSkipping {
     }
   }
 
-  /** Planned splits filtered to index candidates: min/max ranges first
-    * (one driver-side stats-file load), then — for equality conjuncts
-    * on columns whose files carry parquet bloom filters (one footer
-    * probe decides before any job launches) — a distributed bloom pass
-    * over what survived. Min/max cannot prune a point probe on a
-    * high-cardinality column under a random layout (every file's range
-    * spans the key space); the blooms are what make a SQL-door point
-    * lookup open ~1 file instead of the table. Returns (kept splits,
-    * kept file count, total file count). */
-  def filterSplits(statsPath: java.nio.file.Path,
-      preds: Seq[(String, Double, Double, Set[String])], points: Seq[(String, Seq[Any])],
-      splits: Array[org.apache.spark.sql.execution.datasources.PartitionedFile],
-      strPreds: Seq[(String, Option[String], Option[String])] = Nil):
-      (Array[org.apache.spark.sql.execution.datasources.PartitionedFile], Int, Int) = {
-    val paths = splits.map(f => plainPath(f.filePath.toString)).distinct.toSeq
-    var cand =
-      if (preds.isEmpty && strPreds.isEmpty) paths.toSet
-      else graft.storage.SkippingIndex
-        .candidateFilesTyped(statsPath, paths, preds, strPreds = strPreds).toSet
-    for ((col, vs) <- points if cand.size > 1) {
-      val ordered = cand.toSeq.sorted
+  /** The one candidate pass: the `files` (plain paths) the index
+    * cannot rule out under `c`, sorted. Min/max ranges first (one
+    * driver-side stats-file load, when `statsPath` is given), then,
+    * for each bloom point conjunct, a distributed bloom pass over what
+    * survived. Min/max cannot prune a point probe on a high-cardinality
+    * column under a random layout (every file's range spans the key
+    * space); the blooms are what make a point lookup open ~1 file
+    * instead of the table. */
+  def candidates(spark: SparkSession, statsPath: Option[java.nio.file.Path],
+      files: Seq[String], c: GraftConjuncts): Seq[String] = {
+    var cand = statsPath match {
+      case Some(sp) if c.preds.nonEmpty || c.strs.nonEmpty =>
+        SkippingIndex.candidateFilesTyped(sp, files, c.preds, strPreds = c.strs)
+      case _ => files.sorted
+    }
+    for ((col, vs) <- c.points if cand.size > 1) {
       // probe up to three files for a bloom before launching the
       // distributed pass: ONE bloom-less file (say, appended by a
       // writer configured without blooms) must not silently disable
       // pruning for the rest — and a genuinely bloom-less table still
       // never pays a job (the pass itself keeps bloom-less files, so
       // proceeding on any hit is conservative either way)
-      if (ordered.take(3).exists(f =>
-          graft.storage.SkippingIndex.hasBloomFilter(SparkSession.active, f, col)))
-        cand = graft.storage.SkippingIndex
-          .bloomCandidatesAny(SparkSession.active, ordered, col, vs).toSet
+      if (cand.take(3).exists(f => SkippingIndex.hasBloomFilter(spark, f, col)))
+        cand = SkippingIndex.bloomCandidatesAny(spark, cand, col, vs)
     }
-    val kept = splits.filter(f => cand.contains(plainPath(f.filePath.toString)))
-    (kept, cand.size, paths.size)
+    cand
   }
 
   /** DSv2 RUNTIME filters (dynamic partition pruning) → a driver-side
@@ -119,12 +124,8 @@ object GraftFileSkipping {
     * injects cannot contribute rows; anything unrecognized — multi-part
     * field paths, non-literal children, a dataType differing from the
     * partition column's — keeps every split. */
-  def runtimeKeep(predicates: Array[
-        org.apache.spark.sql.connector.expressions.filter.Predicate],
-      pSchema: StructType):
+  def runtimeKeep(predicates: Array[Predicate], pSchema: StructType):
       org.apache.spark.sql.execution.datasources.PartitionedFile => Boolean = {
-    import org.apache.spark.sql.connector.expressions.{Literal => VLiteral,
-      NamedReference}
     import org.apache.spark.sql.types._
     // atomic types whose catalyst-internal values compare reliably by
     // equals (UTF8String, boxed primitives, Decimal) — partition
@@ -189,104 +190,6 @@ object GraftFileSkipping {
       }
   }
 
-  /** How many runtime IN-list values a bloom pass will hash per file —
-    * DPP value lists can be large; above this, only the (always-cheap)
-    * min/max envelope prunes. */
-  private val MaxRuntimeBloomValues = 64
-
-  /** Runtime IN/= predicates over DATA columns → the same (envelope,
-    * points) conjuncts planned-time filters produce, for dynamic FILE
-    * pruning through the index/bloom pass. Sound like the planner-side
-    * extraction: values typed EXACTLY as the read schema's column
-    * (else refuse), null literals dropped (IN/= never match null),
-    * envelopes widened ±2 for raw-unit temporal tags, unsupported
-    * shapes contribute nothing. */
-  def runtimeIndexConjuncts(predicates: Array[
-        org.apache.spark.sql.connector.expressions.filter.Predicate],
-      dataSchema: StructType):
-      (Seq[(String, Double, Double, Set[String])], Seq[(String, Seq[Any])],
-        Seq[(String, Option[String], Option[String])]) = {
-    import org.apache.spark.sql.connector.expressions.{Literal => VLiteral,
-      NamedReference}
-    import org.apache.spark.sql.types._
-    val preds = Seq.newBuilder[(String, Double, Double, Set[String])]
-    val points = Seq.newBuilder[(String, Seq[Any])]
-    val strs = Seq.newBuilder[(String, Option[String], Option[String])]
-    predicates.foreach { p =>
-      val kids = p.children().toSeq
-      kids match {
-        case Seq(ref: NamedReference, lits @ _*)
-            if (p.name() == "IN" || p.name() == "=") &&
-              ref.fieldNames.length == 1 && lits.nonEmpty &&
-              lits.forall(_.isInstanceOf[VLiteral[_]]) =>
-          dataSchema.fields.find(_.name.equalsIgnoreCase(ref.fieldNames.head))
-            .foreach { f =>
-              val vs = lits.map(_.asInstanceOf[VLiteral[_]])
-                .filter(l => l.dataType == f.dataType && l.value != null)
-              if (vs.nonEmpty && vs.size == lits.size) {
-                val col = f.name
-                // envelope over the raw numeric view of the values
-                def env(pad: Double, tags: Set[String]): Unit = {
-                  val ds = vs.map(_.value.asInstanceOf[Number].doubleValue())
-                  preds += ((col, ds.min - pad, ds.max + pad, tags))
-                }
-                f.dataType match {
-                  case ByteType | ShortType | IntegerType | LongType |
-                      FloatType | DoubleType => env(0.0, Set.empty)
-                  case DateType => env(2.0, Set("INT32:DATE"))
-                  case TimestampType =>
-                    env(2.0, Set("INT64:TIMESTAMP(MICROS,true)"))
-                  case TimestampNTZType =>
-                    env(2.0, Set("INT64:TIMESTAMP(MICROS,false)"))
-                  case StringType =>
-                    // STRING envelope over the UTF-8 byte order (r19):
-                    // a string-keyed dim's runtime IN prunes the fact
-                    // by [min,max] even without declared blooms
-                    val ss = vs.map(_.value
-                      .asInstanceOf[org.apache.spark.unsafe.types.UTF8String]
-                      .toString)
-                    implicit val ord: Ordering[String] =
-                      (x: String, y: String) => compareUtf8(x, y)
-                    strs += ((col, Some(ss.min(ord)), Some(ss.max(ord))))
-                  case dt: DecimalType =>
-                    // unscaled-unit envelope, tag-gated exactly like
-                    // the planned-time decimal conjuncts
-                    val ds = vs.map(_.value
-                      .asInstanceOf[org.apache.spark.sql.types.Decimal]
-                      .toJavaBigDecimal.movePointRight(dt.scale).doubleValue())
-                    preds += ((col, ds.min - 2.0, ds.max + 2.0,
-                      Set(s"INT32:DECIMAL(${dt.precision},${dt.scale})",
-                        s"INT64:DECIMAL(${dt.precision},${dt.scale})")))
-                  case _ => ()
-                }
-                // bloom points: JVM-typed values (the footer hash layer
-                // keeps files for anything it cannot hash); compact
-                // decimals as their unscaled long, like planned points
-                if (vs.size <= MaxRuntimeBloomValues) {
-                  val typed = vs.flatMap(l => (l.value, f.dataType) match {
-                    case (n: Number, _) => Some(n)
-                    case (s: org.apache.spark.unsafe.types.UTF8String, _) =>
-                      Some(s.toString)
-                    case (d: org.apache.spark.sql.types.Decimal,
-                        dt: DecimalType)
-                        if dt.precision <=
-                          org.apache.spark.sql.types.Decimal.MAX_LONG_DIGITS =>
-                      // typed carrier: the bloom layer probes only
-                      // chunks whose DECIMAL(p,s) annotation matches
-                      Some(graft.storage.SkippingIndex.DecimalPoint(
-                        d.toUnscaledLong, dt.precision, dt.scale))
-                    case _ => None
-                  })
-                  if (typed.size == vs.size) points += ((col, typed))
-                }
-              }
-            }
-        case _ => ()
-      }
-    }
-    (preds.result(), points.result(), strs.result())
-  }
-
   /** URI → plain filesystem path (the index stores plain absolute
     * paths; split paths arrive as file: URIs). */
   def plainPath(p: String): String =
@@ -295,7 +198,103 @@ object GraftFileSkipping {
       if (u.getScheme != null && u.getPath != null) u.getPath else p
     } catch { case _: Exception => p }
 
-  private val All = (Double.NegativeInfinity, Double.PositiveInfinity)
+  /** How many IN-list values a bloom pass hashes per file: a large
+    * planned IN would spend more on hashing than the saved reads, and
+    * runtime (DPP) value lists can be large. Above the limit only the
+    * (always-cheap) min/max envelope prunes. */
+  val PlannedBloomValues = 16
+  val RuntimeBloomValues = 64
+
+  /** The one predicate → index translation. Top-level `And`s split
+    * into conjuncts; a conjunct comparing an attribute with literals —
+    * `=`, `<`, `<=`, `>`, `>=` in either operand order, or an
+    * all-literal `IN` — contributes a range (numeric or raw-unit
+    * temporal/decimal literals, [[ranged]]), a string range (UTF-8
+    * byte order) and, for `=`/`IN` of at most `maxBloomValues` values,
+    * typed bloom points. Only shapes a NULL attribute value cannot
+    * satisfy extract (never null-safe equality or IS NULL), so pruning
+    * on non-null stats is sound; strict bounds stay inclusive, raw-unit
+    * bounds widen ±2 (double rounding of micros past 2^53 stays
+    * over-reading); anything unrecognized contributes nothing. */
+  def conjuncts(filters: Seq[Expression],
+      maxBloomValues: Int = PlannedBloomValues): GraftConjuncts = {
+    def split(e: Expression): Seq[Expression] = e match {
+      case And(l, r) => split(l) ++ split(r)
+      case other => Seq(other)
+    }
+    // (attribute, literals, bounded below, bounded above): the literal
+    // envelope's min bounds from below, its max from above; equality
+    // shapes bound both sides
+    val shapes: Seq[(Attribute, Seq[Literal], Boolean, Boolean)] =
+      filters.flatMap(split).flatMap {
+        case EqualTo(a: Attribute, l: Literal) => Some((a, Seq(l), true, true))
+        case EqualTo(l: Literal, a: Attribute) => Some((a, Seq(l), true, true))
+        case In(a: Attribute, vs) if vs.nonEmpty && vs.forall(_.isInstanceOf[Literal]) =>
+          Some((a, vs.map(_.asInstanceOf[Literal]), true, true))
+        case GreaterThan(a: Attribute, l: Literal) => Some((a, Seq(l), true, false))
+        case GreaterThanOrEqual(a: Attribute, l: Literal) => Some((a, Seq(l), true, false))
+        case LessThan(l: Literal, a: Attribute) => Some((a, Seq(l), true, false))
+        case LessThanOrEqual(l: Literal, a: Attribute) => Some((a, Seq(l), true, false))
+        case LessThan(a: Attribute, l: Literal) => Some((a, Seq(l), false, true))
+        case LessThanOrEqual(a: Attribute, l: Literal) => Some((a, Seq(l), false, true))
+        case GreaterThan(l: Literal, a: Attribute) => Some((a, Seq(l), false, true))
+        case GreaterThanOrEqual(l: Literal, a: Attribute) => Some((a, Seq(l), false, true))
+        case _ => None
+      }
+    /** Every literal's value under `f`, or None when any has none. */
+    def all[T](ls: Seq[Literal])(f: Literal => Option[T]): Option[Seq[T]] = {
+      val vs = ls.map(f)
+      if (vs.contains(None)) None else Some(vs.flatten)
+    }
+    val utf8: Ordering[String] = (x: String, y: String) => compareUtf8(x, y)
+    GraftConjuncts(
+      preds = shapes.flatMap { case (a, ls, lo, hi) =>
+        all(ls)(ranged).map { rs =>
+          val tags = rs.flatMap(_._2).toSet
+          val pad = if (tags.isEmpty) 0.0 else 2.0
+          (a.name, if (lo) rs.map(_._1).min - pad else Double.NegativeInfinity,
+            if (hi) rs.map(_._1).max + pad else Double.PositiveInfinity, tags)
+        }
+      },
+      points = shapes.flatMap { case (a, ls, lo, hi) =>
+        if (lo && hi && ls.size <= maxBloomValues) all(ls)(typed).map(a.name -> _)
+        else None
+      },
+      strs = shapes.flatMap { case (a, ls, lo, hi) =>
+        all(ls)(str).map(ss =>
+          (a.name, Option.when(lo)(ss.min(utf8)), Option.when(hi)(ss.max(utf8))))
+      })
+  }
+
+  /** DSv2 RUNTIME `IN`/`=` predicates over DATA columns → Catalyst
+    * `In`/`EqualTo` over typed literals, for [[conjuncts]] with
+    * [[RuntimeBloomValues]] (dynamic FILE pruning through the
+    * index/bloom pass). A predicate converts only when it names one
+    * column of `dataSchema` (case-insensitively) and every value is
+    * non-null (IN/= never match null) and typed EXACTLY as the column;
+    * anything else is refused and prunes nothing. */
+  def runtimeFilters(predicates: Array[Predicate],
+      dataSchema: StructType): Seq[Expression] =
+    predicates.toSeq.flatMap { p =>
+      p.children().toSeq match {
+        case Seq(ref: NamedReference, vs @ _*) if (p.name() == "IN" ||
+            p.name() == "=") && ref.fieldNames.length == 1 && vs.nonEmpty =>
+          dataSchema.fields.find(_.name.equalsIgnoreCase(ref.fieldNames.head))
+            .flatMap { f =>
+              val ls = vs.collect { case l: VLiteral[_]
+                if l.dataType == f.dataType && l.value != null => l }
+              // a value that is not the type's internal form fails the
+              // literal's own validation: refuse
+              val lits = scala.util.Try(ls.map(l => Literal(l.value, l.dataType)))
+              if (ls.size != vs.size || lits.isFailure) None
+              else {
+                val a = AttributeReference(f.name, f.dataType)()
+                Some(if (p.name() == "IN") In(a, lits.get) else EqualTo(a, lits.get.head))
+              }
+            }
+        case _ => None
+      }
+    }
 
   /** Literal → (raw double, stats types the raw value may prune beyond
     * plain numerics). Catalyst DATE/TIMESTAMP literals are ALREADY in
@@ -338,112 +337,34 @@ object GraftFileSkipping {
       case _ => None
     }
 
-  /** Numeric (and raw-unit temporal) range conjuncts from pushed
-    * filters. Only shapes where a NULL attribute value cannot satisfy
-    * the predicate are extracted (plain comparisons and IN — never
-    * null-safe equality or IS NULL), so pruning on non-null min/max
-    * stats is sound. Strict bounds stay inclusive, and raw temporal
-    * bounds widen ±2 units (micros past 2^53 round in double — the
-    * widening keeps that rounding strictly over-reading): the index
-    * may only over-read. */
-  def rangeConjuncts(filters: Seq[Expression]):
-      Seq[(String, Double, Double, Set[String])] = {
-    def conjuncts(e: Expression): Seq[Expression] = e match {
-      case And(l, r) => conjuncts(l) ++ conjuncts(r)
-      case other => Seq(other)
-    }
-    def mk(a: Attribute, lo: Option[(Double, Set[String])],
-        hi: Option[(Double, Set[String])]):
-        Option[(String, Double, Double, Set[String])] = {
-      val raw = (lo.toSeq ++ hi.toSeq).flatMap(_._2).toSet
-      val pad = if (raw.isEmpty) 0.0 else 2.0
-      Some((a.name, lo.map(_._1 - pad).getOrElse(All._1),
-        hi.map(_._1 + pad).getOrElse(All._2), raw))
-    }
-    filters.flatMap(conjuncts).flatMap {
-      case EqualTo(a: Attribute, l: Literal) =>
-        ranged(l).flatMap(v => mk(a, Some(v), Some(v)))
-      case EqualTo(l: Literal, a: Attribute) =>
-        ranged(l).flatMap(v => mk(a, Some(v), Some(v)))
-      case GreaterThan(a: Attribute, l: Literal) =>
-        ranged(l).flatMap(v => mk(a, Some(v), None))
-      case GreaterThanOrEqual(a: Attribute, l: Literal) =>
-        ranged(l).flatMap(v => mk(a, Some(v), None))
-      case LessThan(a: Attribute, l: Literal) =>
-        ranged(l).flatMap(v => mk(a, None, Some(v)))
-      case LessThanOrEqual(a: Attribute, l: Literal) =>
-        ranged(l).flatMap(v => mk(a, None, Some(v)))
-      case GreaterThan(l: Literal, a: Attribute) => // v > a  ==  a < v
-        ranged(l).flatMap(v => mk(a, None, Some(v)))
-      case GreaterThanOrEqual(l: Literal, a: Attribute) =>
-        ranged(l).flatMap(v => mk(a, None, Some(v)))
-      case LessThan(l: Literal, a: Attribute) => // v < a  ==  a > v
-        ranged(l).flatMap(v => mk(a, Some(v), None))
-      case LessThanOrEqual(l: Literal, a: Attribute) =>
-        ranged(l).flatMap(v => mk(a, Some(v), None))
-      case In(a: Attribute, vs) if vs.nonEmpty && vs.forall {
-          case l: Literal => ranged(l).isDefined
-          case _ => false
-        } =>
-        val ds = vs.collect { case l: Literal => ranged(l).get }
-        mk(a, Some((ds.map(_._1).min, ds.flatMap(_._2).toSet)),
-          Some((ds.map(_._1).max, ds.flatMap(_._2).toSet)))
-      case _ => None
-    }
+  /** A literal as the JVM value the bloom layer hashes — the exact
+    * value matters there (blooms hash the column's physical type, so
+    * the double-erased range form cannot drive them). Compact decimals
+    * hash as their UNSCALED long — exactly the INT32/INT64 physical
+    * value the column's bloom was built over — carried WITH the (p,s)
+    * they were scaled under, so the bloom layer can refuse a chunk
+    * whose DECIMAL annotation differs (absorbed parquet at another
+    * scale stores different unscaled values for the same number); wide
+    * (binary-backed) decimals stay unextracted (r19). Values the bloom
+    * layer cannot hash keep their files there anyway. */
+  private def typed(l: Literal): Option[Any] = (l.value, l.dataType) match {
+    case (n: java.lang.Number, _) => Some(n)
+    case (s: org.apache.spark.unsafe.types.UTF8String, _) => Some(s.toString)
+    case (d: org.apache.spark.sql.types.Decimal,
+        dt: org.apache.spark.sql.types.DecimalType)
+        if dt.precision <= org.apache.spark.sql.types.Decimal.MAX_LONG_DIGITS =>
+      Some(SkippingIndex.DecimalPoint(d.toUnscaledLong, dt.precision, dt.scale))
+    case _ => None
   }
 
-  /** STRING range conjuncts ([lo, hi] inclusive, None = unbounded
-    * side) from pushed filters — the r19 string-skipping channel.
-    * Spark compares strings as UNSIGNED UTF-8 bytes (UTF8String binary
-    * order), which is exactly parquet's declared sort order for
-    * STRING-annotated BINARY stats, so a byte-wise intersect against
-    * the recorded min/max can prune string-clustered layouts the same
-    * way numerics do. Only null-rejecting attribute-vs-literal shapes
-    * extract (the same discipline as [[rangeConjuncts]]); the index
-    * side additionally gates on the exact `BINARY:STRING` stats
+  /** A STRING literal for the r19 string-skipping channel. Spark
+    * compares strings as UNSIGNED UTF-8 bytes, which is exactly
+    * parquet's declared sort order for STRING-annotated BINARY stats;
+    * the index side additionally gates on the exact `BINARY:STRING`
     * annotation, so raw binary/decimal stats never wrongly prune. */
-  def stringRangeConjuncts(filters: Seq[Expression]):
-      Seq[(String, Option[String], Option[String])] = {
-    def conjuncts(e: Expression): Seq[Expression] = e match {
-      case And(l, r) => conjuncts(l) ++ conjuncts(r)
-      case other => Seq(other)
-    }
-    def str(l: Literal): Option[String] = l.value match {
-      case s: org.apache.spark.unsafe.types.UTF8String => Some(s.toString)
-      case _ => None
-    }
-    filters.flatMap(conjuncts).flatMap {
-      case EqualTo(a: Attribute, l: Literal) =>
-        str(l).map(v => (a.name, Some(v), Some(v)))
-      case EqualTo(l: Literal, a: Attribute) =>
-        str(l).map(v => (a.name, Some(v), Some(v)))
-      case GreaterThan(a: Attribute, l: Literal) =>
-        str(l).map(v => (a.name, Some(v), None))
-      case GreaterThanOrEqual(a: Attribute, l: Literal) =>
-        str(l).map(v => (a.name, Some(v), None))
-      case LessThan(a: Attribute, l: Literal) =>
-        str(l).map(v => (a.name, None, Some(v)))
-      case LessThanOrEqual(a: Attribute, l: Literal) =>
-        str(l).map(v => (a.name, None, Some(v)))
-      case GreaterThan(l: Literal, a: Attribute) => // v > a  ==  a < v
-        str(l).map(v => (a.name, None, Some(v)))
-      case GreaterThanOrEqual(l: Literal, a: Attribute) =>
-        str(l).map(v => (a.name, None, Some(v)))
-      case LessThan(l: Literal, a: Attribute) => // v < a  ==  a > v
-        str(l).map(v => (a.name, Some(v), None))
-      case LessThanOrEqual(l: Literal, a: Attribute) =>
-        str(l).map(v => (a.name, Some(v), None))
-      case In(a: Attribute, vs) if vs.nonEmpty && vs.forall {
-          case l: Literal => str(l).isDefined
-          case _ => false
-        } =>
-        // envelope over the UTF-8 byte order (min/max of the values)
-        val bs = vs.collect { case l: Literal => str(l).get }
-        implicit val ord: Ordering[String] =
-          (x: String, y: String) => GraftFileSkipping.compareUtf8(x, y)
-        Some((a.name, Some(bs.min(ord)), Some(bs.max(ord))))
-      case _ => None
-    }
+  private def str(l: Literal): Option[String] = l.value match {
+    case s: org.apache.spark.unsafe.types.UTF8String => Some(s.toString)
+    case _ => None
   }
 
   /** Unsigned UTF-8 byte comparison — the order Spark's UTF8String and
@@ -452,52 +373,4 @@ object GraftFileSkipping {
     java.util.Arrays.compareUnsigned(
       x.getBytes(java.nio.charset.StandardCharsets.UTF_8),
       y.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-
-  /** How many IN-list literals a bloom pass will hash per file before
-    * giving up on pruning — a 10k-element IN would spend more on
-    * hashing than the saved reads. */
-  private val MaxBloomInValues = 16
-
-  /** Typed equality/IN conjuncts, for parquet-bloom pruning — the
-    * exact value matters there (blooms hash the column's physical
-    * type, so the double-erased range form cannot drive them). An
-    * IN-list entry keeps a file when ANY value might be contained.
-    * Only plain non-null-matching shapes; unsupported value types are
-    * simply never extracted
-    * ([[graft.storage.SkippingIndex.bloomMightContain]] keeps files it
-    * cannot hash for anyway). */
-  def pointConjuncts(filters: Seq[Expression]): Seq[(String, Seq[Any])] = {
-    def typed(l: Literal): Option[Any] = (l.value, l.dataType) match {
-      case (n: java.lang.Number, _) => Some(n)
-      case (s: org.apache.spark.unsafe.types.UTF8String, _) => Some(s.toString)
-      // compact decimals hash as their UNSCALED long — exactly the
-      // INT32/INT64 physical value the column's bloom was built over —
-      // carried WITH the (p,s) they were scaled under, so the bloom
-      // layer can refuse a chunk whose DECIMAL annotation differs
-      // (absorbed parquet at another scale stores different unscaled
-      // values for the same number); wide (binary-backed) decimals
-      // stay unextracted (r19)
-      case (d: org.apache.spark.sql.types.Decimal,
-          dt: org.apache.spark.sql.types.DecimalType)
-          if dt.precision <= org.apache.spark.sql.types.Decimal.MAX_LONG_DIGITS =>
-        Some(graft.storage.SkippingIndex.DecimalPoint(
-          d.toUnscaledLong, dt.precision, dt.scale))
-      case _ => None
-    }
-    def conjuncts(e: Expression): Seq[Expression] = e match {
-      case And(l, r) => conjuncts(l) ++ conjuncts(r)
-      case other => Seq(other)
-    }
-    filters.flatMap(conjuncts).flatMap {
-      case EqualTo(a: Attribute, l: Literal) =>
-        typed(l).map(v => a.name -> Seq(v))
-      case EqualTo(l: Literal, a: Attribute) =>
-        typed(l).map(v => a.name -> Seq(v))
-      case In(a: Attribute, vs) if vs.nonEmpty &&
-          vs.size <= MaxBloomInValues =>
-        val ts = vs.map { case l: Literal => typed(l); case _ => None }
-        if (ts.forall(_.isDefined)) Some(a.name -> ts.map(_.get)) else None
-      case _ => None
-    }
-  }
 }

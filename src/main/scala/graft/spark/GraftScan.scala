@@ -46,15 +46,6 @@ final case class GraftScanCaps(sidecars: Seq[String],
 final case class GraftKeyLayout(identity: Seq[String],
     bucket: Option[(String, Int)])
 
-/** Index conjuncts a scan prunes files with — numeric/temporal ranges,
-  * bloom points and string ranges ([[GraftFileSkipping]]). */
-final case class GraftConjuncts(
-    preds: Seq[(String, Double, Double, Set[String])] = Nil,
-    points: Seq[(String, Seq[Any])] = Nil,
-    strs: Seq[(String, Option[String], Option[String])] = Nil) {
-  def isEmpty: Boolean = preds.isEmpty && points.isEmpty && strs.isEmpty
-}
-
 /** The registered catalog's one scan builder. It forwards every
   * pushdown the stock `ParquetScanBuilder` exposes (column pruning,
   * catalyst filters with the inner builder's own residual, aggregates),
@@ -104,9 +95,7 @@ class GraftScanBuilder(inner: ScanBuilder, caps: GraftScanCaps,
   override def pushFilters(filters: Seq[Expression]): Seq[Expression] = {
     sawFilters ||= filters.nonEmpty
     if (caps.statsPath.isDefined)
-      planned = GraftConjuncts(GraftFileSkipping.rangeConjuncts(filters),
-        GraftFileSkipping.pointConjuncts(filters),
-        GraftFileSkipping.stringRangeConjuncts(filters))
+      planned = GraftFileSkipping.conjuncts(filters)
     val residual =
       if (!vectored) CatalystFilterPushdownBridge.pushAll(inner, filters)
       else {
@@ -298,8 +287,8 @@ class GraftScan(inner: ParquetScan, sidecars: Seq[String],
     }
 
   // memoized: re-requested at each AQE re-optimization, conjuncts fixed
-  private lazy val tightened = GraftFileSkipping.tightenedStatistics(
-    inner, statsPath, planned.preds, planned.strs)
+  private lazy val tightened =
+    GraftFileSkipping.tightenedStatistics(inner, statsPath, planned)
   override def estimateStatistics(): Statistics = tightened
 
   private lazy val plannedSplits: Array[PartitionedFile] =
@@ -308,18 +297,19 @@ class GraftScan(inner: ParquetScan, sidecars: Seq[String],
       case other => throw new IllegalStateException(
         s"GraftScan expected file partitions, got $other")
     }
-  private def fileCount(splits: Array[PartitionedFile]): Int =
-    splits.map(f => GraftFileSkipping.plainPath(f.filePath.toString)).distinct.length
-  private lazy val totalFiles = fileCount(plannedSplits)
+  private def paths(splits: Array[PartitionedFile]): Seq[String] =
+    splits.map(f => GraftFileSkipping.plainPath(f.filePath.toString)).distinct.toSeq
+  private lazy val totalFiles = paths(plannedSplits).size
 
   /** (kept splits, kept file count) after the index/bloom pass. */
   private def indexPass(splits: Array[PartitionedFile],
       c: GraftConjuncts): (Array[PartitionedFile], Int) = statsPath match {
     case Some(sp) if !c.isEmpty =>
-      val (kept, n, _) =
-        GraftFileSkipping.filterSplits(sp, c.preds, c.points, splits, c.strs)
-      (kept, n)
-    case _ => (splits, fileCount(splits))
+      val cand = GraftFileSkipping.candidates(SparkSession.active, Some(sp),
+        paths(splits), c).toSet
+      (splits.filter(f =>
+        cand.contains(GraftFileSkipping.plainPath(f.filePath.toString))), cand.size)
+    case _ => (splits, paths(splits).size)
   }
   private lazy val plannedState = indexPass(plannedSplits, planned)
 
@@ -344,12 +334,9 @@ class GraftScan(inner: ParquetScan, sidecars: Seq[String],
           key.flatMap(_.bucket))
         val files = plannedState._1.filter(f => keep(f) &&
           buckets.forall(_.contains(GraftScan.bucketIdOf(f.filePath.toString))))
-        if (statsPath.isEmpty) indexPass(files, GraftConjuncts())
-        else {
-          val (preds, points, strs) = GraftFileSkipping
-            .runtimeIndexConjuncts(runtime, inner.readDataSchema)
-          indexPass(files, GraftConjuncts(preds, points, strs))
-        }
+        indexPass(files, GraftFileSkipping.conjuncts(
+          GraftFileSkipping.runtimeFilters(runtime, inner.readDataSchema),
+          GraftFileSkipping.RuntimeBloomValues))
       }
       current = Some(s)
       s

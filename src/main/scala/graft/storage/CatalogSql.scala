@@ -236,7 +236,7 @@ object CatalogSql {
       // same concurrency contract as the registered catalog's
       // UPDATE/DELETE: a lost commit race re-reads and re-applies
       // instead of surfacing ConcurrentWriteException to SQL callers
-      val (v, n) = cat.updateWhereWithRetry(t, where, assignments)
+      val (v, n) = cat.withRetry()(cat.updateWhere(t, where, assignments))
       import spark.implicits._
       Seq((t, v, n)).toDF("table_name", "new_version", "rows_updated")
     case deleteRe(t0, cond) =>
@@ -246,7 +246,7 @@ object CatalogSql {
       val where = Option(cond)
         .map(org.apache.spark.sql.functions.expr)
         .getOrElse(org.apache.spark.sql.functions.lit(true))
-      val (v, n) = cat.deleteVersionedWithRetry(t, where)
+      val (v, n) = cat.withRetry()(cat.deleteVersioned(t, where))
       import spark.implicits._
       Seq((t, v, n)).toDF("table_name", "new_version", "rows_deleted")
     case renameColRe(t0, from, to) =>

@@ -292,11 +292,8 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     if (isVersioned(name)) {
       val declared = tableProperties(name).get(ParquetCatalog.IndexForProp)
         .toSeq.flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
-      if (SkippingIndex.existsAt(statsPath(name))) {
+      if (SkippingIndex.existsAt(statsPath(name)) || declared.nonEmpty) {
         SkippingIndex.refreshAt(spark, statsPath(name),
-          manifestFilesAbs(name), declared); ()
-      } else if (declared.nonEmpty) {
-        SkippingIndex.writeAt(spark, statsPath(name),
           manifestFilesAbs(name), declared); ()
       }
     } else {
@@ -684,117 +681,41 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     else loaded
   }
 
-  /** Conjunctive constraints IMPLIED by a row-level verb's WHERE
-    * condition: `(column, lo, hi)` numeric ranges plus `(column, value)`
-    * equality points, extracted from the expression's top-level AND
-    * conjuncts only. Any row satisfying the condition satisfies every
-    * conjunct, so pruning files by a subset of them can never lose a
-    * touched partition; an OR (or anything unrecognized) contributes
-    * nothing rather than something unsound. NULL-valued comparisons
-    * never match under three-valued logic (and the verbs coalesce a
-    * NULL condition to false), so range pruning needs no has-nulls
-    * keep. */
-  private def impliedConstraints(full: DataFrame, condition: Column):
-      (Seq[(String, Double, Double)], Seq[(String, Any)]) = {
-    import org.apache.spark.sql.catalyst.{expressions => ce}
-    import org.apache.spark.sql.catalyst.plans.{logical => lp}
-    val Inf = Double.PositiveInfinity
-    // resolve through the ANALYZER (a plain Column wraps a ColumnNode in
-    // Spark 4, not a Catalyst tree): filter the frame, take the analyzed
-    // Filter's predicate — attribute references bound, literals coerced
-    val pred = full.filter(condition).queryExecution.analyzed.collectFirst {
-      case f: lp.Filter => f.condition
-    }.getOrElse(return (Nil, Nil))
-    val schema = full.schema
-    def field(e: ce.Expression): Option[org.apache.spark.sql.types.StructField] =
-      e match {
-        case a: ce.AttributeReference =>
-          schema.fields.find(_.name.equalsIgnoreCase(a.name))
-        case _ => None
-      }
-    def numField(e: ce.Expression): Option[String] = field(e).collect {
-      case f if f.dataType.isInstanceOf[org.apache.spark.sql.types.NumericType] =>
-        f.name
-    }
-    /** A foldable side's value (covers the coercion Casts the analyzer
-      * wraps around literals); None for NULL or non-constant. */
-    def litVal(e: ce.Expression): Option[Any] =
-      if (!e.foldable) None
-      else Option(e.eval(org.apache.spark.sql.catalyst.InternalRow.empty))
-    def numLit(e: ce.Expression): Option[Double] = litVal(e).collect {
-      case n: Number => n.doubleValue()
-      case d: org.apache.spark.sql.types.Decimal => d.toDouble
-    }
-    /** The value as the JVM type [[SkippingIndex.bloomMightContain]]
-      * hashes (numbers and strings only). */
-    def pointLit(e: ce.Expression): Option[Any] = litVal(e).collect {
-      case n: Number => n
-      case s: org.apache.spark.unsafe.types.UTF8String => s.toString
-    }
-    def eq(a: ce.Expression, l: ce.Expression):
-        (Seq[(String, Double, Double)], Seq[(String, Any)]) = {
-      val ranges = for (n <- numField(a).toSeq; v <- numLit(l).toSeq)
-        yield (n, v, v)
-      val points = for (f <- field(a).toSeq; v <- pointLit(l).toSeq)
-        yield (f.name, v)
-      (ranges, points)
-    }
-    def range(a: ce.Expression, lo: Option[Double], hi: Option[Double]):
-        (Seq[(String, Double, Double)], Seq[(String, Any)]) =
-      (numField(a).toSeq.map(n => (n, lo.getOrElse(-Inf), hi.getOrElse(Inf))),
-        Nil)
-    def walk(e: ce.Expression):
-        (Seq[(String, Double, Double)], Seq[(String, Any)]) = e match {
-      case ce.And(l, r) =>
-        val (lr, lps) = walk(l); val (rr, rp) = walk(r)
-        (lr ++ rr, lps ++ rp)
-      case ce.EqualTo(a, l) if field(a).isDefined => eq(a, l)
-      case ce.EqualTo(l, a) if field(a).isDefined => eq(a, l)
-      case ce.EqualNullSafe(a, l) if field(a).isDefined => eq(a, l)
-      case ce.EqualNullSafe(l, a) if field(a).isDefined => eq(a, l)
-      case ce.GreaterThan(a, l) if field(a).isDefined => range(a, numLit(l), None)
-      case ce.GreaterThanOrEqual(a, l) if field(a).isDefined => range(a, numLit(l), None)
-      case ce.LessThan(a, l) if field(a).isDefined => range(a, None, numLit(l))
-      case ce.LessThanOrEqual(a, l) if field(a).isDefined => range(a, None, numLit(l))
-      case ce.GreaterThan(l, a) if field(a).isDefined => range(a, None, numLit(l))
-      case ce.GreaterThanOrEqual(l, a) if field(a).isDefined => range(a, None, numLit(l))
-      case ce.LessThan(l, a) if field(a).isDefined => range(a, numLit(l), None)
-      case ce.LessThanOrEqual(l, a) if field(a).isDefined => range(a, numLit(l), None)
-      case ce.In(a, vs) if field(a).isDefined && vs.nonEmpty &&
-          vs.forall(numLit(_).isDefined) =>
-        val ds = vs.flatMap(numLit)
-        (numField(a).toSeq.map(n => (n, ds.min, ds.max)), Nil)
-      case _ => (Nil, Nil)
-    }
-    walk(pred)
-  }
-
   /** The frame a row-level UPDATE/DELETE's touched-partition probe
     * scans. Without pruning the probe is a FULL read of the version —
     * at 100 TB a point UPDATE on an indexed key would cost a table scan
-    * just to learn which partition it touches. Here the WHERE's implied
-    * constraints prune the file list first: min/max skipping-index
-    * ranges, then parquet native bloom filters for equality points on
-    * `bloomFor` columns (the same two structures the read path's
-    * [[readRange]]/[[readPoint]] use). Files without stats/filters are
-    * conservatively kept, so the probe can only over-read, never miss a
-    * touched partition — and the verbs re-apply the real condition to
-    * whatever the probe returns. Falls back to the full frame when
-    * nothing prunes. */
+    * just to learn which partition it touches. Here the WHERE prunes
+    * the file list first, through the SQL door's own translation and
+    * candidate pass ([[graft.spark.GraftFileSkipping]]): min/max
+    * skipping-index ranges, then parquet native bloom filters for
+    * equality points (the same two structures the read path's
+    * [[readRange]]/[[readPoint]] use). The condition is resolved
+    * through the ANALYZER (a plain Column wraps a ColumnNode in Spark 4,
+    * not a Catalyst tree) and its constant sub-expressions — the
+    * coercion casts around literals — fold to literals, the shape
+    * pushed filters have. Only top-level AND conjuncts prune, and any
+    * row satisfying the condition satisfies each of them, so the probe
+    * can only over-read, never miss a touched partition — and the
+    * verbs re-apply the real condition to whatever the probe returns.
+    * NULL-valued comparisons never match under three-valued logic (and
+    * the verbs coalesce a NULL condition to false), so range pruning
+    * needs no has-nulls keep. Falls back to the full frame when nothing
+    * prunes. */
   private def probeFrame(name: String, m: TableManifest,
       full: DataFrame, condition: Column): DataFrame = {
-    val (ranges, points) = impliedConstraints(full, condition)
-    if (ranges.isEmpty && points.isEmpty) return full
-    val sp = statsPath(name)
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    val where = full.filter(condition).queryExecution.analyzed.collectFirst {
+      case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
+        f.condition.transformUp {
+          case e if e.foldable && !e.isInstanceOf[Literal] =>
+            scala.util.Try(Literal(e.eval(), e.dataType)).getOrElse(e)
+        }
+    }
+    val c = graft.spark.GraftFileSkipping.conjuncts(where.toSeq)
+    if (c.isEmpty) return full
     val abs = m.files.map(f => versionsDir(name).resolve(f).toString)
-    val indexed = indexCols(name).toSet
-    val rangePreds = ranges.filter(r => indexed.contains(r._1))
-    var cand =
-      if (rangePreds.nonEmpty && SkippingIndex.existsAt(sp))
-        SkippingIndex.candidateFilesAt(sp, abs, rangePreds)
-      else abs
-    for ((c, v) <- points if bloomFor.contains(c) && cand.nonEmpty)
-      cand = SkippingIndex.bloomCandidates(spark, cand, c, v)
+    val cand = graft.spark.GraftFileSkipping.candidates(spark,
+      Some(statsPath(name)).filter(SkippingIndex.existsAt), abs, c)
     if (cand.size == abs.size) return full
     if (cand.isEmpty) return full.limit(0)
     // the FULL frame's schema, so partition-value typing (and thus the
@@ -991,7 +912,7 @@ final class ParquetCatalog(spark: SparkSession, root: String,
         (SkippingIndex.listFiles(tableDir(name).toString),
           hasPartitionDirs(name), None, tableDir(name))
     }
-    val cand = SkippingIndex.bloomCandidates(spark, files, column, value)
+    val cand = SkippingIndex.bloomCandidatesAny(spark, files, column, Seq(value))
     val pred = col(column) === lit(value)
     if (cand.isEmpty) return read(name).filter(pred).limit(0)
     val df = catLoad(schema, cand, Option.when(partitioned)(base.toRealPath()))
@@ -1007,7 +928,7 @@ final class ParquetCatalog(spark: SparkSession, root: String,
       if (isVersioned(name))
         currentManifest(name).files.map(f => versionsDir(name).resolve(f).toString)
       else SkippingIndex.listFiles(tableDir(name).toString)
-    SkippingIndex.bloomCandidates(spark, files, column, value)
+    SkippingIndex.bloomCandidatesAny(spark, files, column, Seq(value))
   }
 
   /** Compaction: rewrite the table into ~`rowsPerFile`-row files. Every
@@ -1782,12 +1703,6 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     }
   }
 
-  /** [[deleteVectors]] under [[withRetry]]: each attempt re-reads the
-    * now-current snapshot and re-applies the predicate. */
-  def deleteVectorsWithRetry(name: String, condition: Column,
-      maxAttempts: Int = 3): (Long, Long) =
-    withRetry(maxAttempts)(deleteVectors(name, condition))
-
   /** Merge-on-read row-level UPDATE (Delta's deletion-vector UPDATE):
     * matched rows' OLD positions are vectored out and their UPDATED
     * images appended as new files — a point UPDATE on a 100 TB table
@@ -1875,11 +1790,6 @@ final class ParquetCatalog(spark: SparkSession, root: String,
       ()
     }
   }
-
-  /** [[updateVectors]] under [[withRetry]]. */
-  def updateVectorsWithRetry(name: String, condition: Column,
-      assignments: Map[String, Column], maxAttempts: Int = 3): (Long, Long) =
-    withRetry(maxAttempts)(updateVectors(name, condition, assignments))
 
   /** Merge-on-read keyed MERGE (Delta's dv-enabled MERGE): matched
     * target rows' OLD positions are vectored out and their RESOLVED
@@ -3829,7 +3739,7 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     * CONCURRENCY PROOF (why sync needs no merge-style read-set guard):
     * this verb commits via [[commitOrClean]], NEVER
     * [[fastForwardScoped]] — a lost CAS always throws
-    * [[ConcurrentWriteException]], and [[applyChangesWithRetry]]
+    * [[ConcurrentWriteException]], and a [[withRetry]] around it
     * re-reads the WINNER's committed state before recomputing, so the
     * loser's effects are always computed loser-second over the winner.
     * The recompute SLICE is complete for the fed keys because
@@ -4545,42 +4455,6 @@ final class ParquetCatalog(spark: SparkSession, root: String,
         partitionBy, evolveSchema, p)
     }
   }
-
-  /** [[appendVersioned]] under [[withRetry]] — the concurrent-writers
-    * convenience for the highest-rate verb (appends conflict only on
-    * the version NUMBER, never on content, so a retried append is
-    * always safe; the batch token still dedupes replays). */
-  def appendVersionedWithRetry(name: String, df: DataFrame,
-      partitionBy: Seq[String] = Nil, evolveSchema: Boolean = false,
-      batchToken: Option[String] = None, maxAttempts: Int = 3): Long =
-    withRetry(maxAttempts)(
-      appendVersioned(name, df, partitionBy, evolveSchema, batchToken))
-
-  /** [[deleteVersioned]] under [[withRetry]]: each attempt re-reads the
-    * current snapshot and re-applies the predicate. */
-  def deleteVersionedWithRetry(name: String, condition: Column,
-      partitionBy: Seq[String] = Nil, maxAttempts: Int = 3): (Long, Long) =
-    withRetry(maxAttempts)(deleteVersioned(name, condition, partitionBy))
-
-  /** [[updateWhere]] under [[withRetry]]: each attempt re-reads the
-    * now-current snapshot and re-applies condition + assignments, so a
-    * raced UPDATE composes with the interleaved commit instead of
-    * throwing (the same contract the registered catalog's DELETE path
-    * already has). */
-  def updateWhereWithRetry(name: String, condition: Column,
-      assignments: Map[String, Column], partitionBy: Seq[String] = Nil,
-      maxAttempts: Int = 3): (Long, Long) =
-    withRetry(maxAttempts)(
-      updateWhere(name, condition, assignments, partitionBy))
-
-  /** [[applyChanges]] under [[withRetry]]: a lost race re-applies the
-    * feed against the interleaved commit's state; the batch token
-    * keeps a replayed window a no-op either way. */
-  def applyChangesWithRetry(name: String, feed: DataFrame,
-      keys: Seq[String], partitionBy: Seq[String] = Nil,
-      batchToken: Option[String] = None, maxAttempts: Int = 3): Long =
-    withRetry(maxAttempts)(
-      applyChanges(name, feed, keys, partitionBy, batchToken))
 
   /** Retention: drop all but the newest `keep` versions' manifests,
     * then delete data files REFERENCE-COUNTED — a file is removable

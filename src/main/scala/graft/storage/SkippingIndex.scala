@@ -1,6 +1,5 @@
 package graft.storage
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -61,15 +60,24 @@ object SkippingIndex {
   private def hconf(spark: SparkSession): SerializableConfiguration =
     new SerializableConfiguration(spark.sessionState.newHadoopConf())
 
-  /** Distributed footer read over every parquet file under `dir`. */
-  def collect(spark: SparkSession, dir: String, cols: Seq[String]): Seq[FileStats] = {
-    val files = listParquet(dir)
-    val wanted = cols.toSet
+  /** The one distributed footer pass: `f` over each file's opened
+    * footer reader, at most 32 tasks, with the session's Hadoop conf.
+    * Results come back in `files` order; no job for an empty list. */
+  private def footerPass[T: scala.reflect.ClassTag](spark: SparkSession,
+      files: Seq[String])(f: (String, ParquetFileReader) => T): Seq[T] = {
+    if (files.isEmpty) return Nil
     val conf = hconf(spark)
     spark.sparkContext.parallelize(files, math.max(1, math.min(files.size, 32)))
-      .map { f => readFooter(f, wanted, conf.value) }
-      .collect().toSeq.sortBy(_.file)
+      .map { file =>
+        val reader = ParquetFileReader.open(
+          HadoopInputFile.fromPath(new HPath(file), conf.value))
+        try f(file, reader) finally reader.close()
+      }.collect().toSeq
   }
+
+  /** Distributed footer read over every parquet file under `dir`. */
+  def collect(spark: SparkSession, dir: String, cols: Seq[String]): Seq[FileStats] =
+    collectFor(spark, listParquet(dir), cols)
 
   /** Parquet files under a table dir (the dir-based call sites' file
     * lister; manifest-versioned tables pass explicit lists instead). */
@@ -78,16 +86,9 @@ object SkippingIndex {
   /** Footer-only row counts for explicit files (the REORG PURGE
     * deleted-fraction denominator) — one distributed footer read, no
     * data pages touched. */
-  def rowCounts(spark: SparkSession, files: Seq[String]): Map[String, Long] = {
-    val conf = hconf(spark)
-    spark.sparkContext.parallelize(files, math.max(1, math.min(files.size, 32)))
-      .map { f =>
-        val in = HadoopInputFile.fromPath(new HPath(f), conf.value)
-        val reader = ParquetFileReader.open(in)
-        try f -> reader.getFooter.getBlocks.asScala.map(_.getRowCount).sum
-        finally reader.close()
-      }.collect().toMap
-  }
+  def rowCounts(spark: SparkSession, files: Seq[String]): Map[String, Long] =
+    footerPass(spark, files)((f, reader) =>
+      f -> reader.getFooter.getBlocks.asScala.map(_.getRowCount).sum).toMap
 
   private def listParquet(dir: String): Seq[String] = {
     // resolve the real path defensively: Files.walk does NOT traverse a
@@ -102,70 +103,66 @@ object SkippingIndex {
 
   /** Footer-only stats for one file: per requested column, min of
     * row-group mins / max of row-group maxes. Runs inside a task. */
-  private def readFooter(file: String, cols: Set[String],
-      conf: Configuration): FileStats = {
-    val in = HadoopInputFile.fromPath(new HPath(file), conf)
-    val reader = ParquetFileReader.open(in)
-    try {
-      val footer = reader.getFooter
-      val blocks = footer.getBlocks.asScala
-      val rows = blocks.map(_.getRowCount).sum
-      val byCol = blocks.flatMap(_.getColumns.asScala)
-        .filter(c => cols.contains(c.getPath.toDotString))
-        .groupBy(_.getPath.toDotString)
-      val stats = byCol.toSeq.sortBy(_._1).flatMap { case (name, chunks) =>
-        val ss = chunks.map(_.getStatistics).filter(s =>
-          s != null && s.hasNonNullValue)
-        if (ss.isEmpty) None
-        else {
-          // The recorded type gates numeric pruning later: annotate
-          // logical types (DECIMAL stores unscaled ints, DATE/TIME/
-          // TIMESTAMP store epoch offsets) so a raw-physical-value
-          // numeric compare against a user-unit predicate can never
-          // wrongly prune — overlaps() only trusts plain INT32/INT64/
-          // FLOAT/DOUBLE. The FULL annotation is kept (unit AND
-          // isAdjustedToUTC for timestamps — `TIMESTAMP(MICROS,true)`,
-          // never truncated at '('): a MILLIS- or NANOS-stored file, or
-          // an NTZ one, must NOT be prunable by an epoch-micros
-          // instant literal, and the pruners opt in per exact variant.
-          val prim = ss.head.`type`()
-          val ann = Option(prim.getLogicalTypeAnnotation)
-            .map(a => ":" + a.toString).getOrElse("")
-          val typ0 = prim.getPrimitiveTypeName.name() + ann
-          // genericGetMin/Max are Comparable within one physical type
-          val mins = ss.map(_.genericGetMin.asInstanceOf[Comparable[Any]])
-          val maxs = ss.map(_.genericGetMax.asInstanceOf[Comparable[Any]])
-          val mn = mins.reduce((a, b) => if (a.compareTo(b) <= 0) a else b)
-          val mx = maxs.reduce((a, b) => if (a.compareTo(b) >= 0) a else b)
-          // STRING stats are only PRUNABLE (and metadata-MIN/MAX-
-          // answerable) when the UTF-8 decode round-trips byte-exactly:
-          // Spark string columns can carry invalid UTF-8 (e.g.
-          // CAST(binary AS STRING)), whose decode substitutes U+FFFD
-          // and can shift the recorded min UP or max DOWN — a
-          // byte-intersect against such bounds could wrongly drop files
-          // holding real extreme values. Lossy stats demote to a tag no
-          // pruner matches, so the files conservatively keep.
-          val typ =
-            if (typ0 == "BINARY:STRING" && !(utf8Exact(mn) && utf8Exact(mx)))
-              "BINARY:STRING(lossy)"
-            else typ0
-          // conservative: a chunk with absent statistics or an unset
-          // null count is UNKNOWN → treat as possibly-null
-          val nulls = chunks.exists { c =>
-            val st = c.getStatistics
-            st == null || !st.isNumNullsSet || st.getNumNulls > 0
-          }
-          // exact null count only when EVERY chunk recorded one
-          val exactNulls =
-            if (chunks.forall { c =>
-                val st = c.getStatistics; st != null && st.isNumNullsSet })
-              chunks.map(_.getStatistics.getNumNulls).sum
-            else -1L
-          Some(ColStats(name, typ, render(mn), render(mx), nulls, exactNulls))
+  private def readFooter(file: String, reader: ParquetFileReader,
+      cols: Set[String]): FileStats = {
+    val footer = reader.getFooter
+    val blocks = footer.getBlocks.asScala
+    val rows = blocks.map(_.getRowCount).sum
+    val byCol = blocks.flatMap(_.getColumns.asScala)
+      .filter(c => cols.contains(c.getPath.toDotString))
+      .groupBy(_.getPath.toDotString)
+    val stats = byCol.toSeq.sortBy(_._1).flatMap { case (name, chunks) =>
+      val ss = chunks.map(_.getStatistics).filter(s =>
+        s != null && s.hasNonNullValue)
+      if (ss.isEmpty) None
+      else {
+        // The recorded type gates numeric pruning later: annotate
+        // logical types (DECIMAL stores unscaled ints, DATE/TIME/
+        // TIMESTAMP store epoch offsets) so a raw-physical-value
+        // numeric compare against a user-unit predicate can never
+        // wrongly prune — overlaps() only trusts plain INT32/INT64/
+        // FLOAT/DOUBLE. The FULL annotation is kept (unit AND
+        // isAdjustedToUTC for timestamps — `TIMESTAMP(MICROS,true)`,
+        // never truncated at '('): a MILLIS- or NANOS-stored file, or
+        // an NTZ one, must NOT be prunable by an epoch-micros
+        // instant literal, and the pruners opt in per exact variant.
+        val prim = ss.head.`type`()
+        val ann = Option(prim.getLogicalTypeAnnotation)
+          .map(a => ":" + a.toString).getOrElse("")
+        val typ0 = prim.getPrimitiveTypeName.name() + ann
+        // genericGetMin/Max are Comparable within one physical type
+        val mins = ss.map(_.genericGetMin.asInstanceOf[Comparable[Any]])
+        val maxs = ss.map(_.genericGetMax.asInstanceOf[Comparable[Any]])
+        val mn = mins.reduce((a, b) => if (a.compareTo(b) <= 0) a else b)
+        val mx = maxs.reduce((a, b) => if (a.compareTo(b) >= 0) a else b)
+        // STRING stats are only PRUNABLE (and metadata-MIN/MAX-
+        // answerable) when the UTF-8 decode round-trips byte-exactly:
+        // Spark string columns can carry invalid UTF-8 (e.g.
+        // CAST(binary AS STRING)), whose decode substitutes U+FFFD
+        // and can shift the recorded min UP or max DOWN — a
+        // byte-intersect against such bounds could wrongly drop files
+        // holding real extreme values. Lossy stats demote to a tag no
+        // pruner matches, so the files conservatively keep.
+        val typ =
+          if (typ0 == "BINARY:STRING" && !(utf8Exact(mn) && utf8Exact(mx)))
+            "BINARY:STRING(lossy)"
+          else typ0
+        // conservative: a chunk with absent statistics or an unset
+        // null count is UNKNOWN → treat as possibly-null
+        val nulls = chunks.exists { c =>
+          val st = c.getStatistics
+          st == null || !st.isNumNullsSet || st.getNumNulls > 0
         }
+        // exact null count only when EVERY chunk recorded one
+        val exactNulls =
+          if (chunks.forall { c =>
+              val st = c.getStatistics; st != null && st.isNumNullsSet })
+            chunks.map(_.getStatistics.getNumNulls).sum
+          else -1L
+        Some(ColStats(name, typ, render(mn), render(mx), nulls, exactNulls))
       }
-      FileStats(file, rows, stats)
-    } finally reader.close()
+    }
+    FileStats(file, rows, stats)
   }
 
   private def render(v: Any): String = v match {
@@ -187,24 +184,19 @@ object SkippingIndex {
 
   /** Build + atomically persist the index for `cols` of catalog table
     * `name` (or any parquet dir via `forDir`). */
-  def write(spark: SparkSession, tableDir: String, cols: Seq[String]): Seq[FileStats] = {
-    val stats = collect(spark, tableDir, cols)
-    persist(statsFile(tableDir), stats)
-    stats
-  }
+  def write(spark: SparkSession, tableDir: String, cols: Seq[String]): Seq[FileStats] =
+    writeAt(spark, statsFile(tableDir), listParquet(tableDir), cols)
 
   /** Footer stats for EXPLICIT files WITHOUT touching any persisted
-    * index — the metadata-aggregate fallback for files the reconciled
-    * index no longer covers (time-traveled versions): one distributed
-    * footer pass, zero data pages. */
+    * index: one distributed footer pass, zero data pages. The reader
+    * behind [[collect]], [[writeAt]] and [[refreshAt]], and the
+    * metadata-aggregate fallback for files the reconciled index no
+    * longer covers (time-traveled versions). */
   def collectFor(spark: SparkSession, files: Seq[String],
       cols: Seq[String]): Seq[FileStats] = {
-    if (files.isEmpty) return Nil
     val wanted = cols.toSet
-    val conf = hconf(spark)
-    spark.sparkContext
-      .parallelize(files, math.max(1, math.min(files.size, 32)))
-      .map(f => readFooter(f, wanted, conf.value)).collect().toSeq.sortBy(_.file)
+    footerPass(spark, files)((f, reader) => readFooter(f, reader, wanted))
+      .sortBy(_.file)
   }
 
   /** [[write]] over an EXPLICIT file list with an explicit stats-file
@@ -213,13 +205,7 @@ object SkippingIndex {
     * the current manifest's files). */
   def writeAt(spark: SparkSession, statsPath: java.nio.file.Path,
       files: Seq[String], cols: Seq[String]): Seq[FileStats] = {
-    val wanted = cols.toSet
-    val conf = hconf(spark)
-    val stats =
-      if (files.isEmpty) Seq.empty
-      else spark.sparkContext
-        .parallelize(files, math.max(1, math.min(files.size, 32)))
-        .map(f => readFooter(f, wanted, conf.value)).collect().toSeq.sortBy(_.file)
+    val stats = collectFor(spark, files, cols)
     persist(statsPath, stats)
     stats
   }
@@ -353,21 +339,20 @@ object SkippingIndex {
     * index exists yet. The column set is taken from the existing index
     * (or `cols` when given). */
   def refresh(spark: SparkSession, tableDir: String,
-      cols: Seq[String] = Nil): Seq[FileStats] = {
-    if (!exists(tableDir)) {
-      require(cols.nonEmpty, s"no index at $tableDir and no columns given")
-      return write(spark, tableDir, cols)
-    }
+      cols: Seq[String] = Nil): Seq[FileStats] =
     refreshAt(spark, statsFile(tableDir), listParquet(tableDir), cols)
-  }
 
   /** [[refresh]] over an explicit file list + stats location: entries
     * for files still in the list survive verbatim, files the index has
     * not seen are footer-read, entries for files no longer listed drop
-    * out. Cost tracks the increment, never the table. */
+    * out. Cost tracks the increment, never the table. With no index
+    * at `statsPath` yet, a full [[writeAt]] over `cols`. */
   def refreshAt(spark: SparkSession, statsPath: java.nio.file.Path,
       files: Seq[String], cols: Seq[String] = Nil): Seq[FileStats] = {
-    require(Files.exists(statsPath), s"no index at $statsPath")
+    if (!Files.exists(statsPath)) {
+      require(cols.nonEmpty, s"no index at $statsPath and no columns given")
+      return writeAt(spark, statsPath, files, cols)
+    }
     val prior = readAtCached(statsPath) // generation-cached: one parse per index rewrite
     // explicit columns UNION the prior index's set — a later
     // `graft.indexFor` declaration naming only B must not silently
@@ -377,15 +362,8 @@ object SkippingIndex {
     val currentSet = files.toSet
     val known = prior.filter(fs => currentSet.contains(fs.file))
     val knownSet = known.map(_.file).toSet
-    val fresh = files.filterNot(knownSet.contains)
-    val wanted = useCols.toSet
-    val conf = hconf(spark)
-    val freshStats =
-      if (fresh.isEmpty) Seq.empty
-      else spark.sparkContext
-        .parallelize(fresh, math.max(1, math.min(fresh.size, 32)))
-        .map(f => readFooter(f, wanted, conf.value)).collect().toSeq
-    val stats = (known ++ freshStats).sortBy(_.file)
+    val fresh = collectFor(spark, files.filterNot(knownSet.contains), useCols)
+    val stats = (known ++ fresh).sortBy(_.file)
     persist(statsPath, stats)
     stats
   }
@@ -395,19 +373,10 @@ object SkippingIndex {
     * schema over a zero-id file is a loud reader error, so the rename
     * verb refuses until these are rewritten). One distributed footer
     * pass, no data pages. */
-  def filesWithoutFieldIds(spark: SparkSession, files: Seq[String]): Seq[String] = {
-    if (files.isEmpty) return files
-    val conf = hconf(spark)
-    spark.sparkContext.parallelize(files, math.max(1, math.min(files.size, 32)))
-      .filter { f =>
-        val in = HadoopInputFile.fromPath(new HPath(f), conf.value)
-        val reader = ParquetFileReader.open(in)
-        try !reader.getFooter.getFileMetaData.getSchema.getFields.asScala
-          .exists(_.getId != null)
-        finally reader.close()
-      }
-      .collect().toSeq.sorted
-  }
+  def filesWithoutFieldIds(spark: SparkSession, files: Seq[String]): Seq[String] =
+    footerPass(spark, files)((f, reader) => Option.when(
+      !reader.getFooter.getFileMetaData.getSchema.getFields.asScala
+        .exists(_.getId != null))(f)).flatten.sorted
 
   /** Files whose footers PHYSICALLY contain any of `cols` (top-level
     * name match, case-insensitive like Spark's resolution) — the files
@@ -419,16 +388,10 @@ object SkippingIndex {
       cols: Seq[String]): Seq[String] = {
     if (files.isEmpty || cols.isEmpty) return Nil
     val wanted = cols.map(_.toLowerCase(java.util.Locale.ROOT)).toSet
-    val conf = hconf(spark)
-    spark.sparkContext.parallelize(files, math.max(1, math.min(files.size, 32)))
-      .filter { f =>
-        val in = HadoopInputFile.fromPath(new HPath(f), conf.value)
-        val reader = ParquetFileReader.open(in)
-        try reader.getFooter.getFileMetaData.getSchema.getFields.asScala
-          .exists(t => wanted.contains(t.getName.toLowerCase(java.util.Locale.ROOT)))
-        finally reader.close()
-      }
-      .collect().toSeq.sorted
+    footerPass(spark, files)((f, reader) => Option.when(
+      reader.getFooter.getFileMetaData.getSchema.getFields.asScala
+        .exists(t => wanted.contains(t.getName.toLowerCase(java.util.Locale.ROOT))))(f))
+      .flatten.sorted
   }
 
   /** Re-key one column's stats after a METADATA-ONLY column rename —
@@ -744,21 +707,9 @@ object SkippingIndex {
   // kept file is re-filtered, a missing/unreadable filter keeps the
   // file, so pruning can only over-read.
 
-  /** Files whose bloom filter (any row group) might contain `value` in
-    * `column` — distributed footer+bloom reads, candidate list back.
-    * Files without a bloom filter for the column are KEPT. */
-  def bloomCandidates(spark: SparkSession, files: Seq[String], column: String,
-      value: Any): Seq[String] = {
-    if (files.isEmpty) return files
-    val conf = hconf(spark)
-    spark.sparkContext.parallelize(files, math.max(1, math.min(files.size, 32)))
-      .filter(f => bloomMightContain(f, column, value, conf.value))
-      .collect().toSeq.sorted
-  }
-
   /** Driver-side probe: does `file` carry a bloom filter for `column`
     * in ANY row group? One footer read — what lets a read path decide
-    * whether a distributed [[bloomCandidates]] pass can pay off before
+    * whether a distributed [[bloomCandidatesAny]] pass can pay off before
     * launching it (files written by the same `bloomFor` catalog all
     * carry the filter; a bloom-less table skips the job entirely).
     * Reads with the SESSION's Hadoop conf, like the scan path — any
@@ -777,55 +728,31 @@ object SkippingIndex {
       } finally reader.close()
     } catch { case _: Exception => false }
 
-  /** [[bloomCandidates]] for an IN-list: a file survives when ANY of
-    * `values` might be contained (footers open once per file, all
-    * values checked against the same filters). */
+  /** Files whose bloom filter (any row group) might contain ANY of
+    * `values` in `column` — distributed footer+bloom reads (footers
+    * open once per file, all values checked against the same filters),
+    * sorted candidate list back. Files without a bloom filter for the
+    * column are KEPT. */
   def bloomCandidatesAny(spark: SparkSession, files: Seq[String],
-      column: String, values: Seq[Any]): Seq[String] = {
-    if (files.isEmpty || values.isEmpty) return files
-    val conf = hconf(spark)
-    spark.sparkContext.parallelize(files, math.max(1, math.min(files.size, 32)))
-      .filter(f => bloomMightContainAny(f, column, values, conf.value))
-      .collect().toSeq.sorted
-  }
-
-  private def bloomMightContainAny(file: String, column: String,
-      values: Seq[Any], conf: Configuration): Boolean = {
-    val in = HadoopInputFile.fromPath(new HPath(file), conf)
-    val reader = ParquetFileReader.open(in)
-    try {
-      reader.getFooter.getBlocks.asScala.exists { block =>
-        block.getColumns.asScala.find(_.getPath.toDotString == column) match {
-          case None => true
-          case Some(cmd) =>
-            val bf = reader.getBloomFilterDataReader(block).readBloomFilter(cmd)
-            if (bf == null) true
-            else values.exists(v =>
-              bloomHash(cmd, bf, v).forall(bf.findHash))
-        }
-      }
-    } finally reader.close()
-  }
+      column: String, values: Seq[Any]): Seq[String] =
+    if (values.isEmpty) files
+    else footerPass(spark, files)((f, reader) =>
+      Option.when(bloomMightContainAny(reader, column, values))(f)).flatten.sorted
 
   /** One file's verdict: false ONLY when every row group has a bloom
-    * filter for the column and none might contain the value. Runs
-    * inside a task. */
-  def bloomMightContain(file: String, column: String, value: Any,
-      conf: Configuration): Boolean = {
-    val in = HadoopInputFile.fromPath(new HPath(file), conf)
-    val reader = ParquetFileReader.open(in)
-    try {
-      reader.getFooter.getBlocks.asScala.exists { block =>
-        block.getColumns.asScala.find(_.getPath.toDotString == column) match {
-          case None => true // column absent from this file: keep
-          case Some(cmd) =>
-            val bf = reader.getBloomFilterDataReader(block).readBloomFilter(cmd)
-            if (bf == null) true // no filter written: keep
-            else bloomHash(cmd, bf, value).forall(bf.findHash)
-        }
+    * filter for the column and none might contain any of the values.
+    * Runs inside a task. */
+  private def bloomMightContainAny(reader: ParquetFileReader, column: String,
+      values: Seq[Any]): Boolean =
+    reader.getFooter.getBlocks.asScala.exists { block =>
+      block.getColumns.asScala.find(_.getPath.toDotString == column) match {
+        case None => true // column absent from this file: keep
+        case Some(cmd) =>
+          val bf = reader.getBloomFilterDataReader(block).readBloomFilter(cmd)
+          if (bf == null) true // no filter written: keep
+          else values.exists(v => bloomHash(cmd, bf, v).forall(bf.findHash))
       }
-    } finally reader.close()
-  }
+    }
 
   /** A decimal point-lookup value: the UNSCALED long plus the (p,s) it
     * was scaled under. [[bloomHash]] probes it only against a column
@@ -901,27 +828,11 @@ object SkippingIndex {
     }
   }
 
-  // ---- dependency-free JSON (same discipline as graft.Verify) ----
+  // ---- legacy JSON reader ----
 
-  private def esc(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-
-  private def statsToJson(stats: Seq[FileStats]): String =
-    stats.map { fs =>
-      val cols = fs.cols.map(c =>
-        s"""{"column":${esc(c.column)},"typ":${esc(c.typ)},"min":${esc(c.min)},"max":${esc(c.max)},"hasNulls":${c.hasNulls},"nulls":${c.nulls}}""")
-        .mkString("[", ",", "]")
-      s"""{"file":${esc(fs.file)},"rows":${fs.rows},"cols":$cols}"""
-    }.mkString("[\n", ",\n", "\n]")
-
-  /** Minimal parser for exactly the JSON `statsToJson` emits. */
+  /** Minimal parser for the legacy JSON index (pre-r19 writers): an
+    * array of `{"file","rows","cols":[{"column","typ","min","max",
+    * "hasNulls","nulls"}]}` objects. */
   private def jsonToStats(json: String): Seq[FileStats] = {
     // split objects at top level of the array by tracking depth/strings
     def splitObjects(s: String): Seq[String] = {

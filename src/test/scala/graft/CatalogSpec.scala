@@ -771,6 +771,60 @@ class CatalogSpec extends SparkSpec {
       .as[Long].collect() === Array(5L))
   }
 
+  test("UPDATE/DELETE probe bloom-prunes on table-declared blooms, no index") {
+    val cat = freshCatalog
+    cat.overwriteVersioned("t", Seq((0L, "d0", 0.0)).toDF("id", "day", "m"),
+      Seq("day"))
+    cat.setTableProperty("t", ParquetCatalog.BloomForProp, "id")
+    // random layout: round-robin files whose id ranges all span the key
+    // space, and no min/max index — only the declared blooms can prune
+    cat.appendVersioned("t", (1 until 2000).map(i => (i.toLong, s"d${i % 2}", i * 1.0))
+      .toDF("id", "day", "m").repartition(8))
+    assert(!graft.storage.SkippingIndex.existsAt(cat.statsPath("t")))
+    val allFiles = cat.fileCount("t")
+    val opened = cat.probeCandidates("t", col("id") === 137L)
+    assert(opened.size < allFiles,
+      s"probe opened ${opened.size} of $allFiles files — the declared blooms did not prune")
+    // end-to-end through the pruned probe
+    val (_, n) = cat.updateWhere("t", col("id") === 137L, Map("m" -> lit(-1.0)))
+    assert(n === 1L)
+    assert(cat.read("t").filter(col("m") < 0).select("id").as[Long].collect() ===
+      Array(137L))
+    assert(cat.read("t").count() === 2000)
+  }
+
+  test("a DATE-range DELETE probe is index-pruned on a date-clustered table") {
+    import graft.storage.SkippingIndex
+    val cat = freshCatalog
+    val full = spark.range(1000).select(col("id"),
+      date_add(lit(java.sql.Date.valueOf("2024-01-01")), (col("id") / 10).cast("int")).as("d"),
+      concat(lit("p"), (col("id") / 250).cast("int").cast("string")).as("day"))
+    cat.overwriteVersioned("t", full, Seq("day"))
+    cat.compact("t", rowsPerFile = 100, partitionBy = Seq("day"),
+      clusterBy = Seq("d"))
+    cat.index("t", Seq("d"))
+    val allFiles = cat.fileCount("t")
+    // the string literal reaches the probe as a coercion cast, folded
+    // to a DATE literal (epoch days) that prunes INT32:DATE stats
+    val where = col("d") >= "2024-03-31"
+    val opened = cat.probeCandidates("t", where)
+      .map(f => f.substring(f.lastIndexOf('/') + 1)).toSet
+    assert(opened.size < allFiles,
+      s"probe opened ${opened.size} of $allFiles files — no pruning happened")
+    // soundness: every file whose date range reaches the bound is opened
+    val bound = java.time.LocalDate.parse("2024-03-31").toEpochDay
+    SkippingIndex.readAt(cat.statsPath("t")).foreach { fs =>
+      val name = fs.file.substring(fs.file.lastIndexOf('/') + 1)
+      val cs = fs.cols.find(_.column == "d").get
+      assert(cs.typ === "INT32:DATE")
+      if (cs.max.toLong >= bound) assert(opened.contains(name), s"$name was skipped")
+    }
+    val (_, removed) = cat.deleteVersioned("t", where)
+    assert(removed === 100L)
+    assert(cat.read("t").count() === 900)
+    assert(cat.read("t").filter(col("d") >= "2024-03-31").isEmpty)
+  }
+
   test("in-place scoped ops handle multi-level and path-hostile partition values") {
     val root = Files.createTempDirectory("graft-ml").toString
     val cat = new ParquetCatalog(spark, root)

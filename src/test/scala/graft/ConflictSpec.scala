@@ -178,7 +178,7 @@ class ConflictSpec extends SparkSpec {
         scala.concurrent.ExecutionContext.fromExecutor(pool)
       val runs = Seq(feed("a", -5.0), feed("c", 55.0)).map(f =>
         scala.concurrent.Future(
-          cat.applyChangesWithRetry("t", f, Seq("id"), Seq("p"))))
+          cat.withRetry()(cat.applyChanges("t", f, Seq("id"), Seq("p")))))
       runs.foreach(r =>
         scala.concurrent.Await.result(r, scala.concurrent.duration.Duration(120, "s")))
     } finally pool.shutdown()

@@ -389,7 +389,7 @@ class DeletionVectorSpec extends SparkSpec {
     assert(sidecarsOnDisk().isEmpty, "a lost vector delete must clean its sidecar")
     assert(cat.read("t").count() === 31)
     // the retry wrapper re-reads and lands it
-    val (_, n) = cat.deleteVectorsWithRetry("t", col("id") === 3L)
+    val (_, n) = cat.withRetry()(cat.deleteVectors("t", col("id") === 3L))
     assert(n === 1L && cat.read("t").count() === 30)
     val live = sidecarsOnDisk()
     assert(live.size === 1)
@@ -400,8 +400,8 @@ class DeletionVectorSpec extends SparkSpec {
         fromVersion = Some(1L)))
     assert(sidecarsOnDisk().toSet === live.toSet,
       "a lost vector update must clean its sidecar")
-    val (_, n2) = cat.updateVectorsWithRetry("t", col("id") === 4L,
-      Map("m" -> lit(-4.0)))
+    val (_, n2) = cat.withRetry()(cat.updateVectors("t", col("id") === 4L,
+      Map("m" -> lit(-4.0))))
     assert(n2 === 1L)
     assert(cat.read("t").filter(col("id") === 4L).select("m")
       .as[Double].head() === -4.0)

@@ -1,13 +1,15 @@
 package graft
 
-import graft.spark.GraftFileSkipping
+import graft.spark.{GraftConjuncts, GraftFileSkipping}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.types.{DateType, DoubleType, LongType, StringType,
   TimestampNTZType, TimestampType}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Soundness rules of the catalyst-filter → index-predicate
-  * translation behind [[graft.spark.GraftScan]]: only shapes a
+/** Soundness rules of the one catalyst-filter → index-predicate
+  * translation ([[GraftFileSkipping.conjuncts]]) behind
+  * [[graft.spark.GraftScan]] and the catalog's UPDATE/DELETE probe —
+  * each test reads one of its channels: only shapes a
   * NULL row can never satisfy, strict bounds widened to inclusive,
   * raw-unit temporal literals carry the exact stats type they may
   * prune, everything unrecognized contributes NO pruning. */
@@ -19,7 +21,7 @@ class FileSkippingSpec extends AnyFunSuite {
   private val d = AttributeReference("d", DateType)()
   private val ts = AttributeReference("ts", TimestampType)()
   private val inf = Double.PositiveInfinity
-  private def x(es: Expression*) = GraftFileSkipping.rangeConjuncts(es)
+  private def x(es: Expression*) = GraftFileSkipping.conjuncts(es).preds
 
   test("comparisons extract in both operand orders, strict kept inclusive") {
     assert(x(EqualTo(id, Literal(5L))) === Seq(("id", 5.0, 5.0, Set.empty)))
@@ -127,7 +129,7 @@ class FileSkippingSpec extends AnyFunSuite {
   }
 
   test("string range conjuncts extract with UTF-8 byte-order envelopes (r19)") {
-    def sx(es: Expression*) = GraftFileSkipping.stringRangeConjuncts(es)
+    def sx(es: Expression*) = GraftFileSkipping.conjuncts(es).strs
     assert(sx(EqualTo(s, Literal("m"))) === Seq(("s", Some("m"), Some("m"))))
     assert(sx(EqualTo(Literal("m"), s)) === Seq(("s", Some("m"), Some("m"))))
     assert(sx(GreaterThan(s, Literal("b"))) === Seq(("s", Some("b"), None)))
@@ -186,42 +188,83 @@ class FileSkippingSpec extends AnyFunSuite {
     val schema = StructType(Seq(StructField("id", LT), StructField("s", ST)))
     def in(col: String, vs: Any*) = new Predicate("IN",
       (Expressions.column(col) +: vs.map(Expressions.literal)).toArray[VExpr])
-    val (preds, points, _) = GraftFileSkipping.runtimeIndexConjuncts(
-      Array(in("id", 2100L, 2300L, 2200L)), schema)
+    // runtime predicates convert to catalyst IN/= and take the one walker
+    // with the runtime bloom limit
+    def rt(p: Predicate) = GraftFileSkipping.conjuncts(
+      GraftFileSkipping.runtimeFilters(Array(p), schema),
+      GraftFileSkipping.RuntimeBloomValues)
+    val GraftConjuncts(preds, points, _) = rt(in("id", 2100L, 2300L, 2200L))
     assert(preds === Seq(("id", 2100.0, 2300.0, Set.empty)),
       "the envelope spans the runtime values")
     assert(points === Seq("id" -> Seq(2100L, 2300L, 2200L)))
     // strings: UTF-8 byte-order envelope (r19) PLUS blooms
-    val (p2, pt2, st2) = GraftFileSkipping.runtimeIndexConjuncts(
-      Array(in("s",
-        org.apache.spark.unsafe.types.UTF8String.fromString("x"),
-        org.apache.spark.unsafe.types.UTF8String.fromString("Z"))), schema)
+    val GraftConjuncts(p2, pt2, st2) = rt(in("s",
+      org.apache.spark.unsafe.types.UTF8String.fromString("x"),
+      org.apache.spark.unsafe.types.UTF8String.fromString("Z")))
     assert(p2.isEmpty && pt2 === Seq("s" -> Seq("x", "Z")))
     assert(st2 === Seq(("s", Some("Z"), Some("x"))),
       "runtime string IN contributes a byte-order envelope")
     // type mismatch (int literal vs long column) refuses everything
-    val (p3, pt3, st3) = GraftFileSkipping.runtimeIndexConjuncts(
-      Array(in("id", 5)), schema)
+    val GraftConjuncts(p3, pt3, st3) = rt(in("id", 5))
     assert(p3.isEmpty && pt3.isEmpty && st3.isEmpty)
     // oversized IN keeps the cheap envelope, skips the bloom hashing
     val big = in("id", (1L to 65L): _*)
-    val (p4, pt4, _) = GraftFileSkipping.runtimeIndexConjuncts(Array(big), schema)
+    val GraftConjuncts(p4, pt4, _) = rt(big)
     assert(p4 === Seq(("id", 1.0, 65.0, Set.empty)) && pt4.isEmpty)
   }
 
   test("point conjuncts keep TYPED values; IN keeps its list, bounded") {
-    assert(GraftFileSkipping.pointConjuncts(Seq(EqualTo(id, Literal(5L)))) ===
-      Seq("id" -> Seq(5L)))
-    assert(GraftFileSkipping.pointConjuncts(Seq(EqualTo(Literal("x"), s))) ===
+    def px(es: Expression*) = GraftFileSkipping.conjuncts(es).points
+    assert(px(EqualTo(id, Literal(5L))) === Seq("id" -> Seq(5L)))
+    assert(px(EqualTo(Literal("x"), s)) ===
       Seq("s" -> Seq("x")), "string equality drives blooms (not ranges)")
-    assert(GraftFileSkipping.pointConjuncts(
-      Seq(In(id, Seq(Literal(3L), Literal(9L))))) === Seq("id" -> Seq(3L, 9L)))
+    assert(px(In(id, Seq(Literal(3L), Literal(9L)))) === Seq("id" -> Seq(3L, 9L)))
     val big = In(id, (1 to 17).map(i => Literal(i.toLong)))
-    assert(GraftFileSkipping.pointConjuncts(Seq(big)).isEmpty,
+    assert(px(big).isEmpty,
       "oversized IN lists cost more to hash than they save")
-    assert(GraftFileSkipping.pointConjuncts(
-      Seq(In(id, Seq(Literal(1L), id)))).isEmpty)
-    assert(GraftFileSkipping.pointConjuncts(
-      Seq(EqualNullSafe(id, Literal(5L)))).isEmpty)
+    assert(px(In(id, Seq(Literal(1L), id))).isEmpty)
+    assert(px(EqualNullSafe(id, Literal(5L))).isEmpty)
+  }
+
+  test("one walk fills every channel; the bloom limit is its only parameter") {
+    // string equality: a byte-order range AND a bloom point, no numeric range
+    assert(GraftFileSkipping.conjuncts(Seq(EqualTo(s, Literal("m")))) ===
+      GraftConjuncts(Nil, Seq("s" -> Seq("m")), Seq(("s", Some("m"), Some("m")))))
+    // a 17-value IN: the envelope always, the points only under a limit ≥ 17
+    val in17 = In(id, (1 to 17).map(i => Literal(i.toLong)))
+    assert(GraftFileSkipping.conjuncts(Seq(in17)).points.isEmpty)
+    assert(GraftFileSkipping.conjuncts(Seq(in17),
+      GraftFileSkipping.RuntimeBloomValues).points ===
+      Seq("id" -> (1 to 17).map(_.toLong)))
+    assert(GraftFileSkipping.conjuncts(Seq(in17)).preds ===
+      Seq(("id", 1.0, 17.0, Set.empty)))
+  }
+
+  test("runtime IN/= convert to catalyst In/EqualTo over the schema's column") {
+    import org.apache.spark.sql.connector.expressions.{Expression => VExpr, Expressions}
+    import org.apache.spark.sql.connector.expressions.filter.Predicate
+    import org.apache.spark.sql.types.{StructField, StructType}
+    val schema = StructType(Seq(StructField("id", LongType)))
+    def pred(name: String, col: String, vs: Any*) = new Predicate(name,
+      (Expressions.column(col) +: vs.map(Expressions.literal)).toArray[VExpr])
+    GraftFileSkipping.runtimeFilters(Array(pred("=", "ID", 5L)), schema) match {
+      case Seq(EqualTo(a: AttributeReference, Literal(5L, LongType))) =>
+        assert(a.name === "id" && a.dataType === LongType)
+      case other => fail(s"expected id = 5, got $other")
+    }
+    GraftFileSkipping.runtimeFilters(Array(pred("IN", "id", 1L, 2L)), schema) match {
+      case Seq(In(_: AttributeReference, Seq(Literal(1L, _), Literal(2L, _)))) => ()
+      case other => fail(s"expected id IN (1, 2), got $other")
+    }
+    // refused: a NULL value, an unknown column, a non-IN/= predicate
+    val nullLong = new org.apache.spark.sql.connector.expressions.Literal[Any] {
+      override def value(): Any = null
+      override def dataType(): org.apache.spark.sql.types.DataType = LongType
+    }
+    assert(GraftFileSkipping.runtimeFilters(Array(new Predicate("IN",
+      Array[VExpr](Expressions.column("id"), Expressions.literal(1L), nullLong))),
+      schema).isEmpty)
+    assert(GraftFileSkipping.runtimeFilters(Array(pred("IN", "q", 1L)), schema).isEmpty)
+    assert(GraftFileSkipping.runtimeFilters(Array(pred(">", "id", 1L)), schema).isEmpty)
   }
 }

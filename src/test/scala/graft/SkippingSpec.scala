@@ -302,18 +302,18 @@ class SkippingSpec extends SparkSpec {
       .option("parquet.bloom.filter.enabled#d", "true").parquet(dir)
     val files = SkippingIndex.listFiles(dir)
     // present value (5.00 = unscaled 500) under the matching (9,2): kept
-    assert(SkippingIndex.bloomCandidates(spark, files, "d",
-      SkippingIndex.DecimalPoint(500L, 9, 2)) == files)
+    assert(SkippingIndex.bloomCandidatesAny(spark, files, "d",
+      Seq(SkippingIndex.DecimalPoint(500L, 9, 2))) == files)
     // absent value under the matching annotation: pruned
-    assert(SkippingIndex.bloomCandidates(spark, files, "d",
-      SkippingIndex.DecimalPoint(123457L, 9, 2)).isEmpty)
+    assert(SkippingIndex.bloomCandidatesAny(spark, files, "d",
+      Seq(SkippingIndex.DecimalPoint(123457L, 9, 2))).isEmpty)
     // same unscaled long at a DIFFERENT scale aliases a different
     // number — the annotation mismatch must keep the file
-    assert(SkippingIndex.bloomCandidates(spark, files, "d",
-      SkippingIndex.DecimalPoint(123457L, 9, 3)) == files)
+    assert(SkippingIndex.bloomCandidatesAny(spark, files, "d",
+      Seq(SkippingIndex.DecimalPoint(123457L, 9, 3))) == files)
     // a plain numeric probe against a DECIMAL-annotated chunk is in
     // different units — refuse (keep), mirroring the min/max tag gate
-    assert(SkippingIndex.bloomCandidates(spark, files, "d",
-      java.lang.Long.valueOf(123457L)) == files)
+    assert(SkippingIndex.bloomCandidatesAny(spark, files, "d",
+      Seq(java.lang.Long.valueOf(123457L))) == files)
   }
 }

@@ -347,8 +347,8 @@ class SqlSurfaceSpec extends SparkSpec {
         body(c)
       } catch { case t: Throwable => errs.add(t); () }
     })
-    val a = run(_.appendVersionedWithRetry("t",
-      Seq((3L, 30.0)).toDF("id", "m"), maxAttempts = 5))
+    val a = run(c => c.withRetry(5)(c.appendVersioned("t",
+      Seq((3L, 30.0)).toDF("id", "m"))))
     val b = run(_.sql("UPDATE t SET m = m + 100 WHERE id = 1"))
     a.start(); b.start(); a.join(60000); b.join(60000)
     assert(errs.isEmpty, s"both doors must absorb the race: $errs")

@@ -855,7 +855,7 @@ class TimeTravelSpec extends SparkSpec {
       cat.updateWhere("t", lit(true), Map("nope" -> lit(1))))
   }
 
-  test("appendVersionedWithRetry: racing writers both land, gapless chain") {
+  test("withRetry(appendVersioned): racing writers both land, gapless chain") {
     val (cat, root) = fresh()
     cat.overwriteVersioned("t", Seq((0L, 0.0)).toDF("id", "m"))
     val barrier = new java.util.concurrent.CyclicBarrier(2)
@@ -864,8 +864,7 @@ class TimeTravelSpec extends SparkSpec {
       try {
         val c = new ParquetCatalog(spark, root)
         barrier.await()
-        c.appendVersionedWithRetry("t", Seq((id, id * 1.0)).toDF("id", "m"),
-          maxAttempts = 5)
+        c.withRetry(5)(c.appendVersioned("t", Seq((id, id * 1.0)).toDF("id", "m")))
         ()
       } catch { case t: Throwable => errs.add(t); () }
     })
