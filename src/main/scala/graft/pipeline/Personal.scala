@@ -1,6 +1,5 @@
 package graft.pipeline
 
-import graft.sources.JsonIngest
 import graft.storage.ParquetCatalog
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -32,26 +31,11 @@ final class PersonalRunner(spark: SparkSession, catalog: ParquetCatalog,
     * additions, deletions). Returns the table names written. */
   def run(json: Dataset[String], activity: DataFrame,
       processingDate: String): Seq[String] = {
-    // ingest -> bronze upsert (K2, personal_repos_ingestion.py:244-265)
-    val bronzeBatch = JsonIngest.fromJson(spark, json, processingDate)
-    catalog.upsert("personal_bronze", bronzeBatch, Seq("repository_id"),
-      partitionBy = Seq("partition_date"))
-
-    // bronze -> silver with smart-skip + smart merge (same path as the
-    // market family — personal_repos_bronze_to_silver.py mirrors it)
-    val bronze = catalog.read("personal_bronze")
-    val existingSilver =
-      if (catalog.exists("personal_silver")) Some(catalog.read("personal_silver"))
-      else None
-    val fresh = Silver.transform(bronze, processingDate, existingSilver, classifier)
-    existingSilver match {
-      case None => catalog.overwrite("personal_silver", fresh,
-        Seq("partition_date", "technology_category"))
-      case Some(existing) =>
-        catalog.overwrite("personal_silver",
-          Silver.mergeIntoSilver(existing, fresh),
-          Seq("partition_date", "technology_category"))
-    }
+    // ingest -> bronze upsert (K2, personal_repos_ingestion.py:244-265),
+    // bronze -> silver with smart-skip + smart merge (the market
+    // family's step — personal_repos_bronze_to_silver.py mirrors it)
+    Runner.bronzeToSilver(spark, catalog, classifier, json, processingDate,
+      "personal_bronze", "personal_silver")
 
     // activity silver: all periods in one pass, MERGEd on the composite
     // key (K2 — personal_repos_bronze_to_silver.py:574-634)

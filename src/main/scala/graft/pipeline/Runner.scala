@@ -17,25 +17,10 @@ final class Runner(spark: SparkSession, catalog: ParquetCatalog,
   /** One pipeline run for a batch of API-shaped JSON. Returns the table
     * names written. */
   def run(json: Dataset[String], processingDate: String): Seq[String] = {
-    // ingest -> bronze upsert (K2, github_data_ingestion.py:349-383)
-    val bronzeBatch = JsonIngest.fromJson(spark, json, processingDate)
-    catalog.upsert("bronze_repos", bronzeBatch, Seq("repository_id"),
-      partitionBy = Seq("partition_date"))
-
+    // ingest -> bronze upsert (K2, github_data_ingestion.py:349-383),
     // bronze -> silver with smart-skip + smart merge (K3)
-    val bronze = catalog.read("bronze_repos")
-    val existingSilver =
-      if (catalog.exists("silver_repos")) Some(catalog.read("silver_repos"))
-      else None
-    val fresh = Silver.transform(bronze, processingDate, existingSilver, classifier)
-    existingSilver match {
-      case None => catalog.overwrite("silver_repos", fresh,
-        Seq("partition_date", "technology_category"))
-      case Some(existing) =>
-        catalog.overwrite("silver_repos",
-          Silver.mergeIntoSilver(existing, fresh),
-          Seq("partition_date", "technology_category"))
-    }
+    Runner.bronzeToSilver(spark, catalog, classifier, json, processingDate,
+      "bronze_repos", "silver_repos")
 
     // silver -> gold: seven-table overwrite (K1)
     val silver = catalog.read("silver_repos")
@@ -45,5 +30,27 @@ final class Runner(spark: SparkSession, catalog: ParquetCatalog,
       tableName
     }
     Seq("bronze_repos", "silver_repos") ++ written
+  }
+}
+
+object Runner {
+
+  /** Ingest a JSON batch, upsert it into `bronzeTable` on
+    * `repository_id`, then rebuild `silverTable` from bronze: smart
+    * classification reuses the existing silver rows, and the fresh rows
+    * are smart-merged into them. Both pipeline families run this step;
+    * they differ only in table names. */
+  private[pipeline] def bronzeToSilver(spark: SparkSession,
+      catalog: ParquetCatalog, classifier: Classifier, json: Dataset[String],
+      processingDate: String, bronzeTable: String, silverTable: String): Unit = {
+    catalog.upsert(bronzeTable, JsonIngest.fromJson(spark, json, processingDate),
+      Seq("repository_id"), partitionBy = Seq("partition_date"))
+    val bronze = catalog.read(bronzeTable)
+    val existingSilver =
+      if (catalog.exists(silverTable)) Some(catalog.read(silverTable)) else None
+    val fresh = Silver.transform(bronze, processingDate, existingSilver, classifier)
+    catalog.overwrite(silverTable,
+      existingSilver.fold(fresh)(Silver.mergeIntoSilver(_, fresh)),
+      Seq("partition_date", "technology_category"))
   }
 }

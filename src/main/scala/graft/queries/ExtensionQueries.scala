@@ -5,6 +5,7 @@ import graft.functions.Deterministic.davg
 import graft.functions.TextAnalysis._
 import graft.operators.Dedup
 import graft.operators.Graph
+import graft.storage.Scratch
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -1456,7 +1457,6 @@ object ExtensionQueries {
     Q(
       "d10_incremental_dedup",
       (s, d) => {
-        import java.nio.file.{Files, Paths}
         val docs = Tables.documents(s, d)
         val batch = docs.filter(col("doc_id") % 5 === 0)
         val corpus = docs.filter(col("doc_id") % 5 =!= 0)
@@ -1470,10 +1470,7 @@ object ExtensionQueries {
         // job reads yesterday's signature index; any input mutation
         // changes the key and forces a rebuild. The steady-state cost
         // of this query is stage 2 alone.
-        val suffix = graft.storage.Scratch.fingerprint(d).take(8)
-        val stateDir = s"${sys.props("java.io.tmpdir")}/graft_dedup_state_$suffix"
-        val marker = Paths.get(s"$stateDir/_complete")
-        if (!Files.exists(marker)) {
+        val (stateDir, _) = Scratch.state("dedup_state", d) { stateDir =>
           val csh = Dedup.shingles(corpus, "doc_id", "text", dedupe = false)
             .persist()
           val csigs0 = Dedup.minhashSignaturesNarrow(corpus, "doc_id", "text",
@@ -1487,7 +1484,7 @@ object ExtensionQueries {
             "doc_id", cver)
           csigs0.write.mode("overwrite").parquet(s"$stateDir/sigs")
           cclusters0.write.mode("overwrite").parquet(s"$stateDir/clusters")
-          Files.createFile(marker) // last: an interrupted build rebuilds
+          "ok"
         }
         val csigs = graft.storage.FooterSchema.parquet(s, s"$stateDir/sigs")
         val cclusters = graft.storage.FooterSchema.parquet(s, s"$stateDir/clusters")

@@ -51,14 +51,10 @@ object GraphQueries {
     * its edge table before the graph tier runs. Falls back to the
     * inline derivation if the scratch dir is unwritable. */
   private def tradeEdgesCached(s: SparkSession, d: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val suffix = graft.storage.Scratch.fingerprint(d).take(8)
-    val dir = s"${sys.props("java.io.tmpdir")}/graft_trade_edges_$suffix"
-    val marker = Paths.get(s"$dir/_complete")
     try {
-      if (!Files.exists(marker)) {
+      val (dir, _) = graft.storage.Scratch.state("trade_edges", d) { dir =>
         tradeEdges(s, d).write.mode("overwrite").parquet(s"$dir/edges")
-        Files.createFile(marker) // last: a torn build rebuilds
+        "ok"
       }
       graft.storage.FooterSchema.parquet(s, s"$dir/edges")
     } catch {
@@ -288,7 +284,6 @@ object GraphQueries {
     * the SAME fingerprint-keyed scratch discipline as
     * [[tradeEdgesCached]]. */
   private def weightedTradeEdges(s: SparkSession, d: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
     def derive: DataFrame = {
       val p = Tables.orders(s, d)
         .join(Tables.lineitem(s, d), col("o_orderkey") === col("l_orderkey"))
@@ -302,13 +297,10 @@ object GraphQueries {
         concat(lit("c"), col("c").cast("string")).as("dst"), col("w").as("weight"))
       cs.unionByName(sc)
     }
-    val suffix = graft.storage.Scratch.fingerprint(d).take(8)
-    val dir = s"${sys.props("java.io.tmpdir")}/graft_wtrade_edges_$suffix"
-    val marker = Paths.get(s"$dir/_complete")
     try {
-      if (!Files.exists(marker)) {
+      val (dir, _) = graft.storage.Scratch.state("wtrade_edges", d) { dir =>
         derive.write.mode("overwrite").parquet(s"$dir/edges")
-        Files.createFile(marker)
+        "ok"
       }
       graft.storage.FooterSchema.parquet(s, s"$dir/edges")
     } catch { case _: java.io.IOException => derive }

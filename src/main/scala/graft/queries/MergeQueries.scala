@@ -2,6 +2,8 @@ package graft.queries
 
 import graft.Tables
 import graft.operators.{SqlMerge, Upsert}
+import graft.spark.GraftCatalog
+import graft.storage.{ParquetCatalog, Scratch}
 import org.apache.spark.sql.functions._
 
 /** MERGE/upsert semantics pack — the reference's Delta `MERGE INTO`
@@ -404,14 +406,10 @@ object MergeQueries {
     Q(
       "k11_time_travel_diff",
       (s, d) => {
-        import java.nio.file.{Files, Paths}
-        val suffix = graft.storage.Scratch.fingerprint(d).take(8)
         // `ttm`: the manifest-versioned layout (round 10) — a fresh
         // scratch root so stale symlink-era state can never be read
-        val root = s"${sys.props("java.io.tmpdir")}/graft_ttm_$suffix"
-        val marker = Paths.get(s"$root/_complete")
-        val cat = new graft.storage.ParquetCatalog(s, root)
-        if (!Files.exists(marker)) {
+        val (root, _) = Scratch.state("ttm", d) { root =>
+          val cat = new ParquetCatalog(s, root)
           val o = Tables.orders(s, d)
           cat.overwriteVersioned("orders_v",
             o.filter(col("o_orderkey") % 3 =!= 0)
@@ -419,8 +417,9 @@ object MergeQueries {
           cat.overwriteVersioned("orders_v",
             o.filter(col("o_orderkey") % 2 =!= 0)
               .select("o_orderkey", "o_custkey", "o_totalprice"))
-          Files.createFile(marker)
+          "ok"
         }
+        val cat = new ParquetCatalog(s, root)
         val old = cat.readVersion("orders_v", 1)
           .select(col("o_orderkey"), col("o_totalprice").as("price_old"))
         val cur = cat.read("orders_v")
@@ -510,18 +509,15 @@ object MergeQueries {
     Q(
       "k13_delete_where",
       (s, d) => {
-        import java.nio.file.{Files, Paths}
-        val suffix = graft.storage.Scratch.fingerprint(d).take(8)
-        val root = s"${sys.props("java.io.tmpdir")}/graft_del_$suffix"
-        val marker = Paths.get(s"$root/_complete")
-        val cat = new graft.storage.ParquetCatalog(s, root)
-        if (!Files.exists(marker)) {
+        val (root, _) = Scratch.state("del", d) { root =>
+          val cat = new ParquetCatalog(s, root)
           cat.overwrite("orders_d",
             Tables.orders(s, d).select("o_orderkey", "o_orderstatus", "o_totalprice"))
           cat.delete("orders_d",
             col("o_orderstatus") === "F" && col("o_totalprice") < 50000)
-          Files.createFile(marker)
+          "ok"
         }
+        val cat = new ParquetCatalog(s, root)
         cat.read("orders_d")
           .groupBy("o_orderstatus")
           .agg(count(lit(1)).as("n_rows"),
@@ -550,12 +546,9 @@ object MergeQueries {
     Q(
       "k14_partition_scoped_merge",
       (s, d) => {
-        import java.nio.file.{Files, Paths}
-        val suffix = graft.storage.Scratch.fingerprint(d).take(8)
-        val root = s"${sys.props("java.io.tmpdir")}/graft_psm_$suffix"
-        val marker = Paths.get(s"$root/_complete")
-        val cat = new graft.storage.ParquetCatalog(s, root)
-        if (!Files.exists(marker)) {
+        import java.nio.file.Paths
+        val (root, marked) = Scratch.state("psm", d) { root =>
+          val cat = new ParquetCatalog(s, root)
           val o = Tables.orders(s, d)
             .select("o_orderkey", "o_totalprice", "o_orderstatus")
           cat.overwrite("orders_p", o, Seq("o_orderstatus"))
@@ -577,9 +570,10 @@ object MergeQueries {
               val now = after.getOrElse(p, Set.empty[(String, Long, Long)])
               (fs diff now).size + (now diff fs).size
           }.sum
-          Files.writeString(marker, changed.toString)
+          changed.toString
         }
-        val changed = Files.readString(marker).trim.toLong
+        val cat = new ParquetCatalog(s, root)
+        val changed = marked.toLong
         cat.read("orders_p")
           .groupBy("o_orderstatus")
           .agg(count(lit(1)).as("n_rows"),
@@ -625,12 +619,9 @@ object MergeQueries {
       "k15_versioned_merge_cdf",
       (s, d) => {
         import java.nio.file.{Files, Paths}
-        val suffix = graft.storage.Scratch.fingerprint(d).take(8)
         // `vmm`: manifest-versioned layout (round 10) — fresh scratch root
-        val root = s"${sys.props("java.io.tmpdir")}/graft_vmm_$suffix"
-        val marker = Paths.get(s"$root/_complete")
-        val cat = new graft.storage.ParquetCatalog(s, root)
-        if (!Files.exists(marker)) {
+        val (root, marked) = Scratch.state("vmm", d) { root =>
+          val cat = new ParquetCatalog(s, root)
           val o = Tables.orders(s, d)
             .select("o_orderkey", "o_totalprice", "o_orderstatus")
           cat.overwriteVersioned("orders_vm", o, Seq("o_orderstatus"))
@@ -660,9 +651,10 @@ object MergeQueries {
               partOf(f) != "o_orderstatus=F" && !v1Set.contains(f)) +
             v1Files.count(f =>
               partOf(f) != "o_orderstatus=F" && fp(f) != before(f))
-          Files.writeString(marker, unshared.toString)
+          unshared.toString
         }
-        val unshared = Files.readString(marker).trim.toLong
+        val cat = new ParquetCatalog(s, root)
+        val unshared = marked.toLong
         val cols = Seq("o_orderkey", "o_totalprice", "o_orderstatus")
         graft.operators.Upsert.changeFeed(
             cat.readVersion("orders_vm", 1).select(cols.map(col): _*),
@@ -707,12 +699,8 @@ object MergeQueries {
     * (P rows, key % 13 == 3) on `orders_cdf`, layout o_orderstatus. */
   private def cdfState(s: org.apache.spark.sql.SparkSession,
       d: String): graft.storage.ParquetCatalog = {
-    import java.nio.file.{Files, Paths}
-    val suffix = graft.storage.Scratch.fingerprint(d).take(8)
-    val root = s"${sys.props("java.io.tmpdir")}/graft_cdf_$suffix"
-    val marker = Paths.get(s"$root/_complete")
-    val cat = new graft.storage.ParquetCatalog(s, root)
-    if (!Files.exists(marker)) {
+    val (root, _) = Scratch.state("cdf", d) { root =>
+      val cat = new ParquetCatalog(s, root)
       val o = Tables.orders(s, d)
         .select("o_orderkey", "o_totalprice", "o_orderstatus")
       cat.overwriteVersioned("orders_cdf", o, Seq("o_orderstatus"))
@@ -733,8 +721,9 @@ object MergeQueries {
         partitionBy = Seq("o_orderstatus"))
       cat.deleteVersioned("orders_cdf",
         col("o_orderstatus") === "P" && col("o_orderkey") % 13 === 3)
-      Files.writeString(marker, "ok")
+      "ok"
     }
+    val cat = new ParquetCatalog(s, root)
     cat
   }
 
@@ -862,12 +851,8 @@ object MergeQueries {
   private lazy val k25 = Q(
     "k25_time_as_of",
     (s, d) => {
-      import java.nio.file.{Files, Paths}
-      val suffix = graft.storage.Scratch.fingerprint(d).take(8)
-      val root = s"${sys.props("java.io.tmpdir")}/graft_tas_$suffix"
-      val marker = Paths.get(s"$root/_complete")
-      val cat = new graft.storage.ParquetCatalog(s, root)
-      if (!Files.exists(marker)) {
+      val (root, _) = Scratch.state("tas", d) { root =>
+        val cat = new ParquetCatalog(s, root)
         val o = Tables.orders(s, d)
           .select("o_orderkey", "o_totalprice", "o_orderstatus")
         cat.overwriteVersioned("orders_tt", o, Seq("o_orderstatus"))
@@ -877,8 +862,9 @@ object MergeQueries {
               col("o_totalprice"), col("o_orderstatus")),
           Seq("o_orderstatus"))
         cat.deleteVersioned("orders_tt", col("o_orderkey") % 17 === 2)
-        Files.writeString(marker, "ok")
+        "ok"
       }
+      val cat = new ParquetCatalog(s, root)
       val t2 = cat.commitTimestamp("orders_tt", 2).get
       val t3 = cat.commitTimestamp("orders_tt", 3).get
       val asOf = cat.readAsOf("orders_tt", t2)
@@ -920,14 +906,10 @@ object MergeQueries {
   private lazy val k26 = Q(
     "k26_check_constraints",
     (s, d) => {
-      import java.nio.file.{Files, Paths}
-      val suffix = graft.storage.Scratch.fingerprint(d).take(8)
-      val root = s"${sys.props("java.io.tmpdir")}/graft_cst_$suffix"
-      val marker = Paths.get(s"$root/_complete")
-      val cat = new graft.storage.ParquetCatalog(s, root)
       val o = Tables.orders(s, d)
         .select("o_orderkey", "o_totalprice", "o_orderstatus")
-      if (!Files.exists(marker)) {
+      val (root, _) = Scratch.state("cst", d) { root =>
+        val cat = new ParquetCatalog(s, root)
         cat.overwriteVersioned("orders_chk", o, Seq("o_orderstatus"))
         cat.addConstraint("orders_chk", "totalprice_pos", "o_totalprice > 0")
         cat.appendVersioned("orders_chk",
@@ -935,8 +917,9 @@ object MergeQueries {
             .select((col("o_orderkey") + 6000000).as("o_orderkey"),
               col("o_totalprice"), col("o_orderstatus")),
           Seq("o_orderstatus"))
-        Files.writeString(marker, "ok")
+        "ok"
       }
+      val cat = new ParquetCatalog(s, root)
       val badAppend =
         try {
           cat.appendVersioned("orders_chk",
@@ -992,11 +975,8 @@ object MergeQueries {
     "k27_clone",
     (s, d) => {
       import java.nio.file.{Files, Paths}
-      val suffix = graft.storage.Scratch.fingerprint(d).take(8)
-      val root = s"${sys.props("java.io.tmpdir")}/graft_cln_$suffix"
-      val marker = Paths.get(s"$root/_complete")
-      val cat = new graft.storage.ParquetCatalog(s, root)
-      if (!Files.exists(marker)) {
+      val (root, _) = Scratch.state("cln", d) { root =>
+        val cat = new ParquetCatalog(s, root)
         val o = Tables.orders(s, d)
           .select("o_orderkey", "o_totalprice", "o_orderstatus")
         cat.overwriteVersioned("orders_base", o, Seq("o_orderstatus"))
@@ -1012,8 +992,9 @@ object MergeQueries {
               col("o_totalprice"), col("o_orderstatus")),
           Seq("o_orderstatus"))
         cat.vacuum("orders_base", keep = 1, minAgeMs = 0L)
-        Files.writeString(marker, "ok")
+        "ok"
       }
+      val cat = new ParquetCatalog(s, root)
       def ino(p: java.nio.file.Path): Long =
         Files.getAttribute(p, "unix:ino").asInstanceOf[Long]
       val copied = cat.manifestFiles("orders_clone", 1).count { rel =>
@@ -1060,13 +1041,10 @@ object MergeQueries {
   private lazy val k28 = Q(
     "k28_table_stream",
     (s, d) => {
-      import java.nio.file.{Files, Paths}
+      import java.nio.file.Files
       import org.apache.spark.sql.streaming.Trigger
-      val suffix = graft.storage.Scratch.fingerprint(d).take(8)
-      val root = s"${sys.props("java.io.tmpdir")}/graft_tst_$suffix"
-      val marker = Paths.get(s"$root/_complete")
-      val cat = new graft.storage.ParquetCatalog(s, root)
-      if (!Files.exists(marker)) {
+      val (root, _) = Scratch.state("tst", d) { root =>
+        val cat = new ParquetCatalog(s, root)
         val o = Tables.orders(s, d)
           .select("o_orderkey", "o_totalprice", "o_orderstatus")
         cat.overwriteVersioned("orders_stream", o, Seq("o_orderstatus"))
@@ -1080,8 +1058,9 @@ object MergeQueries {
             .select((col("o_orderkey") + 11000000).as("o_orderkey"),
               col("o_totalprice"), col("o_orderstatus")),
           Seq("o_orderstatus"))
-        Files.writeString(marker, "ok")
+        "ok"
       }
+      val cat = new ParquetCatalog(s, root)
       val work = Files.createTempDirectory("graft_tst_run")
       val ckpt = s"$work/ckpt"
       val out = s"$work/out"
@@ -1207,12 +1186,8 @@ object MergeQueries {
   private lazy val k30 = Q(
     "k30_incremental_mv",
     (s, d) => {
-      import java.nio.file.{Files, Paths}
-      val suffix = graft.storage.Scratch.fingerprint(d).take(8)
-      val root = s"${sys.props("java.io.tmpdir")}/graft_imv_$suffix"
-      val marker = Paths.get(s"$root/_complete")
-      val cat = new graft.storage.ParquetCatalog(s, root)
-      if (!Files.exists(marker)) {
+      val (root, _) = Scratch.state("imv", d) { root =>
+        val cat = new ParquetCatalog(s, root)
         val o = Tables.orders(s, d)
           .select("o_orderkey", "o_totalprice", "o_orderstatus")
         cat.overwriteVersioned("orders_mv", o, Seq("o_orderstatus"))
@@ -1237,8 +1212,9 @@ object MergeQueries {
           col("o_orderstatus") === "P" && col("o_orderkey") % 13 === 3)
         cat.refreshMaterialized("orders_mv", "mv_by_status",
           Seq("o_orderkey"), Seq("o_orderstatus"), Seq("o_totalprice"))
-        Files.writeString(marker, "ok")
+        "ok"
       }
+      val cat = new ParquetCatalog(s, root)
       // live proof, every run: caught-up refresh commits nothing...
       val mvv = cat.refreshMaterialized("orders_mv", "mv_by_status",
         Seq("o_orderkey"), Seq("o_orderstatus"), Seq("o_totalprice"))
@@ -1302,12 +1278,8 @@ object MergeQueries {
   private lazy val k31 = Q(
     "k31_sql_time_travel",
     (s, d) => {
-      import java.nio.file.{Files, Paths}
-      val suffix = graft.storage.Scratch.fingerprint(d).take(8)
-      val root = s"${sys.props("java.io.tmpdir")}/graft_sqt_$suffix"
-      val marker = Paths.get(s"$root/_complete")
-      val cat = new graft.storage.ParquetCatalog(s, root)
-      if (!Files.exists(marker)) {
+      val (root, _) = Scratch.state("sqt", d) { root =>
+        val cat = new ParquetCatalog(s, root)
         val o = Tables.orders(s, d)
           .select("o_orderkey", "o_totalprice", "o_orderstatus")
         cat.overwriteVersioned("orders_sqt", o, Seq("o_orderstatus"))
@@ -1318,8 +1290,9 @@ object MergeQueries {
           Seq("o_orderstatus"))
         cat.deleteVersioned("orders_sqt", col("o_orderkey") % 23 === 11)
         cat.sql("RESTORE TABLE orders_sqt TO VERSION AS OF 2")
-        Files.writeString(marker, "ok")
+        "ok"
       }
+      val cat = new ParquetCatalog(s, root)
       // live pins, every run (all read-only):
       val cols = Seq("o_orderkey", "o_totalprice", "o_orderstatus")
       val viaText = cat.sql(
@@ -1375,13 +1348,9 @@ object MergeQueries {
   private lazy val k32 = Q(
     "k32_stream_pipe",
     (s, d) => {
-      import java.nio.file.{Files, Paths}
-      val suffix = graft.storage.Scratch.fingerprint(d).take(8)
-      val root = s"${sys.props("java.io.tmpdir")}/graft_stp_$suffix"
-      val marker = Paths.get(s"$root/_complete")
-      val cat = new graft.storage.ParquetCatalog(s, root)
-      def pipe(): Unit = {
-        val q = cat.readStream("orders_sp", maxVersionsPerTrigger = Some(1L))
+      def pipe(root: String): Unit = {
+        val q = new ParquetCatalog(s, root)
+          .readStream("orders_sp", maxVersionsPerTrigger = Some(1L))
           .writeStream
           .format("graft.streaming.TableSourceProvider")
           .option("root", root)
@@ -1392,7 +1361,8 @@ object MergeQueries {
           .start()
         q.awaitTermination()
       }
-      if (!Files.exists(marker)) {
+      val (root, _) = Scratch.state("stp", d) { root =>
+        val cat = new ParquetCatalog(s, root)
         val o = Tables.orders(s, d)
           .select("o_orderkey", "o_totalprice", "o_orderstatus")
         cat.overwriteVersioned("orders_sp", o, Seq("o_orderstatus"))
@@ -1401,11 +1371,12 @@ object MergeQueries {
             .select((col("o_orderkey") + 9000000).as("o_orderkey"),
               col("o_totalprice"), col("o_orderstatus")),
           Seq("o_orderstatus"))
-        pipe()
-        Files.writeString(marker, "ok")
+        pipe(root)
+        "ok"
       }
+      val cat = new ParquetCatalog(s, root)
       val vBefore = cat.currentVersion("orders_sp_dst")
-      pipe() // caught up: the txn registry must make this a no-op
+      pipe(root) // caught up: the txn registry must make this a no-op
       val rerunNoop =
         if (cat.currentVersion("orders_sp_dst") == vBefore) 1L else 0L
       val cols = Seq("o_orderkey", "o_totalprice", "o_orderstatus")
@@ -1446,16 +1417,9 @@ object MergeQueries {
   private lazy val k33 = Q(
     "k33_sql_catalog",
     (s, d) => {
-      import java.nio.file.{Files, Paths}
-      val suffix = graft.storage.Scratch.fingerprint(d).take(8)
-      val root = s"${sys.props("java.io.tmpdir")}/graft_ctl_$suffix"
-      val marker = Paths.get(s"$root/_complete")
-      val cat = new graft.storage.ParquetCatalog(s, root)
-      val c = "graft_k33"
-      s.conf.set(s"spark.sql.catalog.$c",
-        classOf[graft.spark.GraftCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$c.root", root)
-      if (!Files.exists(marker)) {
+      val (root, _) = Scratch.state("ctl", d) { root =>
+        val cat = new ParquetCatalog(s, root)
+        val c = GraftCatalog.register(s, "graft_k33", root)
         val o = Tables.orders(s, d)
           .select("o_orderkey", "o_totalprice", "o_orderstatus")
         cat.overwriteVersioned("orders_ctl", o, Seq("o_orderstatus"))
@@ -1464,8 +1428,10 @@ object MergeQueries {
           INSERT INTO $c.orders_ctl
           SELECT o_orderkey + 11000000, o_totalprice, o_orderstatus
           FROM orders_k33_src WHERE o_orderkey % 31 = 17""")
-        Files.writeString(marker, "ok")
+        "ok"
       }
+      val cat = new ParquetCatalog(s, root)
+      val c = GraftCatalog.register(s, "graft_k33", root)
       val v1Sql = s.sql(s"SELECT count(*) FROM $c.orders_ctl VERSION AS OF 1")
         .head().getLong(0)
       val v1Match =
@@ -1505,20 +1471,17 @@ object MergeQueries {
   private lazy val k34 = Q(
     "k34_sql_update",
     (s, d) => {
-      import java.nio.file.{Files, Paths}
-      val suffix = graft.storage.Scratch.fingerprint(d).take(8)
-      val root = s"${sys.props("java.io.tmpdir")}/graft_uw_$suffix"
-      val marker = Paths.get(s"$root/_complete")
-      val cat = new graft.storage.ParquetCatalog(s, root)
-      if (!Files.exists(marker)) {
+      val (root, _) = Scratch.state("uw", d) { root =>
+        val cat = new ParquetCatalog(s, root)
         val o = Tables.orders(s, d)
           .select("o_orderkey", "o_totalprice", "o_orderstatus")
         cat.overwriteVersioned("orders_uw", o, Seq("o_orderstatus"))
         cat.sql("""
           UPDATE orders_uw SET o_totalprice = o_totalprice * 2
           WHERE o_orderstatus = 'F' AND o_orderkey % 5 = 0""")
-        Files.writeString(marker, "ok")
+        "ok"
       }
+      val cat = new ParquetCatalog(s, root)
       def partOf(f: String) = graft.storage.TableManifest.partitionComponent(f)
       val v1 = cat.manifestFiles("orders_uw", 1).toSet
       val unshared = cat.manifestFiles("orders_uw", 2)
@@ -1562,12 +1525,8 @@ object MergeQueries {
   private lazy val k35 = Q(
     "k35_column_mapping",
     (s, d) => {
-      import java.nio.file.{Files, Paths}
-      val suffix = graft.storage.Scratch.fingerprint(d).take(8)
-      val root = s"${sys.props("java.io.tmpdir")}/graft_cmp_$suffix"
-      val marker = Paths.get(s"$root/_complete")
-      val cat = new graft.storage.ParquetCatalog(s, root)
-      if (!Files.exists(marker)) {
+      val (root, _) = Scratch.state("cmp", d) { root =>
+        val cat = new ParquetCatalog(s, root)
         val o = Tables.orders(s, d)
           .select(col("o_orderkey").cast("int").as("o_orderkey"),
             col("o_totalprice"), col("o_orderstatus"))
@@ -1579,8 +1538,9 @@ object MergeQueries {
             .select((col("o_orderkey").cast("bigint") + 7000000L).as("o_orderkey"),
               col("o_totalprice").as("price"), col("o_orderstatus")),
           Seq("o_orderstatus"))
-        Files.writeString(marker, "ok")
+        "ok"
       }
+      val cat = new ParquetCatalog(s, root)
       val v1 = cat.manifestFiles("orders_cm", 1).toSet
       val v2 = cat.manifestFiles("orders_cm", 2)
       val renameRewrote = v2.count(!v1.contains(_))
@@ -1632,12 +1592,8 @@ object MergeQueries {
   private lazy val k36 = Q(
     "k36_ddl_lifecycle",
     (s, d) => {
-      import java.nio.file.{Files, Paths}
-      val suffix = graft.storage.Scratch.fingerprint(d).take(8)
-      val root = s"${sys.props("java.io.tmpdir")}/graft_ddl_$suffix"
-      val marker = Paths.get(s"$root/_complete")
-      val cat = new graft.storage.ParquetCatalog(s, root)
-      if (!Files.exists(marker)) {
+      val (root, _) = Scratch.state("ddl", d) { root =>
+        val cat = new ParquetCatalog(s, root)
         val o = Tables.orders(s, d)
           .select(col("o_orderkey").cast("int").as("o_orderkey"),
             col("o_totalprice"),
@@ -1655,8 +1611,9 @@ object MergeQueries {
               (col("o_totalprice") + 1).as("secret"),
               col("o_orderstatus")),
           Seq("o_orderstatus"))
-        Files.writeString(marker, "ok")
+        "ok"
       }
+      val cat = new ParquetCatalog(s, root)
       val v1 = cat.manifestFiles("orders_dl", 1).toSet
       val ddlRewrote = (2L to 5L)
         .flatMap(v => cat.manifestFiles("orders_dl", v))
@@ -1711,12 +1668,8 @@ object MergeQueries {
   private lazy val k37 = Q(
     "k37_deletion_vectors",
     (s, d) => {
-      import java.nio.file.{Files, Paths}
-      val suffix = graft.storage.Scratch.fingerprint(d).take(8)
-      val root = s"${sys.props("java.io.tmpdir")}/graft_dvq_$suffix"
-      val marker = Paths.get(s"$root/_complete")
-      val cat = new graft.storage.ParquetCatalog(s, root)
-      if (!Files.exists(marker)) {
+      val (root, _) = Scratch.state("dvq", d) { root =>
+        val cat = new ParquetCatalog(s, root)
         val o = Tables.orders(s, d)
           .select("o_orderkey", "o_totalprice", "o_orderstatus")
         cat.overwriteVersioned("orders_dv", o, Seq("o_orderstatus"))
@@ -1727,8 +1680,9 @@ object MergeQueries {
             .select((col("o_orderkey") + 7000000L).as("o_orderkey"),
               col("o_totalprice"), col("o_orderstatus")),
           Seq("o_orderstatus"))
-        Files.writeString(marker, "ok")
+        "ok"
       }
+      val cat = new ParquetCatalog(s, root)
       val v1 = cat.manifestFiles("orders_dv", 1).toSet
       val dvRewrote = (2L to 3L)
         .flatMap(v => cat.manifestFiles("orders_dv", v))
@@ -1772,20 +1726,17 @@ object MergeQueries {
   private lazy val k38 = Q(
     "k38_update_vectors",
     (s, d) => {
-      import java.nio.file.{Files, Paths}
-      val suffix = graft.storage.Scratch.fingerprint(d).take(8)
-      val root = s"${sys.props("java.io.tmpdir")}/graft_uvq_$suffix"
-      val marker = Paths.get(s"$root/_complete")
-      val cat = new graft.storage.ParquetCatalog(s, root)
-      if (!Files.exists(marker)) {
+      val (root, _) = Scratch.state("uvq", d) { root =>
+        val cat = new ParquetCatalog(s, root)
         val o = Tables.orders(s, d)
           .select("o_orderkey", "o_totalprice", "o_orderstatus")
         cat.overwriteVersioned("orders_uv", o, Seq("o_orderstatus"))
         cat.updateVectors("orders_uv", col("o_orderkey") % 100 === 7,
           Map("o_totalprice" -> (col("o_totalprice") * 3)))
         cat.deleteVectors("orders_uv", col("o_orderkey") % 100 === 55)
-        Files.writeString(marker, "ok")
+        "ok"
       }
+      val cat = new ParquetCatalog(s, root)
       val v1 = cat.manifestFiles("orders_uv", 1).toSet
       val v3 = cat.manifestFiles("orders_uv", 3).toSet
       val originalsDropped = v1.count(!v3.contains(_))
@@ -1829,12 +1780,8 @@ object MergeQueries {
   private lazy val k39 = Q(
     "k39_merge_vectors",
     (s, d) => {
-      import java.nio.file.{Files, Paths}
-      val suffix = graft.storage.Scratch.fingerprint(d).take(8)
-      val root = s"${sys.props("java.io.tmpdir")}/graft_mvq_$suffix"
-      val marker = Paths.get(s"$root/_complete")
-      val cat = new graft.storage.ParquetCatalog(s, root)
-      if (!Files.exists(marker)) {
+      val (root, _) = Scratch.state("mvq", d) { root =>
+        val cat = new ParquetCatalog(s, root)
         val o = Tables.orders(s, d)
           .select("o_orderkey", "o_totalprice", "o_orderstatus")
         cat.overwriteVersioned("orders_mv", o, Seq("o_orderstatus"))
@@ -1847,8 +1794,9 @@ object MergeQueries {
             (col("o_totalprice") + 1).as("o_totalprice"), col("o_orderstatus"))
         cat.upsertVersioned("orders_mv", updates.unionByName(inserts),
           Seq("o_orderkey"))
-        Files.writeString(marker, "ok")
+        "ok"
       }
+      val cat = new ParquetCatalog(s, root)
       val v2 = cat.manifestFiles("orders_mv", 2).toSet
       val v3 = cat.manifestFiles("orders_mv", 3).toSet
       val mergeRewrote = v2.count(!v3.contains(_))
@@ -1906,12 +1854,8 @@ object MergeQueries {
   private lazy val k40 = Q(
     "k40_conflict_ff",
     (s, d) => {
-      import java.nio.file.{Files, Paths}
-      val suffix = graft.storage.Scratch.fingerprint(d).take(8)
-      val root = s"${sys.props("java.io.tmpdir")}/graft_ffq_$suffix"
-      val marker = Paths.get(s"$root/_complete")
-      val cat = new graft.storage.ParquetCatalog(s, root)
-      if (!Files.exists(marker)) {
+      val (root, _) = Scratch.state("ffq", d) { root =>
+        val cat = new ParquetCatalog(s, root)
         val o = Tables.orders(s, d)
           .select("o_orderkey", "o_totalprice", "o_orderstatus")
         cat.overwriteVersioned("orders_ff", o, Seq("o_orderstatus"))
@@ -1929,8 +1873,9 @@ object MergeQueries {
             col("o_orderstatus"))
         cat.upsertVersioned("orders_ff", aSrc, Seq("o_orderkey"),
           fromVersion = Some(1L))
-        Files.writeString(marker, "ok")
+        "ok"
       }
+      val cat = new ParquetCatalog(s, root)
       val ffVersion = cat.currentVersion("orders_ff")
       val oPart = (v: Long) => cat.manifestFiles("orders_ff", v)
         .filter(_.contains("o_orderstatus=O/")).toSet
@@ -1973,12 +1918,8 @@ object MergeQueries {
   private lazy val k16 = Q(
     "k16_restore",
     (s, d) => {
-      import java.nio.file.{Files, Paths}
-      val suffix = graft.storage.Scratch.fingerprint(d).take(8)
-      val root = s"${sys.props("java.io.tmpdir")}/graft_rst_$suffix"
-      val marker = Paths.get(s"$root/_complete")
-      val cat = new graft.storage.ParquetCatalog(s, root)
-      if (!Files.exists(marker)) {
+      val (root, marked) = Scratch.state("rst", d) { root =>
+        val cat = new ParquetCatalog(s, root)
         val o = Tables.orders(s, d)
           .select("o_orderkey", "o_totalprice", "o_orderstatus")
           .filter(col("o_orderkey") % 3 =!= 0)
@@ -1992,9 +1933,10 @@ object MergeQueries {
         cat.restore("orders_r", 1)
         val v1 = cat.manifestFiles("orders_r", 1).toSet
         val reref = cat.manifestFiles("orders_r", 3).count(!v1.contains(_))
-        Files.writeString(marker, reref.toString)
+        reref.toString
       }
-      val reref = Files.readString(marker).trim.toLong
+      val cat = new ParquetCatalog(s, root)
+      val reref = marked.toLong
       cat.read("orders_r")
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n_rows"),
@@ -2019,12 +1961,8 @@ object MergeQueries {
   private lazy val k17 = Q(
     "k17_history",
     (s, d) => {
-      import java.nio.file.{Files, Paths}
-      val suffix = graft.storage.Scratch.fingerprint(d).take(8)
-      val root = s"${sys.props("java.io.tmpdir")}/graft_his_$suffix"
-      val marker = Paths.get(s"$root/_complete")
-      val cat = new graft.storage.ParquetCatalog(s, root)
-      if (!Files.exists(marker)) {
+      val (root, _) = Scratch.state("his", d) { root =>
+        val cat = new ParquetCatalog(s, root)
         val o = Tables.orders(s, d)
           .select("o_orderkey", "o_totalprice", "o_orderstatus")
         cat.overwriteVersioned("orders_h", o, Seq("o_orderstatus"))
@@ -2037,8 +1975,9 @@ object MergeQueries {
           col("o_orderstatus") === "O" && col("o_orderkey") % 9 === 1,
           Seq("o_orderstatus"))
         cat.restore("orders_h", 2)
-        Files.createFile(marker)
+        "ok"
       }
+      val cat = new ParquetCatalog(s, root)
       cat.history("orders_h").select("version", "operation")
         .orderBy("version")
     },
@@ -2062,12 +2001,8 @@ object MergeQueries {
   private lazy val k18 = Q(
     "k18_replay_append",
     (s, d) => {
-      import java.nio.file.{Files, Paths}
-      val suffix = graft.storage.Scratch.fingerprint(d).take(8)
-      val root = s"${sys.props("java.io.tmpdir")}/graft_rpl_$suffix"
-      val marker = Paths.get(s"$root/_complete")
-      val cat = new graft.storage.ParquetCatalog(s, root)
-      if (!Files.exists(marker)) {
+      val (root, marked) = Scratch.state("rpl", d) { root =>
+        val cat = new ParquetCatalog(s, root)
         val ev = Tables.events(s, d).select("event_id", "event_type", "value")
         def batch(n: Int) = ev.filter(col("event_id") % 3 === n)
         cat.overwriteVersioned("ev_b", batch(0))
@@ -2076,9 +2011,10 @@ object MergeQueries {
         val before = cat.versions("ev_b").size
         cat.appendBatch("ev_b", batch(1), "ckpt#1") // the replay
         val after = cat.versions("ev_b").size
-        Files.writeString(marker, (after - before).toString)
+        (after - before).toString
       }
-      val replayCommitted = Files.readString(marker).trim.toLong
+      val cat = new ParquetCatalog(s, root)
+      val replayCommitted = marked.toLong
       cat.read("ev_b")
         .groupBy("event_type")
         .agg(count(lit(1)).as("n_rows"),
@@ -2106,12 +2042,8 @@ object MergeQueries {
   private lazy val k19 = Q(
     "k19_versioned_evolution",
     (s, d) => {
-      import java.nio.file.{Files, Paths}
-      val suffix = graft.storage.Scratch.fingerprint(d).take(8)
-      val root = s"${sys.props("java.io.tmpdir")}/graft_evo_$suffix"
-      val marker = Paths.get(s"$root/_complete")
-      val cat = new graft.storage.ParquetCatalog(s, root)
-      if (!Files.exists(marker)) {
+      val (root, marked) = Scratch.state("evo", d) { root =>
+        val cat = new ParquetCatalog(s, root)
         val o = Tables.orders(s, d)
         val base = o.filter(col("o_orderkey") % 2 === 1)
           .select("o_orderkey", "o_totalprice", "o_orderstatus")
@@ -2122,9 +2054,10 @@ object MergeQueries {
         val v1Files = cat.manifestFiles("orders_e", 1).toSet
         val carriedAll =
           if (v1Files.forall(cat.manifestFiles("orders_e", v2).contains)) 1 else 0
-        Files.writeString(marker, carriedAll.toString)
+        carriedAll.toString
       }
-      val carriedAll = Files.readString(marker).trim.toLong
+      val cat = new ParquetCatalog(s, root)
+      val carriedAll = marked.toLong
       cat.read("orders_e")
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n_rows"),
@@ -2154,13 +2087,9 @@ object MergeQueries {
   private lazy val k20 = Q(
     "k20_versioned_sql_merge",
     (s, d) => {
-      import java.nio.file.{Files, Paths}
-      val suffix = graft.storage.Scratch.fingerprint(d).take(8)
-      val root = s"${sys.props("java.io.tmpdir")}/graft_vsm_$suffix"
-      val marker = Paths.get(s"$root/_complete")
-      val cat = new graft.storage.ParquetCatalog(s, root)
       val o = Tables.orders(s, d)
-      if (!Files.exists(marker)) {
+      val (root, _) = Scratch.state("vsm", d) { root =>
+        val cat = new ParquetCatalog(s, root)
         val target = o.filter(col("o_orderkey") % 4 =!= 0)
           .select(col("o_orderkey"),
             when(col("o_orderkey") % 3 === 0, "Other")
@@ -2186,8 +2115,9 @@ object MergeQueries {
               END
           WHEN NOT MATCHED THEN
             INSERT *""")
-        Files.createFile(marker)
+        "ok"
       }
+      val cat = new ParquetCatalog(s, root)
       // durable-state pins, recomputed from metadata on every run
       val mergeVerbOk =
         if (cat.history("orders_m").filter(col("version") === 2 &&
@@ -2238,12 +2168,8 @@ object MergeQueries {
   private lazy val k21 = Q(
     "k21_evolving_merge",
     (s, d) => {
-      import java.nio.file.{Files, Paths}
-      val suffix = graft.storage.Scratch.fingerprint(d).take(8)
-      val root = s"${sys.props("java.io.tmpdir")}/graft_evm_$suffix"
-      val marker = Paths.get(s"$root/_complete")
-      val cat = new graft.storage.ParquetCatalog(s, root)
-      if (!Files.exists(marker)) {
+      val (root, marked) = Scratch.state("evm", d) { root =>
+        val cat = new ParquetCatalog(s, root)
         val o = Tables.orders(s, d)
           .select("o_orderkey", "o_totalprice", "o_orderstatus")
         cat.overwriteVersioned("orders_ev", o, Seq("o_orderstatus"))
@@ -2258,9 +2184,10 @@ object MergeQueries {
           graft.storage.TableManifest.partitionComponent(f) != "o_orderstatus=F")
         val carried =
           if (untouched.nonEmpty && untouched.forall(v2Files.contains)) 1 else 0
-        Files.writeString(marker, carried.toString)
+        carried.toString
       }
-      val carried = Files.readString(marker).trim.toLong
+      val cat = new ParquetCatalog(s, root)
+      val carried = marked.toLong
       cat.read("orders_ev")
         .withColumn("untouched_carried", lit(carried))
         .orderBy("o_orderkey")
@@ -2289,12 +2216,8 @@ object MergeQueries {
   private lazy val k22 = Q(
     "k22_replay_merge",
     (s, d) => {
-      import java.nio.file.{Files, Paths}
-      val suffix = graft.storage.Scratch.fingerprint(d).take(8)
-      val root = s"${sys.props("java.io.tmpdir")}/graft_rpm_$suffix"
-      val marker = Paths.get(s"$root/_complete")
-      val cat = new graft.storage.ParquetCatalog(s, root)
-      if (!Files.exists(marker)) {
+      val (root, marked) = Scratch.state("rpm", d) { root =>
+        val cat = new ParquetCatalog(s, root)
         val ev = Tables.events(s, d).select("event_id", "event_type", "value")
         cat.upsertBatch("ev_m", ev, Seq("event_id"), "mrg#0")
         cat.upsertBatch("ev_m",
@@ -2316,9 +2239,10 @@ object MergeQueries {
               (col("value") + 100.0).as("value")),
           Seq("event_id"), "mrg#1")
         val after = cat.versions("ev_m").size
-        Files.writeString(marker, (after - before).toString)
+        (after - before).toString
       }
-      val replayCommitted = Files.readString(marker).trim.toLong
+      val cat = new ParquetCatalog(s, root)
+      val replayCommitted = marked.toLong
       cat.read("ev_m")
         .groupBy("event_type")
         .agg(count(lit(1)).as("n_rows"),

@@ -2,6 +2,8 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.Deterministic._
+import graft.spark.GraftCatalog
+import graft.storage.{ParquetCatalog, Scratch}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -407,13 +409,13 @@ object Relational {
     Q(
       "b2_bucketed_join",
       (s, d) => {
-        import graft.storage.{Bucketed, Scratch}
+        import graft.storage.Bucketed
         // table/path suffix AND write-skip marker both keyed on the
         // input's content fingerprint (sizes+mtimes, not just the
-        // path) — mutated inputs rebuild instead of reusing stale
-        // buckets
-        val suffix = Scratch.fingerprint(d).take(8)
-        val root = s"${sys.props("java.io.tmpdir")}/graft_bucketed_$suffix"
+        // path; the root's last 8 characters) — mutated inputs rebuild
+        // instead of reusing stale buckets
+        val root = Scratch.root("bucketed", d)
+        val suffix = root.takeRight(8)
         Bucketed.write(s, Tables.orders(s, d)
             .select("o_orderkey", "o_custkey", "o_totalprice"),
           s"graft_b2_orders_$suffix", s"$root/orders", "o_custkey", 8, suffix)
@@ -1099,18 +1101,14 @@ object Relational {
     Q(
       "s9_skipping_scan",
       (s, d) => {
-        import java.nio.file.{Files, Paths}
-        val suffix = graft.storage.Scratch.fingerprint(d).take(8)
-        val root = s"${sys.props("java.io.tmpdir")}/graft_skip_$suffix"
-        val marker = Paths.get(s"$root/_complete")
-        if (!Files.exists(marker)) {
-          val cat = new graft.storage.ParquetCatalog(s, root)
+        val (root, _) = Scratch.state("skip", d) { root =>
+          val cat = new ParquetCatalog(s, root)
           cat.overwrite("orders", Tables.orders(s, d))
           cat.compact("orders", rowsPerFile = 2000,
             clusterBy = Seq("o_orderkey"))
           graft.storage.SkippingIndex.write(s, s"$root/orders",
             Seq("o_orderkey"))
-          Files.createFile(marker)
+          "ok"
         }
         graft.storage.SkippingIndex
           .scan(s, s"$root/orders", "o_orderkey", 1000, 3000)
@@ -1135,12 +1133,8 @@ object Relational {
     Q(
       "s10_range_read",
       (s, d) => {
-        import java.nio.file.{Files, Paths}
-        val suffix = graft.storage.Scratch.fingerprint(d).take(8)
-        val root = s"${sys.props("java.io.tmpdir")}/graft_rr_$suffix"
-        val marker = Paths.get(s"$root/_complete")
-        val cat = new graft.storage.ParquetCatalog(s, root)
-        if (!Files.exists(marker)) {
+        val (root, _) = Scratch.state("rr", d) { root =>
+          val cat = new ParquetCatalog(s, root)
           val li = Tables.lineitem(s, d)
             .select("l_orderkey", "l_partkey", "l_quantity", "l_extendedprice")
           cat.overwrite("li_idx", li.filter(col("l_orderkey") % 5 =!= 0))
@@ -1150,8 +1144,9 @@ object Relational {
           // appended AFTER indexing: the catalog's incremental refresh
           // must fold these files in, or the range read drops rows
           cat.append("li_idx", li.filter(col("l_orderkey") % 5 === 0))
-          Files.createFile(marker)
+          "ok"
         }
+        val cat = new ParquetCatalog(s, root)
         cat.readRange("li_idx",
             Seq(("l_orderkey", 1000.0, 4000.0), ("l_partkey", 0.0, 500.0)))
           .agg(count(lit(1)).as("n_rows"),
@@ -1181,18 +1176,15 @@ object Relational {
     Q(
       "s11_bloom_point",
       (s, d) => {
-        import java.nio.file.{Files, Paths}
-        val suffix = graft.storage.Scratch.fingerprint(d).take(8)
-        val root = s"${sys.props("java.io.tmpdir")}/graft_blm_$suffix"
-        val marker = Paths.get(s"$root/_complete")
-        val cat = new graft.storage.ParquetCatalog(s, root,
+        def catalog(root: String) = new ParquetCatalog(s, root,
           bloomFor = Seq("l_orderkey"), bloomNdv = 100000L)
         val li = Tables.lineitem(s, d)
           .select("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice")
-        if (!Files.exists(marker)) {
-          cat.overwrite("li_b", li.repartition(24))
-          Files.createFile(marker)
+        val (root, _) = Scratch.state("blm", d) { root =>
+          catalog(root).overwrite("li_b", li.repartition(24))
+          "ok"
         }
+        val cat = catalog(root)
         val key = li.agg(max(col("l_orderkey"))).head().getLong(0)
         val pruned =
           if (cat.pointCandidates("li_b", "l_orderkey", key).size * 2 <
@@ -1230,24 +1222,17 @@ object Relational {
     Q(
       "s12_spj_join",
       (s, d) => {
-        import java.nio.file.{Files, Paths}
-        val suffix = graft.storage.Scratch.fingerprint(d).take(8)
-        val root = s"${sys.props("java.io.tmpdir")}/graft_spj_$suffix"
-        val marker = Paths.get(s"$root/_complete")
-        val cat = new graft.storage.ParquetCatalog(s, root)
-        if (!Files.exists(marker)) {
+        val (root, _) = Scratch.state("spj", d) { root =>
+          val cat = new ParquetCatalog(s, root)
           val o = Tables.orders(s, d)
             .select("o_orderkey", "o_totalprice", "o_orderstatus")
           cat.overwriteVersioned("orders_spj", o, Seq("o_orderstatus"))
           cat.overwriteVersioned("status_dim",
             o.groupBy("o_orderstatus").agg(count(lit(1)).as("status_n")),
             Seq("o_orderstatus"))
-          Files.writeString(marker, "ok")
+          "ok"
         }
-        val cname = s"gspj$suffix"
-        s.conf.set(s"spark.sql.catalog.$cname",
-          classOf[graft.spark.GraftCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cname.root", root)
+        val cname = GraftCatalog.register(s, s"gspj${root.takeRight(8)}", root)
         val toggled = Seq(
           "spark.sql.sources.v2.bucketing.enabled" -> "true",
           "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
@@ -1298,12 +1283,8 @@ object Relational {
     Q(
       "s13_sql_skip",
       (s, d) => {
-        import java.nio.file.{Files, Paths}
-        val suffix = graft.storage.Scratch.fingerprint(d).take(8)
-        val root = s"${sys.props("java.io.tmpdir")}/graft_sqs_$suffix"
-        val marker = Paths.get(s"$root/_complete")
-        val cat = new graft.storage.ParquetCatalog(s, root)
-        if (!Files.exists(marker)) {
+        val (root, _) = Scratch.state("sqs", d) { root =>
+          val cat = new ParquetCatalog(s, root)
           val o = Tables.orders(s, d)
             .select("o_orderkey", "o_custkey", "o_totalprice")
           cat.overwriteVersioned("orders_skip", o)
@@ -1313,12 +1294,9 @@ object Relational {
           cat.compact("orders_skip",
             rowsPerFile = math.max(1L, n / 12), clusterBy = Seq("o_orderkey"))
           cat.index("orders_skip", Seq("o_orderkey"))
-          Files.writeString(marker, "ok")
+          "ok"
         }
-        val cname = s"gsk$suffix"
-        s.conf.set(s"spark.sql.catalog.$cname",
-          classOf[graft.spark.GraftCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cname.root", root)
+        val cname = GraftCatalog.register(s, s"gsk${root.takeRight(8)}", root)
         val q = s.sql(
           s"""SELECT o_orderkey, o_custkey, o_totalprice
               FROM $cname.orders_skip
@@ -1351,23 +1329,16 @@ object Relational {
     Q(
       "s14_sql_bloom",
       (s, d) => {
-        import java.nio.file.{Files, Paths}
-        val suffix = graft.storage.Scratch.fingerprint(d).take(8)
-        val root = s"${sys.props("java.io.tmpdir")}/graft_sqb_$suffix"
-        val marker = Paths.get(s"$root/_complete")
-        val bcat = new graft.storage.ParquetCatalog(s, root,
-          bloomFor = Seq("l_orderkey"), bloomNdv = 100000L)
         val li = Tables.lineitem(s, d)
           .select("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice")
-        if (!Files.exists(marker)) {
+        val (root, _) = Scratch.state("sqb", d) { root =>
+          val bcat = new ParquetCatalog(s, root,
+            bloomFor = Seq("l_orderkey"), bloomNdv = 100000L)
           bcat.overwriteVersioned("li_sb", li.repartition(24))
           bcat.index("li_sb", Seq("l_orderkey"))
-          Files.writeString(marker, "ok")
+          "ok"
         }
-        val cname = s"gsb$suffix"
-        s.conf.set(s"spark.sql.catalog.$cname",
-          classOf[graft.spark.GraftCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cname.root", root)
+        val cname = GraftCatalog.register(s, s"gsb${root.takeRight(8)}", root)
         val key = li.agg(max(col("l_orderkey"))).head().getLong(0)
         val q = s.sql(
           s"""SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice
@@ -1406,23 +1377,16 @@ object Relational {
     Q(
       "s15_sql_count",
       (s, d) => {
-        import java.nio.file.{Files, Paths}
-        val suffix = graft.storage.Scratch.fingerprint(d).take(8)
-        val root = s"${sys.props("java.io.tmpdir")}/graft_sqc_$suffix"
-        val marker = Paths.get(s"$root/_complete")
-        val cat = new graft.storage.ParquetCatalog(s, root)
-        if (!Files.exists(marker)) {
+        val (root, _) = Scratch.state("sqc", d) { root =>
+          val cat = new ParquetCatalog(s, root)
           val o = Tables.orders(s, d)
             .select("o_orderkey", "o_totalprice", "o_orderstatus")
           cat.overwriteVersioned("orders_cnt", o, Seq("o_orderstatus"))
           cat.setTableProperty("orders_cnt", "graft.deletionVectors", "true")
           cat.deleteVectors("orders_cnt", col("o_orderkey") % 100 === 55)
-          Files.writeString(marker, "ok")
+          "ok"
         }
-        val cname = s"gct$suffix"
-        s.conf.set(s"spark.sql.catalog.$cname",
-          classOf[graft.spark.GraftCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cname.root", root)
+        val cname = GraftCatalog.register(s, s"gct${root.takeRight(8)}", root)
         val cur = s.sql(s"SELECT count(*) FROM $cname.orders_cnt")
         val v1 = s.sql(
           s"SELECT count(*) FROM $cname.orders_cnt VERSION AS OF 1")
@@ -1452,15 +1416,11 @@ object Relational {
     Q(
       "s16_sql_time_skip",
       (s, d) => {
-        import java.nio.file.{Files, Paths}
-        val suffix = graft.storage.Scratch.fingerprint(d).take(8)
         // _tsk2: the r18 full-annotation index tags obsolete any _tsk
         // scratch built by earlier rounds (its truncated tags would no
         // longer match and the pruning pin would read stale)
-        val root = s"${sys.props("java.io.tmpdir")}/graft_tsk2_$suffix"
-        val marker = Paths.get(s"$root/_complete")
-        val cat = new graft.storage.ParquetCatalog(s, root)
-        if (!Files.exists(marker)) {
+        val (root, _) = Scratch.state("tsk2", d) { root =>
+          val cat = new ParquetCatalog(s, root)
           val o = Tables.orders(s, d)
             .select("o_orderkey", "o_totalprice", "o_orderdate")
           cat.overwriteVersioned("orders_ts", o)
@@ -1468,12 +1428,9 @@ object Relational {
           cat.compact("orders_ts",
             rowsPerFile = math.max(1L, n / 12), clusterBy = Seq("o_orderdate"))
           cat.index("orders_ts", Seq("o_orderdate"))
-          Files.writeString(marker, "ok")
+          "ok"
         }
-        val cname = s"gst$suffix"
-        s.conf.set(s"spark.sql.catalog.$cname",
-          classOf[graft.spark.GraftCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cname.root", root)
+        val cname = GraftCatalog.register(s, s"gst${root.takeRight(8)}", root)
         val q = s.sql(
           s"""SELECT o_orderkey, o_totalprice
               FROM $cname.orders_ts
@@ -1514,17 +1471,12 @@ object Relational {
     Q(
       "s17_sql_tblprops",
       (s, d) => {
-        import java.nio.file.{Files, Paths}
-        val suffix = graft.storage.Scratch.fingerprint(d).take(8)
-        val root = s"${sys.props("java.io.tmpdir")}/graft_tbp_$suffix"
-        val marker = Paths.get(s"$root/_complete")
-        val cname = s"gtp$suffix"
-        s.conf.set(s"spark.sql.catalog.$cname",
-          classOf[graft.spark.GraftCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cname.root", root)
+        def register(root: String) =
+          GraftCatalog.register(s, s"gtp${root.takeRight(8)}", root)
         val li = Tables.lineitem(s, d)
           .select("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice")
-        if (!Files.exists(marker)) {
+        val (root, _) = Scratch.state("tbp", d) { root =>
+          val cname = register(root)
           li.createOrReplaceTempView("li_props_src")
           s.sql(
             s"""CREATE TABLE $cname.li_props
@@ -1536,8 +1488,9 @@ object Relational {
             s"""INSERT INTO $cname.li_props
                 SELECT /*+ REPARTITION(8) */ * FROM li_props_src
                 WHERE l_linenumber > 4""")
-          Files.writeString(marker, "ok")
+          "ok"
         }
+        val cname = register(root)
         val key = li.agg(max(col("l_orderkey"))).head().getLong(0)
         val q = s.sql(
           s"""SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice
@@ -1578,22 +1531,15 @@ object Relational {
     Q(
       "s18_sql_meta_agg",
       (s, d) => {
-        import java.nio.file.{Files, Paths}
-        val suffix = graft.storage.Scratch.fingerprint(d).take(8)
-        val root = s"${sys.props("java.io.tmpdir")}/graft_sma2_$suffix"
-        val marker = Paths.get(s"$root/_complete")
-        val cat = new graft.storage.ParquetCatalog(s, root)
-        if (!Files.exists(marker)) {
+        val (root, _) = Scratch.state("sma2", d) { root =>
+          val cat = new ParquetCatalog(s, root)
           val o = Tables.orders(s, d)
             .select("o_orderkey", "o_totalprice", "o_orderstatus")
           cat.overwriteVersioned("orders_ma", o, Seq("o_orderstatus"))
           cat.index("orders_ma", Seq("o_orderkey"))
-          Files.writeString(marker, "ok")
+          "ok"
         }
-        val cname = s"gma$suffix"
-        s.conf.set(s"spark.sql.catalog.$cname",
-          classOf[graft.spark.GraftCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cname.root", root)
+        val cname = GraftCatalog.register(s, s"gma${root.takeRight(8)}", root)
         val mm = s.sql(
           s"""SELECT min(o_orderkey) AS min_key, max(o_orderkey) AS max_key,
                      count(o_orderkey) AS n_keys
@@ -1636,12 +1582,8 @@ object Relational {
     Q(
       "s19_sql_bucket_join",
       (s, d) => {
-        import java.nio.file.{Files, Paths}
-        val suffix = graft.storage.Scratch.fingerprint(d).take(8)
-        val root = s"${sys.props("java.io.tmpdir")}/graft_sbj_$suffix"
-        val marker = Paths.get(s"$root/_complete")
-        val cat = new graft.storage.ParquetCatalog(s, root)
-        if (!Files.exists(marker)) {
+        val (root, _) = Scratch.state("sbj", d) { root =>
+          val cat = new ParquetCatalog(s, root)
           cat.overwriteBucketedVersioned("orders_b",
             Tables.orders(s, d)
               .select("o_orderkey", "o_custkey", "o_totalprice"),
@@ -1649,12 +1591,9 @@ object Relational {
           cat.overwriteBucketedVersioned("cust_b",
             Tables.customer(s, d).select("c_custkey", "c_name"),
             "c_custkey", 16)
-          Files.writeString(marker, "ok")
+          "ok"
         }
-        val cname = s"gbj$suffix"
-        s.conf.set(s"spark.sql.catalog.$cname",
-          classOf[graft.spark.GraftCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cname.root", root)
+        val cname = GraftCatalog.register(s, s"gbj${root.takeRight(8)}", root)
         val toggled = Seq(
           "spark.sql.sources.v2.bucketing.enabled" -> "true",
           "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
@@ -1700,12 +1639,8 @@ object Relational {
     Q(
       "s20_sql_dfp",
       (s, d) => {
-        import java.nio.file.{Files, Paths}
-        val suffix = graft.storage.Scratch.fingerprint(d).take(8)
-        val root = s"${sys.props("java.io.tmpdir")}/graft_dfp_$suffix"
-        val marker = Paths.get(s"$root/_complete")
-        val cat = new graft.storage.ParquetCatalog(s, root)
-        if (!Files.exists(marker)) {
+        val (root, _) = Scratch.state("dfp", d) { root =>
+          val cat = new ParquetCatalog(s, root)
           val o = Tables.orders(s, d)
             .select("o_orderkey", "o_custkey", "o_totalprice")
           cat.overwriteVersioned("orders_dfp", o)
@@ -1718,12 +1653,9 @@ object Relational {
             o.select("o_orderkey").distinct()
               .filter(col("o_orderkey").between(1000, 1400))
               .withColumn("flag", lit(1L)))
-          Files.writeString(marker, "ok")
+          "ok"
         }
-        val cname = s"gdfp$suffix"
-        s.conf.set(s"spark.sql.catalog.$cname",
-          classOf[graft.spark.GraftCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cname.root", root)
+        val cname = GraftCatalog.register(s, s"gdfp${root.takeRight(8)}", root)
         val q = s.sql(
           s"""SELECT f.o_orderkey, f.o_custkey, f.o_totalprice
               FROM $cname.orders_dfp f
@@ -1767,12 +1699,8 @@ object Relational {
     Q(
       "s21_sql_part_bucket",
       (s, d) => {
-        import java.nio.file.{Files, Paths}
-        val suffix = graft.storage.Scratch.fingerprint(d).take(8)
-        val root = s"${sys.props("java.io.tmpdir")}/graft_cpb_$suffix"
-        val marker = Paths.get(s"$root/_complete")
-        val cat = new graft.storage.ParquetCatalog(s, root)
-        if (!Files.exists(marker)) {
+        val (root, _) = Scratch.state("cpb", d) { root =>
+          val cat = new ParquetCatalog(s, root)
           cat.overwriteBucketedVersioned("orders_pb",
             Tables.orders(s, d).select("o_orderkey", "o_custkey",
               "o_orderstatus", "o_totalprice"),
@@ -1780,12 +1708,9 @@ object Relational {
           cat.overwriteBucketedVersioned("cust_pb",
             Tables.customer(s, d).select("c_custkey", "c_name"),
             "c_custkey", 16)
-          Files.writeString(marker, "ok")
+          "ok"
         }
-        val cname = s"gpb$suffix"
-        s.conf.set(s"spark.sql.catalog.$cname",
-          classOf[graft.spark.GraftCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cname.root", root)
+        val cname = GraftCatalog.register(s, s"gpb${root.takeRight(8)}", root)
         val toggled = Seq(
           "spark.sql.sources.v2.bucketing.enabled" -> "true",
           "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
@@ -1838,15 +1763,11 @@ object Relational {
     Q(
       "s22_sql_bucket_ddl",
       (s, d) => {
-        import java.nio.file.{Files, Paths}
-        val suffix = graft.storage.Scratch.fingerprint(d).take(8)
-        val root = s"${sys.props("java.io.tmpdir")}/graft_bdl_$suffix"
-        val marker = Paths.get(s"$root/_complete")
-        val cname = s"gbd$suffix"
-        s.conf.set(s"spark.sql.catalog.$cname",
-          classOf[graft.spark.GraftCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cname.root", root)
-        if (!Files.exists(marker)) {
+        def register(root: String) =
+          GraftCatalog.register(s, s"gbd${root.takeRight(8)}", root)
+        val (root, _) = Scratch.state("bdl", d) { root =>
+          val cname = register(root)
+          val suffix = root.takeRight(8)
           Tables.orders(s, d)
             .select("o_orderkey", "o_custkey", "o_totalprice")
             .createOrReplaceTempView(s"orders_src_$suffix")
@@ -1863,8 +1784,9 @@ object Relational {
             s"""CREATE TABLE $cname.cust_bd
                 TBLPROPERTIES('graft.bucketBy'='c_custkey,16')
                 AS SELECT * FROM cust_src_$suffix""")
-          Files.writeString(marker, "ok")
+          "ok"
         }
+        val cname = register(root)
         val toggled = Seq(
           "spark.sql.sources.v2.bucketing.enabled" -> "true",
           "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
@@ -1908,12 +1830,8 @@ object Relational {
     Q(
       "s23_sql_bucket_dv",
       (s, d) => {
-        import java.nio.file.{Files, Paths}
-        val suffix = graft.storage.Scratch.fingerprint(d).take(8)
-        val root = s"${sys.props("java.io.tmpdir")}/graft_bdv_$suffix"
-        val marker = Paths.get(s"$root/_complete")
-        val cat = new graft.storage.ParquetCatalog(s, root)
-        if (!Files.exists(marker)) {
+        val (root, _) = Scratch.state("bdv", d) { root =>
+          val cat = new ParquetCatalog(s, root)
           cat.overwriteBucketedVersioned("orders_bv",
             Tables.orders(s, d)
               .select("o_orderkey", "o_custkey", "o_totalprice"),
@@ -1923,12 +1841,9 @@ object Relational {
             "c_custkey", 16)
           cat.setTableProperty("orders_bv", "graft.deletionVectors", "true")
           cat.deleteVectors("orders_bv", col("o_orderkey") % 10 === 3)
-          Files.writeString(marker, "ok")
+          "ok"
         }
-        val cname = s"gbv$suffix"
-        s.conf.set(s"spark.sql.catalog.$cname",
-          classOf[graft.spark.GraftCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cname.root", root)
+        val cname = GraftCatalog.register(s, s"gbv${root.takeRight(8)}", root)
         val toggled = Seq(
           "spark.sql.sources.v2.bucketing.enabled" -> "true",
           "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
@@ -1976,12 +1891,8 @@ object Relational {
     Q(
       "s24_sql_string_skip",
       (s, d) => {
-        import java.nio.file.{Files, Paths}
-        val suffix = graft.storage.Scratch.fingerprint(d).take(8)
-        val root = s"${sys.props("java.io.tmpdir")}/graft_ssk_$suffix"
-        val marker = Paths.get(s"$root/_complete")
-        val cat = new graft.storage.ParquetCatalog(s, root)
-        if (!Files.exists(marker)) {
+        val (root, _) = Scratch.state("ssk", d) { root =>
+          val cat = new ParquetCatalog(s, root)
           val cust = Tables.customer(s, d)
             .select("c_custkey", "c_name", "c_acctbal")
           cat.overwriteVersioned("cust_ss", cust)
@@ -1989,12 +1900,9 @@ object Relational {
           cat.compact("cust_ss",
             rowsPerFile = math.max(1L, n / 12), clusterBy = Seq("c_name"))
           cat.index("cust_ss", Seq("c_name"))
-          Files.writeString(marker, "ok")
+          "ok"
         }
-        val cname = s"gss$suffix"
-        s.conf.set(s"spark.sql.catalog.$cname",
-          classOf[graft.spark.GraftCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cname.root", root)
+        val cname = GraftCatalog.register(s, s"gss${root.takeRight(8)}", root)
         val q = s.sql(
           s"""SELECT c_custkey, c_name, c_acctbal FROM $cname.cust_ss
               WHERE c_name BETWEEN 'Customer#000000100'
@@ -2032,12 +1940,8 @@ object Relational {
     Q(
       "s25_sql_decimal_skip",
       (s, d) => {
-        import java.nio.file.{Files, Paths}
-        val suffix = graft.storage.Scratch.fingerprint(d).take(8)
-        val root = s"${sys.props("java.io.tmpdir")}/graft_dsk_$suffix"
-        val marker = Paths.get(s"$root/_complete")
-        val cat = new graft.storage.ParquetCatalog(s, root)
-        if (!Files.exists(marker)) {
+        val (root, _) = Scratch.state("dsk", d) { root =>
+          val cat = new ParquetCatalog(s, root)
           val o = Tables.orders(s, d).select(col("o_orderkey"),
             col("o_totalprice")
               .cast(org.apache.spark.sql.types.DecimalType(12, 2))
@@ -2047,12 +1951,9 @@ object Relational {
           cat.compact("orders_dec",
             rowsPerFile = math.max(1L, n / 12), clusterBy = Seq("price"))
           cat.index("orders_dec", Seq("price"))
-          Files.writeString(marker, "ok")
+          "ok"
         }
-        val cname = s"gdk$suffix"
-        s.conf.set(s"spark.sql.catalog.$cname",
-          classOf[graft.spark.GraftCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cname.root", root)
+        val cname = GraftCatalog.register(s, s"gdk${root.takeRight(8)}", root)
         val q = s.sql(
           s"""SELECT o_orderkey, price FROM $cname.orders_dec
               WHERE price BETWEEN 30000.00 AND 60000.00""")
@@ -2096,22 +1997,15 @@ object Relational {
     Q(
       "s26_sql_string_meta",
       (s, d) => {
-        import java.nio.file.{Files, Paths}
-        val suffix = graft.storage.Scratch.fingerprint(d).take(8)
-        val root = s"${sys.props("java.io.tmpdir")}/graft_ssm_$suffix"
-        val marker = Paths.get(s"$root/_complete")
-        val cat = new graft.storage.ParquetCatalog(s, root)
-        if (!Files.exists(marker)) {
+        val (root, _) = Scratch.state("ssm", d) { root =>
+          val cat = new ParquetCatalog(s, root)
           val cust = Tables.customer(s, d)
             .select("c_custkey", "c_name", "c_mktsegment")
           cat.overwriteVersioned("cust_sm", cust, Seq("c_mktsegment"))
           cat.index("cust_sm", Seq("c_name"))
-          Files.writeString(marker, "ok")
+          "ok"
         }
-        val cname = s"gsm$suffix"
-        s.conf.set(s"spark.sql.catalog.$cname",
-          classOf[graft.spark.GraftCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cname.root", root)
+        val cname = GraftCatalog.register(s, s"gsm${root.takeRight(8)}", root)
         val mm = s.sql(
           s"""SELECT min(c_name) AS min_name, max(c_name) AS max_name
               FROM $cname.cust_sm""")

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.storage.{ParquetCatalog, Scratch}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -505,18 +506,15 @@ object TimeSeriesQueries {
     Q(
       "gov3_rtbf_purge",
       (s, d) => {
-        import java.nio.file.{Files, Paths}
         val subjects = Seq(7L, 42L, 99L)
-        val suffix = graft.storage.Scratch.fingerprint(d).take(8)
-        val root = s"${sys.props("java.io.tmpdir")}/graft_rtbf_$suffix"
-        val marker = Paths.get(s"$root/_complete")
-        val cat = new graft.storage.ParquetCatalog(s, root)
-        if (!Files.exists(marker)) {
+        val (root, _) = Scratch.state("rtbf", d) { root =>
+          val cat = new ParquetCatalog(s, root)
           cat.overwrite("events_p", Tables.events(s, d)
             .select("event_id", "user_id", "event_type", "value"))
           cat.delete("events_p", col("user_id").isin(subjects: _*))
-          Files.createFile(marker)
+          "ok"
         }
+        val cat = new ParquetCatalog(s, root)
         cat.read("events_p")
           .groupBy("event_type")
           .agg(

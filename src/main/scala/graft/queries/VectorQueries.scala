@@ -24,12 +24,8 @@ object VectorQueries {
   private[graft] def persistedIvfPqIndex(s: org.apache.spark.sql.SparkSession,
       d: String): (graft.operators.IvfPq.Model, org.apache.spark.sql.DataFrame) = {
     import graft.operators.IvfPq
-    import java.nio.file.{Files, Paths}
     val emb = graft.Tables.embeddings(s, d)
-    val suffix = graft.storage.Scratch.fingerprint(d).take(8)
-    val dir = s"${sys.props("java.io.tmpdir")}/graft_ivfpq3_$suffix"
-    val marker = Paths.get(s"$dir/_complete")
-    if (!Files.exists(marker)) {
+    val (dir, _) = graft.storage.Scratch.state("ivfpq3", d) { dir =>
       val model = IvfPq.train(emb, "vec_id", "embedding", dim = dim,
         nLists = 16, coarseIters = 2, m = 8, k = 64, pqIters = 3)
       IvfPq.save(model, s, dir)
@@ -37,7 +33,7 @@ object VectorQueries {
         metaCols = Seq("label"))
         .write.mode("overwrite").partitionBy("list_id")
         .parquet(s"$dir/index")
-      Files.createFile(marker) // last: a torn build rebuilds
+      "ok"
     }
     (IvfPq.load(s, dir), graft.storage.FooterSchema.parquet(s, s"$dir/index"))
   }
@@ -52,12 +48,8 @@ object VectorQueries {
   private def incrementalIvfPqIndex(s: org.apache.spark.sql.SparkSession,
       d: String, model: graft.operators.IvfPq.Model): org.apache.spark.sql.DataFrame = {
     import graft.operators.IvfPq
-    import java.nio.file.{Files, Paths}
     val emb = graft.Tables.embeddings(s, d)
-    val suffix = graft.storage.Scratch.fingerprint(d).take(8)
-    val dir = s"${sys.props("java.io.tmpdir")}/graft_ivfpq_incr_$suffix"
-    val marker = Paths.get(s"$dir/_complete")
-    if (!Files.exists(marker)) {
+    val (dir, _) = graft.storage.Scratch.state("ivfpq_incr", d) { dir =>
       val isBatch = col("vec_id") % 7 === 0
       IvfPq.index(emb.filter(!isBatch), "vec_id", "embedding", model,
         withNorm = true, metaCols = Seq("label"))
@@ -67,7 +59,7 @@ object VectorQueries {
         withNorm = true, metaCols = Seq("label"))
         .write.mode("append").partitionBy("list_id")
         .parquet(s"$dir/index")
-      Files.createFile(marker) // last: a torn build rebuilds
+      "ok"
     }
     graft.storage.FooterSchema.parquet(s, s"$dir/index")
   }

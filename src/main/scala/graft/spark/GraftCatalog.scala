@@ -238,6 +238,18 @@ class GraftCatalog extends TableCatalog
   }
 }
 
+object GraftCatalog {
+  /** Register catalog `name` over the tables under `root` in `spark`'s
+    * session (the two confs above); returns `name`. Spark caches a
+    * catalog instance per name, so a name must not be re-pointed at a
+    * different root. */
+  def register(spark: SparkSession, name: String, root: String): String = {
+    spark.conf.set(s"spark.sql.catalog.$name", classOf[GraftCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$name.root", root)
+    name
+  }
+}
+
 /** One resolved (possibly time-traveled) catalog table. Reads delegate
   * to Spark's own `ParquetTable` over the exact file list the engine's
   * `readVersion` would scan (same recorded schema, same `basePath`

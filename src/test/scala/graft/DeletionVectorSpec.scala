@@ -480,10 +480,8 @@ class DeletionVectorSpec extends SparkSpec {
     // lost object) must surface as the missing path — not as the
     // "vectors too large, run OPTIMIZE" refusal
     val (cat, root) = fresh()
-    val cname = s"gdvmiss${System.nanoTime() % 100000}"
-    spark.conf.set(s"spark.sql.catalog.$cname",
-      classOf[graft.spark.GraftCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cname.root", root)
+    val cname = graft.spark.GraftCatalog.register(spark,
+      s"gdvmiss${System.nanoTime() % 100000}", root)
     cat.overwriteVersioned("t", (1L to 100L).map(i => (i, i * 1.0)).toDF("id", "m"))
     cat.deleteVectors("t", col("id") === 3L)
     val sidecar = cat.dvSidecarsAbs("t", cat.currentVersion("t")).head

@@ -49,12 +49,8 @@ class FooterSchemaSpec extends SparkSpec {
   }
 
   /** A catalog registered over `root` for the SQL-door checks. */
-  private def sqlDoor(root: String): String = {
-    val cname = s"fs${System.nanoTime() % 100000}"
-    spark.conf.set(s"spark.sql.catalog.$cname", classOf[graft.spark.GraftCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cname.root", root)
-    cname
-  }
+  private def sqlDoor(root: String): String =
+    graft.spark.GraftCatalog.register(spark, s"fs${System.nanoTime() % 100000}", root)
 
   /** The SQL door analyses `SELECT * FROM c.t` with zero jobs; returns
     * the analysed schema. */

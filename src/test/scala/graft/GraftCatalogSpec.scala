@@ -16,10 +16,8 @@ class GraftCatalogSpec extends SparkSpec {
     * instances are cached per name, so each test gets its own). */
   private def freshCatalog(tag: String): (ParquetCatalog, String, String) = {
     val root = Files.createTempDirectory("graft-cat").toString
-    val cname = s"gc$tag${System.nanoTime() % 100000}"
-    spark.conf.set(s"spark.sql.catalog.$cname",
-      classOf[graft.spark.GraftCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cname.root", root)
+    val cname = graft.spark.GraftCatalog.register(spark,
+      s"gc$tag${System.nanoTime() % 100000}", root)
     (new ParquetCatalog(spark, root), root, cname)
   }
 
@@ -239,10 +237,8 @@ class GraftCatalogSpec extends SparkSpec {
     val scratch = Files.createTempDirectory("graft-esc")
     val root = Files.createDirectory(scratch.resolve("tables"))
     val marker = Files.writeString(scratch.resolve("marker.txt"), "live")
-    val cname = s"gcesc${System.nanoTime() % 100000}"
-    spark.conf.set(s"spark.sql.catalog.$cname",
-      classOf[graft.spark.GraftCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cname.root", root.toString)
+    val cname = graft.spark.GraftCatalog.register(spark,
+      s"gcesc${System.nanoTime() % 100000}", root.toString)
     val cat = new ParquetCatalog(spark, root.toString)
     cat.overwriteVersioned("t", Seq((1L, 1.0)).toDF("id", "m"))
     for (bad <- Seq("..", ".", "../tables", "a/b", "a\\b", ".versions")) {

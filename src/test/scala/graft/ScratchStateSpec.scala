@@ -7,10 +7,11 @@ import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.functions._
 
 /** Failure injection for persisted scratch state (d10's dedup state,
-  * b2's bucketed tables). The state machines are marker-gated — the
-  * marker is written LAST — so the contract is:
+  * k25's versioned catalog, b2's bucketed tables). The state machines
+  * are marker-gated — the marker is written LAST — so the contract is:
   *
-  *   - no marker (interrupted build)  -> rebuild, identical results;
+  *   - no marker (interrupted build)  -> rebuild from an empty root,
+  *     identical results;
   *   - marker + destroyed state files -> LOUD failure, never silent
   *     wrong answers;
   *   - changed input content          -> different scratch key entirely
@@ -21,9 +22,7 @@ class ScratchStateSpec extends SparkSpec {
   import spark.implicits._
 
   private val sfDir = "/root/testdata/sf0.001"
-  private def stateDir =
-    s"${sys.props("java.io.tmpdir")}/graft_dedup_state_" +
-      Scratch.fingerprint(sfDir).take(8)
+  private def stateDir = Scratch.root("dedup_state", sfDir)
 
   private def runD10() =
     SparkEntry.queries("d10_incremental_dedup")(spark, sfDir)
@@ -39,6 +38,50 @@ class ScratchStateSpec extends SparkSpec {
     val rebuilt = runD10()
     assert(Files.exists(Paths.get(s"$stateDir/_complete")))
     assert(rebuilt === first)
+  }
+
+  test("a versioned build torn between commits rebuilds from empty (k25)") {
+    val root = Scratch.root("tas", sfDir)
+    def runK25() = SparkEntry.queries("k25_time_as_of")(spark, sfDir)
+      .collect().map(_.toSeq).toSeq
+    FileUtils.deleteQuietly(new java.io.File(root))
+    val first = runK25()
+    // killed after v1 committed: no marker, no v2/v3 manifests. Rebuilt
+    // on top, the overwrite would land again as v2 and "as of v2" would
+    // read the base table without the appended rows.
+    Files.delete(Paths.get(s"$root/_complete"))
+    Seq(2, 3).foreach(v =>
+      Files.delete(Paths.get(s"$root/.versions/orders_tt/v$v.manifest")))
+    assert(runK25() === first)
+  }
+
+  test("a build that throws leaves no marker; the next build starts empty") {
+    val input = Files.createTempDirectory("graft_scratch_input_").toString
+    val root = Scratch.root("spec_throw", input)
+    try {
+      intercept[IllegalStateException] {
+        Scratch.state("spec_throw", input) { r =>
+          Files.createDirectories(Paths.get(r))
+          Files.writeString(Paths.get(r, "partial"), "torn")
+          throw new IllegalStateException("killed mid-build")
+        }
+      }
+      assert(Files.exists(Paths.get(root, "partial")))
+      assert(!Files.exists(Paths.get(root, "_complete")))
+      val built = Scratch.state("spec_throw", input) { r =>
+        assert(!Files.exists(Paths.get(r)), "the torn build's files survived")
+        Files.createDirectories(Paths.get(r))
+        "7"
+      }
+      assert(built === ((root, "7")))
+      assert(Files.readString(Paths.get(root, "_complete")) === "7")
+      // complete: the marker's content comes back, the build never runs
+      assert(Scratch.state("spec_throw", input)(_ => fail("rebuilt")) ===
+        ((root, "7")))
+    } finally {
+      FileUtils.deleteQuietly(new java.io.File(root))
+      FileUtils.deleteQuietly(new java.io.File(input))
+    }
   }
 
   test("corrupt state behind a valid marker fails loudly, not wrongly") {
