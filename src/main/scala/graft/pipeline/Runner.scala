@@ -10,6 +10,12 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * table overwrite) — as one idempotent job over a [[ParquetCatalog]].
   * Scheduling stays external (the reference's 6-hour trigger is a cron
   * concern, not engine semantics); each `run` is one micro-batch.
+  *
+  * Bronze and silver run one after the other, each reading the one
+  * before; the seven gold overwrites read only silver and run together
+  * ([[Concurrent.all]]). There is no atomicity across tables: a batch
+  * whose step fails throws that failure once the other steps have
+  * ended, and every step that did not fail has written its table.
   */
 final class Runner(spark: SparkSession, catalog: ParquetCatalog,
     classifier: Classifier = RuleClassifier) {
@@ -22,13 +28,15 @@ final class Runner(spark: SparkSession, catalog: ParquetCatalog,
     Runner.bronzeToSilver(spark, catalog, classifier, json, processingDate,
       "bronze_repos", "silver_repos")
 
-    // silver -> gold: seven-table overwrite (K1)
+    // silver -> gold: seven-table overwrite (K1), the writes together
     val silver = catalog.read("silver_repos")
-    val written = Gold.allTables(silver).map { case (name, df) =>
-      val tableName = s"gold_$name"
-      catalog.overwrite(tableName, df)
-      tableName
-    }
+    val written = Concurrent.all(Gold.allTables(silver).toSeq.map {
+      case (name, df) => () => {
+        val tableName = s"gold_$name"
+        catalog.overwrite(tableName, df)
+        tableName
+      }
+    })
     Seq("bronze_repos", "silver_repos") ++ written
   }
 }

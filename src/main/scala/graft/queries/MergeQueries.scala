@@ -1419,7 +1419,7 @@ object MergeQueries {
     (s, d) => {
       val (root, _) = Scratch.state("ctl", d) { root =>
         val cat = new ParquetCatalog(s, root)
-        val c = GraftCatalog.register(s, "graft_k33", root)
+        val c = GraftCatalog.register(s, s"gk33${root.takeRight(8)}", root)
         val o = Tables.orders(s, d)
           .select("o_orderkey", "o_totalprice", "o_orderstatus")
         cat.overwriteVersioned("orders_ctl", o, Seq("o_orderstatus"))
@@ -1431,7 +1431,7 @@ object MergeQueries {
         "ok"
       }
       val cat = new ParquetCatalog(s, root)
-      val c = GraftCatalog.register(s, "graft_k33", root)
+      val c = GraftCatalog.register(s, s"gk33${root.takeRight(8)}", root)
       val v1Sql = s.sql(s"SELECT count(*) FROM $c.orders_ctl VERSION AS OF 1")
         .head().getLong(0)
       val v1Match =

@@ -241,9 +241,14 @@ class GraftCatalog extends TableCatalog
 object GraftCatalog {
   /** Register catalog `name` over the tables under `root` in `spark`'s
     * session (the two confs above); returns `name`. Spark caches a
-    * catalog instance per name, so a name must not be re-pointed at a
-    * different root. */
+    * catalog instance per name, so re-pointing a name at a different
+    * root would leave SQL reading and writing the old one: that throws
+    * `IllegalArgumentException`. Registering the same name and root
+    * again is a no-op. */
   def register(spark: SparkSession, name: String, root: String): String = {
+    spark.conf.getOption(s"spark.sql.catalog.$name.root").filter(_ != root)
+      .foreach(old => throw new IllegalArgumentException(
+        s"catalog $name is registered over $old, not $root"))
     spark.conf.set(s"spark.sql.catalog.$name", classOf[GraftCatalog].getName)
     spark.conf.set(s"spark.sql.catalog.$name.root", root)
     name

@@ -1965,4 +1965,28 @@ class GraftCatalogSpec extends SparkSpec {
     assert(graftFmt.hashCode() ===
       (new graft.spark.GraftParquetFileFormat).hashCode())
   }
+
+  test("a registered name refuses a different root; the same root is a no-op") {
+    val a = Files.createTempDirectory("graft-cat").toString
+    val b = Files.createTempDirectory("graft-cat").toString
+    val name = s"grp${System.nanoTime() % 100000}"
+    assert(graft.spark.GraftCatalog.register(spark, name, a) === name)
+    assert(graft.spark.GraftCatalog.register(spark, name, a) === name)
+    intercept[IllegalArgumentException](
+      graft.spark.GraftCatalog.register(spark, name, b))
+    assert(spark.conf.get(s"spark.sql.catalog.$name.root") === a)
+  }
+
+  test("k33 on a second input in one session answers from that input's catalog") {
+    // Spark caches one catalog instance per name: a fixed name would
+    // keep reading (and appending to) the first input's root
+    val inputs = Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")
+    inputs.foreach(d => org.apache.commons.io.FileUtils.deleteQuietly(
+      new java.io.File(graft.storage.Scratch.root("ctl", d))))
+    val k33 = SparkEntry.queries("k33_sql_catalog")
+    val Seq(_, rows) = inputs.map(d => k33(spark, d).collect().toSeq)
+    assert(rows.map(_.getAs[Long]("n_rows")) === Seq(5087L, 5145L, 5252L))
+    assert(rows.map(_.getAs[String]("ops")).distinct === Seq("overwrite,append"))
+    assert(rows.map(_.getAs[Long]("v1_sql_matches_api")).distinct === Seq(1L))
+  }
 }

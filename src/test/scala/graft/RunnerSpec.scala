@@ -3,9 +3,13 @@ package graft
 import graft.operators.Rank
 import graft.pipeline.{Gold, PersonalRunner, Quality, Runner}
 import graft.storage.ParquetCatalog
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.SqlBridge
 import java.nio.file.Files
 import java.sql.Timestamp
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
 
 /** End-to-end medallion runs through the catalog (twice — incremental
   * semantics), plus the quality/drift/rank machinery. */
@@ -34,7 +38,7 @@ class RunnerSpec extends SparkSpec {
     val day2 = Seq(
       repoJson(1, "sparky", Seq("spark"), "Scala", 900),
       repoJson(3, "mystery", Seq(), "COBOL", 5)).toDS()
-    runner.run(day2, "2024-06-11")
+    val written2 = runner.run(day2, "2024-06-11")
 
     val silver = cat.read("silver_repos")
     assert(silver.count() === 3, "bronze upsert accumulated all repos")
@@ -43,6 +47,48 @@ class RunnerSpec extends SparkSpec {
     assert(r1.getAs[String]("technology_category") === "Data Engineering",
       "good classification persisted through the rerun")
     assert(cat.read("gold_technology_metrics").count() >= 2)
+
+    // the gold writes run together; each table is still exactly its
+    // frame over the committed silver, and the names keep their order
+    val expected = Gold.allTables(silver)
+    assert(written2 === Seq("bronze_repos", "silver_repos") ++
+      expected.keys.toSeq.map(n => s"gold_$n"))
+    expected.foreach { case (name, df) =>
+      val got = cat.read(s"gold_$name")
+      // parquet keeps names and types; it reads every column nullable
+      assert(got.schema.map(f => f.name -> f.dataType) ===
+        df.schema.map(f => f.name -> f.dataType), name)
+      assert(got.exceptAll(df).isEmpty && df.exceptAll(got).isEmpty, name)
+    }
+  }
+
+  test("every job of a Runner batch carries the caller's local properties") {
+    val tags = new ConcurrentLinkedQueue[Option[String]]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        tags.add(Option(e.properties).flatMap(p =>
+          Option(p.getProperty("graft.spec.batch"))))
+    }
+    val cat = new ParquetCatalog(spark,
+      Files.createTempDirectory("runner-props").toString)
+    val day1 = Seq(
+      repoJson(1, "sparky", Seq("spark"), "Scala", 100),
+      repoJson(2, "webby", Seq("react"), "TypeScript", 50)).toDS()
+    val sc = spark.sparkContext
+    sc.setLocalProperty("graft.spec.batch", "day1")
+    SqlBridge.drainListeners(spark)
+    sc.addSparkListener(listener)
+    try {
+      new Runner(spark, cat).run(day1, "2024-06-10")
+      SqlBridge.drainListeners(spark)
+    } finally {
+      sc.removeSparkListener(listener)
+      sc.setLocalProperty("graft.spec.batch", null)
+    }
+    val seen = tags.asScala.toSeq
+    // the seven gold overwrites alone run at least one job each
+    assert(seen.size >= 7, s"${seen.size} jobs")
+    assert(seen.forall(_.contains("day1")), seen)
   }
 
   test("personal runner: MERGE'd gold accumulates by date and re-runs are idempotent") {
