@@ -17,14 +17,9 @@ import org.apache.spark.sql.functions._
   * so history accumulates across runs and a re-run of the same
   * processing date is idempotent.
   *
-  * A run is two waves of steps that run together ([[Concurrent.all]]):
-  * bronze→silver, the activity-metrics upsert and the velocity upsert
-  * (none reads another's output), then the health and overview upserts
-  * (both read silver; health also reads the activity metrics). There is
-  * no atomicity across tables: a run whose step fails throws that
-  * failure once the other steps of its wave have ended, every step that
-  * did not fail has written its table, and a failed first wave starts
-  * no second.
+  * A run writes its six tables one after the other, in the order of
+  * `run`'s body. There is no atomicity across tables: a step that fails
+  * leaves the tables written before it and writes none after it.
   *
   * Scale notes: every upsert is one full-outer shuffle on its key;
   * activity metrics aggregate all periods in a single pass
@@ -40,38 +35,39 @@ final class PersonalRunner(spark: SparkSession, catalog: ParquetCatalog,
     * additions, deletions). Returns the table names written. */
   def run(json: Dataset[String], activity: DataFrame,
       processingDate: String): Seq[String] = {
-    Concurrent.all(Seq(
-      // ingest -> bronze upsert (K2, personal_repos_ingestion.py:244-265),
-      // bronze -> silver with smart-skip + smart merge (the market
-      // family's step — personal_repos_bronze_to_silver.py mirrors it)
-      () => Runner.bronzeToSilver(spark, catalog, classifier, json,
-        processingDate, "personal_bronze", "personal_silver"),
-      // activity silver: all periods in one pass, MERGEd on the
-      // composite key (K2 — personal_repos_bronze_to_silver.py:574-634)
-      () => catalog.upsert("personal_activity_metrics",
-        Activity.activityMetrics(activity, lit(processingDate).cast("date")),
-        Seq("repository_id", "measurement_period")),
-      // velocity reads the raw activity only
-      () => catalog.upsert("gold_velocity_trends",
-        Activity.velocityTrend(activity)
-          .withColumn("partition_date", lit(processingDate)),
-        Seq("repository_id", "week_start"))))
+    // ingest -> bronze upsert (K2, personal_repos_ingestion.py:244-265),
+    // bronze -> silver with smart-skip + smart merge (the market
+    // family's step — personal_repos_bronze_to_silver.py mirrors it)
+    Runner.bronzeToSilver(spark, catalog, classifier, json, processingDate,
+      "personal_bronze", "personal_silver")
 
-    // silver -> the two MERGE'd personal gold tables that read it
+    // activity silver: all periods in one pass, MERGEd on the composite
+    // key (K2 — personal_repos_bronze_to_silver.py:574-634)
+    val metrics = Activity.activityMetrics(activity,
+      lit(processingDate).cast("date"))
+    catalog.upsert("personal_activity_metrics", metrics,
+      Seq("repository_id", "measurement_period"))
+
+    // silver -> the three MERGE'd personal gold tables
     val silver = catalog.read("personal_silver")
     val act30 = catalog.read("personal_activity_metrics")
       .filter(col("measurement_period") === "30d")
       .select(col("repository_id"),
         col("commit_count").as("commits_30d"),
         col("issue_count").as("issues_30d"))
-    Concurrent.all(Seq(
-      () => catalog.upsert("gold_repo_health",
-        Gold.healthDashboard(silver, act30)
-          .withColumn("measurement_date", lit(processingDate)),
-        Seq("repository_id", "measurement_date")),
-      () => catalog.upsert("gold_portfolio_overview",
-        Gold.portfolioOverview(silver, processingDate),
-        Seq("measurement_date"))))
+
+    val dash = Gold.healthDashboard(silver, act30)
+      .withColumn("measurement_date", lit(processingDate))
+    catalog.upsert("gold_repo_health", dash,
+      Seq("repository_id", "measurement_date"))
+
+    val overview = Gold.portfolioOverview(silver, processingDate)
+    catalog.upsert("gold_portfolio_overview", overview, Seq("measurement_date"))
+
+    val velocity = Activity.velocityTrend(activity)
+      .withColumn("partition_date", lit(processingDate))
+    catalog.upsert("gold_velocity_trends", velocity,
+      Seq("repository_id", "week_start"))
 
     Seq("personal_bronze", "personal_silver", "personal_activity_metrics",
       "gold_repo_health", "gold_portfolio_overview", "gold_velocity_trends")

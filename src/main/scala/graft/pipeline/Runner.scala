@@ -13,9 +13,10 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   *
   * Bronze and silver run one after the other, each reading the one
   * before; the seven gold overwrites read only silver and run together
-  * ([[Concurrent.all]]). There is no atomicity across tables: a batch
-  * whose step fails throws that failure once the other steps have
-  * ended, and every step that did not fail has written its table.
+  * ([[Concurrent.all]]). There is no atomicity across tables: a failed
+  * bronze or silver step writes no gold; a failed gold write is thrown
+  * once the other six have ended, and each of them that did not fail
+  * has written its table.
   */
 final class Runner(spark: SparkSession, catalog: ParquetCatalog,
     classifier: Classifier = RuleClassifier) {
