@@ -19,7 +19,9 @@ import org.apache.spark.sql.functions._
   *
   * A run writes its six tables one after the other, in the order of
   * `run`'s body. There is no atomicity across tables: a step that fails
-  * leaves the tables written before it and writes none after it.
+  * leaves the tables written before it and writes none after it. Each
+  * write commits a new version, so superseded files stay until
+  * [[ParquetCatalog.vacuum]] runs, as in [[Runner]].
   *
   * Scale notes: every upsert is one full-outer shuffle on its key;
   * activity metrics aggregate all periods in a single pass
@@ -45,7 +47,7 @@ final class PersonalRunner(spark: SparkSession, catalog: ParquetCatalog,
     // key (K2 — personal_repos_bronze_to_silver.py:574-634)
     val metrics = Activity.activityMetrics(activity,
       lit(processingDate).cast("date"))
-    catalog.upsert("personal_activity_metrics", metrics,
+    catalog.upsertVersioned("personal_activity_metrics", metrics,
       Seq("repository_id", "measurement_period"))
 
     // silver -> the three MERGE'd personal gold tables
@@ -58,15 +60,16 @@ final class PersonalRunner(spark: SparkSession, catalog: ParquetCatalog,
 
     val dash = Gold.healthDashboard(silver, act30)
       .withColumn("measurement_date", lit(processingDate))
-    catalog.upsert("gold_repo_health", dash,
+    catalog.upsertVersioned("gold_repo_health", dash,
       Seq("repository_id", "measurement_date"))
 
     val overview = Gold.portfolioOverview(silver, processingDate)
-    catalog.upsert("gold_portfolio_overview", overview, Seq("measurement_date"))
+    catalog.upsertVersioned("gold_portfolio_overview", overview,
+      Seq("measurement_date"))
 
     val velocity = Activity.velocityTrend(activity)
       .withColumn("partition_date", lit(processingDate))
-    catalog.upsert("gold_velocity_trends", velocity,
+    catalog.upsertVersioned("gold_velocity_trends", velocity,
       Seq("repository_id", "week_start"))
 
     Seq("personal_bronze", "personal_silver", "personal_activity_metrics",

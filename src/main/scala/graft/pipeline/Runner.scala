@@ -17,6 +17,11 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * bronze or silver step writes no gold; a failed gold write is thrown
   * once the other six have ended, and each of them that did not fail
   * has written its table.
+  *
+  * Every write commits a new version of its table, so a batch keeps
+  * the files it superseded until [[ParquetCatalog.vacuum]] drops the
+  * versions that list them, as Delta does: `history(table)` shows one
+  * version per batch, and the caller schedules retention.
   */
 final class Runner(spark: SparkSession, catalog: ParquetCatalog,
     classifier: Classifier = RuleClassifier) {
@@ -34,7 +39,7 @@ final class Runner(spark: SparkSession, catalog: ParquetCatalog,
     val written = Concurrent.all(Gold.allTables(silver).toSeq.map {
       case (name, df) => () => {
         val tableName = s"gold_$name"
-        catalog.overwrite(tableName, df)
+        catalog.overwriteVersioned(tableName, df)
         tableName
       }
     })
@@ -52,13 +57,14 @@ object Runner {
   private[pipeline] def bronzeToSilver(spark: SparkSession,
       catalog: ParquetCatalog, classifier: Classifier, json: Dataset[String],
       processingDate: String, bronzeTable: String, silverTable: String): Unit = {
-    catalog.upsert(bronzeTable, JsonIngest.fromJson(spark, json, processingDate),
+    catalog.upsertVersioned(bronzeTable,
+      JsonIngest.fromJson(spark, json, processingDate),
       Seq("repository_id"), partitionBy = Seq("partition_date"))
     val bronze = catalog.read(bronzeTable)
     val existingSilver =
       if (catalog.exists(silverTable)) Some(catalog.read(silverTable)) else None
     val fresh = Silver.transform(bronze, processingDate, existingSilver, classifier)
-    catalog.overwrite(silverTable,
+    catalog.overwriteVersioned(silverTable,
       existingSilver.fold(fresh)(Silver.mergeIntoSilver(_, fresh)),
       Seq("partition_date", "technology_category"))
   }

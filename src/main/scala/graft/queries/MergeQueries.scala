@@ -511,9 +511,9 @@ object MergeQueries {
       (s, d) => {
         val (root, _) = Scratch.state("del", d) { root =>
           val cat = new ParquetCatalog(s, root)
-          cat.overwrite("orders_d",
+          cat.overwriteVersioned("orders_d",
             Tables.orders(s, d).select("o_orderkey", "o_orderstatus", "o_totalprice"))
-          cat.delete("orders_d",
+          cat.deleteVersioned("orders_d",
             col("o_orderstatus") === "F" && col("o_totalprice") < 50000)
           "ok"
         }
@@ -540,19 +540,19 @@ object MergeQueries {
     // oracle recompute), and (b) the untouched partitions' files are
     // bit-untouched — `untouched_files_changed` counts (path,size,mtime)
     // fingerprint diffs outside 'F' across the upsert, and the oracle
-    // pins it to 0. Delta-MERGE file-level-rewrite parity
+    // pins it to 0; the files are the manifest's, before and after the
+    // merge. Delta-MERGE file-level-rewrite parity
     // (bronze_to_silver_transformation.py:867-920) without rewriting
     // the table.
     Q(
       "k14_partition_scoped_merge",
       (s, d) => {
-        import java.nio.file.Paths
         val (root, marked) = Scratch.state("psm", d) { root =>
           val cat = new ParquetCatalog(s, root)
           val o = Tables.orders(s, d)
             .select("o_orderkey", "o_totalprice", "o_orderstatus")
-          cat.overwrite("orders_p", o, Seq("o_orderstatus"))
-          val before = partitionFingerprints(Paths.get(root, "orders_p"))
+          cat.overwriteVersioned("orders_p", o, Seq("o_orderstatus"))
+          val before = partitionFingerprints(root, cat, "orders_p")
           val delta = o
             .filter(col("o_orderstatus") === "F" && col("o_orderkey") % 3 === 0)
             .select(col("o_orderkey"),
@@ -562,9 +562,9 @@ object MergeQueries {
               .filter(col("o_orderstatus") === "F" && col("o_orderkey") % 7 === 1)
               .select((col("o_orderkey") + 2000000).as("o_orderkey"),
                 col("o_totalprice"), col("o_orderstatus")))
-          cat.upsert("orders_p", delta, Seq("o_orderkey"),
+          cat.upsertVersioned("orders_p", delta, Seq("o_orderkey"),
             partitionBy = Seq("o_orderstatus"))
-          val after = partitionFingerprints(Paths.get(root, "orders_p"))
+          val after = partitionFingerprints(root, cat, "orders_p")
           val changed = before.collect {
             case (p, fs) if p != "o_orderstatus=F" =>
               val now = after.getOrElse(p, Set.empty[(String, Long, Long)])
@@ -2260,22 +2260,17 @@ object MergeQueries {
       FROM events
       GROUP BY 1 ORDER BY event_type"""))
 
-  /** (relative path, size, mtime) fingerprints of every data file,
-    * keyed by top-level hive partition dir — the byte-identity probe
-    * behind k14/k15's untouched-partition gates. */
-  private def partitionFingerprints(
-      base: java.nio.file.Path): Map[String, Set[(String, Long, Long)]] = {
-    import java.nio.file.Files
-    import scala.jdk.CollectionConverters._
-    val real = base.toRealPath()
-    val s = Files.walk(real)
-    try s.iterator().asScala
-      .filter(p => p.toString.endsWith(".parquet") && Files.isRegularFile(p))
-      .map { p =>
-        val rel = real.relativize(p).toString
-        rel.takeWhile(_ != '/') ->
-          ((rel, Files.size(p), Files.getLastModifiedTime(p).toMillis))
-      }.toList.groupBy(_._1).map { case (k, v) => k -> v.map(_._2).toSet }
-    finally s.close()
+  /** (relative path, size, mtime) of each data file the table's
+    * current manifest lists, grouped by its partition component — the
+    * byte-identity probe behind k14's untouched-partition gate. */
+  private def partitionFingerprints(root: String, cat: ParquetCatalog,
+      name: String): Map[String, Set[(String, Long, Long)]] = {
+    import java.nio.file.{Files, Paths}
+    val vd = Paths.get(root, ".versions", name)
+    cat.manifestFiles(name, cat.currentVersion(name)).map { rel =>
+      val p = vd.resolve(rel)
+      graft.storage.TableManifest.partitionComponent(rel) ->
+        ((rel, Files.size(p), Files.getLastModifiedTime(p).toMillis))
+    }.groupBy(_._1).map { case (k, v) => k -> v.map(_._2).toSet }
   }
 }

@@ -1091,10 +1091,11 @@ object Relational {
 
     // ----------------------------------------------------------------
     // S9: index-pruned range scan — the data-skipping read path
-    // ([[graft.storage.SkippingIndex]]) end-to-end. The clustered copy
-    // + footer stats are input-fingerprinted persisted state (built
-    // once, read after — the d10 contract: a real lakehouse ALREADY has
-    // its layout and stats); the measured query is "open only the files
+    // ([[graft.storage.ParquetCatalog.readRange]] over the table's
+    // skipping index) end-to-end. The clustered copy + footer stats
+    // are input-fingerprinted persisted state (built once, read after
+    // — the d10 contract: a real lakehouse ALREADY has its layout and
+    // stats); the measured query is "open only the files
     // whose [min,max] intersects the predicate, re-apply the filter".
     // The oracle is the plain full-scan filter — pruning must be
     // invisible to results.
@@ -1103,15 +1104,14 @@ object Relational {
       (s, d) => {
         val (root, _) = Scratch.state("skip", d) { root =>
           val cat = new ParquetCatalog(s, root)
-          cat.overwrite("orders", Tables.orders(s, d))
+          cat.overwriteVersioned("orders", Tables.orders(s, d))
           cat.compact("orders", rowsPerFile = 2000,
             clusterBy = Seq("o_orderkey"))
-          graft.storage.SkippingIndex.write(s, s"$root/orders",
-            Seq("o_orderkey"))
+          cat.index("orders", Seq("o_orderkey"))
           "ok"
         }
-        graft.storage.SkippingIndex
-          .scan(s, s"$root/orders", "o_orderkey", 1000, 3000)
+        new ParquetCatalog(s, root)
+          .readRange("orders", Seq(("o_orderkey", 1000.0, 3000.0)))
           .select("o_orderkey", "o_custkey", "o_totalprice")
           .orderBy("o_orderkey")
       },
@@ -1137,13 +1137,14 @@ object Relational {
           val cat = new ParquetCatalog(s, root)
           val li = Tables.lineitem(s, d)
             .select("l_orderkey", "l_partkey", "l_quantity", "l_extendedprice")
-          cat.overwrite("li_idx", li.filter(col("l_orderkey") % 5 =!= 0))
+          cat.overwriteVersioned("li_idx",
+            li.filter(col("l_orderkey") % 5 =!= 0))
           cat.compact("li_idx", rowsPerFile = 4000,
             zorderBy = Seq("l_orderkey", "l_partkey"))
           cat.index("li_idx", Seq("l_orderkey", "l_partkey"))
           // appended AFTER indexing: the catalog's incremental refresh
           // must fold these files in, or the range read drops rows
-          cat.append("li_idx", li.filter(col("l_orderkey") % 5 === 0))
+          cat.appendVersioned("li_idx", li.filter(col("l_orderkey") % 5 === 0))
           "ok"
         }
         val cat = new ParquetCatalog(s, root)
@@ -1181,7 +1182,7 @@ object Relational {
         val li = Tables.lineitem(s, d)
           .select("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice")
         val (root, _) = Scratch.state("blm", d) { root =>
-          catalog(root).overwrite("li_b", li.repartition(24))
+          catalog(root).overwriteVersioned("li_b", li.repartition(24))
           "ok"
         }
         val cat = catalog(root)

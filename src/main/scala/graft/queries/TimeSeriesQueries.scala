@@ -497,7 +497,7 @@ object TimeSeriesQueries {
     // ----------------------------------------------------------------
     // Right-to-be-forgotten purge (gov3): the erasure workflow as one
     // auditable unit — DELETE every record of the subject users through
-    // the catalog ([[graft.storage.ParquetCatalog.delete]],
+    // the catalog ([[graft.storage.ParquetCatalog.deleteVersioned]],
     // fingerprint-keyed state), then the compliance audit: per-type
     // retained counts, a must-be-zero subject count, and exact-decimal
     // value conservation. The oracle recomputes retention from the
@@ -509,9 +509,9 @@ object TimeSeriesQueries {
         val subjects = Seq(7L, 42L, 99L)
         val (root, _) = Scratch.state("rtbf", d) { root =>
           val cat = new ParquetCatalog(s, root)
-          cat.overwrite("events_p", Tables.events(s, d)
+          cat.overwriteVersioned("events_p", Tables.events(s, d)
             .select("event_id", "user_id", "event_type", "value"))
-          cat.delete("events_p", col("user_id").isin(subjects: _*))
+          cat.deleteVersioned("events_p", col("user_id").isin(subjects: _*))
           "ok"
         }
         val cat = new ParquetCatalog(s, root)

@@ -219,7 +219,6 @@ class GraftCatalog extends TableCatalog
         .forEach(f => Files.delete(f))
       finally s.close()
     }
-    rm(Paths.get(root, ident.name))
     rm(Paths.get(root, ".versions", ident.name))
     true
   }
@@ -272,43 +271,29 @@ private[spark] class GraftTable(cat: ParquetCatalog, root: String,
     * different commits (a vector commit racing query planning would
     * otherwise anti-filter version N's files through version N+1's
     * vectors and silently drop the updated rows). */
-  private lazy val resolvedVersion: Option[Long] =
-    if (cat.isVersioned(tableName))
-      Some(version.getOrElse(cat.currentVersion(tableName)))
-    else None
+  private lazy val resolvedVersion: Long =
+    version.getOrElse(cat.currentVersion(tableName))
 
   private lazy val delegate: ParquetTable = {
-    val (paths, opts, declared) =
-      if (cat.isVersioned(tableName)) {
-        val v = resolvedVersion.get
-        val frame = cat.readVersion(tableName, v)
-        val files = cat.manifestFiles(tableName, v).map(f =>
-          java.nio.file.Paths.get(root, ".versions", tableName)
-            .resolve(f).toString)
-        // the TRAVELED version's recorded layout, not the current one:
-        // after a layout-changing overwrite, reading an old partitioned
-        // version under the new (empty) layout would drop the basePath
-        // and silently null every partition-column value
-        val layout = cat.manifest(tableName, v).partitionBy
-        // by-field-id resolution per relation (column mapping) — the
-        // same flag the engine's own readers set, never session-wide
-        val fid = Map(
-          "spark.sql.parquet.fieldId.read.enabled" -> "true")
-        val o =
-          if (layout.nonEmpty && files.nonEmpty)
-            fid + ("basePath" -> java.nio.file.Paths
-              .get(root, ".versions", tableName, "data").toString)
-          else fid
-        (files, o, Some(frame.schema))
-      } else {
-        require(version.isEmpty,
-          s"$tableName is not versioned; AS OF is unavailable")
-        val dir = java.nio.file.Paths.get(root, tableName).toString
-        (Seq(dir), Map.empty[String, String],
-          graft.storage.FooterSchema.resolve(spark, Seq(dir)))
-      }
+    val v = resolvedVersion
+    val frame = cat.readVersion(tableName, v)
+    val files = cat.dataFilesAbs(tableName, v)
+    // the TRAVELED version's recorded layout, not the current one:
+    // after a layout-changing overwrite, reading an old partitioned
+    // version under the new (empty) layout would drop the basePath
+    // and silently null every partition-column value
+    val layout = cat.manifest(tableName, v).partitionBy
+    // by-field-id resolution per relation (column mapping) — the
+    // same flag the engine's own readers set, never session-wide
+    val fid = Map(
+      "spark.sql.parquet.fieldId.read.enabled" -> "true")
+    val opts =
+      if (layout.nonEmpty && files.nonEmpty)
+        fid + ("basePath" -> java.nio.file.Paths
+          .get(root, ".versions", tableName, "data").toString)
+      else fid
     ParquetTable(qualifiedName, spark,
-      new CaseInsensitiveStringMap(opts.asJava), paths, declared,
+      new CaseInsensitiveStringMap(opts.asJava), files, Some(frame.schema),
       classOf[ParquetFileFormat])
   }
 
@@ -316,8 +301,7 @@ private[spark] class GraftTable(cat: ParquetCatalog, root: String,
     * scan vectored (the stock file scan would resurrect vectored-out
     * rows). */
   private lazy val dvSidecars: Seq[String] =
-    resolvedVersion.fold(Seq.empty[String])(v =>
-      cat.dvSidecarsAbs(tableName, v))
+    cat.dvSidecarsAbs(tableName, resolvedVersion)
 
   override def name(): String = version.fold(qualifiedName)(v =>
     s"$qualifiedName@v$v")
@@ -354,7 +338,7 @@ private[spark] class GraftTable(cat: ParquetCatalog, root: String,
     caps
   }
 
-  /** Every versioned read goes through ONE [[GraftScanBuilder]], whose
+  /** Every read goes through ONE [[GraftScanBuilder]], whose
     * capabilities are resolved here once: the version's deletion-vector
     * sidecars, the key layout to report for storage-partitioned joins
     * (only under Spark's own opt-in, `spark.sql.sources.v2.bucketing
@@ -363,25 +347,24 @@ private[spark] class GraftTable(cat: ParquetCatalog, root: String,
     * compose), the skipping index, and whether the layout is
     * partitioned. The builder picks the scan: vectors outrank join
     * layout, which outranks file skipping, which outranks the stock
-    * parquet scan. Unversioned tables read the stock scan. */
+    * parquet scan. */
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
     val inner = delegate.newScanBuilder(options)
-    resolvedVersion.fold[ScanBuilder](inner) { v =>
-      val layout = cat.manifest(tableName, v).partitionBy
-      val spjOn = spark.conf
-        .get("spark.sql.sources.v2.bucketing.enabled", "false").toBoolean
-      val bucketed =
-        if (layout.lastOption.contains(ParquetCatalog.BucketPartCol))
-          cat.bucketSpecAt(tableName, v)
-        else None
-      val keyLayout = Option.when(spjOn && layout.nonEmpty)(bucketed.fold(
-        GraftKeyLayout(layout, None))(b =>
-        GraftKeyLayout(layout.dropRight(1), Some(b))))
-      val statsP = cat.statsPath(tableName)
-      new GraftScanBuilder(inner, GraftScanCaps(dvSidecars, keyLayout,
-        Some(statsP).filter(graft.storage.SkippingIndex.existsAt),
-        layout.nonEmpty), cat, tableName, v, delegate.schema)
-    }
+    val v = resolvedVersion
+    val layout = cat.manifest(tableName, v).partitionBy
+    val spjOn = spark.conf
+      .get("spark.sql.sources.v2.bucketing.enabled", "false").toBoolean
+    val bucketed =
+      if (layout.lastOption.contains(ParquetCatalog.BucketPartCol))
+        cat.bucketSpecAt(tableName, v)
+      else None
+    val keyLayout = Option.when(spjOn && layout.nonEmpty)(bucketed.fold(
+      GraftKeyLayout(layout, None))(b =>
+      GraftKeyLayout(layout.dropRight(1), Some(b))))
+    val statsP = cat.statsPath(tableName)
+    new GraftScanBuilder(inner, GraftScanCaps(dvSidecars, keyLayout,
+      Some(statsP).filter(graft.storage.SkippingIndex.existsAt),
+      layout.nonEmpty), cat, tableName, v, delegate.schema)
   }
 
   /** `DELETE FROM <cat>.t WHERE ...` / `TRUNCATE TABLE <cat>.t` as ONE

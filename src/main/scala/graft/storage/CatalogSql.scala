@@ -375,7 +375,7 @@ object CatalogSql {
             s"AS OF needs a bare catalog table name, got ${parts.mkString(".")}")
         }
         val name = resolveTable(cat, asWritten)
-        require(cat.isVersioned(name),
+        require(cat.exists(name),
           s"VERSION/TIMESTAMP AS OF needs a versioned catalog table; " +
             s"'$asWritten' is not one")
         val version = v.map(_.toLong).getOrElse(

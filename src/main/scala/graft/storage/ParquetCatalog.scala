@@ -14,17 +14,13 @@ import scala.jdk.CollectionConverters._
   * `bronze_to_silver_transformation.py:935-941`, S6/S7 catalog scans,
   * S8 latest-partition reads) without a Delta jar.
   *
-  * Two tiers:
-  *
-  * **Unversioned tables** (a plain hive-partitioned dir): single-writer
-  * in-place DML — atomic full overwrite (write-temp-then-swap), dynamic
-  * partition overwrite, partition-scoped MERGE and DELETE. The swap is a
-  * metadata move, never a data copy.
-  *
-  * **Versioned tables** (manifest snapshots): every committed version is
-  * an immutable MANIFEST — a file list over a shared `data/` tree — and
-  * committing is atomically creating `vN.manifest` with a
-  * create-exclusive primitive. This single mechanism provides
+  * One table format, like Delta's: every table is a chain of manifest
+  * snapshots under `<root>/.versions/<table>`. Every committed version
+  * is an immutable MANIFEST — a file list over a shared, write-once
+  * `data/` tree — and committing is atomically creating `vN.manifest`
+  * with a create-exclusive primitive. Writes stage into
+  * `<root>/.tmp-<table>-<nonce>` and move their files into `data/`
+  * before the commit. This single mechanism provides
   *   - time travel (any retained manifest resolves to a consistent
   *     file set; data files are write-once),
   *   - zero-copy version sharing (a partition-scoped merge's new
@@ -42,6 +38,13 @@ import scala.jdk.CollectionConverters._
   * PUT (S3 If-None-Match, GCS if-generation-match:0, ABFS
   * create-exclusive). No symlinks, no inode sharing — the layout is
   * substrate-portable by construction.
+  *
+  * A plain hive directory at `<root>/<table>` (the layout older builds
+  * wrote) becomes version 1 of a manifest table, op `migrate`, the
+  * first time anything touches the name ([[migrateIfPlain]]).
+  *
+  * Superseded files stay on disk until [[vacuum]] drops the versions
+  * that list them, as in Delta.
   *
   * At 100 TB: partition columns make every downstream equality filter a
   * partition-pruned scan; a merge that touches one of 365 partitions
@@ -62,8 +65,8 @@ import scala.jdk.CollectionConverters._
   * materializes a retained delta in place before dropping its base.
   */
 /** One touched partition: its typed values (for a partition-pruned
-  * predicate) and its on-disk hive relative path (for dir/manifest
-  * bookkeeping). */
+  * predicate) and its hive relative path (the partition component its
+  * files carry in the manifest). */
 private[storage] final case class PartSlot(values: Seq[Any], relPath: String)
 
 final class ParquetCatalog(spark: SparkSession, root: String,
@@ -88,10 +91,12 @@ final class ParquetCatalog(spark: SparkSession, root: String,
       .load(paths: _*)
   }
 
-  /** The `basePath` a versioned table's leaf-file reads need. */
+  /** The `basePath` a table's leaf-file reads need. */
   private def partBase(name: String, m: TableManifest): Option[Path] =
     if (m.partitionBy.isEmpty) None else Some(dataDir(name))
 
+  /** Where an older build kept the table as a plain directory — read
+    * by [[migrateIfPlain]] only. */
   private def tableDir(name: String): Path = {
     ParquetCatalog.requireValidName(name)
     Paths.get(root, name)
@@ -122,13 +127,9 @@ final class ParquetCatalog(spark: SparkSession, root: String,
   }
 
   /** Bloom columns/NDV in effect for `name`: constructor settings ∪
-    * the table's declared properties (versioned tables only — plain
-    * dirs have no manifest to carry properties). */
+    * the table's declared properties. */
   private def effectiveBlooms(name: String): (Seq[String], Long) = {
-    val props =
-      if (ParquetCatalog.isValidName(name) && isVersioned(name))
-        tableProperties(name)
-      else Map.empty[String, String]
+    val props = tableProperties(name)
     val extra = props.get(ParquetCatalog.BloomForProp).toSeq
       .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
     val ndv = props.get(ParquetCatalog.BloomNdvProp)
@@ -136,12 +137,12 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     ((bloomFor ++ extra).distinct, ndv)
   }
 
+  /** True when `name` has a committed version. */
   def exists(name: String): Boolean =
-    ParquetCatalog.isValidName(name) &&
-      (Files.exists(tableDir(name)) || isVersioned(name))
+    ParquetCatalog.isValidName(name) && versions(name).nonEmpty
 
   /** ALTER TABLE RENAME: a metadata-only move of the table's
-    * director(ies) — manifests reference data files RELATIVE to the
+    * directory — manifests reference data files RELATIVE to the
     * versions dir, so ZERO bytes rewrite and the full version history,
     * time travel, txn registry, and constraints carry over under the
     * new name. The skipping index records absolute paths; those are
@@ -155,12 +156,12 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     require(!to.contains('.'),
       s"rename destination '$to' must be a bare table name (no '.')")
     ParquetCatalog.requireValidName(to)
-    // CRASH ATOMICITY: the rename is up to two Files.move calls plus
-    // two index relocations — a crash between them strands the table
-    // split across names. A JOURNAL written before the first move makes
-    // the verb resumable: re-running the SAME rename completes the
-    // remaining tier moves (each tier moves only while its source still
-    // exists) and the journal is removed last. Without a matching
+    // CRASH ATOMICITY: the rename is a Files.move plus an index
+    // relocation — a crash between them leaves the index pointing at
+    // the old name. A JOURNAL written before the move makes the verb
+    // resumable: re-running the SAME rename completes the move (only
+    // while its source still exists) and the relocation, and the
+    // journal is removed last. Without a matching
     // journal, an existing destination is a genuine collision and
     // refuses as before.
     val journal = Paths.get(root, ".rename-journal")
@@ -194,43 +195,31 @@ final class ParquetCatalog(spark: SparkSession, root: String,
       Files.deleteIfExists(tmp)
       ()
     }
-    def mv(a: Path, b: Path): Unit = if (Files.exists(a)) {
-      Files.createDirectories(b.getParent)
-      Files.move(a, b, StandardCopyOption.ATOMIC_MOVE)
-      ()
+    if (Files.exists(versionsDir(from))) {
+      Files.createDirectories(versionsDir(to).getParent)
+      Files.move(versionsDir(from), versionsDir(to), StandardCopyOption.ATOMIC_MOVE)
     }
-    mv(tableDir(from), tableDir(to))
-    mv(versionsDir(from), versionsDir(to))
     if (SkippingIndex.existsAt(statsPath(to)))
       SkippingIndex.relocate(statsPath(to),
         versionsDir(from).toString, versionsDir(to).toString)
-    val plainStats = tableDir(to).resolve("_graft_stats.json")
-    if (SkippingIndex.existsAt(plainStats))
-      SkippingIndex.relocate(plainStats,
-        tableDir(from).toString, tableDir(to).toString)
     Files.deleteIfExists(journal)
     ()
   }
 
-  /** Every table name under the root — plain hive dirs plus versioned
-    * tables (which may have no plain dir) — sorted. Metadata-only: two
-    * directory listings. */
+  /** Every table name under the root, sorted. Metadata-only: one
+    * directory listing. */
   def tableNames: Seq[String] = {
-    def dirs(p: Path): Seq[String] =
-      if (!Files.isDirectory(p)) Nil
-      else {
-        val s = Files.list(p)
-        try s.iterator().asScala.filter(Files.isDirectory(_))
-          .map(_.getFileName.toString).filterNot(_.startsWith(".")).toList
-        finally s.close()
-      }
-    (dirs(Paths.get(root)) ++ dirs(Paths.get(root, ".versions")))
-      .distinct.sorted
+    val p = Paths.get(root, ".versions")
+    if (!Files.isDirectory(p)) Nil
+    else {
+      val s = Files.list(p)
+      try s.iterator().asScala.filter(Files.isDirectory(_))
+        .map(_.getFileName.toString).filterNot(_.startsWith(".")).toList.sorted
+      finally s.close()
+    }
   }
 
-  def read(name: String): DataFrame =
-    if (isVersioned(name)) readVersion(name, currentVersion(name))
-    else catLoad(None, Seq(tableDir(name).toString))
+  def read(name: String): DataFrame = readVersion(name, currentVersion(name))
 
   // ---- skipping-index lifecycle -------------------------------------
   //
@@ -240,24 +229,20 @@ final class ParquetCatalog(spark: SparkSession, root: String,
   // seen), and a full overwrite re-collects over the new files. The
   // index stays advisory — scans reconcile against the live file set
   // and re-apply predicates — so a missed refresh can only cost speed,
-  // never rows. For versioned tables the stats live NEXT TO the
-  // manifests (one stats file per table, reconciled against the current
-  // manifest's file list), so they survive version commits and cover
-  // carried-over files without re-reading their footers.
+  // never rows. The stats live NEXT TO the manifests (one stats file per
+  // table, reconciled against the current manifest's file list), so they
+  // survive version commits and cover carried-over files without
+  // re-reading their footers.
 
   /** Build (or rebuild) the file-level min/max skipping index for
     * `cols` — one distributed parquet-FOOTER pass, no data pages. */
   def index(name: String, cols: Seq[String]): Unit = {
     require(exists(name), s"no table $name")
-    if (isVersioned(name))
-      SkippingIndex.writeAt(spark, statsPath(name), manifestFilesAbs(name), cols)
-    else
-      SkippingIndex.write(spark, tableDir(name).toString, cols)
+    SkippingIndex.writeAt(spark, statsPath(name), manifestFilesAbs(name), cols)
     ()
   }
 
-  /** Stats-file location for a VERSIONED table (unversioned tables keep
-    * theirs inside the table dir). */
+  /** The table's stats-file location. */
   def statsPath(name: String): Path =
     versionsDir(name).resolve("_graft_stats.json")
 
@@ -269,14 +254,8 @@ final class ParquetCatalog(spark: SparkSession, root: String,
   /** Columns the table's index covers (empty when unindexed). */
   private def indexCols(name: String): Seq[String] = {
     val stats =
-      if (isVersioned(name)) {
-        if (SkippingIndex.existsAt(statsPath(name)))
-          SkippingIndex.readAt(statsPath(name)) else Nil
-      } else {
-        val dir = tableDir(name).toString
-        if (Files.exists(tableDir(name)) && SkippingIndex.exists(dir))
-          SkippingIndex.read(dir) else Nil
-      }
+      if (SkippingIndex.existsAt(statsPath(name)))
+        SkippingIndex.readAt(statsPath(name)) else Nil
     stats.flatMap(_.cols.map(_.column)).distinct.sorted
   }
 
@@ -288,155 +267,47 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     * `INSERT INTO`) self-indexing with zero engine API. The declared
     * set also feeds incremental refreshes, so later property changes
     * pick up new columns for files indexed from then on. */
-  private def refreshIndex(name: String): Unit =
-    if (isVersioned(name)) {
-      val declared = tableProperties(name).get(ParquetCatalog.IndexForProp)
-        .toSeq.flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
-      if (SkippingIndex.existsAt(statsPath(name)) || declared.nonEmpty) {
-        SkippingIndex.refreshAt(spark, statsPath(name),
-          manifestFilesAbs(name), declared); ()
-      }
-    } else {
-      val dir = tableDir(name).toString
-      if (SkippingIndex.exists(dir)) { SkippingIndex.refresh(spark, dir); () }
+  private def refreshIndex(name: String): Unit = {
+    val declared = declaredCols(name, ParquetCatalog.IndexForProp)
+    if (SkippingIndex.existsAt(statsPath(name)) || declared.nonEmpty) {
+      SkippingIndex.refreshAt(spark, statsPath(name),
+        manifestFilesAbs(name), declared); ()
     }
+  }
 
   /** Index-accelerated range read: conjunctive `(column, lo, hi)`
     * predicates open only the files whose [min,max] intersects (plus
     * any not-yet-indexed files, conservatively) — the Delta/Iceberg
     * stats-pruned scan. Unindexed tables fall back to a plain scan with
     * the same predicates applied, so callers never branch. */
-  def readRange(name: String, preds: Seq[(String, Double, Double)]): DataFrame = {
-    if (isVersioned(name)) {
-      val m = currentManifest(name)
-      val abs = m.files.map(f => versionsDir(name).resolve(f).toString)
-      val sp = statsPath(name)
-      val cand =
-        if (SkippingIndex.existsAt(sp)) SkippingIndex.candidateFilesAt(sp, abs, preds)
-        else abs
-      val base =
-        if (cand.isEmpty) readVersion(name, m.version).limit(0)
-        else dvFilter(name, m, catLoad(recordedSchema(m), cand, partBase(name, m)))
-      preds.foldLeft(base) { case (df, (c, lo, hi)) =>
-        df.filter(col(c) >= lo && col(c) <= hi)
-      }
-    } else {
-      val dir = tableDir(name).toString
-      if (SkippingIndex.exists(dir)) SkippingIndex.scanAll(spark, dir, preds)
-      else preds.foldLeft(read(name)) { case (df, (c, lo, hi)) =>
-        df.filter(col(c) >= lo && col(c) <= hi)
-      }
+  def readRange(name: String, preds: Seq[(String, Double, Double)]): DataFrame =
+    preds.foldLeft(prunedRead(name, preds, keepNullsOf = None)) {
+      case (df, (c, lo, hi)) => df.filter(col(c) >= lo && col(c) <= hi)
     }
+
+  /** The current version's files the skipping index cannot exclude for
+    * `preds` (all of them when the table is unindexed), read WITHOUT
+    * re-applying the predicates. With `keepNullsOf`, files that may hold
+    * NULLs of that column are kept too (the merge match probe must see
+    * null-keyed rows). */
+  private def prunedRead(name: String, preds: Seq[(String, Double, Double)],
+      keepNullsOf: Option[String]): DataFrame = {
+    val m = currentManifest(name)
+    val sp = statsPath(name)
+    if (!SkippingIndex.existsAt(sp)) return readVersion(name, m.version)
+    val abs = m.files.map(f => versionsDir(name).resolve(f).toString)
+    val cand = SkippingIndex.candidateFilesAt(sp, abs, preds, keepNullsOf)
+    // the SAME snapshot the candidates came from supplies the vectors —
+    // a dv commit landing mid-call must not version-skew the read
+    if (cand.isEmpty) readVersion(name, m.version).limit(0)
+    else dvFilter(name, m, catLoad(recordedSchema(m), cand, partBase(name, m)))
   }
 
-  /** Atomic full overwrite: write to a temp dir, swap directories. An
-    * existing skipping index is re-collected over the new files (its
-    * column set survives the swap). On a VERSIONED table this retains
-    * history (routes to [[overwriteVersioned]]). */
-  def overwrite(name: String, df: DataFrame, partitionBy: Seq[String] = Nil): Unit = {
-    if (isVersioned(name)) { overwriteVersioned(name, df, partitionBy); return }
-    val priorIndex = indexCols(name) // the swap discards the old stats file
-    val tmp = Paths.get(root, s".tmp-$name-${nonce()}")
-    val w = writeOpts(name, df.write.mode(SaveMode.Overwrite))
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
-      .parquet(tmp.toString)
-    val dest = tableDir(name)
-    val old = Paths.get(root, s".old-$name-${nonce()}")
-    if (Files.exists(dest)) Files.move(dest, old, StandardCopyOption.ATOMIC_MOVE)
-    Files.move(tmp, dest, StandardCopyOption.ATOMIC_MOVE)
-    if (Files.exists(old)) deleteRecursively(old)
-    if (priorIndex.nonEmpty) index(name, priorIndex)
-  }
-
-  /** Dynamic partition overwrite: replace only the partitions present in
-    * `df`, leave the rest of the table untouched. */
-  def overwritePartitions(name: String, df: DataFrame, partitionBy: Seq[String]): Unit = {
-    require(partitionBy.nonEmpty, "overwritePartitions needs partition columns")
-    if (isVersioned(name)) { overwritePartitionsVersioned(name, df, partitionBy); () }
-    else if (!exists(name)) overwrite(name, df, partitionBy)
-    else {
-      if (hasPartitionDirs(name)) requireLayout(name, partitionBy, diskLayout(name))
-      writeOpts(name, df.write.mode(SaveMode.Overwrite))
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partitionBy: _*)
-        .parquet(tableDir(name).toString)
-      refreshIndex(name)
-    }
-  }
-
-  /** Append (the insert-only path when keys are known unique). An
-    * existing index is refreshed incrementally — footer reads ONLY for
-    * the appended files.
-    *
-    * The incoming frame's schema must match the table's (names + types;
-    * order and nullability are free): a drifted frame would append
-    * silently and only break at read time. `evolveSchema = true` admits
-    * added/dropped columns instead (o6's union-by-name discipline:
-    * missing columns fill with null on either side) — on the in-place
-    * tier via an explicit union-by-name rewrite, on the versioned tier
-    * as a METADATA-ONLY commit that re-references every prior file and
-    * records the union schema (see [[appendVersioned]]); a TYPE change
-    * still fails loudly. */
-  def append(name: String, df: DataFrame, partitionBy: Seq[String] = Nil,
-      evolveSchema: Boolean = false): Unit = {
-    if (isVersioned(name)) { appendVersioned(name, df, partitionBy, evolveSchema); return }
-    if (!exists(name)) { overwrite(name, df, partitionBy); return }
-    // default to (and guard against) the on-disk layout: appending
-    // differently-shaped files would corrupt the directory tree
-    val layout = diskLayout(name)
-    val pb = if (partitionBy.nonEmpty) partitionBy else layout
-    requireLayout(name, pb, layout)
-    val current = read(name)
-    if (!schemaMatches(current, df, pb)) {
-      if (!evolveSchema) failSchemaDrift(name, current, df, pb)
-      val evolved = current.unionByName(df, allowMissingColumns = true)
-        .persist()
-      evolved.count() // materialize before the swap deletes the inputs
-      overwrite(name, evolved, pb)
-      evolved.unpersist()
-      return
-    }
-    val w = writeOpts(name, df.write.mode(SaveMode.Append))
-    (if (pb.nonEmpty) w.partitionBy(pb: _*) else w)
-      .parquet(tableDir(name).toString)
-    refreshIndex(name)
-  }
-
-  /** The hive partition columns the table dir is ACTUALLY laid out by,
-    * inferred from one leaf file's `k=v` dir chain (empty when
-    * unpartitioned). The layout-guard source of truth for in-place
-    * ops — versioned tables carry theirs in the manifest instead. */
-  private def diskLayout(name: String): Seq[String] = {
-    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-    val base = tableDir(name)
-    if (!Files.isDirectory(base)) return Nil
-    val s = Files.walk(base)
-    val first =
-      try s.iterator().asScala
-        .find(p => p.toString.endsWith(".parquet") && Files.isRegularFile(p))
-      finally s.close()
-    first.toSeq.flatMap { p =>
-      val segs = base.relativize(p).toString.split('/').dropRight(1)
-      segs.filter(_.contains('='))
-        .map(g => ExternalCatalogUtils.unescapePathName(g.takeWhile(_ != '=')))
-    }
-  }
-
-  /** Writing `partitionBy`-shaped files into a table laid out
-    * differently produces a MIXED directory tree Spark cannot read
-    * coherently (and a scoped rewrite would silently miss rows). Fail
-    * loudly instead; a layout CHANGE is an explicit full `overwrite`. */
-  private def requireLayout(name: String, partitionBy: Seq[String],
-      layout: Seq[String]): Unit =
-    require(partitionBy == layout,
-      s"$name is partitioned by (${layout.mkString(",")}) on disk but the " +
-        s"operation was given (${partitionBy.mkString(",")}); a layout " +
-        "change requires a full overwrite")
-
-  /** [[requireLayout]]'s versioned sibling: a scoped op's `partitionBy`
-    * must agree with the manifest's recorded layout (vacuously true when
-    * either side is unstated or the table is empty); a layout change is
-    * the explicit full `overwriteVersioned`. */
+  /** A scoped op's `partitionBy` must agree with the manifest's
+    * recorded layout (vacuously true when either side is unstated or
+    * the table is empty): writing differently-shaped files into a
+    * table would mix layouts a scoped rewrite cannot address. A layout
+    * change is the explicit full `overwriteVersioned`. */
   private def requireManifestLayout(name: String, partitionBy: Seq[String],
       m: TableManifest): Unit =
     require(partitionBy.isEmpty || m.partitionBy.isEmpty ||
@@ -520,85 +391,6 @@ final class ParquetCatalog(spark: SparkSession, root: String,
         "Pass evolveSchema = true to add/drop columns via union-by-name.")
   }
 
-  /** MERGE INTO this table (K2/K3): read current state, resolve with
-    * [[Upsert.merge]], rewrite. First write degenerates to the source
-    * frame. `evolveSchema = true` is the storage add-column path — the
-    * atomic rewrite persists the widened schema (Delta
-    * `overwriteSchema=true` parity, reference
-    * `bronze_to_silver_transformation.py:939`).
-    *
-    * **Partition-scoped rewrite** (the 100 TB write path): with
-    * `partitionBy` set and no schema evolution, only the partitions the
-    * delta actually touches are merged and rewritten — Delta MERGE's
-    * file-level rewrite (`bronze_to_silver_transformation.py:867-920`)
-    * at partition granularity. Touched = the delta's own partitions ∪
-    * the partitions holding matched target keys (the second set needs a
-    * target scan only when a partition column is NOT part of the merge
-    * key; when it is, a matched key's partition is by definition in the
-    * delta — and when the table carries a skipping index over a merge
-    * key, that scan is further pruned to the files whose key range
-    * intersects the delta's, see [[matchScanFrame]]). The target read
-    * is statically partition-pruned to the touched set; untouched
-    * partitions' files are never opened OR rewritten. An update that
-    * moves a row's partition value empties its old slot correctly.
-    * Schema evolution forces the full rewrite ON THIS IN-PLACE TIER
-    * ONLY — plain hive dirs have nowhere to record a union schema, so a
-    * partial rewrite would leave unreadable per-partition drift; the
-    * versioned tier keeps add/drop-only evolving merges partition-
-    * scoped via the manifest's recorded schema ([[upsertVersioned]]).
-    *
-    * On a VERSIONED table this routes to [[upsertVersioned]] (history
-    * retained, concurrent writers detected). */
-  def upsert(name: String, source: DataFrame, keys: Seq[String],
-      smartCases: Map[String, (Column, Column) => Column] = Map.empty,
-      insertOnly: Boolean = false,
-      partitionBy: Seq[String] = Nil,
-      evolveSchema: Boolean = false): Unit = {
-    if (isVersioned(name)) {
-      upsertVersioned(name, source, keys, smartCases, insertOnly, partitionBy,
-        evolveSchema)
-      return
-    }
-    if (!exists(name)) overwrite(name, source, partitionBy)
-    else if (partitionBy.isEmpty || evolveSchema || !hasPartitionDirs(name)) {
-      // the third arm: a table without hive dirs (e.g. emptied by a
-      // full delete, or being converted to a partitioned layout) takes
-      // the full merge + layout-(re)write path
-      val merged =
-        Upsert.merge(read(name), source, keys, smartCases, insertOnly, evolveSchema)
-          .persist() // materialize before the swap deletes the input files
-      merged.count()
-      overwrite(name, merged, partitionBy)
-      merged.unpersist()
-    } else {
-      requireLayout(name, partitionBy, diskLayout(name))
-      val target = read(name)
-      val touched = touchedPartitions(name, target, source, keys, partitionBy)
-      if (touched.nonEmpty) {
-        val slice = target.filter(partitionPredicate(partitionBy, touched.map(_.values)))
-        val merged =
-          Upsert.merge(slice, source, keys, smartCases, insertOnly)
-            .persist() // materialize before dynamic overwrite drops inputs
-        // partitions with surviving rows get rewritten by the dynamic
-        // overwrite; touched partitions ABSENT from the merged frame
-        // (every row moved out) must have their stale dirs removed —
-        // dynamic overwrite only touches partitions it writes. This scan
-        // is also what materializes the cache: it is built for every
-        // column, whichever ones a query over it reads.
-        val written = partitionsOf(merged, partitionBy)
-        overwritePartitions(name, merged, partitionBy)
-        dropPartitionDirs(name,
-          touched.map(_.relPath).diff(written.map(_.relPath)))
-        if (!hasPartitionDirs(name))
-          // every partition emptied: leave a readable schema-preserving
-          // shell instead of a dir Spark cannot infer a schema from
-          overwrite(name, merged.limit(0))
-        refreshIndex(name) // reconcile entries for dropped dirs
-        merged.unpersist()
-      }
-    }
-  }
-
   /** The distinct partitions a merge delta touches: the delta's own
     * partitions ∪ the partitions of matched target keys. The match
     * probe is skipped entirely when every partition column is a merge
@@ -648,37 +440,8 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     // prune would drop — but files whose stats say hasNulls are KEPT by
     // candidate selection only when the predicate allows; to stay
     // conservative the pruned probe UNIONs files flagged has-nulls.
-    readRangeWithNulls(name, key, row.getDouble(0), row.getDouble(1))
-  }
-
-  /** Index-pruned read keeping files that may contain NULLs of `key`
-    * (the merge match probe must see null-keyed rows). Falls back to
-    * the full table when unindexed. */
-  private def readRangeWithNulls(name: String, key: String,
-      lo: Double, hi: Double): DataFrame = {
-    val vm = if (isVersioned(name)) Some(currentManifest(name)) else None
-    val (sp, abs, partitioned, schema) = vm match {
-      case Some(m) =>
-        (statsPath(name),
-          m.files.map(f => versionsDir(name).resolve(f).toString),
-          m.partitionBy.nonEmpty && m.files.nonEmpty,
-          recordedSchema(m))
-      case None =>
-        val dir = tableDir(name)
-        (dir.resolve("_graft_stats.json"), SkippingIndex.listFiles(dir.toString),
-          hasPartitionDirs(name), None)
-    }
-    if (!SkippingIndex.existsAt(sp)) return read(name)
-    val cand = SkippingIndex.candidateFilesAt(sp, abs, Seq((key, lo, hi)),
+    prunedRead(name, Seq((key, row.getDouble(0), row.getDouble(1))),
       keepNullsOf = Some(key))
-    val loaded =
-      if (cand.isEmpty) read(name).limit(0)
-      else catLoad(schema, cand, Option.when(partitioned)(
-        if (vm.isDefined) dataDir(name) else tableDir(name).toRealPath()))
-    // the SAME snapshot the candidates came from supplies the vectors —
-    // a dv commit landing mid-call must not version-skew the read
-    if (cand.nonEmpty) vm.fold(loaded)(m => dvFilter(name, m, loaded))
-    else loaded
   }
 
   /** The frame a row-level UPDATE/DELETE's touched-partition probe
@@ -774,42 +537,11 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     }.mkString("/")
   }
 
-  /** True when the table dir has hive `k=v` partition subdirs. */
-  private def hasPartitionDirs(name: String): Boolean = {
-    val dir = tableDir(name)
-    if (!Files.isDirectory(dir)) return false
-    val s = Files.list(dir)
-    try s.iterator().asScala.exists(p =>
-      Files.isDirectory(p) && p.getFileName.toString.contains('='))
-    finally s.close()
-  }
-
-  /** Remove hive-style partition dirs that a rewrite left empty (all
-    * their rows merged/deleted away) — dynamic overwrite only touches
-    * partitions PRESENT in the written frame. */
-  private def dropPartitionDirs(name: String, relPaths: Seq[String]): Unit =
-    relPaths.foreach { rel =>
-      val dir = tableDir(name).resolve(rel)
-      if (Files.exists(dir)) deleteRecursively(dir)
-      // a multi-level partition may leave empty parent dirs behind
-      var parent = dir.getParent
-      while (parent != null && parent != tableDir(name) &&
-          Files.isDirectory(parent) && dirIsEmpty(parent)) {
-        Files.delete(parent); parent = parent.getParent
-      }
-    }
-
-  private def dirIsEmpty(p: Path): Boolean = {
-    val s = Files.list(p)
-    try !s.iterator().hasNext finally s.close()
-  }
-
   /** S8 latest-partition slice. When the table is partitioned by
     * `partitionCol`, RESOLUTION IS METADATA-ONLY: the greatest partition
-    * value comes from the manifest's partition components (versioned) or
-    * the hive dir listing (in-place) — zero data files opened, zero
-    * Spark jobs — and the returned frame is a statically partition-
-    * pruned equality scan of just that slice. At 100 TB the old shape
+    * value comes from the manifest's partition components — zero data
+    * files opened, zero Spark jobs — and the returned frame is a
+    * statically partition-pruned equality scan of just that slice. At 100 TB the old shape
     * (max() over the full column, then the filter) read the whole table
     * to find yesterday. Unpartitioned tables (or a non-partition
     * column) keep the scan-based fallback — there is no metadata to
@@ -828,8 +560,8 @@ final class ParquetCatalog(spark: SparkSession, root: String,
   }
 
   /** The greatest live value of partition column `partitionCol` as its
-    * hive dir string, resolved from METADATA ONLY (manifest entries or
-    * the dir tree — no data files, no Spark job). None when the table
+    * hive dir string, resolved from METADATA ONLY (manifest entries —
+    * no data files, no Spark job). None when the table
     * is not partitioned by the column, or only the null partition
     * exists. Ordering mirrors the column's LOGICAL order as a reader
     * sees it: when the manifest records a schema, that type decides —
@@ -848,23 +580,12 @@ final class ParquetCatalog(spark: SparkSession, root: String,
         else if (ExternalCatalogUtils.unescapePathName(seg.take(i)) != partitionCol) None
         else Some(seg.drop(i + 1))
       }.nextOption()
-    var recordedType: Option[DataType] = None
-    val raw: Seq[String] =
-      if (isVersioned(name)) {
-        val m = currentManifest(name)
-        if (!m.partitionBy.contains(partitionCol)) return None
-        recordedType = recordedSchema(m)
-          .flatMap(_.fields.find(_.name == partitionCol)).map(_.dataType)
-        m.files.flatMap(f => valueOf(TableManifest.partitionComponent(f)))
-      } else {
-        if (!diskLayout(name).contains(partitionCol)) return None
-        val s = Files.walk(tableDir(name))
-        try s.iterator().asScala.filter(Files.isDirectory(_))
-          .flatMap(p => valueOf(tableDir(name).relativize(p).toString))
-          .toSeq
-        finally s.close()
-      }
-    val vals = raw.distinct
+    val m = currentManifest(name)
+    if (!m.partitionBy.contains(partitionCol)) return None
+    val recordedType = recordedSchema(m)
+      .flatMap(_.fields.find(_.name == partitionCol)).map(_.dataType)
+    val vals = m.files.flatMap(f => valueOf(TableManifest.partitionComponent(f)))
+      .distinct
       .filter(_ != ExternalCatalogUtils.DEFAULT_PARTITION_NAME)
       .map(ExternalCatalogUtils.unescapePathName)
     if (vals.isEmpty) None else Some(greatestRendering(vals, recordedType))
@@ -903,39 +624,28 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     * and this degenerates to a filtered scan. The predicate is always
     * re-applied (false positives; advisory pruning). */
   def readPoint(name: String, column: String, value: Any): DataFrame = {
-    val vm = if (isVersioned(name)) Some(currentManifest(name)) else None
-    val (files, partitioned, schema, base) = vm match {
-      case Some(m) =>
-        (m.files.map(f => versionsDir(name).resolve(f).toString),
-          m.partitionBy.nonEmpty, recordedSchema(m), dataDir(name))
-      case None =>
-        (SkippingIndex.listFiles(tableDir(name).toString),
-          hasPartitionDirs(name), None, tableDir(name))
-    }
+    val m = currentManifest(name)
+    val files = m.files.map(f => versionsDir(name).resolve(f).toString)
     val cand = SkippingIndex.bloomCandidatesAny(spark, files, column, Seq(value))
     val pred = col(column) === lit(value)
-    if (cand.isEmpty) return read(name).filter(pred).limit(0)
-    val df = catLoad(schema, cand, Option.when(partitioned)(base.toRealPath()))
+    if (cand.isEmpty) return readVersion(name, m.version).filter(pred).limit(0)
     // deletion vectors hold for point reads too (bloom pruning is a
     // file filter; the row filter still applies)
-    vm.fold(df)(m => dvFilter(name, m, df)).filter(pred)
+    dvFilter(name, m, catLoad(recordedSchema(m), cand, partBase(name, m)))
+      .filter(pred)
   }
 
   /** Diagnostic: how many files [[readPoint]] would open (tests pin
     * bloom pruning with it). */
-  def pointCandidates(name: String, column: String, value: Any): Seq[String] = {
-    val files =
-      if (isVersioned(name))
-        currentManifest(name).files.map(f => versionsDir(name).resolve(f).toString)
-      else SkippingIndex.listFiles(tableDir(name).toString)
-    SkippingIndex.bloomCandidatesAny(spark, files, column, Seq(value))
-  }
+  def pointCandidates(name: String, column: String, value: Any): Seq[String] =
+    SkippingIndex.bloomCandidatesAny(spark, manifestFilesAbs(name), column,
+      Seq(value))
 
   /** Compaction: rewrite the table into ~`rowsPerFile`-row files. Every
     * incremental upsert/append leaves small files behind; at scale the
     * scan cost becomes file-open dominated (the classic small-file
-    * problem). One repartition + atomic swap (a new retained version on
-    * versioned tables). Layout options:
+    * problem). One repartition, committed as a new version. Layout
+    * options:
     *
     *   - `clusterBy`: lexicographic range-cluster — tight min/max (and
     *     thus file/row-group skipping) for the FIRST column only;
@@ -976,9 +686,7 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     // OPTIMIZE semantics, r19) — compaction is a file-size verb, a
     // re-layout is the explicit overwrite; composite bucket prefixes
     // in particular must not silently flatten
-    val layoutCols =
-      if (partitionBy.nonEmpty || !isVersioned(name)) partitionBy
-      else layout(name)
+    val layoutCols = if (partitionBy.nonEmpty) partitionBy else layout(name)
     if (layoutCols.exists(_.equalsIgnoreCase(ParquetCatalog.BucketPartCol))) {
       // BUCKETED layouts: the (identity × bucket) cell is the
       // compaction unit — stage's clustered write distribution lands
@@ -1012,24 +720,16 @@ final class ParquetCatalog(spark: SparkSession, root: String,
         df.repartitionByRange(files, cBy.map(col): _*)
           .sortWithinPartitions(cBy.map(col): _*)
       else df.repartition(files)
-    if (isVersioned(name)) {
-      // write-once versions: the new commit's staging write reads the
-      // still-live current version — no persist barrier needed. The
-      // requested cluster ordering rides through to stage() so ITS
-      // in-task sort (which runs after the hidden bucket derivation)
-      // matches this call's intent, never a stale declaration
-      val ord = if (zBy.nonEmpty) Seq(zk) else cBy.map(col)
-      overwriteVersioned(name, repart, layoutCols, orderWithinCells = ord,
-        identitySplits = false)
-      val prior = indexCols(name)
-      if (prior.nonEmpty) index(name, prior)
-    } else {
-      // persist+count before the swap: the lazy plan must not read files
-      // the overwrite is about to replace
-      repart.persist().count()
-      overwrite(name, repart, partitionBy)
-      repart.unpersist()
-    }
+    // write-once versions: the new commit's staging write reads the
+    // still-live current version — no persist barrier needed. The
+    // requested cluster ordering rides through to stage() so ITS
+    // in-task sort (which runs after the hidden bucket derivation)
+    // matches this call's intent, never a stale declaration
+    val ord = if (zBy.nonEmpty) Seq(zk) else cBy.map(col)
+    overwriteVersioned(name, repart, layoutCols, orderWithinCells = ord,
+      identitySplits = false)
+    val prior = indexCols(name)
+    if (prior.nonEmpty) index(name, prior)
   }
 
   /** Partition-scoped [[compact]] — the 100 TB maintenance shape: a
@@ -1037,12 +737,10 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     * micro-batch files; compacting it must not touch the other 364
     * days. `partition` filters by equality on a PREFIX of the partition
     * layout (e.g. `Seq("day" -> "2024-01-01")` on a day/region
-    * layout compacts every region of that day). Versioned tables
-    * commit the compacted slice + re-reference every other partition's
-    * files (op verb `compact`, zero bytes moved outside the slice);
-    * in-place tables rewrite just those partitions via dynamic
-    * partition overwrite. Row data is bit-preserved — only file
-    * boundaries change. */
+    * layout compacts every region of that day). The commit holds the
+    * compacted slice + re-references every other partition's files (op
+    * verb `compact`, zero bytes moved outside the slice). Row data is
+    * bit-preserved — only file boundaries change. */
   def compactPartition(name: String, rowsPerFile: Long,
       partition: Seq[(String, Any)]): Unit = {
     require(partition.nonEmpty, "compactPartition needs a partition spec")
@@ -1051,44 +749,32 @@ final class ParquetCatalog(spark: SparkSession, root: String,
       s"partition spec (${partition.map(_._1).mkString(",")}) must be a " +
         s"prefix of $name's layout (${lay.mkString(",")})")
     val pred = partition.map { case (c, v) => col(c) <=> lit(v) }.reduce(_ && _)
-    if (isVersioned(name)) {
-      val m = currentManifest(name)
-      val slice = readVersion(name, m.version).filter(pred)
-      val n = slice.count()
-      if (n == 0) return
-      val files = math.max(1, math.ceil(n.toDouble / rowsPerFile).toInt)
-      val touched = partitionsOf(slice, m.partitionBy)
-      val touchedRel = touched.map(_.relPath).toSet
-      val carried = m.files.filterNot(f =>
-        touchedRel.contains(TableManifest.partitionComponent(f)))
-      val next = m.version + 1
-      // write-once versions: staging reads the still-live current
-      // files. Under a bucketed layout stage() distributes by the
-      // layout cells itself (one file per cell, declared cluster sort
-      // applied inside; forced — OPTIMIZE WHERE is a rewrite job) — a
-      // pre-repartition here would just add a wasted shuffle and void
-      // the cell ordering. Identity layouts bin-pack to `files` tasks;
-      // a declared writeSplits salt must not void that.
-      val bucketedLay = m.partitionBy.exists(
-        _.equalsIgnoreCase(ParquetCatalog.BucketPartCol))
-      val sliceIn = if (bucketedLay) slice else slice.repartition(files)
-      val rels = stage(name, sliceIn, m.partitionBy, next,
-        forceDistribute = bucketedLay, identitySplits = false)
-      val meta = Map("op" -> "compact") ++ carriedMeta(m) ++
-        propagatedSchema(m) ++ touchedMeta(touchedRel)
-      commitOrClean(name, TableManifest(next, m.partitionBy, meta,
-        carried ++ rels), rels)
-    } else {
-      val slice = read(name).filter(pred)
-      val n = slice.count()
-      if (n == 0) return
-      val files = math.max(1, math.ceil(n.toDouble / rowsPerFile).toInt)
-      val compacted = slice.repartition(files).persist()
-      compacted.count() // materialize before dynamic overwrite drops inputs
-      overwritePartitions(name, compacted, lay)
-      compacted.unpersist()
-      ()
-    }
+    val m = currentManifest(name)
+    val slice = readVersion(name, m.version).filter(pred)
+    val n = slice.count()
+    if (n == 0) return
+    val files = math.max(1, math.ceil(n.toDouble / rowsPerFile).toInt)
+    val touched = partitionsOf(slice, m.partitionBy)
+    val touchedRel = touched.map(_.relPath).toSet
+    val carried = m.files.filterNot(f =>
+      touchedRel.contains(TableManifest.partitionComponent(f)))
+    val next = m.version + 1
+    // write-once versions: staging reads the still-live current
+    // files. Under a bucketed layout stage() distributes by the
+    // layout cells itself (one file per cell, declared cluster sort
+    // applied inside; forced — OPTIMIZE WHERE is a rewrite job) — a
+    // pre-repartition here would just add a wasted shuffle and void
+    // the cell ordering. Identity layouts bin-pack to `files` tasks;
+    // a declared writeSplits salt must not void that.
+    val bucketedLay = m.partitionBy.exists(
+      _.equalsIgnoreCase(ParquetCatalog.BucketPartCol))
+    val sliceIn = if (bucketedLay) slice else slice.repartition(files)
+    val rels = stage(name, sliceIn, m.partitionBy, next,
+      forceDistribute = bucketedLay, identitySplits = false)
+    val meta = Map("op" -> "compact") ++ carriedMeta(m) ++
+      propagatedSchema(m) ++ touchedMeta(touchedRel)
+    commitOrClean(name, TableManifest(next, m.partitionBy, meta,
+      carried ++ rels), rels)
     refreshIndex(name)
   }
 
@@ -1099,53 +785,7 @@ final class ParquetCatalog(spark: SparkSession, root: String,
       case other => other.toString.toDouble
     }
 
-  /** Row-level DELETE (Delta `DELETE WHERE` parity on plain parquet).
-    * Returns the number of rows removed.
-    *
-    * With `partitionBy` set, only the partitions that actually contain
-    * matching rows are rewritten: one scan finds the touched partition
-    * set (partition-count-sized collect), the anti-filtered survivors
-    * of JUST those partitions go through dynamic partition overwrite,
-    * and fully-emptied partition dirs are removed. At 100 TB a delete
-    * whose predicate hits one day's partition rewrites one partition,
-    * not the table. A delete that empties EVERY partition leaves a
-    * readable schema-preserving shell. Without `partitionBy` it is the
-    * full read + anti-filter + atomic rewrite. */
-  def delete(name: String, condition: Column,
-      partitionBy: Seq[String] = Nil): Long = {
-    if (isVersioned(name)) return deleteVersioned(name, condition, partitionBy)._2
-    val t = read(name)
-    val hit = coalesce(condition, lit(false))
-    if (partitionBy.isEmpty || !hasPartitionDirs(name)) {
-      val keep = t.filter(!hit).persist()
-      val removed = t.count() - keep.count() // materializes before the swap
-      overwrite(name, keep)
-      keep.unpersist()
-      removed
-    } else {
-      requireLayout(name, partitionBy, diskLayout(name))
-      val touched = partitionsOf(t.filter(hit), partitionBy)
-      if (touched.isEmpty) 0L
-      else {
-        val slice = t.filter(partitionPredicate(partitionBy, touched.map(_.values))).persist()
-        val keep = slice.filter(!hit).persist()
-        val removed = slice.count() - keep.count()
-        val written = partitionsOf(keep, partitionBy)
-        if (written.nonEmpty) overwritePartitions(name, keep, partitionBy)
-        dropPartitionDirs(name,
-          touched.map(_.relPath).diff(written.map(_.relPath)))
-        if (!hasPartitionDirs(name))
-          // every partition emptied: keep the table readable (schema
-          // shell), matching the unpartitioned branch's behavior
-          overwrite(name, keep.limit(0))
-        refreshIndex(name)
-        keep.unpersist(); slice.unpersist()
-        removed
-      }
-    }
-  }
-
-  // ---- versioned tables: manifest snapshots -------------------------
+  // ---- manifest snapshots -------------------------------------------
 
   private def versionsDir(name: String): Path = {
     ParquetCatalog.requireValidName(name)
@@ -1161,11 +801,22 @@ final class ParquetCatalog(spark: SparkSession, root: String,
   private def nonce(): String =
     java.lang.Long.toHexString(System.nanoTime())
 
-  def isVersioned(name: String): Boolean = versions(name).nonEmpty
+  /** Where a write stages its files before moving them into `data/`:
+    * `<root>/.tmp-<table>-<nonce>`, next to (never inside) the table's
+    * versions dir. [[vacuum]] sweeps what a crashed writer left. */
+  private def stagingDir(name: String, nn: String): Path =
+    Paths.get(root, s".tmp-$name-$nn")
 
   /** Retained version numbers, oldest first (a version exists iff its
-    * manifest does — there is no separate current pointer). */
+    * manifest does — there is no separate current pointer). Every
+    * path to a table's state passes here, so this is where a plain
+    * directory an older build left is migrated ([[migrateIfPlain]]). */
   def versions(name: String): Seq[Long] = {
+    migrateIfPlain(name)
+    listVersions(name)
+  }
+
+  private def listVersions(name: String): Seq[Long] = {
     val vd = versionsDir(name)
     if (!Files.isDirectory(vd)) Seq.empty
     else {
@@ -1179,7 +830,7 @@ final class ParquetCatalog(spark: SparkSession, root: String,
 
   def currentVersion(name: String): Long = {
     val vs = versions(name)
-    require(vs.nonEmpty, s"$name is not a versioned table")
+    require(vs.nonEmpty, s"no table $name")
     vs.last
   }
 
@@ -1437,7 +1088,7 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     * columns. */
   private def stagedColIds(name: String, schema: StructType): Map[String, Int] = {
     val (prior, high) =
-      if (isVersioned(name)) {
+      if (exists(name)) {
         val m = currentManifest(name)
         (colIds(m), colIdHighWater(m))
       } else (Map.empty[String, Int], 0)
@@ -1610,7 +1261,7 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     // position set is small relative to the data (a partition-sized
     // delete belongs on the rewrite path)
     val nn = nonce()
-    val stageDir = versionsDir(name).resolve(s".stage-dv-$nn")
+    val stageDir = stagingDir(name, nn)
     combined.repartition(1).write.mode(SaveMode.Overwrite)
       .option("compression", codec).parquet(stageDir.toString)
     val part = {
@@ -1643,8 +1294,7 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     * nothing matched, committing nothing. */
   def deleteVectors(name: String, condition: Column,
       fromVersion: Option[Long] = None): (Long, Long) = {
-    migrateIfPlain(name)
-    require(isVersioned(name), s"no table $name")
+    require(exists(name), s"no table $name")
     val m = fromVersion.map(manifest(name, _)).getOrElse(currentManifest(name))
     if (m.files.isEmpty) return (m.version, 0L)
     requireUniqueBasenames(name, m, "deleteVersioned")
@@ -1719,8 +1369,7 @@ final class ParquetCatalog(spark: SparkSession, root: String,
       assignments: Map[String, Column],
       fromVersion: Option[Long] = None): (Long, Long) = {
     require(assignments.nonEmpty, "UPDATE needs at least one assignment")
-    migrateIfPlain(name)
-    require(isVersioned(name), s"no table $name")
+    require(exists(name), s"no table $name")
     val m = fromVersion.map(manifest(name, _)).getOrElse(currentManifest(name))
     if (m.files.isEmpty) return (m.version, 0L)
     requireUniqueBasenames(name, m, "updateWhere")
@@ -1938,8 +1587,7 @@ final class ParquetCatalog(spark: SparkSession, root: String,
   def reorgPurge(name: String, threshold: Double = 0.05): (Long, Int) = {
     require(threshold >= 0.0 && threshold <= 1.0,
       s"purge threshold must be in [0,1], got $threshold")
-    migrateIfPlain(name)
-    require(isVersioned(name), s"no table $name")
+    require(exists(name), s"no table $name")
     val m = currentManifest(name)
     val entries = dvEntries(m)
     if (entries.isEmpty) return (m.version, 0)
@@ -2029,7 +1677,6 @@ final class ParquetCatalog(spark: SparkSession, root: String,
         parts(1).forall(_.isDigit) && parts(1).toInt > 0,
         s"${ParquetCatalog.BucketByProp} must be '<column>,<numBuckets>'" +
           s", got '$value'")
-      migrateIfPlain(name)
       val m0 = currentManifest(name)
       recordedSchema(m0)
         .orElse(scala.util.Try(readVersion(name, m0.version).schema).toOption)
@@ -2054,7 +1701,6 @@ final class ParquetCatalog(spark: SparkSession, root: String,
           "not both (unset the other first)")
       val cols = value.split(',').map(_.trim).filter(_.nonEmpty)
       require(cols.nonEmpty, s"$key needs at least one column")
-      migrateIfPlain(name)
       val m0 = currentManifest(name)
       recordedSchema(m0)
         .orElse(scala.util.Try(readVersion(name, m0.version).schema).toOption)
@@ -2075,7 +1721,6 @@ final class ParquetCatalog(spark: SparkSession, root: String,
       value: String): Long = {
     require(key.nonEmpty && !value.contains('\n'),
       "property needs a key and a line-safe value")
-    migrateIfPlain(name)
     val m = currentManifest(name)
     val meta = Map("op" -> "setProperty", "bytesAdded" -> "0") ++
       carriedMeta(m) ++ propagatedSchema(m) + (propKey(key) -> value)
@@ -2094,8 +1739,7 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     * to tolerate missing keys). */
   def unsetTableProperty(name: String, key: String,
       ifExists: Boolean = false): Long = {
-    migrateIfPlain(name)
-    require(isVersioned(name), s"no table $name")
+    require(exists(name), s"no table $name")
     val m = currentManifest(name)
     if (ifExists && !m.meta.contains(propKey(key))) return m.version
     require(m.meta.contains(propKey(key)), s"no property '$key' on $name")
@@ -2105,9 +1749,9 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     m.version + 1
   }
 
-  /** The table's properties (empty for unversioned tables). */
+  /** The table's properties (empty when the table does not exist). */
   def tableProperties(name: String): Map[String, String] =
-    if (!isVersioned(name)) Map.empty
+    if (!exists(name)) Map.empty
     else currentManifest(name).meta.collect {
       case (k, v) if k.startsWith(PropPrefix) =>
         java.net.URLDecoder.decode(k.drop(PropPrefix.length), "UTF-8") -> v
@@ -2475,7 +2119,7 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     val vd = versionsDir(name)
     Files.createDirectories(dataDir(name))
     val nn = nonce()
-    val stageDir = vd.resolve(s".stage-$nn")
+    val stageDir = stagingDir(name, nn)
     // every staged file carries the table's stable column ids in its
     // footers (fieldId.write.enabled is Spark's default) — the enabler
     // for metadata-only RENAME COLUMN; a no-op for readers until the
@@ -2646,7 +2290,7 @@ final class ParquetCatalog(spark: SparkSession, root: String,
 
   /** The table's CHECK constraints, name → SQL expression. */
   def constraints(name: String): Map[String, String] =
-    if (!isVersioned(name)) Map.empty
+    if (!exists(name)) Map.empty
     else currentManifest(name).meta.collect {
       case (k, v) if k.startsWith(ConstraintPrefix) =>
         java.net.URLDecoder.decode(k.drop(ConstraintPrefix.length), "UTF-8") -> v
@@ -2728,7 +2372,6 @@ final class ParquetCatalog(spark: SparkSession, root: String,
   def addConstraint(name: String, cname: String, sqlExpr: String): Long = {
     require(cname.nonEmpty && !sqlExpr.contains('\n'),
       "constraint needs a name and a line-safe SQL expression")
-    migrateIfPlain(name)
     val m = currentManifest(name)
     val key = constraintKey(cname)
     require(!m.meta.contains(key), s"constraint '$cname' already exists on $name")
@@ -2774,8 +2417,8 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     * Filesystems without hard links fall back to a real copy. */
   def cloneTable(src: String, dst: String,
       version: Option[Long] = None): Long = {
-    require(isVersioned(src), s"$src must be a versioned table")
-    require(!isVersioned(dst) && !exists(dst),
+    require(exists(src), s"no table $src")
+    require(!exists(dst),
       s"clone target $dst already exists")
     val v = version.getOrElse(currentVersion(src))
     val m = manifest(src, v)
@@ -2807,38 +2450,51 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     1L
   }
 
-  /** Migrate a plain (unversioned) table dir in place: its files become
-    * the shared data tree and version 1's manifest lists them all. The
-    * partition layout is inferred from the hive dir structure. */
+  /** Migrate a plain hive directory an older build left at
+    * `<root>/<name>` in place: its files become the shared data tree and
+    * version 1's manifest (op `migrate`) lists them all, with the
+    * partition layout inferred from the `k=v` dirs and a skipping index
+    * kept inside the dir moved next to the manifests. The one piece of
+    * code that knows that layout; [[versions]] runs it, so the first
+    * touch of the name — a read included — migrates. A `.migrating`
+    * marker written before the move lets a crash between the move and
+    * the commit finish on the next touch. One migration at a time per
+    * JVM; the common case (no plain dir, no marker) costs two stats. */
   private def migrateIfPlain(name: String): Unit = {
-    val dest = tableDir(name)
-    if (isVersioned(name)) return
+    val plain = tableDir(name)
     val vd = versionsDir(name)
-    val dd = dataDir(name)
-    if (!Files.exists(dest)) {
-      // recovery: a crashed migration moved the dir but never committed
-      if (!Files.exists(dd)) return
-    } else {
-      require(!Files.isSymbolicLink(dest),
-        s"$name uses the legacy symlink version layout; rebuild the table")
-      Files.createDirectories(vd)
-      require(!Files.exists(dd), s"cannot migrate $name: $dd already exists")
-      Files.move(dest, dd, StandardCopyOption.ATOMIC_MOVE)
+    val marker = vd.resolve(".migrating")
+    if (Files.isDirectory(plain) || Files.exists(marker)) ParquetCatalog.synchronized {
+      val dd = dataDir(name)
+      if (listVersions(name).isEmpty &&
+          (Files.isDirectory(plain) || Files.exists(marker))) {
+        if (Files.isDirectory(plain)) {
+          require(!Files.isSymbolicLink(plain),
+            s"$name uses the legacy symlink version layout; rebuild the table")
+          require(!Files.exists(dd), s"cannot migrate $name: $dd already exists")
+          val from = plain.toRealPath().toString
+          Files.createDirectories(vd)
+          Files.writeString(marker, from)
+          Files.move(plain, dd, StandardCopyOption.ATOMIC_MOVE)
+        }
+        val innerStats = dd.resolve("_graft_stats.json")
+        if (Files.exists(innerStats)) {
+          Files.move(innerStats, statsPath(name), StandardCopyOption.ATOMIC_MOVE,
+            StandardCopyOption.REPLACE_EXISTING)
+          SkippingIndex.relocate(statsPath(name), Files.readString(marker),
+            dd.toString)
+        }
+        val s = Files.walk(dd)
+        val rels =
+          try s.iterator().asScala
+            .filter(p => p.toString.endsWith(".parquet") && Files.isRegularFile(p))
+            .map(p => vd.relativize(p).toString).toList.sorted
+          finally s.close()
+        commitManifest(name,
+          TableManifest(1, inferPartitionBy(rels), Map("op" -> "migrate"), rels))
+        Files.delete(marker)
+      }
     }
-    // the in-dir stats file becomes the versioned table's stats file
-    val innerStats = dd.resolve("_graft_stats.json")
-    if (Files.exists(innerStats))
-      Files.move(innerStats, statsPath(name), StandardCopyOption.ATOMIC_MOVE,
-        StandardCopyOption.REPLACE_EXISTING)
-    val s = Files.walk(dd)
-    val rels =
-      try s.iterator().asScala
-        .filter(p => p.toString.endsWith(".parquet") && Files.isRegularFile(p))
-        .map(p => vd.relativize(p).toString).toList.sorted
-      finally s.close()
-    val pb = inferPartitionBy(rels)
-    commitManifest(name,
-      TableManifest(1, pb, Map("op" -> "migrate"), rels))
   }
 
   /** Partition columns implied by hive `k=v` segments of data paths. */
@@ -2850,10 +2506,6 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     }
   }
 
-  /** Overwrite that RETAINS history: the new frame becomes version N+1
-    * as a manifest commit. A pre-existing unversioned table is migrated
-    * as the first retained version. Returns the new version number;
-    * throws [[ConcurrentWriteException]] on a commit race. */
   /** Hash-BUCKETED versioned overwrite: rows land under `n` bucket
     * partitions keyed by `pmod(hash(col), n)` — catalyst Murmur3,
     * seed 42, the exact function [[graft.spark.GraftBucketFunction]]
@@ -2911,7 +2563,7 @@ final class ParquetCatalog(spark: SparkSession, root: String,
       s"column ${ParquetCatalog.BucketPartCol} is reserved for the bucket id")
     val bucketed = df.withColumn(ParquetCatalog.BucketPartCol,
       bucketIdExpr(bucketCol, numBuckets))
-    if (isVersioned(name)) {
+    if (exists(name)) {
       // RE-bucketing: the new spec commits FIRST so the restage's
       // hidden-partition derivation (see [[stage]]) runs under the
       // spec this layout will be read with — property-then-data, the
@@ -2940,7 +2592,7 @@ final class ParquetCatalog(spark: SparkSession, root: String,
 
   /** The table's declared bucket layout, when any: (column, buckets). */
   def bucketSpec(name: String): Option[(String, Int)] =
-    if (!isVersioned(name)) None
+    if (!exists(name)) None
     else bucketSpecAt(name, currentManifest(name).version)
 
   /** [[bucketSpec]] of a SPECIFIC version — time-traveled scans must
@@ -2968,7 +2620,7 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     * declaration would strand the table between the two. */
   private def declaredBucketLayout(name: String, df: DataFrame,
       partitionBy: Seq[String]): Seq[String] =
-    if (!isVersioned(name) || partitionBy.exists(
+    if (!exists(name) || partitionBy.exists(
         _.equalsIgnoreCase(ParquetCatalog.BucketPartCol))) partitionBy
     else bucketSpec(name) match {
       case Some((c, _)) =>
@@ -2980,13 +2632,17 @@ final class ParquetCatalog(spark: SparkSession, root: String,
       case None => partitionBy
     }
 
+  /** Overwrite that RETAINS history: the new frame becomes version N+1
+    * as a manifest commit (version 1 for a new table). An existing
+    * skipping index is refreshed over the new files. Returns the new
+    * version number; throws [[ConcurrentWriteException]] on a commit
+    * race. */
   def overwriteVersioned(name: String, df: DataFrame,
       partitionBy: Seq[String] = Nil,
       batchToken: Option[String] = None,
       orderWithinCells: Seq[Column] = Nil,
       forceDistribute: Boolean = false,
       identitySplits: Boolean = true): Long = {
-    migrateIfPlain(name)
     val pb = declaredBucketLayout(name, df, partitionBy)
     val prior = versions(name).lastOption
     batchToken.foreach { tok =>
@@ -3019,8 +2675,7 @@ final class ParquetCatalog(spark: SparkSession, root: String,
   def appendVersioned(name: String, df: DataFrame,
       partitionBy: Seq[String] = Nil, evolveSchema: Boolean = false,
       batchToken: Option[String] = None): Long = {
-    migrateIfPlain(name)
-    if (!isVersioned(name)) {
+    if (!exists(name)) {
       // table-creating first append: the batch token must still ride the
       // commit, or a replay of batch 0 after a restart would double-write
       val rels = stage(name, df, partitionBy, 1)
@@ -3247,8 +2902,7 @@ final class ParquetCatalog(spark: SparkSession, root: String,
   def overwritePartitionsVersioned(name: String, df: DataFrame,
       partitionBy: Seq[String]): Long = {
     require(partitionBy.nonEmpty, "overwritePartitions needs partition columns")
-    migrateIfPlain(name)
-    if (!isVersioned(name)) return overwriteVersioned(name, df, partitionBy)
+    if (!exists(name)) return overwriteVersioned(name, df, partitionBy)
     val m = currentManifest(name)
     requireManifestLayout(name, partitionBy, m)
     val next = m.version + 1
@@ -3271,9 +2925,11 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     * exactly a snapshot manifest re-referencing unchanged data files.
     * Readers are never invalidated (the merged frame is computed FROM
     * the still-live old version and data files are write-once), so no
-    * persist/materialize barrier is needed, unlike the in-place
-    * [[upsert]]. `partitionBy` defaults to the manifest's recorded
-    * layout. Returns the new version number; throws
+    * persist/materialize barrier is needed. Touched = the delta's own
+    * partitions ∪ the partitions holding matched target keys
+    * ([[touchedPartitions]]); an update that moves a row's partition
+    * value empties its old slot. `partitionBy` defaults to the
+    * manifest's recorded layout. Returns the new version number; throws
     * [[ConcurrentWriteException]] on a commit race (the merge was
     * computed from a snapshot that is no longer current — retrying
     * re-reads and re-merges, Delta's optimistic loop).
@@ -3291,8 +2947,7 @@ final class ParquetCatalog(spark: SparkSession, root: String,
       evolveSchema: Boolean = false,
       fromVersion: Option[Long] = None,
       batchToken: Option[String] = None): Long = {
-    migrateIfPlain(name)
-    if (!isVersioned(name)) {
+    if (!exists(name)) {
       if (batchToken.isEmpty) return overwriteVersioned(name, source, partitionBy)
       // table-creating first MERGE batch: the token must ride the first
       // commit or a replay of batch 0 after a restart double-writes
@@ -3392,54 +3047,38 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     * reference's exact notebook MERGE text
     * (`bronze_to_silver_transformation.py:867-920`) landing with
     * transactional storage semantics, not just merge semantics. The
-    * statement's target name resolves to a catalog table (either tier),
-    * its source to a session temp view (the reference's staging
-    * discipline, K4), [[graft.operators.SqlMerge]] supplies the Delta
-    * MERGE semantics, and the result is written back as ONE commit:
+    * statement's target name resolves to a catalog table, its source to
+    * a session temp view (the reference's staging discipline, K4),
+    * [[graft.operators.SqlMerge]] supplies the Delta MERGE semantics,
+    * and the result is written back as ONE new version with op verb
+    * `merge` — `history()` audits it, time travel keeps the pre-merge
+    * version, and the manifest CAS detects concurrent writers
+    * ([[ConcurrentWriteException]], retry by re-running).
     *
-    *   - versioned tier: a new retained version with op verb `merge` —
-    *     `history()` audits it, time travel keeps the pre-merge
-    *     version, and the manifest CAS detects concurrent writers
-    *     ([[ConcurrentWriteException]], retry by re-running);
-    *   - in-place tier: the atomic write-temp-then-swap overwrite,
-    *     preserving the on-disk partition layout.
-    *
-    * Returns the committed version (0 for the in-place tier, which has
-    * no version chain). Row-level MERGE rewrites the full table here —
-    * the partition-scoped write path is the keyed [[upsert]]; a MERGE
-    * statement's arbitrary per-clause conditions have no static
-    * touched-partition set to scope by. */
+    * Returns the committed version. Row-level MERGE rewrites the full
+    * table here — the partition-scoped write path is the keyed
+    * [[upsertVersioned]]; a MERGE statement's arbitrary per-clause
+    * conditions have no static touched-partition set to scope by. */
   def mergeInto(mergeSql: String): Long = {
     val p = graft.operators.SqlMerge.parse(mergeSql)
-    require(exists(p.targetTable), s"no table ${p.targetTable}")
+    val name = p.targetTable
+    require(exists(name), s"no table $name")
     val source = spark.table(p.sourceTable)
-    if (isVersioned(p.targetTable)) {
-      val name = p.targetTable
-      val m = currentManifest(name)
-      val target = readVersion(name, m.version)
-      val merged = graft.operators.SqlMerge.execute(target, source, p)
-      val next = m.version + 1
-      // write-once versions: staging reads the still-live current files
-      val rels = stage(name, merged, m.partitionBy, next)
-      val meta = Map("op" -> "merge") ++ carriedMeta(m) ++
-        (if (rels.isEmpty) emptyMeta(merged) else Map.empty)
-      commitOrClean(name, TableManifest(next, m.partitionBy, meta, rels), rels)
-      refreshIndex(name)
-      next
-    } else {
-      val name = p.targetTable
-      val pb = diskLayout(name)
-      val merged = graft.operators.SqlMerge.execute(read(name), source, p)
-        .persist() // materialize before the swap deletes the input files
-      merged.count()
-      overwrite(name, merged, pb)
-      merged.unpersist()
-      0L
-    }
+    val m = currentManifest(name)
+    val target = readVersion(name, m.version)
+    val merged = graft.operators.SqlMerge.execute(target, source, p)
+    val next = m.version + 1
+    // write-once versions: staging reads the still-live current files
+    val rels = stage(name, merged, m.partitionBy, next)
+    val meta = Map("op" -> "merge") ++ carriedMeta(m) ++
+      (if (rels.isEmpty) emptyMeta(merged) else Map.empty)
+    commitOrClean(name, TableManifest(next, m.partitionBy, meta, rels), rels)
+    refreshIndex(name)
+    next
   }
 
-  /** DELETE WHERE that retains history — versioned sibling of
-    * [[delete]]; untouched partitions re-referenced as in
+  /** Row-level DELETE WHERE (Delta `DELETE` parity) that retains
+    * history; untouched partitions re-referenced as in
     * [[upsertVersioned]]. `partitionBy` defaults to the recorded
     * layout; `fromVersion` pins the read snapshot as in
     * [[upsertVersioned]]. The touched-partition probe is
@@ -3449,8 +3088,7 @@ final class ParquetCatalog(spark: SparkSession, root: String,
   def deleteVersioned(name: String, condition: Column,
       partitionBy: Seq[String] = Nil,
       fromVersion: Option[Long] = None): (Long, Long) = {
-    migrateIfPlain(name)
-    require(isVersioned(name), s"no table $name")
+    require(exists(name), s"no table $name")
     val m = fromVersion.map(manifest(name, _)).getOrElse(currentManifest(name))
     // the deletion-vectors property routes every DELETE door (Scala,
     // cat.sql text, the registered catalog) merge-on-read
@@ -3525,8 +3163,7 @@ final class ParquetCatalog(spark: SparkSession, root: String,
       partitionBy: Seq[String] = Nil,
       fromVersion: Option[Long] = None): (Long, Long) = {
     require(assignments.nonEmpty, "UPDATE needs at least one assignment")
-    migrateIfPlain(name)
-    require(isVersioned(name), s"no table $name")
+    require(exists(name), s"no table $name")
     val m = fromVersion.map(manifest(name, _)).getOrElse(currentManifest(name))
     // the deletion-vectors property routes every UPDATE door merge-on-read
     if (dvEnabled(m)) return updateVectors(name, condition, assignments, fromVersion)
@@ -3752,8 +3389,7 @@ final class ParquetCatalog(spark: SparkSession, root: String,
   def applyChanges(name: String, feed: DataFrame, keys: Seq[String],
       partitionBy: Seq[String] = Nil,
       batchToken: Option[String] = None): Long = {
-    migrateIfPlain(name)
-    if (!isVersioned(name)) {
+    if (!exists(name)) {
       val empty = feed.drop("_change_type", "_commit_version").limit(0)
       val state = Upsert.applyFeed(empty, feed, keys)
       val rels = stage(name, state, partitionBy, 1)
@@ -3853,7 +3489,7 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     * registry (None: the sink never committed here). One lookup in the
     * current manifest — the public face of the `txn.` registry. */
   def sinkHighWater(name: String, sinkId: String): Option[Long] =
-    if (!isVersioned(name)) None
+    if (!exists(name)) None
     else currentManifest(name).meta.get(txnKey(sinkId)).map(_.toLong)
 
   /** Maintain `dst` as an incrementally-synced replica of versioned
@@ -3865,7 +3501,7 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     * applied this call. */
   def syncIncremental(src: String, dst: String, keys: Seq[String],
       partitionBy: Seq[String] = Nil): Int = {
-    require(isVersioned(src), s"$src must be a versioned table")
+    require(exists(src), s"no table $src")
     val cur = currentVersion(src)
     val sinkId = s"cdf:$src->$dst"
     val high = sinkHighWater(dst, sinkId).getOrElse(0L)
@@ -3993,7 +3629,6 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     * metadata-only evolution an `evolveSchema` append performs, but
     * with no data to carry at all. */
   def addColumn(name: String, colName: String, typ: DataType): Long = {
-    migrateIfPlain(name)
     val m = currentManifest(name)
     val cur = recordedSchema(m).getOrElse(readVersion(name, m.version).schema)
     // Spark resolution is case-insensitive, so existence must be too: a
@@ -4033,7 +3668,6 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     * gives it away for free. Partition and constraint-referenced
     * columns refuse to drop. */
   def dropColumn(name: String, colName: String): Long = {
-    migrateIfPlain(name)
     val m = currentManifest(name)
     require(!m.partitionBy.exists(_.equalsIgnoreCase(colName)),
       s"cannot drop partition column '$colName' of $name")
@@ -4138,8 +3772,7 @@ final class ParquetCatalog(spark: SparkSession, root: String,
   }
 
   def renameColumn(name: String, from0: String, to: String): Long = {
-    migrateIfPlain(name)
-    require(isVersioned(name), s"no table $name")
+    require(exists(name), s"no table $name")
     val m = currentManifest(name)
     val cur = recordedSchema(m).getOrElse(readVersion(name, m.version).schema)
     val from = cur.fieldNames.find(_.equalsIgnoreCase(from0)).getOrElse(
@@ -4192,8 +3825,7 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     * remedy (Delta without the type-widening table feature behaves the
     * same). */
   def alterColumnType(name: String, colName0: String, newType: DataType): Long = {
-    migrateIfPlain(name)
-    require(isVersioned(name), s"no table $name")
+    require(exists(name), s"no table $name")
     val m = currentManifest(name)
     val cur = recordedSchema(m).getOrElse(readVersion(name, m.version).schema)
     val colName = cur.fieldNames.find(_.equalsIgnoreCase(colName0)).getOrElse(
@@ -4266,7 +3898,7 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     * which doubles as the refresh watermark). */
   def refreshMaterialized(src: String, dst: String, keys: Seq[String],
       groupBy: Seq[String], sumCols: Seq[String]): Long = {
-    require(isVersioned(src), s"$src must be a versioned table")
+    require(exists(src), s"no table $src")
     require(groupBy.nonEmpty, "materialized view needs group columns")
     val sinkId = s"mv:$src->$dst"
     val cur = currentVersion(src)
@@ -4317,38 +3949,25 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     * through to session temp views. */
   def sql(statement: String): DataFrame = CatalogSql.run(spark, this, statement)
 
-  /** Delta `DESCRIBE DETAIL` parity: one metadata-only row — tier,
+  /** Delta `DESCRIBE DETAIL` parity: one metadata-only row — the
     * current version, retained version count, file count, total data
     * bytes, partition layout, constraint count, last commit stamp.
     * Driver-built from manifests and file attributes; zero data files
     * opened, zero Spark jobs. */
   def describeDetail(name: String): DataFrame = {
     import spark.implicits._
-    val row =
-      if (isVersioned(name)) {
-        val m = currentManifest(name)
-        val bytes = m.files.map(f =>
-          try Files.size(versionsDir(name).resolve(f)) catch { case _: Exception => 0L }).sum
-        (name, "versioned", Some(m.version), versions(name).size.toLong,
-          m.files.size.toLong, bytes, m.partitionBy.mkString(","),
-          constraints(name).size.toLong, m.meta.get("ts").map(_.toLong))
-      } else {
-        val files = SkippingIndex.listFiles(tableDir(name).toString)
-        val bytes = files.map(f =>
-          try Files.size(Paths.get(f)) catch { case _: Exception => 0L }).sum
-        (name, "in-place", Option.empty[Long], 0L, files.size.toLong, bytes,
-          diskLayout(name).mkString(","), 0L, Option.empty[Long])
-      }
-    Seq(row).toDF("name", "tier", "version", "retained_versions",
-      "num_files", "size_bytes", "partition_by", "n_constraints",
-      "last_commit_ts")
+    val m = currentManifest(name)
+    val bytes = m.files.map(f =>
+      try Files.size(versionsDir(name).resolve(f)) catch { case _: Exception => 0L }).sum
+    Seq((name, m.version, versions(name).size.toLong, m.files.size.toLong,
+      bytes, m.partitionBy.mkString(","), constraints(name).size.toLong,
+      m.meta.get("ts").map(_.toLong)))
+      .toDF("name", "version", "retained_versions", "num_files", "size_bytes",
+        "partition_by", "n_constraints", "last_commit_ts")
   }
 
-  /** The table's partition layout: the manifest's recorded columns for
-    * a versioned table, the on-disk hive chain otherwise. */
-  def layout(name: String): Seq[String] =
-    if (isVersioned(name)) currentManifest(name).partitionBy
-    else diskLayout(name)
+  /** The table's partition layout: the manifest's recorded columns. */
+  def layout(name: String): Seq[String] = currentManifest(name).partitionBy
 
   /** Delta `DESCRIBE HISTORY` parity: one row per retained version —
     * (version, operation, n_files, partition_by, batch, commit_ts).
@@ -4472,8 +4091,9 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     *     files the scan deemed dead; anything such a late manifest
     *     lists is dropped from the kill set before deletion.
     *
-    * Also sweeps stray `.tmp-`/`.old-`/`.stage-` debris a crashed
-    * writer may have left. Returns manifests + debris entries
+    * Also sweeps stray `.tmp-` staging dirs (under the root, any
+    * table's) and `.manifest-tmp-` files a crashed writer may have
+    * left. Returns manifests + debris entries
     * removed. */
   def vacuum(name: String, keep: Int = 1,
       minAgeMs: Long = ParquetCatalog.DefaultVacuumMinAgeMs): Int = {
@@ -4533,43 +4153,34 @@ final class ParquetCatalog(spark: SparkSession, root: String,
         dead.foreach(Files.delete)
         pruneEmptyDirs(dd)
       }
-      // crashed-writer debris inside the versions dir — AGE-GUARDED
-      // like the data-tree orphan sweep: a LIVE writer's in-flight
-      // `.stage-` dir (or a commit's `.manifest-tmp-`) is
-      // indistinguishable from a crashed one's, and sweeping it
-      // mid-write kills the writer (the once-flaky vacuum race test
-      // was exactly this). Entries that vanish mid-check are skipped.
-      val now2 = System.currentTimeMillis()
-      def olderThanWindow(p: Path): Boolean =
-        scala.util.Try(
-          now2 - Files.getLastModifiedTime(p).toMillis >= minAgeMs)
-          .getOrElse(false)
-      val s2 = Files.list(vd)
-      try s2.iterator().asScala
-        .filter { p =>
-          val n = p.getFileName.toString
-          n.startsWith(".stage-") || n.startsWith(".manifest-tmp-")
-        }
-        .filter(olderThanWindow)
-        .toList.foreach { p => deleteRecursively(p); removed += 1 }
-      finally s2.close()
+      removed += sweepDebris(vd, minAgeMs, Seq(".manifest-tmp-"))
     }
-    // in-place tier debris at the root (overwrite swap temps) — same
-    // live-writer hazard, same age guard
-    val now3 = System.currentTimeMillis()
-    val s = Files.list(Paths.get(root))
-    try s.iterator().asScala
-      .filter { p =>
-        val n = p.getFileName.toString
-        n.startsWith(".tmp-") || n.startsWith(".old-") || n.startsWith(".lnk-") ||
-          n.startsWith(".rename-tmp-")
-      }
-      .filter(p => scala.util.Try(
-        now3 - Files.getLastModifiedTime(p).toMillis >= minAgeMs)
-        .getOrElse(false))
-      .toList.foreach { p => deleteRecursively(p); removed += 1 }
-    finally s.close()
-    removed
+    // staging dirs (`.tmp-<table>-<nonce>`, any table's) and rename
+    // journals' temps at the root
+    removed + sweepDebris(Paths.get(root), minAgeMs, Seq(".tmp-", ".rename-tmp-"))
+  }
+
+  /** Delete the entries of `dir` named with one of `prefixes` that are
+    * older than `minAgeMs` — AGE-GUARDED like the data-tree orphan
+    * sweep: a LIVE writer's in-flight staging dir (or a commit's
+    * `.manifest-tmp-`) is indistinguishable from a crashed one's, and
+    * sweeping it mid-write kills the writer (the once-flaky vacuum race
+    * test was exactly this). Entries that vanish mid-check are skipped.
+    * Returns the number removed. */
+  private def sweepDebris(dir: Path, minAgeMs: Long,
+      prefixes: Seq[String]): Int = {
+    val now = System.currentTimeMillis()
+    val s = Files.list(dir)
+    val old =
+      try s.iterator().asScala
+        .filter(p => prefixes.exists(p.getFileName.toString.startsWith))
+        .filter(p => scala.util.Try(
+          now - Files.getLastModifiedTime(p).toMillis >= minAgeMs)
+          .getOrElse(false))
+        .toList
+      finally s.close()
+    old.foreach(deleteRecursively)
+    old.size
   }
 
   /** Age-based retention (Delta `VACUUM ... RETAIN n HOURS` semantics
@@ -4604,7 +4215,8 @@ final class ParquetCatalog(spark: SparkSession, root: String,
       finally s.close()
     // reverse-lexicographic puts children before their parents
     dirs.sortBy(_.toString)(Ordering.String.reverse).foreach { d =>
-      if (d != base && dirIsEmpty(d)) Files.delete(d)
+      val empty = { val l = Files.list(d); try !l.iterator().hasNext finally l.close() }
+      if (d != base && empty) Files.delete(d)
     }
   }
 
@@ -4621,7 +4233,7 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     * scanned would read every row; this reads O(files) footers once
     * and O(deleted) sidecar rows. */
   def exactRowCount(name: String, version: Long): Long = {
-    require(isVersioned(name), s"no versioned table $name")
+    require(exists(name), s"no table $name")
     val m = manifest(name, version)
     exactRowCountFor(name, version,
       m.files.map(f => versionsDir(name).resolve(f).toString))
@@ -4641,7 +4253,7 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     * kept files' footer rows minus THEIR deletion-vector positions. */
   def exactRowCountFor(name: String, version: Long,
       filesAbs: Seq[String]): Long = {
-    require(isVersioned(name), s"no versioned table $name")
+    require(exists(name), s"no table $name")
     val m = manifest(name, version)
     if (filesAbs.isEmpty) return 0L
     // per-file cached lookups off ONE resolved generation view —
@@ -4702,7 +4314,7 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     * entries record −1; all-null files record no entry at all). */
   def statsNonNullCount(name: String, version: Long, column: String,
       filesAbs: Seq[String]): Option[Long] = {
-    require(isVersioned(name), s"no versioned table $name")
+    require(exists(name), s"no table $name")
     val m = manifest(name, version)
     if (dvEntries(m).nonEmpty) return None
     val stats = statsWithFallback(name, column, filesAbs)
@@ -4749,7 +4361,7 @@ final class ParquetCatalog(spark: SparkSession, root: String,
       dataType: org.apache.spark.sql.types.DataType,
       filesAbs: Seq[String]): (Option[Any], Option[Any]) = {
     import org.apache.spark.sql.types._
-    require(isVersioned(name), s"no versioned table $name")
+    require(exists(name), s"no table $name")
     val m = manifest(name, version)
     val dv = dvEntries(m).keySet
     def parse(typ: String, s: String): Option[Any] = (dataType, typ) match {
@@ -4850,14 +4462,7 @@ final class ParquetCatalog(spark: SparkSession, root: String,
 
   /** Number of data files currently backing the table (compaction
     * telemetry). */
-  def fileCount(name: String): Long =
-    if (isVersioned(name)) currentManifest(name).files.size.toLong
-    else {
-      val s = Files.walk(tableDir(name))
-      try s.filter(p =>
-        p.toString.endsWith(".parquet") && Files.isRegularFile(p)).count()
-      finally s.close()
-    }
+  def fileCount(name: String): Long = currentManifest(name).files.size.toLong
 
   private def deleteRecursively(p: Path): Unit = {
     val s = Files.walk(p)

@@ -3,15 +3,16 @@ package graft.storage
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.util.SerializableConfiguration
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 
 /** File-level min/max data-skipping index — the Delta/Iceberg stats-file
   * pattern (reference surface: the lakehouse scan tier of SURVEY.md
-  * §2.1) over plain Parquet directories.
+  * §2.1) over explicit lists of Parquet files, persisted at an explicit
+  * stats path ([[ParquetCatalog]] keeps one per table, next to its
+  * manifests).
   *
   * Parquet already stores per-row-group column statistics in each file
   * FOOTER, so building the index reads metadata only — never data
@@ -24,9 +25,10 @@ import scala.jdk.CollectionConverters._
   * `clusterBy`/`zorderBy` layout opens only the files whose [min,max]
   * intersects the predicate.
   *
-  * `scan` prunes with the index, then re-applies the predicate — the
-  * index is a file FILTER, never a truth source, so a stale index can
-  * only over-read (and `write` is atomic via temp-file rename).
+  * Readers ([[ParquetCatalog.readRange]]) prune with the index, then
+  * re-apply the predicate — the index is a file FILTER, never a truth
+  * source, so a stale index can only over-read (and `writeAt` is atomic
+  * via temp-file rename).
   */
 object SkippingIndex {
 
@@ -48,9 +50,6 @@ object SkippingIndex {
       try max.toDouble catch { case _: NumberFormatException => Double.NaN }
   }
   final case class FileStats(file: String, rows: Long, cols: Seq[ColStats])
-
-  private def statsFile(tableDir: String) =
-    Paths.get(tableDir, "_graft_stats.json")
 
   /** The SESSION's Hadoop configuration, the same resolution the stock
     * scan path uses — a bare `new Configuration()` would miss
@@ -75,31 +74,12 @@ object SkippingIndex {
       }.collect().toSeq
   }
 
-  /** Distributed footer read over every parquet file under `dir`. */
-  def collect(spark: SparkSession, dir: String, cols: Seq[String]): Seq[FileStats] =
-    collectFor(spark, listParquet(dir), cols)
-
-  /** Parquet files under a table dir (the dir-based call sites' file
-    * lister; manifest-versioned tables pass explicit lists instead). */
-  def listFiles(dir: String): Seq[String] = listParquet(dir)
-
   /** Footer-only row counts for explicit files (the REORG PURGE
     * deleted-fraction denominator) — one distributed footer read, no
     * data pages touched. */
   def rowCounts(spark: SparkSession, files: Seq[String]): Map[String, Long] =
     footerPass(spark, files)((f, reader) =>
       f -> reader.getFooter.getBlocks.asScala.map(_.getRowCount).sum).toMap
-
-  private def listParquet(dir: String): Seq[String] = {
-    // resolve the real path defensively: Files.walk does NOT traverse a
-    // symlink root (manifest-versioned tables pass explicit file lists
-    // instead of a dir, so this path only sees plain table dirs)
-    val s = Files.walk(Paths.get(dir).toRealPath())
-    try s.iterator().asScala
-      .filter(p => p.toString.endsWith(".parquet") && Files.isRegularFile(p))
-      .map(_.toString).toList.sorted
-    finally s.close()
-  }
 
   /** Footer-only stats for one file: per requested column, min of
     * row-group mins / max of row-group maxes. Runs inside a task. */
@@ -182,14 +162,9 @@ object SkippingIndex {
     case _ => false
   }
 
-  /** Build + atomically persist the index for `cols` of catalog table
-    * `name` (or any parquet dir via `forDir`). */
-  def write(spark: SparkSession, tableDir: String, cols: Seq[String]): Seq[FileStats] =
-    writeAt(spark, statsFile(tableDir), listParquet(tableDir), cols)
-
   /** Footer stats for EXPLICIT files WITHOUT touching any persisted
     * index: one distributed footer pass, zero data pages. The reader
-    * behind [[collect]], [[writeAt]] and [[refreshAt]], and the
+    * behind [[writeAt]] and [[refreshAt]], and the
     * metadata-aggregate fallback for files the reconciled index no
     * longer covers (time-traveled versions). */
   def collectFor(spark: SparkSession, files: Seq[String],
@@ -199,10 +174,10 @@ object SkippingIndex {
       .sortBy(_.file)
   }
 
-  /** [[write]] over an EXPLICIT file list with an explicit stats-file
-    * location — the manifest-versioned form ([[ParquetCatalog]] keeps
-    * one stats file per table next to its manifests, covering exactly
-    * the current manifest's files). */
+  /** Build + atomically persist the index for `cols` of EXPLICIT files
+    * at an explicit stats-file location ([[ParquetCatalog]] keeps one
+    * stats file per table next to its manifests, covering exactly the
+    * current manifest's files). */
   def writeAt(spark: SparkSession, statsPath: java.nio.file.Path,
       files: Seq[String], cols: Seq[String]): Seq[FileStats] = {
     val stats = collectFor(spark, files, cols)
@@ -324,29 +299,17 @@ object SkippingIndex {
       binaryToStats(bytes)
     else jsonToStats(new String(bytes, "UTF-8"))
 
-  /** True when a persisted index exists for the dir. */
-  def exists(tableDir: String): Boolean = Files.exists(statsFile(tableDir))
-
   /** True when a persisted index exists at an explicit location. */
   def existsAt(statsPath: java.nio.file.Path): Boolean = Files.exists(statsPath)
 
   /** Incremental index maintenance for append-shaped writes (catalog
-    * `append`, streaming `foreachBatch` sinks): keep entries for files
-    * still present, footer-read ONLY files the index has not seen, drop
-    * entries for files that disappeared. Cost is proportional to the
-    * increment, not the table — the property that lets a micro-batch
-    * sink keep the index fresh. Falls back to a full [[write]] when no
-    * index exists yet. The column set is taken from the existing index
-    * (or `cols` when given). */
-  def refresh(spark: SparkSession, tableDir: String,
-      cols: Seq[String] = Nil): Seq[FileStats] =
-    refreshAt(spark, statsFile(tableDir), listParquet(tableDir), cols)
-
-  /** [[refresh]] over an explicit file list + stats location: entries
-    * for files still in the list survive verbatim, files the index has
-    * not seen are footer-read, entries for files no longer listed drop
-    * out. Cost tracks the increment, never the table. With no index
-    * at `statsPath` yet, a full [[writeAt]] over `cols`. */
+    * appends, streaming `foreachBatch` sinks) over an explicit file
+    * list + stats location: entries for files still in the list
+    * survive verbatim, files the index has not seen are footer-read,
+    * entries for files no longer listed drop out. Cost tracks the
+    * increment, never the table — the property that lets a micro-batch
+    * sink keep the index fresh. With no index at `statsPath` yet, a
+    * full [[writeAt]] over `cols`. */
   def refreshAt(spark: SparkSession, statsPath: java.nio.file.Path,
       files: Seq[String], cols: Seq[String] = Nil): Seq[FileStats] = {
     if (!Files.exists(statsPath)) {
@@ -417,13 +380,7 @@ object SkippingIndex {
     persist(statsPath, moved)
   }
 
-  def read(tableDir: String): Seq[FileStats] = {
-    require(Files.exists(statsFile(tableDir)),
-      s"no skipping index at ${statsFile(tableDir)} — run SkippingIndex.write first")
-    decodeStats(Files.readAllBytes(statsFile(tableDir)))
-  }
-
-  /** [[read]] at an explicit stats location. */
+  /** The persisted index at an explicit stats location. */
   def readAt(statsPath: java.nio.file.Path): Seq[FileStats] = {
     require(Files.exists(statsPath),
       s"no skipping index at $statsPath — run SkippingIndex.writeAt first")
@@ -532,12 +489,6 @@ object SkippingIndex {
   def readAtCached(statsPath: java.nio.file.Path): Seq[FileStats] =
     cachedIndex(statsPath).stats
 
-  /** Files whose [min,max] for `column` intersects [lo,hi] (numeric
-    * compare for numeric physical types, lexicographic for BINARY).
-    * Files with no stats for the column are conservatively KEPT. */
-  def candidateFiles(tableDir: String, column: String, lo: Double, hi: Double): Seq[String] =
-    candidateFilesAll(tableDir, Seq((column, lo, hi)))
-
   /** Physical types whose raw min/max ARE the logical values, so a
     * double-range intersect is sound. Everything else — BINARY/string
     * (lexicographic order, "10" < "9"), DECIMAL (unscaled ints),
@@ -555,18 +506,14 @@ object SkippingIndex {
     // NaN (unparseable) compares false on both sides → conservative keep
     else !(cs.maxD < lo || cs.minD > hi)
 
-  /** Multi-column conjunctive pruning: a file survives only if EVERY
-    * predicate's [lo,hi] intersects that column's [min,max]. Over a
+  /** Files whose [min,max] intersects every `(column, lo, hi)`
+    * predicate's range (numeric compare for numeric physical types;
+    * files without stats for a column are conservatively KEPT). Over a
     * [[ParquetCatalog.compact]] `zorderBy` layout each file is a
     * hypercube in bucket space, so every predicated dimension prunes —
     * the property a single-column lexicographic cluster only has for
-    * its leading column (SkippingSpec measures the difference). */
-  def candidateFilesAll(tableDir: String,
-      preds: Seq[(String, Double, Double)]): Seq[String] =
-    candidateFilesAt(statsFile(tableDir), listParquet(tableDir), preds)
-
-  /** [[candidateFilesAll]] over an explicit (live) file list + stats
-    * location. Reconciles the index against the list: files the index
+    * its leading column (SkippingSpec measures the difference).
+    * Reconciles the index against the live list: files the index
     * has not seen are unconditional candidates (conservative keep — a
     * stale index must over-read, never drop rows), and indexed files no
     * longer listed drop out entirely. With `keepNullsOf` set, files
@@ -797,34 +744,6 @@ object SkippingIndex {
       case (BINARY, s: String) =>
         Some(bf.hash(org.apache.parquet.io.api.Binary.fromString(s)))
       case _ => None
-    }
-  }
-
-  /** Index-pruned range scan: read only intersecting files, re-apply the
-    * predicate (the index is advisory; correctness never depends on it).
-    * Returns an empty frame with the table schema when nothing
-    * intersects. */
-  def scan(spark: SparkSession, tableDir: String, column: String,
-      lo: Double, hi: Double): DataFrame =
-    scanAll(spark, tableDir, Seq((column, lo, hi)))
-
-  /** Conjunctive multi-predicate form of [[scan]]. */
-  def scanAll(spark: SparkSession, tableDir: String,
-      preds: Seq[(String, Double, Double)]): DataFrame = {
-    require(preds.nonEmpty, "scanAll needs at least one predicate")
-    val files = candidateFilesAll(tableDir, preds)
-    val base =
-      if (files.isEmpty)
-        FooterSchema.parquet(spark, tableDir).limit(0)
-      else
-        // basePath keeps hive-style partition columns in the schema
-        // when reading leaf files of a partitioned layout — without it
-        // the pruned read's schema diverges from the full-dir read
-        FooterSchema.reader(spark, files)
-          .option("basePath", Paths.get(tableDir).toRealPath().toString)
-          .parquet(files: _*)
-    preds.foldLeft(base) { case (df, (column, lo, hi)) =>
-      df.filter(col(column) >= lo && col(column) <= hi)
     }
   }
 

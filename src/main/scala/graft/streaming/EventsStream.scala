@@ -53,27 +53,15 @@ object EventsStream {
 
   /** Streaming MERGE sink: every micro-batch upserts into a catalog
     * table via `foreachBatch` — Structured Streaming's form of the
-    * reference's per-run `MERGE INTO` (K2), giving exactly-once keyed
-    * state on plain Parquet. Combine with [[dedupedStream]] upstream
-    * for idempotence under replays. */
+    * reference's per-run `MERGE INTO` (K2). Each batch commits through
+    * [[graft.storage.ParquetCatalog.upsertBatch]] with the token
+    * `<checkpointDir>#<batchId>`, so a batch Structured Streaming
+    * re-delivers after a restart commits NOTHING: the version chain is
+    * untouched under replay (the append sink's guarantee, extended to
+    * update-shaped streams). Combine with [[dedupedStream]] upstream to
+    * drop duplicate events inside a batch. */
   def mergeSink(stream: DataFrame, catalog: ParquetCatalog, table: String,
       keys: Seq[String], checkpointDir: String): StreamingQuery =
-    stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        catalog.upsert(table, batch.toDF(), keys)
-      }
-      .start()
-
-  /** [[mergeSink]] with COMMIT-level exactly-once on the versioned
-    * tier: each micro-batch merges through
-    * [[graft.storage.ParquetCatalog.upsertBatch]] with a
-    * batchId-tagged token, so a re-delivered batch commits NOTHING —
-    * the version chain itself is untouched under replay (the append
-    * sink's guarantee, extended to update-shaped streams). */
-  def mergeSinkExactlyOnce(stream: DataFrame, catalog: ParquetCatalog,
-      table: String, keys: Seq[String], checkpointDir: String): StreamingQuery =
     stream.writeStream
       .outputMode("update")
       .option("checkpointLocation", checkpointDir)

@@ -35,14 +35,14 @@ class ActivitySpec extends SparkSpec {
   test("metrics merge on the composite key across runs") {
     val cat = new ParquetCatalog(spark, Files.createTempDirectory("act").toString)
     val run1 = Activity.activityMetrics(activity, lit("2024-06-15").cast("date"))
-    cat.upsert("activity_metrics", run1,
+    cat.upsertVersioned("activity_metrics", run1,
       Seq("repository_id", "measurement_period"))
     // next day: repo 1 gains a commit; only its rows should change
     val moreActivity = activity.unionByName(
       Seq((1L, "commit", ts(15), 7.0, 2.0))
         .toDF("repository_id", "activity_type", "ts", "additions", "deletions"))
     val run2 = Activity.activityMetrics(moreActivity, lit("2024-06-16").cast("date"))
-    cat.upsert("activity_metrics", run2,
+    cat.upsertVersioned("activity_metrics", run2,
       Seq("repository_id", "measurement_period"))
     val back = cat.read("activity_metrics")
     assert(back.count() === 6, "3 periods x 2 repos")

@@ -10,11 +10,17 @@ class CatalogSpec extends SparkSpec {
   private def freshCatalog = new ParquetCatalog(spark,
     Files.createTempDirectory("graft-cat").toString)
 
+  /** The partition components of the files `name`'s current manifest
+    * lists (`k=v[/k2=v2]`, the hive dir each file sits in). */
+  private def components(cat: ParquetCatalog, name: String): Set[String] =
+    cat.manifestFiles(name, cat.currentVersion(name))
+      .map(graft.storage.TableManifest.partitionComponent).toSet
+
   test("overwrite + read round-trips a partitioned table") {
     val cat = freshCatalog
     val df = Seq((1L, "2024-01-01", "a"), (2L, "2024-01-02", "b"))
       .toDF("id", "partition_date", "v")
-    cat.overwrite("t", df, Seq("partition_date"))
+    cat.overwriteVersioned("t", df, Seq("partition_date"))
     val back = cat.read("t")
     assert(back.count() === 2)
     assert(back.columns.toSet === Set("id", "partition_date", "v"))
@@ -22,18 +28,18 @@ class CatalogSpec extends SparkSpec {
 
   test("overwrite is atomic: old data replaced wholesale") {
     val cat = freshCatalog
-    cat.overwrite("t", Seq((1L, "a")).toDF("id", "v"))
-    cat.overwrite("t", Seq((2L, "b"), (3L, "c")).toDF("id", "v"))
+    cat.overwriteVersioned("t", Seq((1L, "a")).toDF("id", "v"))
+    cat.overwriteVersioned("t", Seq((2L, "b"), (3L, "c")).toDF("id", "v"))
     assert(cat.read("t").orderBy("id").as[(Long, String)].collect()
       === Seq((2L, "b"), (3L, "c")))
   }
 
   test("dynamic partition overwrite touches only present partitions") {
     val cat = freshCatalog
-    cat.overwrite("t",
+    cat.overwriteVersioned("t",
       Seq((1L, "2024-01-01"), (2L, "2024-01-02")).toDF("id", "partition_date"),
       Seq("partition_date"))
-    cat.overwritePartitions("t",
+    cat.overwritePartitionsVersioned("t",
       Seq((99L, "2024-01-02")).toDF("id", "partition_date"),
       Seq("partition_date"))
     val back = cat.read("t").orderBy("id").as[(Long, String)].collect()
@@ -43,21 +49,21 @@ class CatalogSpec extends SparkSpec {
 
   test("upsert merges into existing table across writes") {
     val cat = freshCatalog
-    cat.upsert("t", Seq((1L, "Other", 1.0), (2L, "AI/ML", 2.0))
+    cat.upsertVersioned("t", Seq((1L, "Other", 1.0), (2L, "AI/ML", 2.0))
       .toDF("id", "cat", "m"), Seq("id"))
-    cat.upsert("t", Seq((1L, "Web", 10.0), (3L, "Sys", 30.0))
+    cat.upsertVersioned("t", Seq((1L, "Web", 10.0), (3L, "Sys", 30.0))
       .toDF("id", "cat", "m"), Seq("id"))
     val back = cat.read("t").orderBy("id").as[(Long, String, Double)].collect()
     assert(back === Seq((1L, "Web", 10.0), (2L, "AI/ML", 2.0), (3L, "Sys", 30.0)))
     // idempotence: re-upserting the same source changes nothing
-    cat.upsert("t", Seq((1L, "Web", 10.0), (3L, "Sys", 30.0))
+    cat.upsertVersioned("t", Seq((1L, "Web", 10.0), (3L, "Sys", 30.0))
       .toDF("id", "cat", "m"), Seq("id"))
     assert(cat.read("t").orderBy("id").as[(Long, String, Double)].collect() === back)
   }
 
   test("latest-partition read is partition-pruned") {
     val cat = freshCatalog
-    cat.overwrite("t",
+    cat.overwriteVersioned("t",
       Seq((1L, "2024-01-01"), (2L, "2024-01-02"), (3L, "2024-01-02"))
         .toDF("id", "partition_date"),
       Seq("partition_date"))
@@ -69,21 +75,16 @@ class CatalogSpec extends SparkSpec {
       s"equality on the partition column must prune:\n$plan")
   }
 
-  /** (path, size, mtime) fingerprint of every data file under a
-    * table's partition dirs, keyed by partition value. */
+  /** (path, size, mtime) fingerprint of every data file the table's
+    * current manifest lists, keyed by partition value. */
   private def fileFingerprints(cat: ParquetCatalog, root: String,
       name: String): Map[String, Set[(String, Long, Long)]] = {
-    import scala.jdk.CollectionConverters._
-    val base = java.nio.file.Paths.get(root, name)
-    val s = Files.walk(base)
-    try s.iterator().asScala
-      .filter(p => p.toString.endsWith(".parquet") && Files.isRegularFile(p))
-      .map { p =>
-        val rel = base.relativize(p).toString
-        val part = rel.takeWhile(_ != '/')
-        part -> ((rel, Files.size(p), Files.getLastModifiedTime(p).toMillis))
-      }.toList.groupBy(_._1).map { case (k, v) => k -> v.map(_._2).toSet }
-    finally s.close()
+    val base = java.nio.file.Paths.get(root, ".versions", name)
+    cat.manifestFiles(name, cat.currentVersion(name)).map { rel =>
+      val p = base.resolve(rel)
+      graft.storage.TableManifest.partitionComponent(rel) ->
+        ((rel, Files.size(p), Files.getLastModifiedTime(p).toMillis))
+    }.groupBy(_._1).map { case (k, v) => k -> v.map(_._2).toSet }
   }
 
   test("partition-scoped upsert rewrites only touched partitions; parity with full merge") {
@@ -93,12 +94,12 @@ class CatalogSpec extends SparkSpec {
       (1L, "2024-01-01", 1.0), (2L, "2024-01-01", 2.0),
       (3L, "2024-01-02", 3.0), (4L, "2024-01-03", 4.0))
       .toDF("id", "partition_date", "m")
-    cat.overwrite("t", target, Seq("partition_date"))
+    cat.overwriteVersioned("t", target, Seq("partition_date"))
     val before = fileFingerprints(cat, root, "t")
     // delta touches only 2024-01-02 (update id=3) and 2024-01-04 (insert)
     val delta = Seq((3L, "2024-01-02", 30.0), (9L, "2024-01-04", 90.0))
       .toDF("id", "partition_date", "m")
-    cat.upsert("t", delta, Seq("id"), partitionBy = Seq("partition_date"))
+    cat.upsertVersioned("t", delta, Seq("id"), partitionBy = Seq("partition_date"))
     val after = fileFingerprints(cat, root, "t")
     // untouched partitions byte-identical (same files, sizes, mtimes)
     for (p <- Seq("partition_date=2024-01-01", "partition_date=2024-01-03"))
@@ -118,7 +119,7 @@ class CatalogSpec extends SparkSpec {
   test("a partition-scoped upsert runs no separate count to fill its cache") {
     val root = Files.createTempDirectory("graft-psm-exec").toString
     val cat = new ParquetCatalog(spark, root)
-    cat.overwrite("t",
+    cat.overwriteVersioned("t",
       Seq((1L, "2024-01-01", 1.0), (2L, "2024-01-02", 2.0))
         .toDF("id", "partition_date", "m"),
       Seq("partition_date"))
@@ -136,12 +137,13 @@ class CatalogSpec extends SparkSpec {
     org.apache.spark.sql.graftbridge.SqlBridge.drainListeners(spark)
     spark.sparkContext.addSparkListener(listener)
     try {
-      cat.upsert("t", delta, Seq("id"), partitionBy = Seq("partition_date"))
+      cat.upsertVersioned("t", delta, Seq("id"), partitionBy = Seq("partition_date"))
       org.apache.spark.sql.graftbridge.SqlBridge.drainListeners(spark)
     } finally spark.sparkContext.removeSparkListener(listener)
-    // the touched-partition probe, the merged frame's partition list
-    // (which also fills its cache), and the dynamic overwrite
-    assert(execs.get() === 3, s"${execs.get()} SQL executions")
+    // the touched-partition probe and the staged write: the merged
+    // slice is computed from write-once files, so nothing is cached
+    // and nothing is counted before the write
+    assert(execs.get() === 2, s"${execs.get()} SQL executions")
     assert(cat.read("t").orderBy("id").select("m").as[Double].collect().toSeq ===
       Seq(1.0, 20.0, 3.0))
   }
@@ -149,31 +151,36 @@ class CatalogSpec extends SparkSpec {
   test("partition-moving update empties the old slot and removes its dir") {
     val root = Files.createTempDirectory("graft-psm2").toString
     val cat = new ParquetCatalog(spark, root)
-    cat.overwrite("t",
+    cat.overwriteVersioned("t",
       Seq((1L, "2024-01-01", 1.0), (2L, "2024-01-02", 2.0))
         .toDF("id", "partition_date", "m"),
       Seq("partition_date"))
     // id=1 was the ONLY row of 2024-01-01 and the update moves it out
-    cat.upsert("t", Seq((1L, "2024-01-05", 10.0)).toDF("id", "partition_date", "m"),
+    cat.upsertVersioned("t",
+      Seq((1L, "2024-01-05", 10.0)).toDF("id", "partition_date", "m"),
       Seq("id"), partitionBy = Seq("partition_date"))
     val back = cat.read("t")
       .select($"id", $"partition_date".cast("string"), $"m")
       .orderBy("id").as[(Long, String, Double)].collect()
     assert(back === Seq((1L, "2024-01-05", 10.0), (2L, "2024-01-02", 2.0)))
-    assert(!Files.exists(java.nio.file.Paths.get(root, "t", "partition_date=2024-01-01")),
-      "fully-emptied partition dir must be removed")
+    assert(!components(cat, "t").contains("partition_date=2024-01-01"),
+      "the fully-emptied partition must leave the manifest")
+    // its dir goes once vacuum drops the version that still lists it
+    cat.vacuum("t", keep = 1, minAgeMs = 0L)
+    assert(!Files.exists(java.nio.file.Paths.get(root, ".versions", "t", "data",
+      "partition_date=2024-01-01")), "fully-emptied partition dir must be removed")
   }
 
   test("partition-scoped delete rewrites only hit partitions, drops emptied dirs") {
     val root = Files.createTempDirectory("graft-psd").toString
     val cat = new ParquetCatalog(spark, root)
-    cat.overwrite("t", Seq(
+    cat.overwriteVersioned("t", Seq(
       (1L, "2024-01-01", 1.0), (2L, "2024-01-01", 2.0),
       (3L, "2024-01-02", 3.0), (4L, "2024-01-03", 4.0))
       .toDF("id", "partition_date", "m"), Seq("partition_date"))
     val before = fileFingerprints(cat, root, "t")
     // hits one row of day 1 and ALL of day 2
-    val removed = cat.delete("t",
+    val (_, removed) = cat.deleteVersioned("t",
       col("id") === 1L || col("partition_date") === "2024-01-02",
       partitionBy = Seq("partition_date"))
     assert(removed === 2L)
@@ -187,35 +194,37 @@ class CatalogSpec extends SparkSpec {
       .orderBy("id").as[(Long, String, Double)].collect()
       === Seq((2L, "2024-01-01", 2.0), (4L, "2024-01-03", 4.0)))
     // no-hit delete is a no-op returning 0
-    assert(cat.delete("t", col("id") === 999L, Seq("partition_date")) === 0L)
+    assert(cat.deleteVersioned("t", col("id") === 999L, Seq("partition_date"))._2 === 0L)
   }
 
   test("index survives the catalog lifecycle: compact re-collects, append refreshes, range read prunes") {
     import graft.storage.SkippingIndex
     val root = Files.createTempDirectory("graft-idx").toString
     val cat = new ParquetCatalog(spark, root)
-    val dir = s"$root/t"
-    cat.overwrite("t", (0 until 1000).map(i => (i.toLong, s"v$i")).toDF("id", "v"))
+    val sp = cat.statsPath("t")
+    cat.overwriteVersioned("t", (0 until 1000).map(i => (i.toLong, s"v$i")).toDF("id", "v"))
     cat.index("t", Seq("id"))
     // compact into a clustered layout: the index must be RE-collected
     // over the new files automatically (overwrite path)
     cat.compact("t", rowsPerFile = 100, clusterBy = Seq("id"))
-    val stats = SkippingIndex.read(dir)
+    val stats = SkippingIndex.readAt(sp)
     assert(stats.size == cat.fileCount("t").toInt,
       "compact must leave a fresh index covering exactly the new files")
     // range read through the catalog opens only intersecting files
-    assert(SkippingIndex.candidateFiles(dir, "id", 150, 250).size < stats.size)
+    val files = cat.dataFilesAbs("t", cat.currentVersion("t"))
+    assert(SkippingIndex.candidateFilesAt(sp, files, Seq(("id", 150.0, 250.0)))
+      .size < stats.size)
     val got = cat.readRange("t", Seq(("id", 150.0, 250.0)))
     assert(got.count() == 101)
     // append: incremental refresh — prior entries survive verbatim
-    cat.append("t", Seq((5000L, "x")).toDF("id", "v"))
-    val after = SkippingIndex.read(dir)
+    cat.appendVersioned("t", Seq((5000L, "x")).toDF("id", "v"))
+    val after = SkippingIndex.readAt(sp)
     assert(after.size == stats.size + 1)
     assert(stats.toSet.subsetOf(after.toSet))
     // unindexed fallback: same answers via plain scan + filter
     val cat2root = Files.createTempDirectory("graft-idx2").toString
     val cat2 = new ParquetCatalog(spark, cat2root)
-    cat2.overwrite("u", (0 until 100).map(i => (i.toLong, "y")).toDF("id", "v"))
+    cat2.overwriteVersioned("u", (0 until 100).map(i => (i.toLong, "y")).toDF("id", "v"))
     assert(cat2.readRange("u", Seq(("id", 10.0, 20.0))).count() == 11)
   }
 
@@ -223,24 +232,26 @@ class CatalogSpec extends SparkSpec {
     import graft.storage.SkippingIndex
     val root = Files.createTempDirectory("graft-idx3").toString
     val cat = new ParquetCatalog(spark, root)
-    cat.overwrite("t",
+    cat.overwriteVersioned("t",
       Seq((1L, "d1", 1.0), (2L, "d2", 2.0)).toDF("id", "day", "m"),
       Seq("day"))
     cat.index("t", Seq("id"))
-    cat.upsert("t", Seq((2L, "d2", 20.0), (3L, "d3", 3.0)).toDF("id", "day", "m"),
+    cat.upsertVersioned("t",
+      Seq((2L, "d2", 20.0), (3L, "d3", 3.0)).toDF("id", "day", "m"),
       Seq("id"), partitionBy = Seq("day"))
-    val stats = SkippingIndex.read(s"$root/t")
+    val stats = SkippingIndex.readAt(cat.statsPath("t"))
     assert(stats.size == cat.fileCount("t").toInt,
       "index must cover exactly the post-merge files")
-    // every indexed path exists (no stale entries for rewritten d2)
-    stats.foreach(fs => assert(Files.exists(java.nio.file.Paths.get(fs.file))))
+    // every indexed path is a live file (no stale entries for rewritten d2)
+    val live = cat.dataFilesAbs("t", cat.currentVersion("t")).toSet
+    stats.foreach(fs => assert(live.contains(fs.file), fs.file))
   }
 
   test("touched-partition predicate statically prunes the target scan (plan pin)") {
     import org.apache.spark.sql.execution.FileSourceScanExec
     val root = Files.createTempDirectory("graft-pp").toString
     val cat = new ParquetCatalog(spark, root)
-    cat.overwrite("t",
+    cat.overwriteVersioned("t",
       (0 until 12).map(i => (i.toLong, s"d${i % 4}", i * 1.0))
         .toDF("id", "day", "m"),
       Seq("day"))
@@ -257,13 +268,8 @@ class CatalogSpec extends SparkSpec {
       s"predicate must reach PartitionFilters:\n$planStr")
     // the metric proof: only d2's files were opened, not all 4 partitions
     val numFiles = scans.map(_.metrics("numFiles").value).sum
-    val d2Files = {
-      import scala.jdk.CollectionConverters._
-      val s = Files.walk(java.nio.file.Paths.get(root, "t", "day=d2"))
-      try s.iterator().asScala.count(p =>
-        p.toString.endsWith(".parquet") && Files.isRegularFile(p))
-      finally s.close()
-    }
+    val d2Files = cat.manifestFiles("t", cat.currentVersion("t"))
+      .count(f => graft.storage.TableManifest.partitionComponent(f) == "day=d2")
     val allFiles = cat.fileCount("t")
     assert(numFiles == d2Files && numFiles < allFiles,
       s"scan opened $numFiles files; d2 has $d2Files of $allFiles total")
@@ -274,20 +280,20 @@ class CatalogSpec extends SparkSpec {
     val cat = new ParquetCatalog(spark, root)
     val target = Seq((1L, Some("d1"), 1.0), (2L, None, 2.0), (3L, None, 3.0))
       .toDF("id", "day", "m")
-    cat.overwrite("t", target, Seq("day"))
+    cat.overwriteVersioned("t", target, Seq("day"))
     // update a row in the NULL partition (null-safe <=> matching)
-    cat.upsert("t", Seq((2L, Option.empty[String], 20.0)).toDF("id", "day", "m"),
+    cat.upsertVersioned("t",
+      Seq((2L, Option.empty[String], 20.0)).toDF("id", "day", "m"),
       Seq("id"), partitionBy = Seq("day"))
     val back = cat.read("t")
       .select($"id", $"day".cast("string"), $"m")
       .orderBy("id").as[(Long, Option[String], Double)].collect()
     assert(back === Seq((1L, Some("d1"), 1.0), (2L, None, 20.0), (3L, None, 3.0)))
-    // delete everything in the NULL partition: its dir must vanish
-    val removed = cat.delete("t", col("day").isNull, Seq("day"))
+    // delete everything in the NULL partition: it must leave the manifest
+    val (_, removed) = cat.deleteVersioned("t", col("day").isNull, Seq("day"))
     assert(removed === 2L)
-    assert(!Files.exists(java.nio.file.Paths.get(root, "t",
-      "day=__HIVE_DEFAULT_PARTITION__")),
-      "emptied default partition dir must be removed")
+    assert(!components(cat, "t").contains("day=__HIVE_DEFAULT_PARTITION__"),
+      "emptied default partition must be dropped")
     assert(cat.read("t").count() === 1)
   }
 
@@ -295,21 +301,22 @@ class CatalogSpec extends SparkSpec {
     val root = Files.createTempDirectory("graft-nullkey").toString
     val cat = new ParquetCatalog(spark, root)
     // key is NOT a partition column; one target row has a NULL key
-    cat.overwrite("t",
+    cat.overwriteVersioned("t",
       Seq((Some(1L), "d1", 1.0), (Option.empty[Long], "d2", 2.0))
         .toDF("k", "day", "m"),
       Seq("day"))
     // the NULL-keyed source row MATCHES the NULL-keyed target row (<=>)
     // and moves it to d3 — the probe must put d2 in the touched set, or
     // the old row survives as a duplicate
-    cat.upsert("t", Seq((Option.empty[Long], "d3", 20.0)).toDF("k", "day", "m"),
+    cat.upsertVersioned("t",
+      Seq((Option.empty[Long], "d3", 20.0)).toDF("k", "day", "m"),
       Seq("k"), partitionBy = Seq("day"))
     val back = cat.read("t")
       .select($"k", $"day".cast("string"), $"m")
       .orderBy($"k".asc_nulls_last).as[(Option[Long], String, Double)].collect()
     assert(back === Seq((Some(1L), "d1", 1.0), (None, "d3", 20.0)),
       s"NULL-keyed row must be UPDATED (moved), not duplicated: ${back.mkString}")
-    assert(!Files.exists(java.nio.file.Paths.get(root, "t", "day=d2")),
+    assert(!components(cat, "t").contains("day=d2"),
       "the NULL-keyed row's old partition must be emptied and dropped")
   }
 
@@ -317,103 +324,81 @@ class CatalogSpec extends SparkSpec {
     import java.sql.Timestamp
     val root = Files.createTempDirectory("graft-tsp").toString
     val cat = new ParquetCatalog(spark, root)
-    cat.overwrite("t",
+    cat.overwriteVersioned("t",
       Seq((1L, Timestamp.valueOf("2024-01-01 00:00:00"), 1.0),
         (2L, Timestamp.valueOf("2024-01-02 00:00:00"), 2.0))
         .toDF("id", "ts_p", "m"),
       Seq("ts_p"))
-    // the update MOVES id=1 out of its partition: the emptied dir must
-    // be found and removed, which requires the computed dir name to
+    // the update MOVES id=1 out of its partition: the emptied slot must
+    // be found and dropped, which requires the computed dir name to
     // match Spark's (java.sql.Timestamp.toString's trailing ".0" does
     // not — the ADVICE r9 defect)
-    cat.upsert("t",
+    cat.upsertVersioned("t",
       Seq((1L, Timestamp.valueOf("2024-01-03 00:00:00"), 10.0))
         .toDF("id", "ts_p", "m"),
       Seq("id"), partitionBy = Seq("ts_p"))
-    import scala.jdk.CollectionConverters._
-    val dirs = {
-      val s = Files.list(java.nio.file.Paths.get(root, "t"))
-      try s.iterator().asScala.map(_.getFileName.toString)
-        .filter(_.startsWith("ts_p=")).toList.sorted
-      finally s.close()
-    }
+    val dirs = components(cat, "t").filter(_.startsWith("ts_p=")).toList.sorted
     assert(dirs.size == 2 && !dirs.exists(_.contains("2024-01-01")),
-      s"emptied timestamp partition dir must be removed; have: $dirs")
+      s"emptied timestamp partition must be dropped; have: $dirs")
     assert(cat.read("t").count() == 2)
   }
 
   test("a delete that empties every partition leaves a readable schema shell") {
     val root = Files.createTempDirectory("graft-delall").toString
     val cat = new ParquetCatalog(spark, root)
-    cat.overwrite("t", Seq((1L, "d1", 1.0), (2L, "d2", 2.0))
+    cat.overwriteVersioned("t", Seq((1L, "d1", 1.0), (2L, "d2", 2.0))
       .toDF("id", "day", "m"), Seq("day"))
-    assert(cat.delete("t", lit(true), Seq("day")) === 2L)
+    assert(cat.deleteVersioned("t", lit(true), Seq("day"))._2 === 2L)
     val empty = cat.read("t")
     assert(empty.count() === 0)
     assert(empty.columns.toSet === Set("id", "day", "m"))
     // and the table revives cleanly on the next partition-scoped upsert
-    cat.upsert("t", Seq((9L, "d9", 9.0)).toDF("id", "day", "m"),
+    cat.upsertVersioned("t", Seq((9L, "d9", 9.0)).toDF("id", "day", "m"),
       Seq("id"), partitionBy = Seq("day"))
     assert(cat.read("t").select($"id").as[Long].collect() === Seq(9L))
   }
 
   test("append rejects schema drift loudly; evolveSchema unions by name") {
     val cat = freshCatalog
-    cat.overwrite("t", Seq((1L, "a")).toDF("id", "v"))
+    cat.overwriteVersioned("t", Seq((1L, "a")).toDF("id", "v"))
     val e = intercept[IllegalArgumentException] {
-      cat.append("t", Seq((2L, 5.0)).toDF("id", "w"))
+      cat.appendVersioned("t", Seq((2L, 5.0)).toDF("id", "w"))
     }
     assert(e.getMessage.contains("schema drift") &&
       e.getMessage.contains("w") && e.getMessage.contains("v"))
     // explicit evolution: union-by-name, nulls fill both directions
-    cat.append("t", Seq((2L, 5.0)).toDF("id", "w"), evolveSchema = true)
+    cat.appendVersioned("t", Seq((2L, 5.0)).toDF("id", "w"), evolveSchema = true)
     val back = cat.read("t").orderBy("id")
       .select("id", "v", "w").as[(Long, Option[String], Option[Double])].collect()
     assert(back === Seq((1L, Some("a"), None), (2L, None, Some(5.0))))
-    // same contract on a versioned table
-    cat.overwriteVersioned("u", Seq((1L, "a")).toDF("id", "v"))
-    intercept[IllegalArgumentException] {
-      cat.append("u", Seq((2L, 5.0)).toDF("id", "w"))
-    }
-    cat.appendVersioned("u", Seq((2L, 5.0)).toDF("id", "w"), evolveSchema = true)
-    assert(cat.read("u").columns.toSet === Set("id", "v", "w"))
-    assert(cat.read("u").count() === 2)
+    assert(cat.read("t").columns.toSet === Set("id", "v", "w"))
   }
 
   test("append rejects a frame with duplicated column names as drift, not a writer crash") {
     val cat = freshCatalog
-    cat.overwrite("t", Seq((1L, "a")).toDF("id", "v"))
+    cat.overwriteVersioned("t", Seq((1L, "a")).toDF("id", "v"))
     // duplicate names collapse in a name->type map: the dedup'd shape
     // matches the table, so only a field-count guard catches it here
     val dup = Seq((2L, "b")).toDF("id", "v").select($"id", $"v", $"v")
-    val e = intercept[IllegalArgumentException] { cat.append("t", dup) }
+    val e = intercept[IllegalArgumentException] { cat.appendVersioned("t", dup) }
     assert(e.getMessage.contains("schema drift") &&
       e.getMessage.contains("duplicated in incoming: v"), e.getMessage)
-    // same guard on the versioned tier
-    cat.overwriteVersioned("u", Seq((1L, "a")).toDF("id", "v"))
-    val e2 = intercept[IllegalArgumentException] { cat.appendVersioned("u", dup) }
-    assert(e2.getMessage.contains("duplicated in incoming: v"), e2.getMessage)
   }
 
   test("identical re-append to a string-date-partitioned table succeeds on BOTH tiers") {
-    import scala.jdk.CollectionConverters._
     val root = Files.createTempDirectory("graft-ptol").toString
     val cat = new ParquetCatalog(spark, root)
     val frame = Seq((1L, "2024-01-01", 1.0), (2L, "2024-01-02", 2.0))
       .toDF("id", "partition_date", "m")
-    // in-place: the string date column reads back as DATE (hive
-    // partition-type inference); the identical frame must still append
-    cat.overwrite("t", frame, Seq("partition_date"))
-    cat.append("t", frame)
+    // a plain directory an older build left: once migrated, the string
+    // date column reads back as DATE (hive partition-type inference);
+    // the identical frame must still append
+    frame.write.partitionBy("partition_date").parquet(s"$root/t")
+    cat.appendVersioned("t", frame)
     assert(cat.read("t").count() === 4)
     // and it reused the same dirs — no split logical partitions
-    val dirs = {
-      val s = Files.list(java.nio.file.Paths.get(root, "t"))
-      try s.iterator().asScala.map(_.getFileName.toString)
-        .filter(_.startsWith("partition_date=")).toList.sorted
-      finally s.close()
-    }
-    assert(dirs === List("partition_date=2024-01-01", "partition_date=2024-01-02"))
+    assert(components(cat, "t").toList.sorted ===
+      List("partition_date=2024-01-01", "partition_date=2024-01-02"))
     // versioned tier: same contract (this is the appendVersioned path)
     cat.overwriteVersioned("u", frame, Seq("partition_date"))
     cat.appendVersioned("u", frame)
@@ -434,12 +419,12 @@ class CatalogSpec extends SparkSpec {
 
   test("non-round-trip partition retypes and non-partition retypes still fail loudly") {
     val cat = freshCatalog
-    cat.overwrite("t",
+    cat.overwriteVersioned("t",
       Seq((1L, java.sql.Date.valueOf("2024-01-01"))).toDF("id", "day"),
       Seq("day"))
     // timestamp renders a different dir name than date — must stay loud
     val e = intercept[IllegalArgumentException] {
-      cat.append("t",
+      cat.appendVersioned("t",
         Seq((2L, java.sql.Timestamp.valueOf("2024-01-02 00:00:00")))
           .toDF("id", "day"))
     }
@@ -447,21 +432,11 @@ class CatalogSpec extends SparkSpec {
     // a non-partition retype reports ONLY itself: the compatible
     // partition column stays out of the list, empty sections are dropped
     val e2 = intercept[IllegalArgumentException] {
-      cat.append("t", Seq(("x", "2024-01-03")).toDF("id", "day"))
+      cat.appendVersioned("t", Seq(("x", "2024-01-03")).toDF("id", "day"))
     }
     assert(e2.getMessage.contains("id: bigint->string"), e2.getMessage)
     assert(!e2.getMessage.contains("day:") && !e2.getMessage.contains("missing"),
       e2.getMessage)
-    // same discipline on the versioned tier
-    cat.overwriteVersioned("u",
-      Seq((1L, java.sql.Date.valueOf("2024-01-01"))).toDF("id", "day"),
-      Seq("day"))
-    val e3 = intercept[IllegalArgumentException] {
-      cat.appendVersioned("u",
-        Seq((2L, java.sql.Timestamp.valueOf("2024-01-02 00:00:00")))
-          .toDF("id", "day"))
-    }
-    assert(e3.getMessage.contains("day: date->timestamp"), e3.getMessage)
   }
 
   test("readPoint prunes with parquet native bloom filters on both tiers") {
@@ -473,7 +448,11 @@ class CatalogSpec extends SparkSpec {
     // can say "not in this file"
     val df = (0 until 20000).map(i => (i.toLong, i % 97)).toDF("id", "g")
       .repartition(20)
-    cat.overwrite("t", df)
+    // a plain directory an older build wrote with blooms: its files keep
+    // pruning once migrated
+    df.write.option("parquet.bloom.filter.enabled#id", "true")
+      .option("parquet.bloom.filter.expected.ndv#id", "10000")
+      .parquet(root.resolve("t").toString)
     assert(cat.fileCount("t") >= 10)
     val cand = cat.pointCandidates("t", "id", 12345L)
     assert(cand.nonEmpty && cand.size < cat.fileCount("t") / 2,
@@ -492,7 +471,7 @@ class CatalogSpec extends SparkSpec {
     val cats = new ParquetCatalog(spark,
       Files.createTempDirectory("graft-bls").toString,
       bloomFor = Seq("k"), bloomNdv = 10000L)
-    cats.overwrite("s", (0 until 5000).map(i => (s"key-$i", i))
+    cats.overwriteVersioned("s", (0 until 5000).map(i => (s"key-$i", i))
       .toDF("k", "v").repartition(10))
     assert(cats.pointCandidates("s", "k", "key-321").size < 10)
     assert(cats.readPoint("s", "k", "key-321").select("v").as[Int].collect()
@@ -500,7 +479,7 @@ class CatalogSpec extends SparkSpec {
     // a table written WITHOUT blooms keeps every file (advisory pruning)
     val plain = new ParquetCatalog(spark,
       Files.createTempDirectory("graft-nb").toString)
-    plain.overwrite("t", df)
+    plain.overwriteVersioned("t", df)
     assert(plain.pointCandidates("t", "id", 12345L).size === plain.fileCount("t"))
     assert(plain.readPoint("t", "id", 12345L).count() === 1)
   }
@@ -553,7 +532,8 @@ class CatalogSpec extends SparkSpec {
   }
 
   test("mergeInto executes literal MERGE text against catalog tables on both tiers") {
-    val cat = freshCatalog
+    val root = Files.createTempDirectory("graft-mi").toString
+    val cat = new ParquetCatalog(spark, root)
     val target = Seq((1L, "Other", 1.0), (2L, "KEEP", 2.0))
       .toDF("id", "category", "metric")
     val text = (t: String) => s"""
@@ -567,9 +547,9 @@ class CatalogSpec extends SparkSpec {
       WHEN NOT MATCHED THEN INSERT *"""
     Seq((2L, "NEW", 20.0), (3L, "NEW", 30.0)).toDF("id", "category", "metric")
       .createOrReplaceTempView("src_mi")
-    // in-place tier: atomic overwrite write-back
-    cat.overwrite("t", target)
-    assert(cat.mergeInto(text("t")) === 0L)
+    // a plain directory an older build left: migrated as v1, merged as v2
+    target.write.parquet(s"$root/t")
+    assert(cat.mergeInto(text("t")) === 2L)
     val expected = Seq((1L, "Other", 1.0), (2L, "KEEP", 20.0), (3L, "NEW", 30.0))
     assert(cat.read("t").orderBy("id")
       .as[(Long, String, Double)].collect().toSeq === expected)
@@ -591,7 +571,8 @@ class CatalogSpec extends SparkSpec {
     val cat = new ParquetCatalog(spark, root.toString)
     val df = Seq((1L, "2024-01-01", 1.0), (2L, "2024-01-02", 2.0),
       (3L, "2024-01-03", 3.0)).toDF("id", "day", "m")
-    cat.overwrite("t", df, Seq("day"))
+    // a plain directory an older build left, migrated on first touch
+    df.write.partitionBy("day").parquet(root.resolve("t").toString)
     cat.overwriteVersioned("u", df, Seq("day"))
     // corrupt EVERY data file: any resolution path that opens one blows up
     val s = Files.walk(root)
@@ -613,7 +594,7 @@ class CatalogSpec extends SparkSpec {
     val df = (1 to 30).map(i => (i.toLong, i % 3 match {
       case 0 => 2 case 1 => 9 case 2 => 10
     }, i * 1.0)).toDF("id", "bucket", "m")
-    cat.overwrite("t", df, Seq("bucket"))
+    cat.overwriteVersioned("t", df, Seq("bucket"))
     assert(cat.latestPartitionValue("t", "bucket") === Some("10"))
     val slice = cat.latestPartition("t", "bucket")
     val got = slice.select("id").as[Long].collect().sorted
@@ -624,24 +605,15 @@ class CatalogSpec extends SparkSpec {
     val scan = slice.queryExecution.executedPlan.collect {
       case f: org.apache.spark.sql.execution.FileSourceScanExec => f
     }.head
-    val latestFiles = {
-      import scala.jdk.CollectionConverters._
-      val st = Files.walk(lpRoot.resolve("t").resolve("bucket=10"))
-      try st.iterator().asScala.count(p =>
-        p.toString.endsWith(".parquet") && Files.isRegularFile(p))
-      finally st.close()
-    }
+    val latestFiles = cat.manifestFiles("t", cat.currentVersion("t"))
+      .count(f => graft.storage.TableManifest.partitionComponent(f) == "bucket=10")
     assert(scan.metrics("numFiles").value === latestFiles,
       s"scan opened ${scan.metrics("numFiles").value} files, latest partition has $latestFiles")
     // null partition values are ignored by resolution
     val withNull = Seq((99L, null.asInstanceOf[String], 9.9), (100L, "d2", 1.0))
       .toDF("id", "day", "m")
-    cat.overwrite("n", withNull, Seq("day"))
+    cat.overwriteVersioned("n", withNull, Seq("day"))
     assert(cat.latestPartitionValue("n", "day") === Some("d2"))
-    // versioned tier: same numeric ordering through manifest entries
-    cat.overwriteVersioned("v", df, Seq("bucket"))
-    assert(cat.latestPartitionValue("v", "bucket") === Some("10"))
-    assert(cat.latestPartition("v", "bucket").count() === 10)
   }
 
   test("latestPartitionValue honors a recorded STRING partition type (lexicographic, like max(col))") {
@@ -689,7 +661,7 @@ class CatalogSpec extends SparkSpec {
     val cat = new ParquetCatalog(spark, root)
     val full = (0 until 1000).map(i => (i.toLong, s"d${i / 250}", i * 1.0))
       .toDF("id", "day", "m")
-    cat.overwrite("t", full, Seq("day"))
+    cat.overwriteVersioned("t", full, Seq("day"))
     // key-clustered files + a skipping index over the merge key
     cat.compact("t", rowsPerFile = 100, partitionBy = Seq("day"),
       clusterBy = Seq("id"))
@@ -697,7 +669,7 @@ class CatalogSpec extends SparkSpec {
     val allFiles = cat.fileCount("t")
     // delta confined to ids [10, 20] — files outside that key range must
     // never be OPENED by the matched-key probe
-    val delta = Seq((10L, "d0", 99.0), (20L, "d0", 98.0), (2000L, "d1", 1.0))
+    val delta = Seq((10L, "d0", 99.0), (20L, "d0", 98.0))
       .toDF("id", "day", "m")
     val probe = cat.matchScanFrame("t", delta, Seq("id"), cat.read("t"))
     val opened = probe.inputFiles.map(f => f.substring(f.lastIndexOf('/') + 1)).toSet
@@ -705,17 +677,19 @@ class CatalogSpec extends SparkSpec {
       s"probe opened ${opened.size} of $allFiles files — no pruning happened")
     // cross-check against the stats: every skipped file's [min,max]
     // really is outside the delta's range
-    val stats = SkippingIndex.read(s"$root/t")
+    val stats = SkippingIndex.readAt(cat.statsPath("t"))
     stats.foreach { fs =>
       val name = fs.file.substring(fs.file.lastIndexOf('/') + 1)
       val cs = fs.cols.find(_.column == "id").get
-      val outside = cs.max.toDouble < 10.0 || cs.min.toDouble > 2000.0
+      val outside = cs.max.toDouble < 10.0 || cs.min.toDouble > 20.0
       if (outside && !cs.hasNulls)
         assert(!opened.contains(name), s"out-of-range file $name was opened")
     }
-    // and the merge result is unchanged by pruning
-    cat.upsert("t", delta, Seq("id"), partitionBy = Seq("day"))
-    val expected = graft.operators.Upsert.merge(full, delta, Seq("id"))
+    // and the merge result (with an insert outside the range too) is
+    // unchanged by pruning
+    val merge = delta.unionByName(Seq((2000L, "d1", 1.0)).toDF("id", "day", "m"))
+    cat.upsertVersioned("t", merge, Seq("id"), partitionBy = Seq("day"))
+    val expected = graft.operators.Upsert.merge(full, merge, Seq("id"))
       .orderBy("id").select($"id", $"day", $"m")
       .as[(Long, String, Double)].collect()
     assert(cat.read("t").select($"id", $"day".cast("string"), $"m")
@@ -825,16 +799,16 @@ class CatalogSpec extends SparkSpec {
     assert(cat.read("t").filter(col("d") >= "2024-03-31").isEmpty)
   }
 
-  test("in-place scoped ops handle multi-level and path-hostile partition values") {
+  test("scoped ops handle multi-level and path-hostile partition values") {
     val root = Files.createTempDirectory("graft-ml").toString
     val cat = new ParquetCatalog(spark, root)
-    cat.overwrite("t", Seq(
+    cat.overwriteVersioned("t", Seq(
       (1L, "d1", Some("a/b:c d%"), 1.0), (2L, "d1", Some("plain"), 2.0),
       (3L, "d2", None, 3.0))
       .toDF("id", "day", "category", "m"), Seq("day", "category"))
     // update moves id=1 OUT of its hostile-value slot: the emptied
-    // two-level dir (and its then-empty parent, if any) must be removed
-    cat.upsert("t", Seq((1L, "d9", Some("moved"), 10.0))
+    // two-level slot must leave the manifest
+    cat.upsertVersioned("t", Seq((1L, "d9", Some("moved"), 10.0))
       .toDF("id", "day", "category", "m"),
       Seq("id"), partitionBy = Seq("day", "category"))
     val back = cat.read("t")
@@ -842,68 +816,55 @@ class CatalogSpec extends SparkSpec {
       .orderBy("id").as[(Long, String, Option[String], Double)].collect()
     assert(back === Seq((1L, "d9", Some("moved"), 10.0),
       (2L, "d1", Some("plain"), 2.0), (3L, "d2", None, 3.0)))
-    // the escaped dir is gone; d1 itself survives (still holds 'plain')
-    import scala.jdk.CollectionConverters._
-    def dirsUnder(rel: String): Set[String] = {
-      val p = java.nio.file.Paths.get(root, "t", rel)
-      if (!Files.isDirectory(p)) Set.empty
-      else {
-        val s = Files.list(p)
-        try s.iterator().asScala.filter(Files.isDirectory(_))
-          .map(_.getFileName.toString).toSet
-        finally s.close()
-      }
-    }
+    // the escaped slot is gone; d1 itself survives (still holds 'plain')
+    def dirsUnder(rel: String): Set[String] =
+      components(cat, "t").filter(_.startsWith(rel + "/"))
+        .map(_.stripPrefix(rel + "/"))
     assert(dirsUnder("day=d1") == Set("category=plain"),
       s"hostile-value dir must be dropped: ${dirsUnder("day=d1")}")
-    // a delete that empties d2 entirely removes BOTH levels
-    assert(cat.delete("t", col("day") === "d2", Seq("day", "category")) === 1L)
-    assert(!Files.exists(java.nio.file.Paths.get(root, "t", "day=d2")),
+    // a delete that empties d2 entirely drops BOTH levels; vacuum then
+    // removes the emptied tree down to the day level
+    assert(cat.deleteVersioned("t", col("day") === "d2", Seq("day", "category"))._2 === 1L)
+    assert(dirsUnder("day=d2").isEmpty)
+    cat.vacuum("t", keep = 1, minAgeMs = 0L)
+    assert(!Files.exists(java.nio.file.Paths.get(root, ".versions", "t", "data", "day=d2")),
       "emptied two-level partition tree must be removed to the day level")
   }
 
   test("layout guard: ops shaped differently from the on-disk layout fail loudly") {
-    val root = Files.createTempDirectory("graft-lg").toString
-    val cat = new ParquetCatalog(spark, root)
-    cat.overwrite("t", Seq((1L, "d1", "EU", 1.0), (2L, "d2", "US", 2.0))
+    val cat = freshCatalog
+    cat.overwriteVersioned("t", Seq((1L, "d1", "EU", 1.0), (2L, "d2", "US", 2.0))
       .toDF("id", "day", "region", "m"), Seq("day"))
     // scoped upsert with the WRONG partition column
     val e1 = intercept[IllegalArgumentException] {
-      cat.upsert("t", Seq((1L, "d1", "EU", 10.0)).toDF("id", "day", "region", "m"),
-        Seq("id"), partitionBy = Seq("region"))
+      cat.upsertVersioned("t", Seq((1L, "d1", "EU", 10.0))
+        .toDF("id", "day", "region", "m"), Seq("id"), partitionBy = Seq("region"))
     }
-    assert(e1.getMessage.contains("partitioned by (day)"))
-    // append defaulting: no partitionBy given -> follows the disk layout
-    cat.append("t", Seq((3L, "d3", "EU", 3.0)).toDF("id", "day", "region", "m"))
-    assert(Files.isDirectory(java.nio.file.Paths.get(root, "t", "day=d3")),
+    assert(e1.getMessage.contains("records layout (day)") &&
+      e1.getMessage.contains("layout change requires"), e1.getMessage)
+    // append defaulting: no partitionBy given -> follows the recorded layout
+    cat.appendVersioned("t", Seq((3L, "d3", "EU", 3.0)).toDF("id", "day", "region", "m"))
+    assert(components(cat, "t").contains("day=d3"),
       "pb-less append must follow the table's hive layout")
     // mismatch on delete and dynamic overwrite too
     intercept[IllegalArgumentException] {
-      cat.delete("t", col("id") === 1L, Seq("region"))
+      cat.deleteVersioned("t", col("id") === 1L, Seq("region"))
     }
     intercept[IllegalArgumentException] {
-      cat.overwritePartitions("t",
+      cat.overwritePartitionsVersioned("t",
         Seq((9L, "d9", "EU", 9.0)).toDF("id", "day", "region", "m"), Seq("region"))
     }
-    // versioned: explicit conflicting layout on a scoped op fails; a
-    // full overwriteVersioned (the explicit layout-change verb) succeeds
-    cat.overwriteVersioned("u", Seq((1L, "d1", "EU", 1.0))
-      .toDF("id", "day", "region", "m"), Seq("day"))
-    val e2 = intercept[IllegalArgumentException] {
-      cat.upsertVersioned("u", Seq((1L, "d1", "EU", 10.0))
-        .toDF("id", "day", "region", "m"), Seq("id"), partitionBy = Seq("region"))
-    }
-    assert(e2.getMessage.contains("layout change requires"))
-    cat.overwriteVersioned("u", Seq((1L, "d1", "EU", 1.0))
+    // a full overwrite is the explicit layout-change verb and succeeds
+    val v = cat.overwriteVersioned("t", Seq((1L, "d1", "EU", 1.0))
       .toDF("id", "day", "region", "m"), Seq("region"))
-    assert(cat.manifest("u", 2).partitionBy == Seq("region"))
+    assert(cat.manifest("t", v).partitionBy == Seq("region"))
   }
 
   test("compaction collapses small files and preserves content") {
     val cat = freshCatalog
     // 10 appends of 10 rows -> many small files
     (0 until 10).foreach { i =>
-      cat.append("t", (0 until 10).map(j => (i * 10L + j, s"v$i"))
+      cat.appendVersioned("t", (0 until 10).map(j => (i * 10L + j, s"v$i"))
         .toDF("id", "v"))
     }
     val before = cat.fileCount("t")
@@ -917,12 +878,12 @@ class CatalogSpec extends SparkSpec {
   }
 
   test("describeDetail reports both tiers from metadata alone") {
-    val cat = freshCatalog
+    val root = Files.createTempDirectory("graft-dd").toString
+    val cat = new ParquetCatalog(spark, root)
     cat.overwriteVersioned("v",
       Seq((1L, "a", 1.0), (2L, "b", 2.0)).toDF("id", "p", "m"), Seq("p"))
     cat.addConstraint("v", "m_pos", "m > 0")
     val d = cat.describeDetail("v").head()
-    assert(d.getAs[String]("tier") === "versioned")
     assert(d.getAs[Long]("version") === 2L)
     assert(d.getAs[Long]("retained_versions") === 2L)
     assert(d.getAs[Long]("num_files") === 2L)
@@ -930,10 +891,36 @@ class CatalogSpec extends SparkSpec {
     assert(d.getAs[String]("partition_by") === "p")
     assert(d.getAs[Long]("n_constraints") === 1L)
     assert(!d.isNullAt(d.fieldIndex("last_commit_ts")))
-    cat.overwrite("u", Seq((1L, 1.0)).toDF("id", "m"))
+    // a plain directory an older build left reports as its migrated v1
+    Seq((1L, 1.0)).toDF("id", "m").write.parquet(s"$root/u")
     val u = cat.describeDetail("u").head()
-    assert(u.getAs[String]("tier") === "in-place")
-    assert(u.isNullAt(u.fieldIndex("version")))
+    assert(u.getAs[Long]("version") === 1L)
+    assert(u.getAs[Long]("retained_versions") === 1L)
     assert(u.getAs[Long]("num_files") >= 1L && u.getAs[Long]("size_bytes") > 0L)
+  }
+
+  test("a plain directory an older build left reads back, then is version 1 (migrate)") {
+    val root = Files.createTempDirectory("graft-legacy").toString
+    val df = Seq((1L, "d1", 1.0), (2L, "d1", 2.0), (3L, "d2", 3.0))
+      .toDF("id", "day", "m")
+    df.write.partitionBy("day").parquet(s"$root/t")
+    def rows(frame: org.apache.spark.sql.DataFrame) =
+      frame.select($"id", $"day".cast("string"), $"m")
+        .orderBy("id").as[(Long, String, Double)].collect().toSeq
+    val expected = rows(df)
+    // the catalog read migrates on first touch
+    val cat = new ParquetCatalog(spark, root)
+    assert(rows(cat.read("t")) === expected)
+    assert(!Files.exists(java.nio.file.Paths.get(root, "t")),
+      "the plain dir becomes the table's data tree")
+    // a second plain dir, first touched through the SQL door
+    df.write.partitionBy("day").parquet(s"$root/u")
+    val door = graft.spark.GraftCatalog.register(spark, "legacy_door", root)
+    assert(rows(spark.sql(s"SELECT * FROM $door.u")) === expected)
+    for (t <- Seq("t", "u")) {
+      assert(cat.history(t).select("version", "operation")
+        .as[(Long, String)].collect().toSeq === Seq((1L, "migrate")), t)
+      assert(cat.layout(t) === Seq("day"), t)
+    }
   }
 }

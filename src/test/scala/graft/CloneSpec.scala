@@ -90,11 +90,12 @@ class CloneSpec extends SparkSpec {
   }
 
   test("clone refuses an existing target, loudly") {
-    val (cat, _) = fresh()
+    val (cat, root) = fresh()
     cat.overwriteVersioned("s", Seq((1L, 10.0)).toDF("id", "m"))
     cat.overwriteVersioned("t", Seq((1L, 10.0)).toDF("id", "m"))
     intercept[IllegalArgumentException](cat.cloneTable("s", "t"))
-    cat.overwrite("u", Seq((1L, 10.0)).toDF("id", "m"))
+    // a plain directory an older build left is a table too
+    Seq((1L, 10.0)).toDF("id", "m").write.parquet(s"$root/u")
     intercept[IllegalArgumentException](cat.cloneTable("s", "u"))
   }
 }

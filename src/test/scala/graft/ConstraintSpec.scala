@@ -34,10 +34,10 @@ class ConstraintSpec extends SparkSpec {
       s"violation must name the constraint: ${rootCause(e).getMessage}")
     assert(cat.currentVersion("t") === v, "a violating write must commit nothing")
     assert(cat.read("t").count() === 1)
-    val vd = Paths.get(root, ".versions", "t")
-    val s = Files.list(vd)
+    // staging dirs live at the root as `.tmp-<table>-<nonce>`
+    val s = Files.list(Paths.get(root))
     val debris = try s.iterator().asScala.count(
-      _.getFileName.toString.startsWith(".stage-")) finally s.close()
+      _.getFileName.toString.startsWith(".tmp-t-")) finally s.close()
     assert(debris === 0, "failed staging dirs must be cleaned eagerly")
     // and a valid append still lands
     cat.appendVersioned("t", Seq((3L, 3.0)).toDF("id", "m"))

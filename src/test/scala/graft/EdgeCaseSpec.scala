@@ -215,9 +215,14 @@ class EdgeCaseSpec extends SparkSpec {
   test("skipping index on a single-file table still answers correctly") {
     val (root) = java.nio.file.Files.createTempDirectory("graft-skip-edge").toString
     val cat = new graft.storage.ParquetCatalog(spark, root)
-    cat.overwrite("t", Tables.orders(spark, "/root/testdata/sf0.001").coalesce(1))
-    graft.storage.SkippingIndex.write(spark, s"$root/t", Seq("o_orderkey"))
-    val out = graft.storage.SkippingIndex.scan(spark, s"$root/t", "o_orderkey", 5, 10)
+    cat.overwriteVersioned("t", Tables.orders(spark, "/root/testdata/sf0.001").coalesce(1))
+    val sp = java.nio.file.Paths.get(root, "t-stats.bin")
+    val files = cat.dataFilesAbs("t", cat.currentVersion("t"))
+    graft.storage.SkippingIndex.writeAt(spark, sp, files, Seq("o_orderkey"))
+    val cand = graft.storage.SkippingIndex.candidateFilesAt(sp, files,
+      Seq(("o_orderkey", 5.0, 10.0)))
+    val out = graft.storage.FooterSchema.parquet(spark, cand: _*)
+      .filter(col("o_orderkey") >= 5.0 && col("o_orderkey") <= 10.0)
     assert(out.count() ==
       Tables.orders(spark, "/root/testdata/sf0.001")
         .filter(col("o_orderkey").between(5, 10)).count())

@@ -109,17 +109,20 @@ class FooterSchemaSpec extends SparkSpec {
         "owner": {"login": "o", "type": "User"}, "stargazers_count": ${id * 10},
         "topics": ["t$id"], "created_at": "2024-01-0${id}T00:00:00Z"}""")
         .toDS(), date)
-    cat.upsert("bronze_repos", batch("2024-03-01", Seq(1L, 2L)), Seq("repository_id"),
-      partitionBy = Seq("partition_date"))
-    cat.upsert("bronze_repos", batch("2024-03-02", Seq(2L, 3L)), Seq("repository_id"),
-      partitionBy = Seq("partition_date"))
+    // the plain directory an older build's bronze MERGE left, two batches
     val dir = Paths.get(root, "bronze_repos").toString
+    batch("2024-03-01", Seq(1L, 2L)).write.partitionBy("partition_date").parquet(dir)
+    batch("2024-03-02", Seq(3L)).write.mode("append")
+      .partitionBy("partition_date").parquet(dir)
     val expected = spark.read.format(graftFormat).load(dir).schema
     assert(expected("partition_date").dataType.typeName === "date",
       "the partition column is typed from the paths")
-    assert(schemaWithoutJobs("read(bronze_repos)")(cat.read("bronze_repos")) === expected)
     val door = ParquetTable("bronze_repos", spark, CaseInsensitiveStringMap.empty(),
       Seq(dir), None, classOf[ParquetFileFormat]).schema
+    // the first read migrates the dir to version 1, still without a job
+    assert(schemaWithoutJobs("read(bronze_repos)")(cat.read("bronze_repos")) === expected)
+    assert(cat.history("bronze_repos").select("operation").as[String]
+      .collect().toSeq === Seq("migrate"))
     assert(sqlSchemaWithoutJobs(sqlDoor(root), "bronze_repos") === door)
   }
 

@@ -106,7 +106,7 @@ class GraftCatalogSpec extends SparkSpec {
   test("CREATE / ALTER / SHOW / DROP TABLE through SQL") {
     val (cat, _, c) = freshCatalog("d")
     spark.sql(s"CREATE TABLE $c.u (id BIGINT, day STRING) PARTITIONED BY (day)")
-    assert(cat.isVersioned("u") && cat.layout("u") === Seq("day"))
+    assert(cat.exists("u") && cat.layout("u") === Seq("day"))
     assert(spark.sql(s"SELECT * FROM $c.u").count() === 0)
     spark.sql(s"INSERT INTO $c.u VALUES (1, 'd1'), (2, 'd2')")
     assert(spark.sql(s"SELECT id FROM $c.u WHERE day = 'd2'")
@@ -150,7 +150,7 @@ class GraftCatalogSpec extends SparkSpec {
     // plain CTAS: created + populated through the engine's write path
     spark.sql(s"CREATE TABLE $c.t AS SELECT id, m FROM $c.src")
     assert(cat.read("t").select("id").as[Long].collect().sorted === Array(1L, 2L))
-    assert(cat.isVersioned("t"), "CTAS lands as a versioned table")
+    assert(cat.exists("t"), "CTAS lands as a versioned table")
     // partitioned CTAS records the layout
     spark.sql(s"CREATE TABLE $c.tp PARTITIONED BY (p) " +
       s"AS SELECT id, m, p FROM $c.src")
@@ -1354,8 +1354,8 @@ class GraftCatalogSpec extends SparkSpec {
     // ABSORBED (migrated) files keep their original names — an unknown
     // writer may truncate string stats into boundary-adjusted BOUNDS,
     // so string extremes refuse there while numerics still answer
-    val (cat4, _, c4) = freshCatalog("smma")
-    cat4.overwrite("t", (1 to 100).map(i => (f"m$i%04d", i)).toDF("name", "v"))
+    val (cat4, root4, c4) = freshCatalog("smma")
+    (1 to 100).map(i => (f"m$i%04d", i)).toDF("name", "v").write.parquet(s"$root4/t")
     cat4.setTableProperty("t", ParquetCatalog.IndexForProp, "name,v")
     val aq = spark.sql(s"SELECT min(name) AS lo FROM $c4.t")
     assert(!aq.queryExecution.executedPlan.toString.contains("GraftCountStarScan"),

@@ -62,6 +62,32 @@ class RunnerSpec extends SparkSpec {
     }
   }
 
+  test("Runner batches keep superseded files until vacuum drops their version") {
+    val root = Files.createTempDirectory("runner-hist").toString
+    val cat = new ParquetCatalog(spark, root)
+    val runner = new Runner(spark, cat)
+    runner.run(Seq(
+      repoJson(1, "sparky", Seq("spark"), "Scala", 100),
+      repoJson(2, "webby", Seq("react"), "TypeScript", 50)).toDS(), "2024-06-10")
+    val first = cat.manifestFiles("silver_repos", 1).toSet
+    runner.run(Seq(
+      repoJson(1, "sparky", Seq("spark"), "Scala", 900),
+      repoJson(3, "mystery", Seq(), "COBOL", 5)).toDS(), "2024-06-11")
+    assert(cat.history("silver_repos").count() === 2)
+    // silver is rewritten each batch: every first-batch file is superseded
+    val vd = java.nio.file.Paths.get(root, ".versions", "silver_repos")
+    val superseded = first -- cat.manifestFiles("silver_repos", 2)
+    assert(superseded.nonEmpty && superseded.forall(f => Files.exists(vd.resolve(f))),
+      "superseded files stay until vacuum")
+    def rows() = cat.read("silver_repos").collect().map(_.toString).sorted.toSeq
+    val before = rows()
+    cat.vacuum("silver_repos", keep = 1, minAgeMs = 0L)
+    assert(cat.versions("silver_repos") === Seq(2L))
+    assert(superseded.forall(f => !Files.exists(vd.resolve(f))),
+      "vacuum(keep = 1) removes the first batch's files")
+    assert(rows() === before)
+  }
+
   test("every job of a Runner batch carries the caller's local properties") {
     val tags = new ConcurrentLinkedQueue[Option[String]]
     val listener = new SparkListener {

@@ -82,7 +82,7 @@ class StreamingSpec extends SparkSpec {
     val root = java.nio.file.Files.createTempDirectory("stream-idx").toString
     val cat = new graft.storage.ParquetCatalog(spark, root)
     // seed + index BEFORE the stream starts
-    cat.overwrite("ev", Seq((0L, 0.0)).toDF("event_id", "value"))
+    cat.overwriteVersioned("ev", Seq((0L, 0.0)).toDF("event_id", "value"))
     cat.index("ev", Seq("event_id"))
     val input = MemoryStream[Event]
     val query = EventsStream.appendSinkIndexed(
@@ -95,8 +95,7 @@ class StreamingSpec extends SparkSpec {
           Event(b * 100L + i, ts(b * 10 + i), 1, "click", i.toDouble)): _*)
         query.processAllAvailable()
         // after EVERY micro-batch the index covers exactly the live files
-        // (the first batch migrates the table to the versioned layout —
-        // each batch is a manifest commit, so replays are exactly-once)
+        // (each batch is a manifest commit, so replays are exactly-once)
         val stats = SkippingIndex.readAt(cat.statsPath("ev"))
         assert(stats.size == cat.fileCount("ev").toInt,
           s"batch $b: index ${stats.size} entries vs ${cat.fileCount("ev")} files")
@@ -116,7 +115,7 @@ class StreamingSpec extends SparkSpec {
     import graft.storage.SkippingIndex
     val root = java.nio.file.Files.createTempDirectory("replay-idx").toString
     val cat = new graft.storage.ParquetCatalog(spark, root)
-    cat.overwrite("ev", Seq((0L, 0.0)).toDF("event_id", "value"))
+    cat.overwriteVersioned("ev", Seq((0L, 0.0)).toDF("event_id", "value"))
     cat.index("ev", Seq("event_id"))
     val batch = Seq((1L, 1.0), (2L, 2.0)).toDF("event_id", "value")
     // first delivery commits
@@ -251,12 +250,12 @@ class StreamingSpec extends SparkSpec {
       java.nio.file.Files.createTempDirectory("replay-merge").toString)
     val batch = Seq((1L, "click", 1.0), (2L, "view", 2.0))
       .toDF("event_id", "event_type", "value")
-    cat.upsert("events_state", batch, Seq("event_id"))
+    cat.upsertVersioned("events_state", batch, Seq("event_id"))
     val before = cat.read("events_state").orderBy("event_id")
       .as[(Long, String, Double)].collect()
     // the foreachBatch MERGE sink's replay path: same batch, same keys —
     // MERGE semantics make the re-application invisible
-    cat.upsert("events_state", batch, Seq("event_id"))
+    cat.upsertVersioned("events_state", batch, Seq("event_id"))
     assert(cat.read("events_state").orderBy("event_id")
       .as[(Long, String, Double)].collect() === before)
   }
@@ -292,6 +291,45 @@ class StreamingSpec extends SparkSpec {
         .as[(Long, String, Double)].collect()
       assert(out === Seq((1L, "click", 1.0), (2L, "view", 99.0),
         (3L, "click", 3.0)))
+    } finally q2.stop()
+  }
+
+  test("merge sink: a re-delivered batch adds no version") {
+    implicit val sqlCtx = spark.sqlContext
+    val cat = new graft.storage.ParquetCatalog(spark,
+      java.nio.file.Files.createTempDirectory("redeliver-cat").toString)
+    val ckpt = java.nio.file.Files.createTempDirectory("redeliver-ckpt").toString
+    val input = MemoryStream[Event]
+    def start() = EventsStream.mergeSink(
+      input.toDF().select($"event_id", $"event_type", $"value"),
+      cat, "events_state", Seq("event_id"), ckpt)
+    def rows() = cat.read("events_state").orderBy("event_id")
+      .as[(Long, String, Double)].collect().toSeq
+    val q1 = start()
+    try {
+      input.addData(Event(1, ts(0), 1, "click", 1.0),
+        Event(2, ts(1), 1, "view", 2.0))
+      q1.processAllAvailable()
+    } finally q1.stop()
+    val versions = cat.versions("events_state")
+    val before = rows()
+    // a crash after the sink committed batch 0 but before Structured
+    // Streaming recorded it: the restart re-delivers batch 0
+    for (f <- Seq("0", ".0.crc"))
+      java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(ckpt, "commits", f))
+    val q2 = start()
+    try {
+      q2.processAllAvailable()
+      assert(q2.recentProgress.map(_.batchId).contains(0L),
+        "the restart must re-deliver batch 0")
+      assert(cat.versions("events_state") === versions,
+        "a re-delivered batch must commit nothing")
+      assert(rows() === before)
+      // the next batch still commits, as one new version
+      input.addData(Event(2, ts(2), 1, "view", 99.0))
+      q2.processAllAvailable()
+      assert(cat.versions("events_state").size === versions.size + 1)
+      assert(rows() === Seq((1L, "click", 1.0), (2L, "view", 99.0)))
     } finally q2.stop()
   }
 

@@ -31,8 +31,9 @@ class TimeTravelSpec extends SparkSpec {
   }
 
   test("an unversioned table migrates as the first retained version") {
-    val (cat, _) = fresh()
-    cat.overwrite("t", Seq((1L, "old")).toDF("id", "gen"))
+    val (cat, root) = fresh()
+    // the plain directory an older build wrote
+    Seq((1L, "old")).toDF("id", "gen").write.parquet(s"$root/t")
     val ver = cat.overwriteVersioned("t", Seq((1L, "new")).toDF("id", "gen"))
     assert(ver == 2 && cat.versions("t") == Seq(1L, 2L))
     assert(cat.readVersion("t", 1).head().getString(1) == "old")
@@ -184,9 +185,9 @@ class TimeTravelSpec extends SparkSpec {
   }
 
   test("versioned upsert migrates an unversioned table; vacuum keeps shared files") {
-    val (cat, _) = fresh()
-    cat.overwrite("t", Seq((1L, "d1", 1.0), (2L, "d2", 2.0))
-      .toDF("id", "day", "m"), Seq("day"))
+    val (cat, root) = fresh()
+    Seq((1L, "d1", 1.0), (2L, "d2", 2.0)).toDF("id", "day", "m")
+      .write.partitionBy("day").parquet(s"$root/t")
     val v = cat.upsertVersioned("t", Seq((2L, "d2", 20.0)).toDF("id", "day", "m"),
       Seq("id"), partitionBy = Seq("day"))
     assert(v == 2 && cat.versions("t") == Seq(1L, 2L))
@@ -327,9 +328,9 @@ class TimeTravelSpec extends SparkSpec {
     cat.overwriteVersioned("t", Seq(
       (1L, "d1", 1.0), (2L, "d2", 2.0), (3L, "d3", 3.0))
       .toDF("id", "day", "m"), Seq("day"))
-    // replace ONLY d2 via the routed overwritePartitions entry point
-    cat.overwritePartitions("t", Seq((99L, "d2", 99.0)).toDF("id", "day", "m"),
-      Seq("day"))
+    // replace ONLY d2
+    cat.overwritePartitionsVersioned("t",
+      Seq((99L, "d2", 99.0)).toDF("id", "day", "m"), Seq("day"))
     assert(cat.versions("t") == Seq(1L, 2L))
     assert(cat.read("t").select($"id").as[Long].collect().sorted
       === Seq(1L, 3L, 99L))
@@ -370,7 +371,7 @@ class TimeTravelSpec extends SparkSpec {
     cat.overwriteVersioned("t", Seq((0L, 0.0)).toDF("id", "m"))
     // writer failures must surface HERE, not as a mystery row-count
     // mismatch below (the age-guard regression this test caught hid as
-    // one: vacuum's debris sweep deleted the live writer's .stage- dir
+    // one: vacuum's debris sweep deleted the live writer's staging dir
     // mid-write, killing the thread silently)
     val errs = java.util.concurrent.ConcurrentHashMap.newKeySet[Throwable]()
     val writer = new Thread(() => {
@@ -542,7 +543,6 @@ class TimeTravelSpec extends SparkSpec {
   }
 
   test("compactPartition collapses one partition's files, re-references the rest") {
-    import scala.jdk.CollectionConverters._
     val (cat, root) = fresh()
     cat.overwriteVersioned("t",
       Seq((0L, "d1", 0.0), (100L, "d2", 1.0), (200L, "d3", 2.0))
@@ -576,50 +576,22 @@ class TimeTravelSpec extends SparkSpec {
       .orderBy("id").as[(Long, String, Double)].collect() === content)
     // the pre-compaction version still reads (write-once files)
     assert(cat.readVersion("t", before.version).count() === content.length)
-    // in-place tier: dynamic overwrite of just the spec'd partition
-    val (cat2, root2) = fresh()
-    cat2.overwrite("t", Seq((1L, "d1", 1.0), (2L, "d2", 2.0))
-      .toDF("id", "day", "m"), Seq("day"))
-    (3 to 7).foreach { i =>
-      cat2.append("t", Seq((i.toLong, "d1", i * 1.0)).toDF("id", "day", "m")
-        .coalesce(1))
-    }
-    val d2Before = {
-      val s = Files.list(Paths.get(root2, "t", "day=d2"))
-      try s.iterator().asScala.filter(_.toString.endsWith(".parquet"))
-        .map(p => (p.getFileName.toString, Files.getLastModifiedTime(p).toMillis))
-        .toList.sorted
-      finally s.close()
-    }
-    cat2.compactPartition("t", rowsPerFile = 1000, Seq("day" -> "d1"))
-    val d1Files = {
-      val s = Files.list(Paths.get(root2, "t", "day=d1"))
-      try s.iterator().asScala.count(_.toString.endsWith(".parquet"))
-      finally s.close()
-    }
-    assert(d1Files === 1)
-    val d2After = {
-      val s = Files.list(Paths.get(root2, "t", "day=d2"))
-      try s.iterator().asScala.filter(_.toString.endsWith(".parquet"))
-        .map(p => (p.getFileName.toString, Files.getLastModifiedTime(p).toMillis))
-        .toList.sorted
-      finally s.close()
-    }
-    assert(d2After === d2Before, "other partitions must be untouched")
-    assert(cat2.read("t").count() === 7)
   }
 
   test("a crashed migration (data moved, manifest never committed) recovers") {
     val (cat, root) = fresh()
-    cat.overwrite("t", Seq((1L, "d1", 1.0), (2L, "d2", 2.0))
-      .toDF("id", "day", "m"), Seq("day"))
-    // simulate the crash window: the table dir was moved into the
-    // versioned data tree but the v1 manifest was never written
+    Seq((1L, "d1", 1.0), (2L, "d2", 2.0)).toDF("id", "day", "m")
+      .write.partitionBy("day").parquet(s"$root/t")
+    // simulate the crash window: the migration wrote its marker and
+    // moved the table dir into the versioned data tree, but the v1
+    // manifest was never written
     val vd = Paths.get(root, ".versions", "t")
     Files.createDirectories(vd)
+    Files.writeString(vd.resolve(".migrating"), Paths.get(root, "t").toString)
     Files.move(Paths.get(root, "t"), vd.resolve("data"))
-    assert(cat.versions("t").isEmpty)
-    // the next versioned entry point must finish the migration, not wedge
+    // the next touch of the name (here: listing its versions) must
+    // finish the migration, not wedge
+    assert(cat.versions("t") == Seq(1L))
     val v = cat.upsertVersioned("t", Seq((2L, "d2", 20.0)).toDF("id", "day", "m"),
       Seq("id"), partitionBy = Seq("day"))
     assert(v == 2 && cat.versions("t") == Seq(1L, 2L))
@@ -662,8 +634,9 @@ class TimeTravelSpec extends SparkSpec {
   }
 
   test("history records every commit's operation from manifest metadata") {
-    val (cat, _) = fresh()
-    cat.overwrite("t", Seq((1L, "d1", 1.0)).toDF("id", "day", "m"), Seq("day"))
+    val (cat, root) = fresh()
+    Seq((1L, "d1", 1.0)).toDF("id", "day", "m")
+      .write.partitionBy("day").parquet(s"$root/t")
     cat.upsertVersioned("t", Seq((2L, "d2", 2.0)).toDF("id", "day", "m"),
       Seq("id"), partitionBy = Seq("day"))
     cat.deleteVersioned("t", col("id") === 1L, Seq("day"))
@@ -726,18 +699,6 @@ class TimeTravelSpec extends SparkSpec {
     // version chain is gapless and every commit is exactly one writer's
     assert(cat.versions("t") === (1L to cat.currentVersion("t")))
     assert(cat.currentVersion("t") === 13L) // 1 seed + 12 committed upserts
-  }
-
-  test("unversioned entry points keep working on a versioned table (routed)") {
-    val (cat, _) = fresh()
-    cat.overwriteVersioned("t", Seq.tabulate(50)(i => (i.toLong, i * 2L)).toDF("id", "v"))
-    // upsert routes to the versioned path and retains history
-    cat.upsert("t", Seq((0L, 999L), (100L, 1L)).toDF("id", "v"), Seq("id"))
-    val out = cat.read("t")
-    assert(out.count() == 51)
-    assert(out.filter(col("id") === 0).head().getLong(1) == 999L)
-    assert(cat.versions("t") == Seq(1L, 2L))
-    assert(cat.readVersion("t", 1).filter(col("id") === 0).head().getLong(1) == 0L)
   }
 
   test("commit timestamps are stamped strictly monotonic across every verb") {

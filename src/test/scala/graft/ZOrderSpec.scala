@@ -52,8 +52,8 @@ class ZOrderSpec extends SparkSpec {
       .select((col("id") % 256).cast("long").as("a"),
         (col("id") / 256).cast("long").as("b"),
         col("id").as("payload"))
-    cat.overwrite("lex", df)
-    cat.overwrite("zord", df)
+    cat.overwriteVersioned("lex", df)
+    cat.overwriteVersioned("zord", df)
     cat.compact("lex", rowsPerFile = 4096, clusterBy = Seq("a", "b"))
     cat.compact("zord", rowsPerFile = 4096, zorderBy = Seq("a", "b"))
     assert(cat.read("zord").count() === 65536L) // layout never changes data
