@@ -72,6 +72,7 @@ private[storage] final case class PartSlot(values: Seq[Any], relPath: String)
 final class ParquetCatalog(spark: SparkSession, root: String,
     codec: String = "zstd", bloomFor: Seq[String] = Nil,
     bloomNdv: Long = 100000L) {
+  import ParquetCatalog.{Append, Carry, FastForward, FileSet, Listed, Restage, Staged}
 
   /** Every catalog parquet read goes through here: column mapping
     * rides parquet FIELD IDs, resolved by
@@ -259,7 +260,8 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     stats.flatMap(_.cols.map(_.column)).distinct.sorted
   }
 
-  /** Incrementally reconcile the index with the table's current files.
+  /** Incrementally reconcile the index with the table's current files
+    * — [[commit]] runs it after every version it creates.
     * No-op for unindexed tables UNLESS the table declares
     * `graft.indexFor` — then the first reconcile CREATES the index on
     * the declared columns, making a pure-SQL table lifecycle
@@ -407,7 +409,8 @@ final class ParquetCatalog(spark: SparkSession, root: String,
       if (pb.forall(keys.contains)) srcParts
       else {
         val matchable = matchScanFrame(name, source, keys, target)
-        val srcKeys = source.select(keys.map(col): _*).distinct()
+        // a semi join needs no de-duplicated build side
+        val srcKeys = source.select(keys.map(col): _*)
         val cond = keys.map(k => matchable(k) <=> srcKeys(k)).reduce(_ && _)
         srcParts.unionByName(
           matchable.join(broadcast(srcKeys), cond, "left_semi")
@@ -703,8 +706,6 @@ final class ParquetCatalog(spark: SparkSession, root: String,
       // disabled automatic distribution
       overwriteVersioned(name, df, layoutCols, orderWithinCells = ord,
         forceDistribute = true, identitySplits = false)
-      val prior = indexCols(name)
-      if (prior.nonEmpty) index(name, prior)
       return
     }
     val n = df.count()
@@ -728,8 +729,6 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     val ord = if (zBy.nonEmpty) Seq(zk) else cBy.map(col)
     overwriteVersioned(name, repart, layoutCols, orderWithinCells = ord,
       identitySplits = false)
-    val prior = indexCols(name)
-    if (prior.nonEmpty) index(name, prior)
   }
 
   /** Partition-scoped [[compact]] — the 100 TB maintenance shape: a
@@ -754,11 +753,7 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     val n = slice.count()
     if (n == 0) return
     val files = math.max(1, math.ceil(n.toDouble / rowsPerFile).toInt)
-    val touched = partitionsOf(slice, m.partitionBy)
-    val touchedRel = touched.map(_.relPath).toSet
-    val carried = m.files.filterNot(f =>
-      touchedRel.contains(TableManifest.partitionComponent(f)))
-    val next = m.version + 1
+    val touchedRel = partitionsOf(slice, m.partitionBy).map(_.relPath).toSet
     // write-once versions: staging reads the still-live current
     // files. Under a bucketed layout stage() distributes by the
     // layout cells itself (one file per cell, declared cluster sort
@@ -769,13 +764,11 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     val bucketedLay = m.partitionBy.exists(
       _.equalsIgnoreCase(ParquetCatalog.BucketPartCol))
     val sliceIn = if (bucketedLay) slice else slice.repartition(files)
-    val rels = stage(name, sliceIn, m.partitionBy, next,
+    val st = stage(name, sliceIn, m.partitionBy, m.version + 1,
       forceDistribute = bucketedLay, identitySplits = false)
-    val meta = Map("op" -> "compact") ++ carriedMeta(m) ++
-      propagatedSchema(m) ++ touchedMeta(touchedRel)
-    commitOrClean(name, TableManifest(next, m.partitionBy, meta,
-      carried ++ rels), rels)
-    refreshIndex(name)
+    commit(name, Some(m), m.partitionBy, carryOutside(touchedRel),
+      Map("op" -> "compact") ++ touchedMeta(touchedRel), st)
+    ()
   }
 
   private def rowDouble(r: org.apache.spark.sql.Row, i: Int): Double =
@@ -1103,21 +1096,6 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     }.toMap
   }
 
-  /** Ids assigned by [[stage]], consumed by [[commitOrClean]] for the
-    * same (table, version) commit — the staged files' footers and the
-    * manifest's `colid.` entries must describe the same assignment.
-    * THREAD-LOCAL: stage and its commit run synchronously on the
-    * caller's thread, and two concurrent writers staging the SAME next
-    * version must each hand their OWN assignment to their own commit —
-    * a shared map keyed (table, version) would let the CAS winner
-    * commit the loser's ids over footers written with different
-    * ones. */
-  private val pendingColIds =
-    new ThreadLocal[Map[(String, Long), Map[String, Int]]] {
-      override def initialValue(): Map[(String, Long), Map[String, Int]] =
-        Map.empty
-    }
-
   /** The schema a manifest recorded for its (possibly heterogeneous)
     * file set, when one was recorded — with the column-mapping field
     * ids re-attached once the table's mapping is active, so every read
@@ -1137,7 +1115,7 @@ final class ParquetCatalog(spark: SparkSession, root: String,
   // Readers anti-filter through the positions (parquet's stable
   // `_metadata.row_index`), so the data files never move; compaction /
   // OPTIMIZE materializes the deletes and sheds the vectors (the
-  // commit funnel prunes pointers for files a rewrite dropped). Every
+  // commit routine prunes pointers for files a rewrite dropped). Every
   // sidecar holds each touched file's COMPLETE deletion set as of its
   // commit — pointer flips are atomic with the manifest CAS, time
   // travel reads each version under its own pointer map, and restore
@@ -1334,19 +1312,12 @@ final class ParquetCatalog(spark: SparkSession, root: String,
         throw new IllegalStateException(
           s"probe surfaced file '$b' absent from $name v${m.version}")))
       val sidecarRel = writeDvSidecar(name, m, next, newPos, touchedRels)
-      val meta = Map("op" -> "delete",
-        "bytesAdded" -> Files.size(versionsDir(name).resolve(sidecarRel)).toString) ++
-        carriedMeta(m) ++ propagatedSchema(m) ++
-        touchedMeta(touchedRels.map(TableManifest.partitionComponent).toSet) ++
-        touchedRels.map(r => dvKeyOf(r) -> sidecarRel)
-      try commitManifest(name,
-        TableManifest(next, m.partitionBy, meta, m.files))
-      catch {
-        case e: ConcurrentWriteException =>
-          Files.deleteIfExists(versionsDir(name).resolve(sidecarRel))
-          throw e
-      }
-      (next, removed)
+      val v = commit(name, Some(m), m.partitionBy, CarryAll,
+        Map("op" -> "delete") ++
+          touchedMeta(touchedRels.map(TableManifest.partitionComponent).toSet) ++
+          touchedRels.map(r => dvKeyOf(r) -> sidecarRel),
+        Staged(sidecars = Seq(sidecarRel)))
+      (v, removed)
     } finally {
       newPos.unpersist()
       ()
@@ -1412,28 +1383,19 @@ final class ParquetCatalog(spark: SparkSession, root: String,
       val images = matched.select(dataCols.map(c =>
         resolved.get(c).fold(col(c))(v =>
           v.cast(matched.schema(c).dataType).as(c))): _*)
-      val rels = stage(name, images, m.partitionBy, next)
+      val st = stage(name, images, m.partitionBy, next)
       // the vectored-out OLD positions (matched rows are live by
       // construction, so each touched file's set strictly grows)
       val newPos = matched
         .select(col("__graft_dv_file").as("fileb"), col("__graft_dv_pos").as("pos"))
       val sidecarRel = writeDvSidecar(name, m, next, newPos, touchedRels)
-      val meta = Map("op" -> "update") ++
-        carriedMeta(m) ++ propagatedSchema(m) ++
-        touchedMeta(touchedRels.map(TableManifest.partitionComponent).toSet ++
-          rels.map(TableManifest.partitionComponent)) ++
-        touchedRels.map(r => dvKeyOf(r) -> sidecarRel)
-      try commitStaged(name,
-        TableManifest(next, m.partitionBy, meta, m.files ++ rels), rels)
-      catch {
-        case e: ConcurrentWriteException =>
-          Files.deleteIfExists(versionsDir(name).resolve(sidecarRel))
-          rels.foreach(r => Files.deleteIfExists(versionsDir(name).resolve(r)))
-          pendingColIds.set(pendingColIds.get - ((name, next)))
-          throw e
-      }
-      refreshIndex(name)
-      (next, updated)
+      val v = commit(name, Some(m), m.partitionBy, CarryAll,
+        Map("op" -> "update") ++
+          touchedMeta(touchedRels.map(TableManifest.partitionComponent).toSet ++
+            st.parts) ++
+          touchedRels.map(r => dvKeyOf(r) -> sidecarRel),
+        st.copy(sidecars = Seq(sidecarRel)))
+      (v, updated)
     } finally {
       matched.unpersist()
       ()
@@ -1504,24 +1466,10 @@ final class ParquetCatalog(spark: SparkSession, root: String,
       col(c).cast(imgType(c)).as(c)): _*)
     if (insertOnly || live.isEmpty) {
       // WHEN NOT MATCHED INSERT only — matched rows keep the target row
-      val rels = stage(name, inserts, m.partitionBy, next)
-      if (rels.isEmpty) {
-        pendingColIds.set(pendingColIds.get - ((name, next)))
-        return m.version
-      }
-      val meta = Map("op" -> "merge") ++ carriedMeta(m) ++
-        propagatedSchema(m) ++ tokenMeta(batchToken) ++
-        touchedMeta(rels.map(TableManifest.partitionComponent).toSet)
-      try commitStaged(name,
-        TableManifest(next, m.partitionBy, meta, m.files ++ rels), rels)
-      catch {
-        case e: ConcurrentWriteException =>
-          rels.foreach(r => Files.deleteIfExists(versionsDir(name).resolve(r)))
-          pendingColIds.set(pendingColIds.get - ((name, next)))
-          throw e
-      }
-      refreshIndex(name)
-      return next
+      val st = stage(name, inserts, m.partitionBy, next)
+      if (st.files.isEmpty) return m.version
+      return commit(name, Some(m), m.partitionBy, CarryAll,
+        Map("op" -> "merge") ++ tokenMeta(batchToken) ++ touchedMeta(st.parts), st)
     }
     val lv = live.get
     val matched = lv.alias("t").join(source.alias("s"),
@@ -1535,38 +1483,24 @@ final class ParquetCatalog(spark: SparkSession, root: String,
            .getOrElse(col(s"s.$c"))).cast(imgType(c)).as(c)): _*)
       val images =
         if (touchedBases.isEmpty) inserts else matchImages.unionByName(inserts)
-      val rels = stage(name, images, m.partitionBy, next)
-      if (touchedBases.isEmpty && rels.isEmpty) {
-        pendingColIds.set(pendingColIds.get - ((name, next)))
-        return m.version
-      }
+      val st = stage(name, images, m.partitionBy, next)
+      if (touchedBases.isEmpty && st.files.isEmpty) return m.version
       val touchedRels = touchedBases.map(b => relOfBase.getOrElse(b,
         throw new IllegalStateException(
           s"match scan surfaced file '$b' absent from $name v${m.version}")))
-      val dvMeta =
-        if (touchedBases.isEmpty) Map.empty[String, String]
+      val sidecar =
+        if (touchedBases.isEmpty) None
         else {
           val newPos = matched.select(col("__graft_dv_file").as("fileb"),
             col("__graft_dv_pos").as("pos"))
-          val sidecarRel = writeDvSidecar(name, m, next, newPos, touchedRels)
-          touchedRels.map(r => dvKeyOf(r) -> sidecarRel).toMap
+          Some(writeDvSidecar(name, m, next, newPos, touchedRels))
         }
-      val meta = Map("op" -> "merge") ++ carriedMeta(m) ++
-        propagatedSchema(m) ++ tokenMeta(batchToken) ++
-        touchedMeta(touchedRels.map(TableManifest.partitionComponent).toSet ++
-          rels.map(TableManifest.partitionComponent)) ++ dvMeta
-      try commitStaged(name,
-        TableManifest(next, m.partitionBy, meta, m.files ++ rels), rels)
-      catch {
-        case e: ConcurrentWriteException =>
-          dvMeta.values.toSeq.distinct.foreach(r =>
-            Files.deleteIfExists(versionsDir(name).resolve(r)))
-          rels.foreach(r => Files.deleteIfExists(versionsDir(name).resolve(r)))
-          pendingColIds.set(pendingColIds.get - ((name, next)))
-          throw e
-      }
-      refreshIndex(name)
-      next
+      commit(name, Some(m), m.partitionBy, CarryAll,
+        Map("op" -> "merge") ++ tokenMeta(batchToken) ++
+          touchedMeta(touchedRels.map(TableManifest.partitionComponent).toSet ++
+            st.parts) ++
+          sidecar.toSeq.flatMap(s => touchedRels.map(r => dvKeyOf(r) -> s)),
+        st.copy(sidecars = sidecar.toSeq))
     } finally {
       matched.unpersist()
       ()
@@ -1608,8 +1542,8 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     if (rewriteRels.isEmpty && sidecars.size <= 1) return (m.version, 0)
     val keepRels = vectoredRels.filterNot(rewriteRels.contains)
     // materialize the above-threshold files' LIVE rows as new files
-    val rels =
-      if (rewriteRels.isEmpty) Nil
+    val st =
+      if (rewriteRels.isEmpty) Staged()
       else {
         val abs = rewriteRels.map(r => vd.resolve(r).toString)
         val raw = catLoad(recordedSchema(m), abs, partBase(name, m))
@@ -1618,34 +1552,24 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     // ONE coalesced sidecar carrying the kept files' (unchanged) sets:
     // writeDvSidecar unions the prior sidecars' positions with an empty
     // new-position frame
-    val dvMeta =
-      if (keepRels.isEmpty) Map.empty[String, String]
+    val sidecar =
+      if (keepRels.isEmpty) None
       else {
         val emptyPos = spark.createDataFrame(
           new java.util.ArrayList[org.apache.spark.sql.Row](),
           StructType(Seq(
             org.apache.spark.sql.types.StructField("fileb", StringType),
             org.apache.spark.sql.types.StructField("pos", LongType))))
-        val sidecarRel = writeDvSidecar(name, m, next, emptyPos, keepRels)
-        keepRels.map(r => dvKeyOf(r) -> sidecarRel).toMap
+        Some(writeDvSidecar(name, m, next, emptyPos, keepRels))
       }
-    val files = m.files.filterNot(rewriteRels.contains) ++ rels
-    val meta = Map("op" -> "reorg") ++
-      (carriedMeta(m) -- entries.keys.map(dvKeyOf)) ++ propagatedSchema(m) ++
-      dvMeta ++
-      touchedMeta(vectoredRels.map(TableManifest.partitionComponent).toSet ++
-        rels.map(TableManifest.partitionComponent))
-    try commitStaged(name, TableManifest(next, m.partitionBy, meta, files), rels)
-    catch {
-      case e: ConcurrentWriteException =>
-        dvMeta.values.toSeq.distinct.foreach(r =>
-          Files.deleteIfExists(vd.resolve(r)))
-        rels.foreach(r => Files.deleteIfExists(vd.resolve(r)))
-        pendingColIds.set(pendingColIds.get - ((name, next)))
-        throw e
-    }
-    refreshIndex(name)
-    (next, rewriteRels.size)
+    val rewritten = rewriteRels.toSet
+    val v = commit(name, Some(m), m.partitionBy, Carry(f => !rewritten(f)),
+      Map("op" -> "reorg") ++
+        sidecar.toSeq.flatMap(s => keepRels.map(r => dvKeyOf(r) -> s)) ++
+        touchedMeta(vectoredRels.map(TableManifest.partitionComponent).toSet ++
+          st.parts),
+      st.copy(sidecars = sidecar.toSeq), cleared = entries.keys.map(dvKeyOf))
+    (v, rewriteRels.size)
   }
 
   // ---- table properties ----------------------------------------------
@@ -1721,14 +1645,11 @@ final class ParquetCatalog(spark: SparkSession, root: String,
       value: String): Long = {
     require(key.nonEmpty && !value.contains('\n'),
       "property needs a key and a line-safe value")
+    // a newly declared graft.indexFor takes effect NOW: the commit's
+    // index refresh builds it (one footer pass over the current files)
     val m = currentManifest(name)
-    val meta = Map("op" -> "setProperty", "bytesAdded" -> "0") ++
-      carriedMeta(m) ++ propagatedSchema(m) + (propKey(key) -> value)
-    commitManifest(name, TableManifest(m.version + 1, m.partitionBy, meta, m.files))
-    // a newly declared graft.indexFor takes effect NOW (one footer
-    // pass over the current files), not at the next data commit
-    if (key == ParquetCatalog.IndexForProp) refreshIndex(name)
-    m.version + 1
+    commit(name, Some(m), m.partitionBy, CarryAll,
+      Map("op" -> "setProperty", propKey(key) -> value))
   }
 
   /** Remove a table property — one metadata commit. An absent key
@@ -1743,10 +1664,8 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     val m = currentManifest(name)
     if (ifExists && !m.meta.contains(propKey(key))) return m.version
     require(m.meta.contains(propKey(key)), s"no property '$key' on $name")
-    val meta = Map("op" -> "unsetProperty", "bytesAdded" -> "0") ++
-      (carriedMeta(m) - propKey(key)) ++ propagatedSchema(m)
-    commitManifest(name, TableManifest(m.version + 1, m.partitionBy, meta, m.files))
-    m.version + 1
+    commit(name, Some(m), m.partitionBy, CarryAll, Map("op" -> "unsetProperty"),
+      cleared = Seq(propKey(key)))
   }
 
   /** The table's properties (empty when the table does not exist). */
@@ -1765,123 +1684,141 @@ final class ParquetCatalog(spark: SparkSession, root: String,
   private def dvEnabled(m: TableManifest): Boolean =
     m.meta.get(propKey(ParquetCatalog.DeletionVectorsProp)).contains("true")
 
-  // ---- logical conflict detection (disjoint-writer fast-forward) -----
+  // ---- the commit routine ------------------------------------------
   //
-  // Delta's conflict checker: two optimistic writers whose commits
-  // touch DISJOINT partitions do not actually conflict — the CAS loser
-  // should not have to re-read and re-stage. Partition-scoped verbs
-  // record the partition components they rewrote as `touched` meta
-  // (pure appends record the partitions they added into; full
-  // restages, ALTERs, and legacy commits record nothing = "anything").
-  // On a lost CAS, [[fastForwardScoped]] re-commits the loser's
-  // already-staged files on top of the winner when every interleaved
-  // commit declared a disjoint set and left layout, recorded schema,
-  // column mapping, and constraints untouched — otherwise the normal
-  // full retry runs.
+  // Every catalog write commits through [[commit]]: the one place that
+  // states the transaction protocol (docs/COMMIT_PROTOCOL.md). A verb
+  // stages its files ([[stage]] returns a [[Staged]]), then hands
+  // `commit` its base version, how the new file list derives from that
+  // base ([[FileSet]]) and its own meta (op, batch token, touched
+  // footprint, the keys only it knows). `commit` derives everything
+  // else a version records, creates the manifest by compare-and-swap,
+  // handles a lost race, and refreshes the skipping index.
 
-  /** The partition components a commit rewrote/added into: Some(set)
-    * when declared, None = could be anything (conservative). */
-  private def touchedOf(m: TableManifest): Option[Set[String]] =
-    m.meta.get("touched").map { v =>
-      if (v.isEmpty) Set.empty[String]
-      else v.split(',').map(java.net.URLDecoder.decode(_, "UTF-8")).toSet
-    }
+  private val CarryAll = Carry(_ => true)
 
-  private def touchedMeta(comps: Set[String]): Map[String, String] =
-    Map("touched" -> comps.toSeq.sorted
-      .map(java.net.URLEncoder.encode(_, "UTF-8")).mkString(","))
+  /** Every file restaged, but the base's recorded schema still holds —
+    * the whole-table UPDATE and sync restages. */
+  private val RestageKeepingSchema = Carry(_ => false)
 
-  /** Meta a fast-forward must see UNCHANGED across every interleaved
-    * commit: recorded schema, column mapping, CHECK constraints (a new
-    * constraint must re-validate our staged rows), and the layout. */
-  private def ffGuardMeta(m: TableManifest): (Seq[String], Option[String],
-      Option[String], Map[String, String]) =
-    (m.partitionBy, m.meta.get("schema"), m.meta.get("colmap"),
-      m.meta.filter(_._1.startsWith(ConstraintPrefix)))
+  /** Every base file outside the partition components `parts`. */
+  private def carryOutside(parts: Set[String]): Carry =
+    Carry(f => !parts.contains(TableManifest.partitionComponent(f)))
 
-  /** Fast-forward a partition-scoped commit whose CAS lost: when every
-    * commit since `base` declared a touched set DISJOINT from ours and
-    * changed nothing a restage would have observed, our staged files
-    * re-commit on top of the winner VERBATIM — neither writer
-    * re-stages. Returns the committed version; None = not provably
-    * disjoint (the staged files are cleaned and the caller re-runs the
-    * full optimistic retry).
-    *
-    * `mergeReadGuard` (keys, distinct source-key frame): a keyed MERGE's
-    * correctness depends on its READ set — every row matching a source
-    * key, wherever it lives — not just its write footprint. Partition
-    * disjointness alone admits a non-serializable interleaving: two
-    * merges each inserting the SAME new key into different partitions
-    * both land, duplicating the key (no serial order produces that —
-    * the second merge would have MATCHED the first's row). Delta raises
-    * ConcurrentAppendException here. So a merge loser additionally
-    * scans ONLY the files the interleaved window ADDED for its key
-    * domain; any hit refuses the fast-forward (conservative — the full
-    * optimistic retry re-reads and re-merges). Rows the window REMOVED
-    * are safe to slide past: a removed row in a disjoint partition was
-    * never matched by us (a match would have made its partition part
-    * of our footprint), so winner-then-loser serial order reproduces
-    * the fast-forwarded state exactly. */
-  private def fastForwardScoped(name: String, base: TableManifest,
-      pb: Seq[String], op: String, touchedRel: Set[String],
-      rels: Seq[String], extraMeta: Map[String, String],
-      addedInto: Set[String] = Set.empty,
-      mergeReadGuard: Option[(Seq[String], DataFrame)] = None): Option[Long] = {
-    // the full FOOTPRINT (rewritten ∪ added-into partitions) is what
-    // disjointness and the declared set must cover — a partition-moving
-    // UPDATE adds files into partitions it never rewrote, and an
-    // interleaved writer there IS a conflict. Only the REWRITTEN set
-    // drops files from carried: added-into partitions keep the
-    // winner's files and merely gain ours.
-    val footprint = touchedRel ++ addedInto
-    // take over the staged colid handoff ONCE — commitStaged pops its
-    // entry per attempt, so it is re-seeded under each candidate version
-    val stagedIds = pendingColIds.get.get((name, base.version + 1))
-    pendingColIds.set(pendingColIds.get - ((name, base.version + 1)))
-    def giveUp(): None.type = {
-      rels.foreach(r => Files.deleteIfExists(versionsDir(name).resolve(r)))
-      None
-    }
-    val guard = ffGuardMeta(base)
-    var attempts = 0
-    while (attempts < 5) {
-      attempts += 1
-      val w = currentManifest(name)
-      if (w.version <= base.version) return giveUp()
-      val clean =
-        try ((base.version + 1) to w.version).forall { v =>
-          val mv = manifest(name, v)
-          touchedOf(mv).exists(_.intersect(footprint).isEmpty) &&
-            ffGuardMeta(mv) == guard
-        } catch { case _: IllegalArgumentException => false } // vacuumed window
-      if (!clean) return giveUp()
-      val readClear = mergeReadGuard.forall { case (keys, srcKeys) =>
-        val added = (w.files.toSet -- base.files.toSet).toSeq.sorted
-        added.isEmpty || {
-          val probe = readFileSubset(name, w, added, None)
-          val cond = keys.map(k => probe(k) <=> srcKeys(k)).reduce(_ && _)
-          probe.join(broadcast(srcKeys), cond, "left_semi").isEmpty
-        }
+  /** THE commit: derive version `base + 1` (1 for a new table) from the
+    * verb's file set, staged value and meta, create its manifest by
+    * compare-and-swap, and refresh the skipping index. On a lost race a
+    * `ff` commit tries [[fastForward]]; otherwise — or when that gives
+    * up — the staged files and sidecars are deleted and the
+    * [[ConcurrentWriteException]] propagates, so nothing of a failed
+    * commit ever becomes visible. `cleared` names base meta keys the
+    * verb drops. Returns the committed version. */
+  private def commit(name: String, base: Option[TableManifest],
+      pb: Seq[String], files: FileSet, meta: Map[String, String],
+      st: Staged = Staged(), cleared: Iterable[String] = Nil,
+      ff: Option[FastForward] = None): Long = {
+    val m = manifestOn(name, base, pb, files, meta, st, cleared)
+    val version =
+      try { createManifest(name, m); m.version }
+      catch {
+        case e: ConcurrentWriteException =>
+          ff.flatMap(g => fastForward(name, base.get, pb, files, meta, st,
+            cleared, g)).getOrElse {
+            (st.files ++ st.sidecars).foreach(r =>
+              Files.deleteIfExists(versionsDir(name).resolve(r)))
+            throw e
+          }
       }
-      if (!readClear) return giveUp()
-      val next = w.version + 1
-      stagedIds.foreach(ids =>
-        pendingColIds.set(pendingColIds.get + ((name, next) -> ids)))
-      val carried = w.files.filterNot(f =>
-        touchedRel.contains(TableManifest.partitionComponent(f)))
-      val meta = Map("op" -> op) ++ carriedMeta(w) ++ propagatedSchema(w) ++
-        extraMeta ++ touchedMeta(footprint)
-      try {
-        commitStaged(name, TableManifest(next, pb, meta, carried ++ rels), rels)
-        refreshIndex(name)
-        return Some(next)
-      } catch {
-        case _: ConcurrentWriteException =>
-        // raced again: loop re-reads the new winner; the staged files
-        // are still ours to commit (commitStaged never cleans)
-      }
+    refreshIndex(name)
+    version
+  }
+
+  /** The manifest a commit on top of `base` records. Beyond the verb's
+    * own `meta` (applied last, so it wins) it carries:
+    *   - [[carriedMeta]] of the base minus `cleared` — the txn
+    *     registry, constraints, properties, column ids, dropped-name
+    *     markers and deletion-vector pointers; a full restage (every
+    *     listed file staged here) carries no old bytes, so its dropped-
+    *     name markers clear;
+    *   - the base's recorded `schema` when the file set carries base
+    *     files ([[Carry]], [[Append]]) — carried files may predate an
+    *     evolution and lack its columns; a zero-file version records the
+    *     staged frame's schema instead, so it stays readable;
+    *   - `bytesAdded`, the bytes of the staged files and sidecars (so
+    *     streaming admission budgets from the manifest alone), and the
+    *     staged footers' `colid.` assignments with the `colidmax`
+    *     high-water;
+    *   - the monotonic `ts` ([[stampTs]]).
+    * A self-contained manifest sheds the deletion-vector pointers of
+    * files it no longer lists — how compaction "materializes" deletes
+    * with no per-verb code; a delta only adds files, so its carried
+    * pointers stay valid. */
+  private def manifestOn(name: String, base: Option[TableManifest],
+      pb: Seq[String], files: FileSet, meta: Map[String, String],
+      st: Staged, cleared: Iterable[String]): TableManifest = {
+    val version = base.fold(1L)(_.version + 1)
+    val prior = base.toSeq.flatMap(_.files)
+    val listed = files match {
+      case Restage => st.files
+      case Carry(keep) => prior.filter(keep) ++ st.files
+      case Append => prior ++ st.files
+      case Listed(fs) => fs
     }
-    giveUp()
+    val baseSchema = files match {
+      case Carry(_) | Append => base.flatMap(_.meta.get("schema"))
+      case _ => None
+    }
+    val schema =
+      if (listed.isEmpty) st.schema.map(_.toDDL).orElse(baseSchema) else baseSchema
+    val carried0 = base.fold(Map.empty[String, String])(carriedMeta) -- cleared
+    val staged = st.files.toSet
+    val carried =
+      if (listed.forall(staged)) carried0.filterNot(_._1.startsWith(DroppedPrefix))
+      else carried0
+    val bytes = (st.files ++ st.sidecars).map { r =>
+      try Files.size(versionsDir(name).resolve(r))
+      catch { case _: Exception => 0L }
+    }.sum
+    val ids =
+      if (st.files.isEmpty) Map.empty[String, String]
+      else st.colIds.map { case (c, i) => colIdKey(c) -> i.toString } +
+        ("colidmax" -> math.max(carried.get("colidmax").map(_.toInt).getOrElse(0),
+          st.colIds.values.max).toString)
+    val all = carried ++ schema.map("schema" -> _) +
+      ("bytesAdded" -> bytes.toString) ++ meta ++ ids
+    val delta = files == Append && base.exists(b =>
+      chainDepth(name, b.version) < ParquetCatalog.SnapshotInterval - 1)
+    val m =
+      if (delta) TableManifest(version, pb, all, st.files, base = base.map(_.version))
+      else {
+        val fs = listed.toSet
+        TableManifest(version, pb, all.filterNot { case (k, _) =>
+          k.startsWith(DvPrefix) &&
+            !fs.contains(java.net.URLDecoder.decode(k.drop(DvPrefix.length), "UTF-8"))
+        }, listed)
+      }
+    stampTs(name, m)
+  }
+
+  /** CAS: atomically create `vN.manifest` from a fully-written temp
+    * file. Exactly one writer can create a given N; the loser gets
+    * [[ConcurrentWriteException]]. Locally the create-exclusive
+    * primitive is `Files.createLink` (atomic, content-complete); on
+    * object storage the same step is a conditional PUT. */
+  private def createManifest(name: String, m: TableManifest): Unit = {
+    val vd = versionsDir(name)
+    Files.createDirectories(vd)
+    val tmp = vd.resolve(s".manifest-tmp-${nonce()}")
+    Files.writeString(tmp, m.render)
+    try Files.createLink(manifestPath(name, m.version), tmp)
+    catch {
+      case _: FileAlreadyExistsException =>
+        Files.deleteIfExists(tmp)
+        throw new ConcurrentWriteException(
+          s"version ${m.version} of $name was committed by another writer " +
+            "since this operation read the table; re-read and retry")
+    }
+    Files.deleteIfExists(tmp)
   }
 
   /** Stamp the commit wall-clock into `meta.ts`, STRICTLY MONOTONIC per
@@ -1905,106 +1842,111 @@ final class ParquetCatalog(spark: SparkSession, root: String,
         ("ts" -> math.max(System.currentTimeMillis(), floor).toString))
     }
 
-  /** CAS commit: atomically create `vN.manifest` from a fully-written
-    * temp file. Exactly one writer can commit a given N; the loser gets
-    * [[ConcurrentWriteException]]. Locally the create-exclusive
-    * primitive is `Files.createLink` (atomic, content-complete); on
-    * object storage the same step is a conditional PUT. */
-  private def commitManifest(name: String, m0: TableManifest): Unit = {
-    // deletion-vector pointers follow their data files: a SELF-CONTAINED
-    // manifest that no longer lists a file sheds its pointer here — this
-    // is how compaction/OPTIMIZE "materializes" the deletes (the rewrite
-    // read them out through the dv filter) and how every rewrite verb
-    // stays vector-correct with no per-verb code. Delta manifests only
-    // ADD files, so their carried pointers stay valid.
-    val mp =
-      if (m0.base.isEmpty && m0.meta.keys.exists(_.startsWith(DvPrefix))) {
-        val fs = m0.files.toSet
-        m0.copy(meta = m0.meta.filterNot { case (k, _) =>
-          k.startsWith(DvPrefix) &&
-            !fs.contains(java.net.URLDecoder.decode(k.drop(DvPrefix.length), "UTF-8"))
-        })
-      } else m0
-    val m = stampTs(name, mp)
-    val vd = versionsDir(name)
-    Files.createDirectories(vd)
-    val tmp = vd.resolve(s".manifest-tmp-${nonce()}")
-    Files.writeString(tmp, m.render)
-    try Files.createLink(manifestPath(name, m.version), tmp)
-    catch {
-      case _: FileAlreadyExistsException =>
-        Files.deleteIfExists(tmp)
-        throw new ConcurrentWriteException(
-          s"version ${m.version} of $name was committed by another writer " +
-            "since this operation read the table; re-read and retry")
-    }
-    Files.deleteIfExists(tmp)
-  }
+  // ---- logical conflict detection (disjoint-writer fast-forward) -----
+  //
+  // Delta's conflict checker: two optimistic writers whose commits
+  // touch DISJOINT partitions do not actually conflict — the CAS loser
+  // should not have to re-read and re-stage. Partition-scoped verbs
+  // record the partition components they rewrote as `touched` meta
+  // (pure appends record the partitions they added into; full
+  // restages, ALTERs, and legacy commits record nothing = "anything").
+  // On a lost CAS, [[fastForward]] re-commits the loser's
+  // already-staged files on top of the winner when every interleaved
+  // commit declared a disjoint set and left layout, recorded schema,
+  // column mapping, and constraints untouched — otherwise the normal
+  // full retry runs.
 
-  /** Commit, cleaning this writer's just-staged files on a lost race —
-    * nothing of a failed commit ever becomes visible. Each data commit
-    * records the BYTES its staged files added (`bytesAdded` meta) so
-    * streaming admission control can budget by size from the manifest
-    * alone — the files are just-written and local to this writer, so
-    * the stats cost nothing extra at scale. */
-  private def commitOrClean(name: String, m0: TableManifest,
-      staged: Seq[String]): Unit =
-    try commitStaged(name, m0, staged)
-    catch {
-      case e: ConcurrentWriteException =>
-        staged.foreach(r => Files.deleteIfExists(versionsDir(name).resolve(r)))
-        pendingColIds.set(pendingColIds.get - ((name, m0.version)))
-        throw e
+  /** The partition components a commit rewrote/added into: Some(set)
+    * when declared, None = could be anything (conservative). */
+  private def touchedOf(meta: Map[String, String]): Option[Set[String]] =
+    meta.get("touched").map { v =>
+      if (v.isEmpty) Set.empty[String]
+      else v.split(',').map(java.net.URLDecoder.decode(_, "UTF-8")).toSet
     }
 
-  /** [[commitOrClean]] WITHOUT the lost-race cleanup — the disjoint
-    * fast-forward path re-attempts the same staged files on top of the
-    * winner, so they must survive a lost CAS. */
-  private def commitStaged(name: String, m0: TableManifest,
-      staged: Seq[String]): Unit = {
-    val stagedSet = staged.toSet
-    // a FULL-RESTAGE commit (self-contained manifest whose every file
-    // was just staged) carries no old bytes — dropped-name markers
-    // clear, so later re-adds skip the resurrection footer check
-    val mp =
-      if (m0.base.isEmpty && m0.files.forall(stagedSet.contains) &&
-          m0.meta.keys.exists(_.startsWith(DroppedPrefix)))
-        m0.copy(meta = m0.meta.filterNot(_._1.startsWith(DroppedPrefix)))
-      else m0
-    val m1 =
-      if (staged.isEmpty) mp
-      else {
-        val bytes = staged.map { r =>
-          try Files.size(versionsDir(name).resolve(r))
-          catch { case _: Exception => 0L }
-        }.sum
-        mp.copy(meta = mp.meta + ("bytesAdded" -> bytes.toString))
+  private def touchedMeta(comps: Set[String]): Map[String, String] =
+    Map("touched" -> comps.toSeq.sorted
+      .map(java.net.URLEncoder.encode(_, "UTF-8")).mkString(","))
+
+  /** Meta a fast-forward must see UNCHANGED across every interleaved
+    * commit: recorded schema, column mapping, CHECK constraints (a new
+    * constraint must re-validate our staged rows), and the layout. */
+  private def ffGuardMeta(m: TableManifest): (Seq[String], Option[String],
+      Option[String], Map[String, String]) =
+    (m.partitionBy, m.meta.get("schema"), m.meta.get("colmap"),
+      m.meta.filter(_._1.startsWith(ConstraintPrefix)))
+
+  /** Fast-forward a partition-scoped commit whose CAS lost: when every
+    * commit since `base` declared a touched set DISJOINT from our
+    * footprint (the `touched` set of our `meta` — rewritten ∪ added-
+    * into partitions: a partition-moving UPDATE adds files into
+    * partitions it never rewrote, and an interleaved writer there IS a
+    * conflict) and changed nothing a restage would have observed, our
+    * staged files re-commit on top of the winner VERBATIM — the file
+    * set and meta re-derive against the winner, neither writer
+    * re-stages. Returns the committed version; None = not provably
+    * disjoint (the caller cleans the staged files and the full
+    * optimistic retry runs).
+    *
+    * `mergeRead` (keys, source): a keyed MERGE's correctness depends on
+    * its READ set — every row matching a source key, wherever it lives
+    * — not just its write footprint. Partition disjointness alone
+    * admits a non-serializable interleaving: two merges each inserting
+    * the SAME new key into different partitions both land, duplicating
+    * the key (no serial order produces that — the second merge would
+    * have MATCHED the first's row). Delta raises
+    * ConcurrentAppendException here. So a merge loser additionally
+    * scans ONLY the files the interleaved window ADDED for its key
+    * domain; any hit refuses the fast-forward (conservative — the full
+    * optimistic retry re-reads and re-merges). Rows the window REMOVED
+    * are safe to slide past: a removed row in a disjoint partition was
+    * never matched by us (a match would have made its partition part
+    * of our footprint), so winner-then-loser serial order reproduces
+    * the fast-forwarded state exactly. */
+  private def fastForward(name: String, base: TableManifest, pb: Seq[String],
+      files: FileSet, meta: Map[String, String], st: Staged,
+      cleared: Iterable[String], g: FastForward): Option[Long] = {
+    val footprint = touchedOf(meta).getOrElse(return None)
+    val guard = ffGuardMeta(base)
+    var attempts = 0
+    while (attempts < 5) {
+      attempts += 1
+      val w = currentManifest(name)
+      if (w.version <= base.version) return None
+      val clean =
+        try ((base.version + 1) to w.version).forall { v =>
+          val mv = manifest(name, v)
+          touchedOf(mv.meta).exists(_.intersect(footprint).isEmpty) &&
+            ffGuardMeta(mv) == guard
+        } catch { case _: IllegalArgumentException => false } // vacuumed window
+      if (!clean) return None
+      val readClear = g.mergeRead.forall { case (keys, source) =>
+        val added = (w.files.toSet -- base.files.toSet).toSeq.sorted
+        added.isEmpty || {
+          val probe = readFileSubset(name, w, added, None)
+          val srcKeys = source.select(keys.map(col): _*)
+          val cond = keys.map(k => probe(k) <=> srcKeys(k)).reduce(_ && _)
+          probe.join(broadcast(srcKeys), cond, "left_semi").isEmpty
+        }
       }
-    // the colid assignments the staged files' footers were written with
-    // (new names get fresh entries; prior entries for columns only
-    // carried files still hold stay in place via carriedMeta). Merged
-    // only when this commit actually staged files (a no-stage commit at
-    // a key a failed stage→commit sequence leaked must not record
-    // colids for footers it never wrote), and POPPED ONLY ON SUCCESS —
-    // a lost CAS leaves the entry for the fast-forward path to re-key
-    // under the winner's next version.
-    val pending = pendingColIds.get.get((name, m0.version))
-    val m = pending.filter(_ => staged.nonEmpty).fold(m1)(ids =>
-      m1.copy(meta = m1.meta ++ ids.map { case (c, i) =>
-        colIdKey(c) -> i.toString
-      } + ("colidmax" -> math.max(
-        m1.meta.get("colidmax").map(_.toInt).getOrElse(0),
-        ids.values.max).toString)))
-    commitManifest(name, m) // a lost CAS propagates; [[commitOrClean]] cleans
-    pending.foreach(_ => pendingColIds.set(
-      pendingColIds.get - ((name, m0.version))))
+      if (!readClear) return None
+      val m = manifestOn(name, Some(w), pb, files, meta, st, cleared)
+      try { createManifest(name, m); return Some(m.version) }
+      catch {
+        case _: ConcurrentWriteException =>
+        // raced again: loop re-reads the new winner; the staged files
+        // are still ours to commit
+      }
+    }
+    None
   }
 
   /** Write `df` through a staging dir, then move each produced parquet
     * file into the shared `data/` tree under a version-and-nonce-unique
-    * name. Returns the manifest-relative paths — EMPTY for an empty
-    * frame (Spark writes no data files for one); callers then record
-    * the schema in manifest meta instead, see [[emptyMeta]]. */
+    * name. Returns the [[Staged]] value [[commit]] takes: the manifest-
+    * relative paths — EMPTY for an empty frame (Spark writes no data
+    * files for one; the commit then records the frame's schema) — with
+    * the column ids their footers carry. */
   /** `orderWithinCells`: extra sort expressions applied INSIDE each
     * layout cell after distribution (compact's cluster / z-order
     * key) — when set, the frame is taken as ALREADY ordered on
@@ -2019,7 +1961,7 @@ final class ParquetCatalog(spark: SparkSession, root: String,
   private def stage(name: String, df0: DataFrame, partitionBy: Seq[String],
       version: Long, orderWithinCells: Seq[Column] = Nil,
       forceDistribute: Boolean = false,
-      identitySplits: Boolean = true): Seq[String] = {
+      identitySplits: Boolean = true): Staged = {
     // HIDDEN-PARTITION semantics for bucket-declared tables: the bucket
     // id column is DERIVED, never trusted — a plain `INSERT INTO` (or
     // any verb's restage) supplying a wrong `_gbucket` value would
@@ -2125,7 +2067,6 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     // for metadata-only RENAME COLUMN; a no-op for readers until the
     // table's mapping is activated
     val ids = stagedColIds(name, df.schema)
-    pendingColIds.set(pendingColIds.get + ((name, version) -> ids))
     val guarded = constraintGuard(name, version, df, partitionBy)
     val tagged = guarded.select(guarded.schema.fields.map { f =>
       guarded(f.name).as(f.name, new org.apache.spark.sql.types.MetadataBuilder()
@@ -2162,7 +2103,6 @@ final class ParquetCatalog(spark: SparkSession, root: String,
       .parquet(stageDir.toString)
     catch {
       case e: Throwable =>
-        pendingColIds.set(pendingColIds.get - ((name, version)))
         if (Files.exists(stageDir)) deleteRecursively(stageDir)
         throw e
     } finally if (tsOverride) ParquetCatalog.LtzMicrosOverride.exit(spark)
@@ -2188,13 +2128,8 @@ final class ParquetCatalog(spark: SparkSession, root: String,
       destRel.toString
     }
     deleteRecursively(stageDir)
-    rels
+    Staged(rels, colIds = ids, schema = Some(df0.schema))
   }
-
-  /** Manifest meta for a zero-file commit: the schema rides as DDL so
-    * the empty version stays readable (and nothing is carried). */
-  private def emptyMeta(df: DataFrame): Map[String, String] =
-    Map("schema" -> df.schema.toDDL)
 
   // ---- exactly-once batch-token registry ----------------------------
   //
@@ -2210,10 +2145,6 @@ final class ParquetCatalog(spark: SparkSession, root: String,
   // the at-most-once contract.
 
   private val TxnPrefix = "txn."
-
-  /** Registry entries every commit carries forward verbatim. */
-  private def carriedTxn(m: TableManifest): Map[String, String] =
-    m.meta.filter { case (k, _) => k.startsWith(TxnPrefix) }
 
   /** Everything a commit carries forward verbatim: the exactly-once
     * txn registry AND the table's CHECK constraints — both must
@@ -2381,12 +2312,8 @@ final class ParquetCatalog(spark: SparkSession, root: String,
       throw new IllegalStateException(
         s"cannot add constraint '$cname' ($sqlExpr) to $name: existing " +
           s"rows violate it, e.g. ${bad.head}")
-    val next = m.version + 1
-    val meta = Map("op" -> "setConstraint", key -> sqlExpr,
-      "bytesAdded" -> "0") ++
-      carriedMeta(m) ++ propagatedSchema(m)
-    commitManifest(name, TableManifest(next, m.partitionBy, meta, m.files))
-    next
+    commit(name, Some(m), m.partitionBy, CarryAll,
+      Map("op" -> "setConstraint", key -> sqlExpr))
   }
 
   /** Remove a CHECK constraint — a metadata-only commit (verb
@@ -2395,11 +2322,8 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     val m = currentManifest(name)
     val key = constraintKey(cname)
     require(m.meta.contains(key), s"no constraint '$cname' on $name")
-    val next = m.version + 1
-    val meta = Map("op" -> "dropConstraint", "bytesAdded" -> "0") ++
-      (carriedMeta(m) - key) ++ propagatedSchema(m)
-    commitManifest(name, TableManifest(next, m.partitionBy, meta, m.files))
-    next
+    commit(name, Some(m), m.partitionBy, CarryAll,
+      Map("op" -> "dropConstraint"), cleared = Seq(key))
   }
 
   /** Zero-copy clone (Delta `SHALLOW CLONE` parity, but
@@ -2442,12 +2366,10 @@ final class ParquetCatalog(spark: SparkSession, root: String,
         if (Files.exists(versionsDir(dst))) deleteRecursively(versionsDir(dst))
         throw e
     }
-    val meta = m.meta.filterNot { case (k, _) =>
-      k == "batch" || k == "ts" || k.startsWith(TxnPrefix)
-    } + ("op" -> "clone") + ("clonedFrom" -> s"$src@$v")
-    commitManifest(dst, TableManifest(1, m.partitionBy, meta, m.files))
-    refreshIndex(dst)
-    1L
+    commit(dst, None, m.partitionBy, Listed(m.files),
+      m.meta.filterNot { case (k, _) =>
+        k == "batch" || k == "ts" || k.startsWith(TxnPrefix)
+      } + ("op" -> "clone") + ("clonedFrom" -> s"$src@$v"))
   }
 
   /** Migrate a plain hive directory an older build left at
@@ -2490,8 +2412,11 @@ final class ParquetCatalog(spark: SparkSession, root: String,
             .filter(p => p.toString.endsWith(".parquet") && Files.isRegularFile(p))
             .map(p => vd.relativize(p).toString).toList.sorted
           finally s.close()
-        commitManifest(name,
-          TableManifest(1, inferPartitionBy(rels), Map("op" -> "migrate"), rels))
+        // the migration ADDS every file: its bytes are what streaming
+        // admission must budget for version 1
+        val bytes = rels.map(r => Files.size(vd.resolve(r))).sum
+        commit(name, None, inferPartitionBy(rels), Listed(rels),
+          Map("op" -> "migrate", "bytesAdded" -> bytes.toString))
         Files.delete(marker)
       }
     }
@@ -2651,16 +2576,10 @@ final class ParquetCatalog(spark: SparkSession, root: String,
         if (batchAlreadyCommitted(m, name, tok)) return m.version
       }
     }
-    val next = prior.getOrElse(0L) + 1
-    val rels = stage(name, df, pb, next, orderWithinCells,
+    val st = stage(name, df, pb, prior.getOrElse(0L) + 1, orderWithinCells,
       forceDistribute, identitySplits)
-    val meta = Map("op" -> "overwrite") ++
-      prior.map(v => carriedMeta(manifest(name, v))).getOrElse(Map.empty) ++
-      tokenMeta(batchToken) ++
-      (if (rels.isEmpty) emptyMeta(df) else Map.empty)
-    commitOrClean(name, TableManifest(next, pb, meta, rels), rels)
-    refreshIndex(name)
-    next
+    commit(name, prior.map(manifest(name, _)), pb, Restage,
+      Map("op" -> "overwrite") ++ tokenMeta(batchToken), st)
   }
 
   /** Append that RETAINS history: new files join the current manifest's
@@ -2678,12 +2597,9 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     if (!exists(name)) {
       // table-creating first append: the batch token must still ride the
       // commit, or a replay of batch 0 after a restart would double-write
-      val rels = stage(name, df, partitionBy, 1)
-      val meta = Map("op" -> "append") ++ tokenMeta(batchToken) ++
-        (if (rels.isEmpty) emptyMeta(df) else Map.empty)
-      commitOrClean(name, TableManifest(1, partitionBy, meta, rels), rels)
-      refreshIndex(name)
-      return 1L
+      return commit(name, None, partitionBy, Restage,
+        Map("op" -> "append") ++ tokenMeta(batchToken),
+        stage(name, df, partitionBy, 1))
     }
     val m = currentManifest(name)
     batchToken.foreach { tok =>
@@ -2719,7 +2635,7 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     requireManifestLayout(name, partitionBy, m)
     val current = readVersion(name, m.version)
     val next = m.version + 1
-    val tokMeta = carriedMeta(m) ++ tokenMeta(batchToken)
+    val appendMeta = Map("op" -> "append") ++ tokenMeta(batchToken)
     if (!schemaMatches(current, dfb, pb)) {
       if (!evolveSchema) failSchemaDrift(name, current, dfb, pb)
       // the metadata-only branch stages df AS GIVEN, so it must carry
@@ -2744,50 +2660,20 @@ final class ParquetCatalog(spark: SparkSession, root: String,
           current.schema.fieldNames.exists(_.equalsIgnoreCase(n))).toSeq
         val cleared = guardReintroduced(name, m, incomingOnly)
         val evolved = unionEvolvedSchema(current.schema, dfb.schema)
-        val rels = stage(name, dfb, pb, next)
-        val meta = Map("op" -> "append") ++ (tokMeta -- cleared) +
-          ("schema" -> evolved.toDDL)
-        commitAppend(name, m, pb, meta, rels)
-        refreshIndex(name)
-        return next
+        return commit(name, Some(m), pb, Append,
+          appendMeta + ("schema" -> evolved.toDDL), stage(name, dfb, pb, next),
+          cleared)
       }
       // a common column changed TYPE: only a full union-by-name restage
       // can reconcile the physical encodings (Spark widens or fails)
       val evolved = current.unionByName(dfb, allowMissingColumns = true)
-      val rels = stage(name, evolved, pb, next)
-      val meta = Map("op" -> "append") ++ tokMeta ++
-        (if (rels.isEmpty) emptyMeta(evolved) else Map.empty)
-      commitOrClean(name, TableManifest(next, pb, meta, rels), rels)
-      refreshIndex(name)
-      return next
+      return commit(name, Some(m), pb, Restage, appendMeta,
+        stage(name, evolved, pb, next))
     }
-    val rels = stage(name, dfb, pb, next)
+    val st = stage(name, dfb, pb, next)
     // appends declare the partitions they added into, so a concurrent
     // partition-scoped writer can fast-forward past a disjoint append
-    val meta = Map("op" -> "append") ++ tokMeta ++ propagatedSchema(m) ++
-      touchedMeta(rels.map(TableManifest.partitionComponent).toSet) ++
-      (if (m.files.isEmpty && rels.isEmpty) emptyMeta(dfb) else Map.empty)
-    commitAppend(name, m, pb, meta, rels)
-    refreshIndex(name)
-    next
-  }
-
-  /** Commit an append on top of RESOLVED manifest `m`: as a DELTA
-    * manifest (`base=` + added entries — O(delta) metadata bytes, the
-    * amortization Delta's log gets from add-actions between
-    * checkpoints) while the base chain is short, and as a periodic
-    * SELF-CONTAINED snapshot every [[ParquetCatalog.SnapshotInterval]]
-    * commits, which bounds every reader's resolution chain. Meta and
-    * partitionBy ride every delta in full — only the FILE LIST
-    * amortizes. */
-  private def commitAppend(name: String, m: TableManifest, pb: Seq[String],
-      meta: Map[String, String], adds: Seq[String]): Unit = {
-    val next = m.version + 1
-    val mf =
-      if (chainDepth(name, m.version) < ParquetCatalog.SnapshotInterval - 1)
-        TableManifest(next, pb, meta, adds, base = Some(m.version))
-      else TableManifest(next, pb, meta, m.files ++ adds)
-    commitOrClean(name, mf, adds)
+    commit(name, Some(m), pb, Append, appendMeta ++ touchedMeta(st.parts), st)
   }
 
   /** Lossless numeric WIDENING `from` → `to`, restricted to the pairs
@@ -2857,13 +2743,6 @@ final class ParquetCatalog(spark: SparkSession, root: String,
       incoming.fields.filterNot(f => have(f.name))).map(_.copy(nullable = true)))
   }
 
-  /** A commit that CARRIES files forward must also carry the recorded
-    * union schema: carried files may predate an evolution and lack its
-    * columns, so dropping the schema would hand readers a nondeterministic
-    * single-footer schema. */
-  private def propagatedSchema(m: TableManifest): Map[String, String] =
-    m.meta.get("schema").map("schema" -> _).toMap
-
   /** Replay-idempotent micro-batch append: the streaming sink's entry
     * point. `batchToken` is "<sinkId>#<batchId>" (e.g. checkpoint dir +
     * Structured Streaming's monotonic batchId); a batch at or below the
@@ -2905,17 +2784,9 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     if (!exists(name)) return overwriteVersioned(name, df, partitionBy)
     val m = currentManifest(name)
     requireManifestLayout(name, partitionBy, m)
-    val next = m.version + 1
-    val rels = stage(name, df, partitionBy, next)
-    val replaced = rels.map(TableManifest.partitionComponent).toSet
-    val carried =
-      m.files.filterNot(f => replaced.contains(TableManifest.partitionComponent(f)))
-    val meta = Map("op" -> "overwritePartitions") ++ carriedMeta(m) ++
-      propagatedSchema(m) ++
-      (if (carried.isEmpty && rels.isEmpty) emptyMeta(df) else Map.empty)
-    commitOrClean(name, TableManifest(next, partitionBy, meta, carried ++ rels), rels)
-    refreshIndex(name)
-    next
+    val st = stage(name, df, partitionBy, m.version + 1)
+    commit(name, Some(m), partitionBy, carryOutside(st.parts),
+      Map("op" -> "overwritePartitions"), st)
   }
 
   /** MERGE that RETAINS history (Delta MERGE + time travel in one): the
@@ -2951,12 +2822,9 @@ final class ParquetCatalog(spark: SparkSession, root: String,
       if (batchToken.isEmpty) return overwriteVersioned(name, source, partitionBy)
       // table-creating first MERGE batch: the token must ride the first
       // commit or a replay of batch 0 after a restart double-writes
-      val rels = stage(name, source, partitionBy, 1)
-      val meta = Map("op" -> "merge") ++ tokenMeta(batchToken) ++
-        (if (rels.isEmpty) emptyMeta(source) else Map.empty)
-      commitOrClean(name, TableManifest(1, partitionBy, meta, rels), rels)
-      refreshIndex(name)
-      return 1L
+      return commit(name, None, partitionBy, Restage,
+        Map("op" -> "merge") ++ tokenMeta(batchToken),
+        stage(name, source, partitionBy, 1))
     }
     batchToken.foreach { tok =>
       val cur = currentManifest(name)
@@ -2982,14 +2850,11 @@ final class ParquetCatalog(spark: SparkSession, root: String,
       pb.forall(source.columns.contains) && addDropOnly(target, source, pb)
     if (!evolveSchema || scopedEvolve) requireManifestLayout(name, partitionBy, m)
     val next = m.version + 1
+    val mergeMeta = Map("op" -> "merge") ++ tokenMeta(batchToken)
     if (pb.isEmpty || (evolveSchema && !scopedEvolve) || m.files.isEmpty) {
       val merged =
         Upsert.merge(target, source, keys, smartCases, insertOnly, evolveSchema)
-      val rels = stage(name, merged, pb, next)
-      val meta = Map("op" -> "merge") ++ carriedMeta(m) ++
-        tokenMeta(batchToken) ++
-        (if (rels.isEmpty) emptyMeta(merged) else Map.empty)
-      commitOrClean(name, TableManifest(next, pb, meta, rels), rels)
+      commit(name, Some(m), pb, Restage, mergeMeta, stage(name, merged, pb, next))
     } else {
       // an evolving merge RE-INTRODUCING a dropped name: carried
       // partitions keep their files, so the resurrection guard runs
@@ -3001,10 +2866,8 @@ final class ParquetCatalog(spark: SparkSession, root: String,
         else Nil
       val touched = touchedPartitions(name, target, source, keys, pb)
       val touchedRel = touched.map(_.relPath).toSet
-      val carried = m.files.filterNot(f =>
-        touchedRel.contains(TableManifest.partitionComponent(f)))
-      val rels =
-        if (touched.isEmpty) Nil
+      val st =
+        if (touched.isEmpty) Staged()
         else {
           val slice = target.filter(partitionPredicate(pb, touched.map(_.values)))
           val merged = Upsert.merge(slice, source, keys, smartCases, insertOnly,
@@ -3014,33 +2877,22 @@ final class ParquetCatalog(spark: SparkSession, root: String,
       val schemaMeta =
         if (scopedEvolve)
           Map("schema" -> unionEvolvedSchema(target.schema, source.schema).toDDL)
-        else propagatedSchema(m)
-      val meta = Map("op" -> "merge") ++ (carriedMeta(m) -- cleared) ++
-        schemaMeta ++ tokenMeta(batchToken) ++ touchedMeta(touchedRel) ++
-        (if (carried.isEmpty && rels.isEmpty) emptyMeta(target) else Map.empty)
-      if (scopedEvolve || rels.isEmpty)
-        commitOrClean(name, TableManifest(next, pb, meta, carried ++ rels), rels)
-      else
-        try commitStaged(name, TableManifest(next, pb, meta, carried ++ rels), rels)
-        catch {
-          case e: ConcurrentWriteException =>
-            // disjoint-writer fast-forward: our staged files land on top
-            // of the winner without a re-read (refreshIndex runs inside).
-            // When the merge keys contain every partition column, a
-            // source row's match can only live in its own partition —
-            // write-disjointness implies read-disjointness and no scan
-            // is needed; otherwise the guard scans the interleaved
-            // window's ADDED files for our key domain (see
-            // [[fastForwardScoped]]).
-            val guard =
-              if (pb.forall(p => keys.exists(_.equalsIgnoreCase(p)))) None
-              else Some((keys, source.select(keys.map(col): _*).distinct()))
-            return fastForwardScoped(name, m, pb, "merge", touchedRel, rels,
-              tokenMeta(batchToken), mergeReadGuard = guard).getOrElse(throw e)
-        }
+        else Map.empty[String, String]
+      // disjoint-writer fast-forward: on a lost race our staged files
+      // land on top of the winner without a re-read. When the merge
+      // keys contain every partition column, a source row's match can
+      // only live in its own partition — write-disjointness implies
+      // read-disjointness and no scan is needed; otherwise the guard
+      // scans the interleaved window's ADDED files for our key domain
+      // (see [[fastForward]]).
+      val ff =
+        if (scopedEvolve || st.files.isEmpty) None
+        else Some(FastForward(
+          if (pb.forall(p => keys.exists(_.equalsIgnoreCase(p)))) None
+          else Some((keys, source))))
+      commit(name, Some(m), pb, carryOutside(touchedRel),
+        mergeMeta ++ schemaMeta ++ touchedMeta(touchedRel), st, cleared, ff)
     }
-    refreshIndex(name)
-    next
   }
 
   /** Execute a literal `MERGE INTO` statement AGAINST THE CATALOG — the
@@ -3067,14 +2919,9 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     val m = currentManifest(name)
     val target = readVersion(name, m.version)
     val merged = graft.operators.SqlMerge.execute(target, source, p)
-    val next = m.version + 1
     // write-once versions: staging reads the still-live current files
-    val rels = stage(name, merged, m.partitionBy, next)
-    val meta = Map("op" -> "merge") ++ carriedMeta(m) ++
-      (if (rels.isEmpty) emptyMeta(merged) else Map.empty)
-    commitOrClean(name, TableManifest(next, m.partitionBy, meta, rels), rels)
-    refreshIndex(name)
-    next
+    commit(name, Some(m), m.partitionBy, Restage, Map("op" -> "merge"),
+      stage(name, merged, m.partitionBy, m.version + 1))
   }
 
   /** Row-level DELETE WHERE (Delta `DELETE` parity) that retains
@@ -3099,47 +2946,26 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     val hit = coalesce(condition, lit(false))
     val next = m.version + 1
     if (pb.isEmpty || m.files.isEmpty) {
-      val keep = t.filter(!hit)
-      val removed = t.count() - keep.count()
-      val rels = stage(name, keep, pb, next)
-      val meta = Map("op" -> "delete") ++ carriedMeta(m) ++
-        (if (rels.isEmpty) emptyMeta(keep) else Map.empty)
-      commitOrClean(name, TableManifest(next, pb, meta, rels), rels)
-      refreshIndex(name)
-      (next, removed)
+      val removed = t.filter(hit).count()
+      val st = stage(name, t.filter(!hit), pb, next)
+      (commit(name, Some(m), pb, Restage, Map("op" -> "delete"), st), removed)
     } else {
       val touched = partitionsOf(probeFrame(name, m, t, condition).filter(hit), pb)
       val touchedRel = touched.map(_.relPath).toSet
-      val carried = m.files.filterNot(f =>
-        touchedRel.contains(TableManifest.partitionComponent(f)))
       var removed = 0L
-      val rels =
-        if (touched.isEmpty) Nil
+      val st =
+        if (touched.isEmpty) Staged()
         else {
           val slice = t.filter(partitionPredicate(pb, touched.map(_.values))).persist()
-          val keep = slice.filter(!hit)
-          removed = slice.count() - keep.count()
-          val out = stage(name, keep, pb, next)
+          removed = slice.filter(hit).count()
+          val out = stage(name, slice.filter(!hit), pb, next)
           slice.unpersist()
           out
         }
-      val meta = Map("op" -> "delete") ++ carriedMeta(m) ++ propagatedSchema(m) ++
-        touchedMeta(touchedRel) ++
-        (if (carried.isEmpty && rels.isEmpty) emptyMeta(t) else Map.empty)
-      if (rels.isEmpty) {
-        commitOrClean(name, TableManifest(next, pb, meta, carried ++ rels), rels)
-        refreshIndex(name)
-        (next, removed)
-      } else
-        try {
-          commitStaged(name, TableManifest(next, pb, meta, carried ++ rels), rels)
-          refreshIndex(name)
-          (next, removed)
-        } catch {
-          case e: ConcurrentWriteException =>
-            (fastForwardScoped(name, m, pb, "delete", touchedRel, rels, Map.empty)
-              .getOrElse(throw e), removed)
-        }
+      val v = commit(name, Some(m), pb, carryOutside(touchedRel),
+        Map("op" -> "delete") ++ touchedMeta(touchedRel), st,
+        ff = Option.when(st.files.nonEmpty)(FastForward()))
+      (v, removed)
     }
   }
 
@@ -3190,20 +3016,15 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     if (pb.isEmpty || m.files.isEmpty) {
       val updated = t.filter(hit).count()
       if (updated == 0) return (m.version, 0L) // nothing matched: no commit
-      val rels = stage(name, applied(t), pb, next)
-      val meta = Map("op" -> "update") ++ carriedMeta(m) ++ propagatedSchema(m) ++
-        (if (rels.isEmpty) emptyMeta(t) else Map.empty)
-      commitOrClean(name, TableManifest(next, pb, meta, rels), rels)
-      refreshIndex(name)
-      (next, updated)
+      val st = stage(name, applied(t), pb, next)
+      (commit(name, Some(m), pb, RestageKeepingSchema, Map("op" -> "update"), st),
+        updated)
     } else {
       val touched = partitionsOf(probeFrame(name, m, t, condition).filter(hit), pb)
       val touchedRel = touched.map(_.relPath).toSet
-      val carried = m.files.filterNot(f =>
-        touchedRel.contains(TableManifest.partitionComponent(f)))
       var updated = 0L
-      val rels =
-        if (touched.isEmpty) Nil
+      val st =
+        if (touched.isEmpty) Staged()
         else {
           val slice = t.filter(partitionPredicate(pb, touched.map(_.values))).persist()
           updated = slice.filter(hit).count()
@@ -3216,18 +3037,10 @@ final class ParquetCatalog(spark: SparkSession, root: String,
       // land in partitions the probe never named — the declared set
       // must cover them, or a concurrent disjoint writer's fast-forward
       // would silently drop the moved rows' files
-      val addedInto = rels.map(TableManifest.partitionComponent).toSet
-      val meta = Map("op" -> "update") ++ carriedMeta(m) ++ propagatedSchema(m) ++
-        touchedMeta(touchedRel ++ addedInto)
-      try {
-        commitStaged(name, TableManifest(next, pb, meta, carried ++ rels), rels)
-        refreshIndex(name)
-        (next, updated)
-      } catch {
-        case e: ConcurrentWriteException =>
-          (fastForwardScoped(name, m, pb, "update", touchedRel, rels, Map.empty,
-            addedInto).getOrElse(throw e), updated)
-      }
+      val v = commit(name, Some(m), pb, carryOutside(touchedRel),
+        Map("op" -> "update") ++ touchedMeta(touchedRel ++ st.parts), st,
+        ff = Some(FastForward()))
+      (v, updated)
     }
   }
 
@@ -3374,8 +3187,8 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     * — a replayed feed window commits nothing.
     *
     * CONCURRENCY PROOF (why sync needs no merge-style read-set guard):
-    * this verb commits via [[commitOrClean]], NEVER
-    * [[fastForwardScoped]] — a lost CAS always throws
+    * this verb's commit never takes the [[fastForward]] path — a lost
+    * CAS always throws
     * [[ConcurrentWriteException]], and a [[withRetry]] around it
     * re-reads the WINNER's committed state before recomputing, so the
     * loser's effects are always computed loser-second over the winner.
@@ -3392,12 +3205,9 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     if (!exists(name)) {
       val empty = feed.drop("_change_type", "_commit_version").limit(0)
       val state = Upsert.applyFeed(empty, feed, keys)
-      val rels = stage(name, state, partitionBy, 1)
-      val meta = Map("op" -> "sync") ++ tokenMeta(batchToken) ++
-        (if (rels.isEmpty) emptyMeta(state) else Map.empty)
-      commitOrClean(name, TableManifest(1, partitionBy, meta, rels), rels)
-      refreshIndex(name)
-      return 1L
+      return commit(name, None, partitionBy, Restage,
+        Map("op" -> "sync") ++ tokenMeta(batchToken),
+        stage(name, state, partitionBy, 1))
     }
     val m = currentManifest(name)
     batchToken.foreach { tok =>
@@ -3407,13 +3217,11 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     requireManifestLayout(name, partitionBy, m)
     val target = readVersion(name, m.version)
     val next = m.version + 1
+    val syncMeta = Map("op" -> "sync") ++ tokenMeta(batchToken)
     if (pb.isEmpty || m.files.isEmpty) {
       val state = Upsert.applyFeed(target, feed, keys)
-      val rels = stage(name, state, pb, next)
-      val meta = Map("op" -> "sync") ++ carriedMeta(m) ++
-        tokenMeta(batchToken) ++ propagatedSchema(m) ++
-        (if (rels.isEmpty) emptyMeta(state) else Map.empty)
-      commitOrClean(name, TableManifest(next, pb, meta, rels), rels)
+      commit(name, Some(m), pb, RestageKeepingSchema, syncMeta,
+        stage(name, state, pb, next))
     } else {
       require(pb.forall(feed.columns.contains),
         s"feed must carry the partition columns ${pb.mkString(",")}")
@@ -3429,23 +3237,15 @@ final class ParquetCatalog(spark: SparkSession, root: String,
       // O(feed + matches).
       val touched = touchedPartitions(name, target, feed, keys, pb)
       val touchedRel = touched.map(_.relPath).toSet
-      val carried = m.files.filterNot(f =>
-        touchedRel.contains(TableManifest.partitionComponent(f)))
-      val rels =
-        if (touched.isEmpty) Nil
+      val st =
+        if (touched.isEmpty) Staged()
         else {
           val slice = target.filter(partitionPredicate(pb, touched.map(_.values)))
-          val state = Upsert.applyFeed(slice, feed, keys)
-          stage(name, state, pb, next)
+          stage(name, Upsert.applyFeed(slice, feed, keys), pb, next)
         }
-      val meta = Map("op" -> "sync") ++ carriedMeta(m) ++
-        tokenMeta(batchToken) ++ propagatedSchema(m) ++
-        touchedMeta(touchedRel) ++
-        (if (carried.isEmpty && rels.isEmpty) emptyMeta(target) else Map.empty)
-      commitOrClean(name, TableManifest(next, pb, meta, carried ++ rels), rels)
+      commit(name, Some(m), pb, carryOutside(touchedRel),
+        syncMeta ++ touchedMeta(touchedRel), st)
     }
-    refreshIndex(name)
-    next
   }
 
   /** Files ADDED by one commit, from its raw manifest alone: exact for
@@ -3458,7 +3258,7 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     rawManifest(name, version).files.size.toLong
 
   /** Bytes the commit of `version` added: the `bytesAdded` meta the
-    * commit funnel records (one raw-manifest parse, no file IO). For
+    * commit routine records (one raw-manifest parse, no file IO). For
     * manifests predating the key, falls back to statting the raw
     * manifest's file list — a conservative OVERcount on full-restage
     * manifests (carried files included), so a byte-budgeted admission
@@ -3653,11 +3453,9 @@ final class ParquetCatalog(spark: SparkSession, root: String,
         val fresh = colIdHighWater(m) + 1
         Map(colIdKey(colName) -> fresh.toString, "colidmax" -> fresh.toString)
       } else Map.empty[String, String]
-    val meta = Map("op" -> "alterSchema", "schema" -> widened.toDDL,
-      "bytesAdded" -> "0") ++
-      (carriedMeta(m) -- cleared) ++ idMeta
-    commitManifest(name, TableManifest(m.version + 1, m.partitionBy, meta, m.files))
-    m.version + 1
+    commit(name, Some(m), m.partitionBy, CarryAll,
+      Map("op" -> "alterSchema", "schema" -> widened.toDDL) ++ idMeta,
+      cleared = cleared)
   }
 
   /** `ALTER TABLE DROP COLUMN` as a pure metadata commit: the recorded
@@ -3707,11 +3505,10 @@ final class ParquetCatalog(spark: SparkSession, root: String,
       .map(_.copy(nullable = true)))
     // the dropped-name marker makes a later re-introduction of this
     // name consult the resurrection guard (see [[guardReintroduced]])
-    val meta = Map("op" -> "alterSchema", "schema" -> narrowed.toDDL,
-      droppedKey(recorded) -> (m.version + 1).toString, "bytesAdded" -> "0") ++
-      carriedMeta(m) - colIdKey(recorded)
-    commitManifest(name, TableManifest(m.version + 1, m.partitionBy, meta, m.files))
-    m.version + 1
+    commit(name, Some(m), m.partitionBy, CarryAll,
+      Map("op" -> "alterSchema", "schema" -> narrowed.toDDL,
+        droppedKey(recorded) -> (m.version + 1).toString),
+      cleared = Seq(colIdKey(recorded)))
   }
 
   /** The CHECK constraints that reference `colName` (case-insensitive
@@ -3805,14 +3602,14 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     // skipping declarations FOLLOW the renamed column: a graft.bloomFor/
     // indexFor/bucketBy still naming the old spelling would silently
     // stop applying to files staged after the rename
-    val meta = renamedProps(Map("op" -> "renameColumn", "colmap" -> "on",
-      "bytesAdded" -> "0", "schema" -> renamed.toDDL) ++
-      (carriedMeta(m) - colIdKey(from) - "colmap") +
-      (colIdKey(to) -> ids(from).toString), from, to)
-    commitManifest(name, TableManifest(m.version + 1, m.partitionBy, meta, m.files))
+    val v = commit(name, Some(m), m.partitionBy, CarryAll,
+      renamedProps(m.meta.filter(_._1.startsWith(PropPrefix)), from, to) ++
+        Map("op" -> "renameColumn", "colmap" -> "on", "schema" -> renamed.toDDL,
+          colIdKey(to) -> ids(from).toString),
+      cleared = Seq(colIdKey(from)))
     if (SkippingIndex.existsAt(statsPath(name)))
       SkippingIndex.renameColumn(statsPath(name), from, to)
-    m.version + 1
+    v
   }
 
   /** `ALTER TABLE ALTER COLUMN TYPE` as ONE metadata commit, for the
@@ -3842,11 +3639,8 @@ final class ParquetCatalog(spark: SparkSession, root: String,
         "physical restage: read, cast, overwriteVersioned")
     val retyped = StructType(cur.fields.map(f =>
       if (f.name == colName) f.copy(dataType = newType) else f))
-    val meta = Map("op" -> "alterSchema", "schema" -> retyped.toDDL,
-      "bytesAdded" -> "0") ++
-      carriedMeta(m)
-    commitManifest(name, TableManifest(m.version + 1, m.partitionBy, meta, m.files))
-    m.version + 1
+    commit(name, Some(m), m.partitionBy, CarryAll,
+      Map("op" -> "alterSchema", "schema" -> retyped.toDDL))
   }
 
   /** The partitions whose file counts exceed `maxFiles` — the
@@ -4014,20 +3808,19 @@ final class ParquetCatalog(spark: SparkSession, root: String,
   def restore(name: String, version: Long): Long = {
     val src = manifest(name, version)
     val cur = currentManifest(name)
-    val next = cur.version + 1
     // restore rewinds TABLE STATE, never sink progress: the txn
-    // high-water map is monotonic per sink, so it carries from the
+    // high-water map is monotonic per sink, so it alone carries from the
     // CURRENT manifest — a restored-then-replayed micro-batch must
-    // still be a no-op
+    // still be a no-op — and everything else is the source's
     // ("ts" is dropped too: a restore is a NEW commit stamped at NOW,
-    // not a replay of the restored version's wall-clock)
-    val meta = src.meta.filterNot { case (k, _) =>
-      k == "batch" || k == "ts" || k.startsWith(TxnPrefix)
-    } ++ carriedTxn(cur) +
-      ("op" -> "restore") + ("restoredFrom" -> version.toString)
-    commitManifest(name, TableManifest(next, src.partitionBy, meta, src.files))
-    refreshIndex(name)
-    next
+    // not a replay of the restored version's wall-clock; so is the
+    // source's touched set — a restore rewinds every partition, and a
+    // fast-forward must never slide a writer past it)
+    commit(name, Some(cur), src.partitionBy, Listed(src.files),
+      src.meta.filterNot { case (k, _) =>
+        k == "batch" || k == "ts" || k == "touched" || k.startsWith(TxnPrefix)
+      } + ("op" -> "restore") + ("restoredFrom" -> version.toString),
+      cleared = cur.meta.keys.filterNot(_.startsWith(TxnPrefix)))
   }
 
   /** The shared optimistic-concurrency retry loop every versioned
@@ -4091,10 +3884,11 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     *     files the scan deemed dead; anything such a late manifest
     *     lists is dropped from the kill set before deletion.
     *
-    * Also sweeps stray `.tmp-` staging dirs (under the root, any
-    * table's) and `.manifest-tmp-` files a crashed writer may have
-    * left. Returns manifests + debris entries
-    * removed. */
+    * Also sweeps the table's own stray staging dirs
+    * (`<root>/.tmp-<name>-<hex nonce>` — never another table's, whose
+    * write may be in flight), the root's `.rename-tmp-` files and the
+    * table's `.manifest-tmp-` files a crashed writer may have left.
+    * Returns manifests + debris entries removed. */
   def vacuum(name: String, keep: Int = 1,
       minAgeMs: Long = ParquetCatalog.DefaultVacuumMinAgeMs): Int = {
     require(keep >= 1, "must keep at least the current version")
@@ -4153,27 +3947,32 @@ final class ParquetCatalog(spark: SparkSession, root: String,
         dead.foreach(Files.delete)
         pruneEmptyDirs(dd)
       }
-      removed += sweepDebris(vd, minAgeMs, Seq(".manifest-tmp-"))
+      removed += sweepDebris(vd, minAgeMs)(_.startsWith(".manifest-tmp-"))
     }
-    // staging dirs (`.tmp-<table>-<nonce>`, any table's) and rename
-    // journals' temps at the root
-    removed + sweepDebris(Paths.get(root), minAgeMs, Seq(".tmp-", ".rename-tmp-"))
+    // this table's staging dirs and rename journals' temps at the root;
+    // nonces are hex, so `.tmp-a-` + hex never matches table a-b's dirs
+    val staging = s".tmp-$name-"
+    removed + sweepDebris(Paths.get(root), minAgeMs) { n =>
+      n.startsWith(".rename-tmp-") || (n.startsWith(staging) &&
+        n.length > staging.length &&
+        n.drop(staging.length).forall(Character.digit(_, 16) >= 0))
+    }
   }
 
-  /** Delete the entries of `dir` named with one of `prefixes` that are
+  /** Delete the entries of `dir` whose names `debris` accepts that are
     * older than `minAgeMs` — AGE-GUARDED like the data-tree orphan
     * sweep: a LIVE writer's in-flight staging dir (or a commit's
     * `.manifest-tmp-`) is indistinguishable from a crashed one's, and
     * sweeping it mid-write kills the writer (the once-flaky vacuum race
     * test was exactly this). Entries that vanish mid-check are skipped.
     * Returns the number removed. */
-  private def sweepDebris(dir: Path, minAgeMs: Long,
-      prefixes: Seq[String]): Int = {
+  private def sweepDebris(dir: Path, minAgeMs: Long)(
+      debris: String => Boolean): Int = {
     val now = System.currentTimeMillis()
     val s = Files.list(dir)
     val old =
       try s.iterator().asScala
-        .filter(p => prefixes.exists(p.getFileName.toString.startsWith))
+        .filter(p => debris(p.getFileName.toString))
         .filter(p => scala.util.Try(
           now - Files.getLastModifiedTime(p).toMillis >= minAgeMs)
           .getOrElse(false))
@@ -4545,6 +4344,41 @@ object ParquetCatalog {
     * keeping per-append metadata O(delta) — Delta's checkpoint-interval
     * trade, applied to the manifest format. */
   val SnapshotInterval: Int = 10
+
+  /** What one write staged into `data/`: its files and any deletion-
+    * vector sidecars (manifest-relative), the column ids the files'
+    * footers carry, and the staged frame's schema (None when nothing
+    * was staged). */
+  private[storage] final case class Staged(files: Seq[String] = Nil,
+      sidecars: Seq[String] = Nil, colIds: Map[String, Int] = Map.empty,
+      schema: Option[StructType] = None) {
+    /** The partition components the staged files landed in. */
+    def parts: Set[String] = files.map(TableManifest.partitionComponent).toSet
+  }
+
+  /** How a commit's file list derives from its base version. */
+  private[storage] sealed trait FileSet
+  /** The staged files only: a full restage, whose homogeneous files
+    * need no recorded schema. */
+  private[storage] case object Restage extends FileSet
+  /** The base's files `keep` accepts plus the staged ones, in one
+    * self-contained manifest; the base's recorded schema still holds. */
+  private[storage] final case class Carry(keep: String => Boolean) extends FileSet
+  /** The base's files plus the staged ones as a DELTA manifest
+    * (`base=` + added entries — O(delta) metadata bytes, the
+    * amortization Delta's log gets from add-actions between
+    * checkpoints) while the base chain is short, and as a SELF-
+    * CONTAINED snapshot every [[ParquetCatalog.SnapshotInterval]]
+    * commits, which bounds every reader's resolution chain. */
+  private[storage] case object Append extends FileSet
+  /** Exactly these files (restore, clone, migration). */
+  private[storage] final case class Listed(files: Seq[String]) extends FileSet
+
+  /** A partition-scoped commit that may fast-forward past disjoint
+    * writers when its CAS loses ([[fastForward]]); `mergeRead` is a
+    * keyed MERGE's (keys, source), whose read set must stay clear too. */
+  private[storage] final case class FastForward(
+      mergeRead: Option[(Seq[String], DataFrame)] = None)
 
   /** Process-wide, per-session refcount around the staged-write LTZ
     * MICROS override (`spark.sql.parquet.outputTimestampType` is

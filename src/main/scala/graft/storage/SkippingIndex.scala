@@ -326,6 +326,9 @@ object SkippingIndex {
     val known = prior.filter(fs => currentSet.contains(fs.file))
     val knownSet = known.map(_.file).toSet
     val fresh = collectFor(spark, files.filterNot(knownSet.contains), useCols)
+    // the file set did not move (a metadata-only commit): the persisted
+    // index is already exact, so keep it and its generation
+    if (fresh.isEmpty && known.size == prior.size) return prior
     val stats = (known ++ fresh).sortBy(_.file)
     persist(statsPath, stats)
     stats

@@ -923,4 +923,140 @@ class CatalogSpec extends SparkSpec {
       assert(cat.layout(t) === Seq("day"), t)
     }
   }
+
+  /** `body`'s result, the Spark jobs it started, and how many of those
+    * were skipping-index footer passes (their stages run in
+    * `SkippingIndex`). */
+  private def jobsDuring[T](body: => T): (T, Int, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val footer = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet()
+        if (js.stageInfos.exists(_.name.contains("SkippingIndex")))
+          footer.incrementAndGet()
+        ()
+      }
+    }
+    org.apache.spark.sql.graftbridge.SqlBridge.drainListeners(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val r = body
+      org.apache.spark.sql.graftbridge.SqlBridge.drainListeners(spark)
+      (r, jobs.get, footer.get)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("compact on an indexed table reads each new file's footer once") {
+    import graft.storage.SkippingIndex
+    for (partitioned <- Seq(false, true)) {
+      val cat = freshCatalog
+      val df = (1L to 40L).map(i => (i, s"d${i % 2}", i * 10)).toDF("id", "day", "v")
+      cat.overwriteVersioned("t", df, if (partitioned) Seq("day") else Nil)
+      cat.appendVersioned("t", Seq((41L, "d1", 410L)).toDF("id", "day", "v"))
+      cat.index("t", Seq("id", "v"))
+      val (_, _, footerJobs) = jobsDuring(cat.compact("t", rowsPerFile = 10))
+      // the commit's incremental refresh collects every compacted file;
+      // a second full pass over the same files used to follow it
+      assert(footerJobs === 1, s"partitioned=$partitioned")
+      val refreshed = SkippingIndex.readAt(cat.statsPath("t"))
+      assert(refreshed.map(_.file).sorted ===
+        cat.dataFilesAbs("t", cat.currentVersion("t")).sorted)
+      cat.index("t", Seq("id", "v"))
+      assert(refreshed === SkippingIndex.readAt(cat.statsPath("t")),
+        s"partitioned=$partitioned: the refresh equals a fresh index")
+    }
+  }
+
+  test("a DELETE counts its removed rows in one job; NULL conditions keep rows") {
+    val rows = Seq((1L, "d1", Some(5L)), (2L, "d1", None), (3L, "d2", Some(50L)),
+      (4L, "d2", Some(7L)), (5L, "d2", None)).toDF("id", "day", "v")
+    for (partitioned <- Seq(false, true)) {
+      val cat = freshCatalog
+      cat.overwriteVersioned("t", rows, if (partitioned) Seq("day") else Nil)
+      // v > 6 is NULL for ids 2 and 5: those rows stay
+      val ((_, removed), jobs, _) = jobsDuring(cat.deleteVersioned("t", $"v" > 6L))
+      assert(removed === 2L, s"partitioned=$partitioned")
+      assert(cat.read("t").orderBy("id").select("id").as[Long].collect().toSeq ===
+        Seq(1L, 2L, 5L), s"partitioned=$partitioned")
+      // one count (a shuffle-map job and its result job) + the staged
+      // write, plus the touched-partition probe when partitioned; the
+      // total − kept form ran a second count: 5 and 8 jobs
+      assert(jobs === (if (partitioned) 6 else 3), s"partitioned=$partitioned")
+    }
+  }
+
+  test("every committing verb keeps the index exact and records its staged footers' column ids") {
+    import graft.storage.SkippingIndex
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import scala.jdk.CollectionConverters._
+    val cat = freshCatalog
+    def footerIds(file: String): Map[String, Int] = {
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(file), spark.sessionState.newHadoopConf()))
+      try r.getFooter.getFileMetaData.getSchema.getFields.asScala.collect {
+        case f if f.getId != null => f.getName -> f.getId.intValue
+      }.toMap
+      finally r.close()
+    }
+    val t0 = Seq((1L, "d1", 10L), (2L, "d1", 20L), (3L, "d2", 30L))
+      .toDF("id", "day", "v")
+    cat.overwriteVersioned("t", t0, Seq("day"))
+    cat.overwriteVersioned("u", t0.drop("day"))
+    for (t <- Seq("t", "u")) cat.setTableProperty(t, ParquetCatalog.IndexForProp, "id")
+    Seq((1L, 11L), (9L, 90L)).toDF("id", "v").createOrReplaceTempView("commit_path_src")
+    val verbs: Seq[(String, String, () => Any)] = Seq(
+      ("overwrite", "t", () => cat.overwriteVersioned("t", t0, Seq("day"))),
+      ("append", "t", () => cat.appendVersioned("t",
+        Seq((4L, "d3", 40L)).toDF("id", "day", "v"))),
+      ("overwritePartitions", "t", () => cat.overwritePartitionsVersioned("t",
+        Seq((5L, "d3", 50L)).toDF("id", "day", "v"), Seq("day"))),
+      ("scoped merge", "t", () => cat.upsertVersioned("t",
+        Seq((1L, "d1", 11L), (6L, "d4", 60L)).toDF("id", "day", "v"), Seq("id"))),
+      ("full merge", "u", () => cat.upsertVersioned("u",
+        Seq((1L, 11L), (8L, 80L)).toDF("id", "v"), Seq("id"))),
+      ("mergeInto", "u", () => cat.mergeInto("""
+        MERGE INTO u AS target USING commit_path_src AS source
+        ON target.id = source.id
+        WHEN MATCHED THEN UPDATE SET v = source.v
+        WHEN NOT MATCHED THEN INSERT *""")),
+      ("delete", "t", () => cat.deleteVersioned("t", $"id" === 2L)),
+      ("update", "t", () => cat.updateWhere("t", $"id" === 3L, Map("v" -> lit(33L)))),
+      ("applyChanges", "t", () => cat.applyChanges("t",
+        Seq((7L, "d2", 70L, "insert")).toDF("id", "day", "v", "_change_type"),
+        Seq("id"))),
+      ("compact", "t", () => cat.compact("t", rowsPerFile = 1000)),
+      ("compactPartition", "t", () => cat.compactPartition("t", 1000,
+        Seq("day" -> "d2"))),
+      ("deleteVectors", "t", () => cat.deleteVectors("t", $"id" === 7L)),
+      ("updateVectors", "t", () => cat.updateVectors("t", $"id" === 1L,
+        Map("v" -> lit(12L)))),
+      ("reorgPurge", "t", () => cat.reorgPurge("t", threshold = 0.0)),
+      ("addColumn", "t", () => cat.addColumn("t", "extra",
+        org.apache.spark.sql.types.StringType)),
+      ("restore", "t", () => cat.restore("t", 3L)))
+    verbs.foreach { case (verb, t, run) =>
+      val before = cat.versions(t).last
+      val beforeFiles = cat.dataFilesAbs(t, before).toSet
+      run()
+      val v = cat.currentVersion(t)
+      assert(v === before + 1, s"$verb commits one version")
+      val files = cat.dataFilesAbs(t, v)
+      assert(SkippingIndex.readAt(cat.statsPath(t)).map(_.file).sorted ===
+        files.sorted, s"$verb: the index lists exactly v$v's files")
+      val ids = cat.manifest(t, v).meta.collect {
+        case (k, i) if k.startsWith("colid.") =>
+          java.net.URLDecoder.decode(k.drop("colid.".length), "UTF-8") -> i.toInt
+      }
+      val staged = files.filterNot(beforeFiles)
+      staged.foreach { f =>
+        val footer = footerIds(f)
+        assert(footer.nonEmpty, s"$verb: $f carries no field ids")
+        assert(footer.forall { case (c, i) => ids.get(c).contains(i) },
+          s"$verb: $f footer ids $footer vs manifest $ids")
+      }
+    }
+  }
 }

@@ -161,7 +161,7 @@ class ConflictSpec extends SparkSpec {
   }
 
   test("concurrent keyed syncs never fast-forward: the loser recomputes over the winner") {
-    // applyChanges commits via commitOrClean — a lost CAS THROWS (no
+    // applyChanges commits without a fast-forward — a lost CAS THROWS (no
     // fast-forward path exists for sync), so the retry wrapper always
     // recomputes against the winner's committed state. That makes the
     // merge guard's nightmare (the same NEW key landing twice through a
@@ -214,5 +214,22 @@ class ConflictSpec extends SparkSpec {
       Array(1L, 2L))
     assert(cat.read("t").filter(col("id") === 1L).select("m")
       .as[Double].head() === -1.0, "the fast-forwarded update survives the delete")
+  }
+
+  test("a restore blocks the fast-forward: it rewinds every partition") {
+    val cat = fresh()
+    cat.overwriteVersioned("t",
+      Seq((1L, "a", 10.0), (2L, "b", 20.0)).toDF("id", "p", "m"), Seq("p"))
+    cat.upsertVersioned("t", Seq((1L, "a", 11.0)).toDF("id", "p", "m"),
+      Seq("id")) // v2, touched {p=a}
+    cat.upsertVersioned("t", Seq((3L, "b", 30.0)).toDF("id", "p", "m"),
+      Seq("id")) // v3 adds key 3 to p=b
+    cat.restore("t", 2L) // v4: back to v2, key 3 gone
+    // a merge computed from v3's p=b would resurrect key 3 if it slid
+    // past the restore on the restored version's touched set {p=a}
+    intercept[graft.storage.ConcurrentWriteException](
+      cat.upsertVersioned("t", Seq((2L, "b", 21.0)).toDF("id", "p", "m"),
+        Seq("id"), fromVersion = Some(3L)))
+    assert(!cat.read("t").select("id").as[Long].collect().contains(3L))
   }
 }

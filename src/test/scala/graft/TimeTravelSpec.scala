@@ -83,7 +83,8 @@ class TimeTravelSpec extends SparkSpec {
     (1 to 4).foreach { v =>
       cat.overwriteVersioned("t", Seq((v.toLong, s"gen$v")).toDF("id", "gen"))
     }
-    Files.createDirectory(Paths.get(root, ".tmp-crashed-123")) // fake debris
+    // a crashed write's staging dir, spelled as t's writes stage
+    Files.createDirectory(Paths.get(root, ".tmp-t-18f3a2c9d4e"))
     val removed = cat.vacuum("t", keep = 2, minAgeMs = 0L)
     assert(removed == 3) // v1, v2 manifests, and the debris dir
     assert(cat.versions("t") == Seq(3L, 4L))
@@ -91,6 +92,20 @@ class TimeTravelSpec extends SparkSpec {
     assert(intercept[IllegalArgumentException] {
       cat.readVersion("t", 1)
     }.getMessage.contains("not retained"))
+  }
+
+  test("vacuum sweeps only its own table's staging dirs") {
+    val (cat, root) = fresh()
+    Seq("a", "b", "a-b").foreach(t =>
+      cat.overwriteVersioned(t, Seq((1L, "x")).toDF("id", "v")))
+    // b's and a-b's writes in flight: their staging dirs must survive
+    // a's vacuum even with no age guard; a's own crashed dir goes
+    val others = Seq(".tmp-b-18f3a2c9d4e", ".tmp-a-b-18f3a2c9d4f")
+    (others :+ ".tmp-a-18f3a2c9d50").foreach(d =>
+      Files.createDirectory(Paths.get(root, d)))
+    assert(cat.vacuum("a", minAgeMs = 0L) == 1)
+    others.foreach(d => assert(Files.isDirectory(Paths.get(root, d)), d))
+    assert(!Files.exists(Paths.get(root, ".tmp-a-18f3a2c9d50")))
   }
 
   test("skipping index rides the versioned table: commits refresh, range reads prune") {
